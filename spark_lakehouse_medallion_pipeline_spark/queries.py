@@ -4806,28 +4806,27 @@ def q122_sql_script(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SQL-standard SQL/PSM control flow) that previously needed driver
     Python. Each loop iteration's aggregate is a normal distributed
     job; only the scalar accumulator lives in the script. The oracle is
-    the equivalent set-based aggregate — identical cents-exact total."""
-    prev = spark.conf.get("spark.sql.scripting.enabled", "true")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
-        return spark.sql(
-            f"""
-            BEGIN
-              DECLARE m INT DEFAULT 1;
-              DECLARE total BIGINT DEFAULT 0;
-              WHILE m <= 3 DO
-                SET total = total + COALESCE(
-                  (SELECT CAST(SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT)) AS BIGINT)
-                   FROM parquet.`{sf_dir}/lineitem.parquet`
-                   WHERE MONTH(l_shipdate) = m), 0);
-                SET m = m + 1;
-              END WHILE;
-              SELECT 3 AS n_months, CAST(total AS DOUBLE) / 100.0 AS q1_revenue;
-            END
-            """
-        )
-    finally:
-        spark.conf.set("spark.sql.scripting.enabled", prev)
+    the equivalent set-based aggregate — identical cents-exact total.
+    The script runs on its own session, so the scripting conf never
+    touches the caller's."""
+    script = spark.newSession()
+    script.conf.set("spark.sql.scripting.enabled", "true")
+    return script.sql(
+        f"""
+        BEGIN
+          DECLARE m INT DEFAULT 1;
+          DECLARE total BIGINT DEFAULT 0;
+          WHILE m <= 3 DO
+            SET total = total + COALESCE(
+              (SELECT CAST(SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT)) AS BIGINT)
+               FROM parquet.`{sf_dir}/lineitem.parquet`
+               WHERE MONTH(l_shipdate) = m), 0);
+            SET m = m + 1;
+          END WHILE;
+          SELECT 3 AS n_months, CAST(total AS DOUBLE) / 100.0 AS q1_revenue;
+        END
+        """
+    )
 
 
 @_q(
@@ -13290,9 +13289,9 @@ def q250_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     NTILE(5) with the custkey tie-break making each a total order.
     This is the composition stress for relational.distributed_rank:
     THREE chained ntile passes over the customer model, each two
-    balanced exchanges with its range-pinned cache alive until the one
-    terminal action (the capacity-8 registry contract — evict-on-next-
-    call would have broken exactly this plan). The oracle's NTILE
+    balanced exchanges with its range pin alive until the one terminal
+    action (each pin is owned by the frame that reads it, so composing
+    ranks needs no registry). The oracle's NTILE
     windows are single-partition only in DuckDB; the engine side never
     funnels through one task. Recency is measured against the corpus's
     own max order date (1-row broadcast), days as exact datediff
@@ -18587,8 +18586,9 @@ def q293_aqe_skew_join_rescue(spark: SparkSession, sf_dir: str) -> DataFrame:
     preconditions: multi-task upstream stage, canonical exchange under
     the join), captures the ADAPTIVE final plan, ValueError-gates that
     the join stayed SortMergeJoin with no broadcast (a broadcast would
-    hide the skew instead of splitting it), restores every conf in a
-    finally, and returns the MATERIALIZED rescued result (200 rows,
+    hide the skew instead of splitting it) — all on its own session, so
+    the caller's conf is never touched — and returns the MATERIALIZED
+    rescued result on the caller's session (200 rows,
     bounded) — so the DuckDB value-hash against the plain unsalted
     join (the q286/q290 invisibility discipline: _Q286_SKEW_ORACLE) is
     the proof that the skew split changed the schedule, never the
@@ -18600,19 +18600,12 @@ def q293_aqe_skew_join_rescue(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB this is exactly the shape AQE's skew rescue exists for —
     no manual salt column, no code change, the split comes from
     runtime map-output statistics."""
-    saved = {k: spark.conf.get(k, None) for k in _Q293_CONFS}
-    try:
-        for k, v in _Q293_CONFS.items():
-            spark.conf.set(k, v)
-        df = _q293_frame(spark, sf_dir)
-        rows = df.collect()  # executes under the forced-skew AQE confs
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    skewed = spark.newSession()
+    for k, v in _Q293_CONFS.items():
+        skewed.conf.set(k, v)
+    df = _q293_frame(skewed, sf_dir)
+    rows = df.collect()  # executes under the forced-skew AQE confs
+    plan = df._jdf.queryExecution().executedPlan().toString()
     if "SortMergeJoin" not in plan:
         raise ValueError("skewed join did not execute as SortMergeJoin")
     if "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan:
@@ -18644,17 +18637,17 @@ def q294_aqe_partition_coalescing(spark: SparkSession, sf_dir: str) -> DataFrame
     at 100 TB — the runtime answer to hand-tuning shuffle.partitions
     per query. The query EXECUTES the aggregate under the session
     default (coalescing ON), ValueError-gates that the final adaptive
-    plan actually carries the coalesced read, then re-executes with
-    spark.sql.adaptive.coalescePartitions.enabled=false (restored in a
-    finally) and gates row-for-row equality driver-side — the q290
+    plan actually carries the coalesced read, then re-executes on its
+    own session with spark.sql.adaptive.coalescePartitions.enabled=false
+    and gates row-for-row equality driver-side — the q290
     invisibility discipline proven INSIDE the entry, on the bounded
     (priority x year) result. Returns the coalesced run's materialized
     rows, so the DuckDB hash match pins the adaptive execution's
     values, not a re-planned copy. Scale shape: one map-combined
     aggregate; the result is |priorities| x |years| rows."""
-    def frame() -> DataFrame:
+    def frame(session: SparkSession) -> DataFrame:
         return (
-            _t(spark, sf_dir, "orders")
+            _t(session, sf_dir, "orders")
             .select(
                 "o_orderpriority",
                 F.year(F.col("o_orderdate").cast("date")).alias("yr"),
@@ -18667,21 +18660,14 @@ def q294_aqe_partition_coalescing(spark: SparkSession, sf_dir: str) -> DataFrame
             )
         )
 
-    df = frame()
+    df = frame(spark)
     rows = df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     if "AQEShuffleRead coalesced" not in plan:
         raise ValueError("adaptive plan did not coalesce the aggregate read")
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    saved = spark.conf.get(key, None)
-    try:
-        spark.conf.set(key, "false")
-        rows_off = frame().collect()
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
+    uncoalesced = spark.newSession()
+    uncoalesced.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    rows_off = frame(uncoalesced).collect()
     if sorted(map(tuple, rows)) != sorted(map(tuple, rows_off)):
         raise ValueError("coalescing changed the answer — must be invisible")
     return spark.createDataFrame(rows, df.schema)
@@ -18740,8 +18726,17 @@ def q295_rebalance_write_rescue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _scratch_dir(spark, "q295", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
+    # The writes run on their own session: the forced-small advisory
+    # size never reaches the caller's conf.
+    writer = spark.newSession()
+    writer.conf.set(
+        "spark.sql.adaptive.optimizeSkewsInRebalancePartitions.enabled", "true"
+    )
+    writer.conf.set(
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes", str(_Q295_ADVISORY)
+    )
     li = (
-        _t(spark, sf_dir, "lineitem")
+        _t(writer, sf_dir, "lineitem")
         .repartition(_Q293_UPSTREAM_TASKS)
         .select(
             F.when(F.col("l_orderkey") % 10 < 9, F.lit(0))
@@ -18752,27 +18747,9 @@ def q295_rebalance_write_rescue(spark: SparkSession, sf_dir: str) -> DataFrame:
             cents(F.col("l_extendedprice")).alias("price_c"),
         )
     )
-    confs = {
-        "spark.sql.adaptive.optimizeSkewsInRebalancePartitions.enabled": "true",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(_Q295_ADVISORY),
-    }
-    saved = {k: spark.conf.get(k, None) for k in confs}
     plain, reb = f"{base}/plain", f"{base}/rebalanced"
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        li.repartition("k").write.mode("overwrite").partitionBy("k").parquet(
-            plain
-        )
-        li.hint("rebalance", "k").write.mode("overwrite").partitionBy(
-            "k"
-        ).parquet(reb)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    li.repartition("k").write.mode("overwrite").partitionBy("k").parquet(plain)
+    li.hint("rebalance", "k").write.mode("overwrite").partitionBy("k").parquet(reb)
 
     # One footer walk per layout (optimization round): the rebalanced
     # walk also carries the hot-directory file count (path-derived k),
@@ -18882,9 +18859,13 @@ def q296_stateful_stream_state_recovery(spark: SparkSession, sf_dir: str) -> Dat
     # maintain FOUR keys (the shard count). Sizing the stream's shuffle
     # partitions to the aggregate's key cardinality is the deliberate,
     # scale-independent choice (the right number tracks |keys|, never
-    # the machine); measured 21.4 s -> 10.7 s warm at sf0.1. Restored
-    # in the finally below — batch queries on the session are untouched.
-    _n_state = 4  # == shards: the aggregate's exact key cardinality
+    # the machine); measured 21.4 s -> 10.7 s warm at sf0.1. The stream
+    # runs on its own session, so the caller's batch queries keep theirs.
+    # A clone, not newSession(): it inherits the caller's registration of
+    # the Python source, and Spark refuses to register that name on a
+    # fresh session once any session has read from it.
+    stream = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    stream.conf.set("spark.sql.shuffle.partitions", "4")  # == shards
 
     def _write_batch(bdf: DataFrame, bid: int) -> None:
         bdf.write.mode("overwrite").parquet(os.path.join(sink, f"bid={bid}"))
@@ -18896,7 +18877,7 @@ def q296_stateful_stream_state_recovery(spark: SparkSession, sf_dir: str) -> Dat
 
     def _drain() -> str | None:
         agg = (
-            spark.readStream.format("synthetic_docs")
+            stream.readStream.format("synthetic_docs")
             .option("rows", str(_Q291_ROWS))
             .option("batch", str(_Q291_BATCH))
             .option("shards", "4")
@@ -18931,20 +18912,15 @@ def q296_stateful_stream_state_recovery(spark: SparkSession, sf_dir: str) -> Dat
             return []
         return sorted(int(n) for n in os.listdir(d) if n.isdigit())
 
-    _prev_sp = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(_n_state))
-        e1 = _drain()
-        if e1 is None or "q296-injected-crash" not in e1:
-            raise ValueError(f"run 1 did not crash as injected: {e1!r:.300}")
-        commits_run1 = _commits()
-        if commits_run1 != list(range(_Q291_CRASH_BID)):
-            raise ValueError(f"unexpected run-1 commits: {commits_run1}")
-        e2 = _drain()
-        if e2 is not None:
-            raise ValueError(f"restarted run failed: {e2!r:.300}")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", _prev_sp)
+    e1 = _drain()
+    if e1 is None or "q296-injected-crash" not in e1:
+        raise ValueError(f"run 1 did not crash as injected: {e1!r:.300}")
+    commits_run1 = _commits()
+    if commits_run1 != list(range(_Q291_CRASH_BID)):
+        raise ValueError(f"unexpected run-1 commits: {commits_run1}")
+    e2 = _drain()
+    if e2 is not None:
+        raise ValueError(f"restarted run failed: {e2!r:.300}")
     n_total = -(-_Q291_ROWS // _Q291_BATCH)
     if _commits() != list(range(n_total)):
         raise ValueError(f"incomplete drain after restart: {_commits()}")
@@ -19017,51 +18993,45 @@ def q297_aqe_broadcast_conversion(spark: SparkSession, sf_dir: str) -> DataFrame
     at runtime. Both plans are captured and ValueError-gated: the
     pre-adaptive sparkPlan must carry SortMergeJoin and no broadcast,
     the executed adaptive plan must carry BroadcastHashJoin. The
-    threshold conf is restored in a finally; the returned DataFrame is
-    the converted execution's materialized rows ({_Q297_DIM_KEYS},
-    bounded), so the DuckDB hash match proves the runtime re-plan
-    changed the schedule, never the answer. Scale shape: one
+    threshold is set on the entry's own session, never the caller's;
+    the returned DataFrame is the converted execution's materialized
+    rows ({_Q297_DIM_KEYS}, bounded) on the caller's session, so the
+    DuckDB hash match proves the runtime re-plan changed the schedule,
+    never the answer. Scale shape: one
     map-combined dimension aggregate, one broadcast join (zero fact
     shuffle after conversion), final aggregate to
     {_Q297_DIM_KEYS} rows."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    saved = spark.conf.get(key, None)
-    try:
-        spark.conf.set(key, str(_Q297_THRESHOLD))
-        dim = (
-            _t(spark, sf_dir, "orders")
-            .groupBy(
-                (F.col("o_custkey") % _Q297_DIM_KEYS).cast("bigint").alias("ck")
-            )
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-                F.sum(cents(F.col("o_totalprice")))
-                .cast("bigint")
-                .alias("sum_order_c"),
-            )
+    low = spark.newSession()
+    low.conf.set("spark.sql.autoBroadcastJoinThreshold", str(_Q297_THRESHOLD))
+    dim = (
+        _t(low, sf_dir, "orders")
+        .groupBy(
+            (F.col("o_custkey") % _Q297_DIM_KEYS).cast("bigint").alias("ck")
         )
-        fact = _t(spark, sf_dir, "lineitem").select(
-            (F.col("l_orderkey") % _Q297_DIM_KEYS).cast("bigint").alias("ck"),
-            F.col("l_quantity").cast("bigint").alias("qty"),
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+            F.sum(cents(F.col("o_totalprice")))
+            .cast("bigint")
+            .alias("sum_order_c"),
         )
-        df = (
-            fact.join(dim, "ck")
-            .groupBy("ck")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_li"),
-                F.sum("qty").cast("bigint").alias("sum_qty"),
-                F.max("n_orders").cast("bigint").alias("n_orders"),
-                F.max("sum_order_c").cast("bigint").alias("sum_order_c"),
-            )
+    )
+    fact = _t(low, sf_dir, "lineitem").select(
+        (F.col("l_orderkey") % _Q297_DIM_KEYS).cast("bigint").alias("ck"),
+        F.col("l_quantity").cast("bigint").alias("qty"),
+    )
+    df = (
+        fact.join(dim, "ck")
+        .groupBy("ck")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_li"),
+            F.sum("qty").cast("bigint").alias("sum_qty"),
+            F.max("n_orders").cast("bigint").alias("n_orders"),
+            F.max("sum_order_c").cast("bigint").alias("sum_order_c"),
         )
-        pre = df._jdf.queryExecution().sparkPlan().toString()
-        rows = df.collect()
-        post = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
+    )
+    pre = df._jdf.queryExecution().sparkPlan().toString()
+    rows = df.collect()
+    post = df._jdf.queryExecution().executedPlan().toString()
     if "SortMergeJoin" not in pre or "BroadcastHashJoin" in pre:
         raise ValueError("static plan should be SMJ under the low threshold")
     if "BroadcastHashJoin" not in post:

@@ -2369,33 +2369,79 @@ def test_q291_crash_recovery_counters(spark):
         assert r["n_replayed_batches"] == 1
 
 
+_CONF_ENTRY_KEYS = [
+    "spark.sql.adaptive.skewJoin.enabled",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+    "spark.sql.adaptive.forceOptimizeSkewedJoin",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    "spark.sql.adaptive.coalescePartitions.enabled",
+    "spark.sql.adaptive.optimizeSkewsInRebalancePartitions.enabled",
+    "spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.scripting.enabled",
+    "spark.sql.shuffle.partitions",
+]
+
+
+def _cached_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
 def test_q293_q297_conf_restoration(spark):
-    """The four conf-touching adaptivity entries (q293 skew split, q294
-    coalescing, q295 rebalance, q297 broadcast conversion) must leave
-    the session EXACTLY as they found it — a leaked threshold or
-    advisory size would silently change every later query's plans in a
-    shared gate/bench session."""
-    keys = [
-        "spark.sql.adaptive.skewJoin.enabled",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        "spark.sql.adaptive.forceOptimizeSkewedJoin",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.coalescePartitions.enabled",
-        "spark.sql.adaptive.optimizeSkewsInRebalancePartitions.enabled",
-        "spark.sql.autoBroadcastJoinThreshold",
-    ]
-    before = {k: spark.conf.get(k, None) for k in keys}
+    """The six conf-changing entries (q122 scripting, q293 skew split,
+    q294 coalescing, q295 rebalance, q296 stream state partitions, q297
+    broadcast conversion) must leave the caller's session EXACTLY as
+    they found it — a leaked threshold or advisory size would silently
+    change every later query's plans in a shared gate/bench session.
+    The cache-pinning entries (q33's MinHash signatures, q250's three
+    composed ranks) must add nothing to the session's CacheManager."""
+    before = {k: spark.conf.get(k, None) for k in _CONF_ENTRY_KEYS}
     for name in (
+        "q122_sql_script",
         "q293_aqe_skew_join_rescue",
         "q294_aqe_partition_coalescing",
         "q295_rebalance_write_rescue",
+        "q296_stateful_stream_state_recovery",
         "q297_aqe_broadcast_conversion",
     ):
         QUERIES[name](spark, SF).collect()
-        after = {k: spark.conf.get(k, None) for k in keys}
+        after = {k: spark.conf.get(k, None) for k in _CONF_ENTRY_KEYS}
         assert after == before, name
+    cached = _cached_entries(spark)
+    for name in ("q33_minhash_candidates", "q250_rfm_scores"):
+        QUERIES[name](spark, SF).collect()
+        assert _cached_entries(spark) == cached, name
+
+
+def test_entries_on_threads_match_serial(spark):
+    """Two or more queries running at once in one SparkContext must give
+    their serial answers: rank pins are per-frame (no shared registry
+    to evict another query's pin) and conf overrides live on each
+    entry's own session (no window where another query plans under
+    them). Afterwards the caller's conf and cache state are unchanged."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    names = [
+        "q250_rfm_scores",
+        "q33_minhash_candidates",
+        "q294_aqe_partition_coalescing",
+        "q297_aqe_broadcast_conversion",
+    ]
+
+    def run(name):
+        return sorted(map(tuple, QUERIES[name](spark, SF).collect()))
+
+    serial = {name: run(name) for name in names}
+    conf_before = {k: spark.conf.get(k, None) for k in _CONF_ENTRY_KEYS}
+    cached = _cached_entries(spark)
+    with ThreadPoolExecutor(max_workers=len(names)) as pool:
+        futures = {name: pool.submit(run, name) for name in names}
+        threaded = {name: f.result(timeout=600) for name, f in futures.items()}
+    for name in names:
+        assert threaded[name] == serial[name], name
+    assert {k: spark.conf.get(k, None) for k in _CONF_ENTRY_KEYS} == conf_before
+    assert _cached_entries(spark) == cached
 
 
 def test_q297_conversion_markers(spark):

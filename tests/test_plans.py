@@ -412,44 +412,14 @@ def test_lint_plan_flags_antipatterns_and_passes_clean(spark):
 
 
 @pytest.mark.slow
-def test_lint_clean_across_driver_snapshot(spark):
-    """Whole-battery hygiene: every driver-snapshot query must be free
-    of cartesian products and row-at-a-time Python UDFs. (q65's UDTF is
-    a deliberate Python-surface query — BatchEvalPythonUDTF is its
-    documented cost; generator-based medallion entries run pipelines,
-    not single plans, and are audited by their own tests.)"""
-    from spark_lakehouse_medallion_pipeline_spark.plans import lint
-    from spark_lakehouse_medallion_pipeline_spark.queries import QUERIES as Q
-
-    allow_python = {"q65_udtf_tokenize", "q39_multimodal_features", "q40_zscore_by_type",
-                    "q124_python_datasource", "q118_ols_by_group"}
-    snapshot = list(Q)[:50]
-    bad = {}
-    for name in snapshot:
-        if name.startswith("medallion_"):
-            continue
-        try:
-            finds = [
-                f
-                for f in lint.lint_plan(Q[name](spark, SF), max_exchanges=99)
-                if f.startswith(("cartesian", "python-udf"))
-            ]
-        except Exception as exc:  # pragma: no cover - surface build errors
-            bad[name] = [f"plan build failed: {exc}"][:1]
-            continue
-        if name in allow_python:
-            finds = [f for f in finds if not f.startswith("python-udf")]
-        if finds:
-            bad[name] = finds
-    assert not bad, bad
-
-
-@pytest.mark.slow
-def test_lint_clean_across_bench_headline(spark):
-    """The bench set evolves separately from the driver snapshot; lint it
-    too so a new bench entry can't regress plan shape silently (same
-    cartesian / row-at-a-time-Python rules; the medallion and generated
-    dedup sections run pipelines, audited by their own tests)."""
+def test_lint_clean_across_snapshot_and_headline(spark):
+    """Whole-battery hygiene over the driver snapshot (the first 50
+    registry entries) and the bench headline, each entry built once:
+    every plan must be free of cartesian products and row-at-a-time
+    Python UDFs, so neither set can regress plan shape silently. (q65's
+    UDTF is a deliberate Python-surface query — BatchEvalPythonUDTF is
+    its documented cost; generator-based medallion entries run
+    pipelines, not single plans, and are audited by their own tests.)"""
     import bench
 
     from spark_lakehouse_medallion_pipeline_spark.plans import lint
@@ -458,7 +428,7 @@ def test_lint_clean_across_bench_headline(spark):
     allow_python = {"q65_udtf_tokenize", "q39_multimodal_features", "q40_zscore_by_type",
                     "q124_python_datasource", "q118_ols_by_group"}
     bad = {}
-    for name in bench.HEADLINE:
+    for name in dict.fromkeys(list(Q)[:50] + bench.HEADLINE):
         if name.startswith("medallion_"):
             continue
         try:

@@ -512,39 +512,49 @@ def test_top_k_ranked_matches_window_and_has_no_window_exec(spark):
 
 
 @pytest.mark.slow
-def test_distributed_rank_cache_returns_to_baseline(spark):
-    """The range-pinned persist must not leak for the session lifetime
-    (r9 ADVICE): the registry holds at most _RANK_CACHE_CAP pins (FIFO
-    eviction — capacity > 1 because one plan may compose several rank
-    calls), and release_rank_caches() drops the rest, so
-    getPersistentRDDs() returns to its pre-call size."""
-    relational.release_rank_caches()
+def test_distributed_rank_pins_released_after_gc(spark):
+    """distributed_rank pins its range partition with a lazy
+    localCheckpoint owned by the returned frame: nothing enters the
+    session's CacheManager, and once the frames are dropped and
+    garbage-collected the pinned RDDs leave getPersistentRDDs() — no
+    registry, no cap, no release call."""
+    import gc
+    import time
+
+    sc = spark.sparkContext
 
     # Track OUR RDD ids, not the global count: the ContextCleaner
     # asynchronously drops other tests' GC'd caches, so a global
     # baseline is unstable inside a shared session.
     def pinned_ids():
-        return set(
-            spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-        )
+        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
 
-    before = pinned_ids()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before, cached = pinned_ids(), cache.numCachedEntries()
     df = spark.createDataFrame(
         [(i % 7, 100 - i, i) for i in range(37)], "g int, v int, id int"
     )
-    # cap + 2 calls: the registry must saturate at the cap, never grow
-    # one-per-call for the session lifetime. Distinct num_partitions per
-    # call forces distinct logical plans — Spark's CacheManager dedupes
-    # same-plan persists to ONE entry, which would mask growth here.
-    for k in range(relational._RANK_CACHE_CAP + 2):
+    frames = [
         relational.distributed_rank(
             df,
             [F.col("v").asc(), F.col("id").asc()],
             rank_col=f"r{k}",
             num_partitions=2 + k,
-        ).collect()
-    assert len(pinned_ids() - before) == relational._RANK_CACHE_CAP
-    relational.release_rank_caches()
-    assert not (pinned_ids() - before)
-    relational.release_rank_caches()  # idempotent
-    assert not (pinned_ids() - before)
+        )
+        for k in range(10)
+    ]
+    for k, f in enumerate(frames):
+        assert sorted(r[f"r{k}"] for r in f.collect()) == list(range(1, 38))
+    assert len(pinned_ids() - before) >= 10  # pins live with their frames
+    assert cache.numCachedEntries() == cached
+    del frames, f
+    gc.collect()
+    # Queued SQL-execution-end events hold each finished query's plan
+    # until delivered; drain them so the wait sees only the frames' pins.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    deadline = time.monotonic() + 60
+    while pinned_ids() - before:
+        assert time.monotonic() < deadline, pinned_ids() - before
+        gc.collect()
+        sc._jvm.System.gc()
+        time.sleep(1)

@@ -324,8 +324,13 @@ def test_bench_compact_line_fits_capture_window():
         # must never read as dropped (8 phantom drops in PERF_r14).
         missing = all_keys - set(p["queries"])
         assert not missing, f"[{label}] omitted from compact line: {sorted(missing)[:10]}"
+        # an entry that ran must never print as 0 (q271 ran 0.483 s and
+        # printed "271":0 below the precision rung)
+        zeros = sorted(k for k, v in p["queries"].items() if v == 0)
+        assert not zeros, f"[{label}] entries that ran printed as 0: {zeros[:10]}"
         return p
 
+    full["queries"] = dict(full["queries"], q271_gap_fill_interpolate=0.483)
     parsed = assert_complete(full, "clean")
     # precision contract: the adaptive encoder must afford 1-decimal
     # values for at least the 2-10s band at the current battery size

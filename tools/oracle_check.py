@@ -204,11 +204,6 @@ def main() -> None:
             }
             print(f"PASS {name}: {len(s_rows)} rows  [{spark_sec:.1f}s]")
 
-    # Drop the last rank query's range-pinned cache (r9 ADVICE hygiene).
-    from spark_lakehouse_medallion_pipeline_spark.operators import relational
-
-    relational.release_rank_caches()
-
     print(
         f"\n=== {len(passes)} pass, {len(failures)} fail, {len(rows_only)} rows-only "
         f"(of {len([q for q in qs if not only or q in only])}) ==="
