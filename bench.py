@@ -5,9 +5,11 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints JSON:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 Two stdout lines, same schema: the full verbose record first (also
-written to BENCH_FULL_LATEST.json), then a <2000-char compact line
-(bare-q-number keys, 2-decimal times) sized to survive the driver's
-tail-capture window whole. Per-query figure = min of 2 timed passes.
+written to BENCH_FULL_LATEST.json), then a <2000-char compact line sized
+to survive the driver's tail-capture window whole (see
+build_compact_line: at the current battery size, bare-q-number keys with
+1-decimal times in an adaptive band and whole seconds elsewhere).
+Per-query figure = min of 2 timed passes.
 
 Each query is timed as plan-build + full execution; we materialize with
 a cheap count-style action (df.foreach is overkill; collect on small
@@ -20,6 +22,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -236,6 +239,87 @@ HEADLINE = [
 ]
 
 
+def clock(run, *args):
+    """Call run(*args); return (wall seconds rounded to ms, its result)."""
+    t0 = time.time()
+    result = run(*args)
+    return round(time.time() - t0, 3), result
+
+
+def _synthetic_docs(spark, n: int, near_dup: bool):
+    """Deterministic (doc_id, text) corpus of n docs, 30 words each from a
+    5000-word vocabulary. Every 10th doc (id % 10 == 0) reuses its
+    successor's words: with near_dup it is prefixed 'variant ' (a planted
+    near-duplicate pair, 10% of the corpus), otherwise it is an exact
+    copy."""
+    from pyspark.sql import functions as F
+
+    words = (
+        "concat_ws(' ', transform(sequence(0, 29), "
+        "j -> concat('w', pmod(xxhash64(_seed, j), 5000))))"
+    )
+    text = (
+        f"CASE WHEN id % 10 = 0 THEN concat('variant ', {words}) ELSE {words} END"
+        if near_dup
+        else words
+    )
+    return (
+        spark.range(n)
+        .withColumn("_seed", F.expr("CASE WHEN id % 10 = 0 THEN id + 1 ELSE id END"))
+        .select(F.col("id").alias("doc_id"), F.expr(text).alias("text"))
+    )
+
+
+class Recorder:
+    """The timings, variance samples and errors of one bench run."""
+
+    def __init__(self) -> None:
+        self.timings: dict[str, float] = {}
+        self.variance: dict[str, object] = {}
+        self.errors: dict[str, str] = {}
+
+    def fail(self, label: str, exc: Exception) -> None:
+        self.errors[label] = str(exc).split("\n")[0][:200]
+        print(f"# {label}: FAILED ({self.errors[label]})", file=sys.stderr)
+
+    def record(self, label: str, value: float, samples: list[float]) -> None:
+        self.timings[label] = value
+        self.variance[f"{label}_runs_sec"] = samples
+        print(f"# {label}: {value:.2f}s (runs {samples})", file=sys.stderr)
+
+    def attempt(self, label: str, run, canary=None) -> float | None:
+        """Time one call of run(tmp), given a fresh empty directory that is
+        removed after the call. With a canary the call must return it: a
+        wrong result makes the timing meaningless, so it fails like an
+        exception does. A failure is recorded under label and gives None."""
+        try:
+            with tempfile.TemporaryDirectory(
+                prefix=f"bench_{label}_", ignore_cleanup_errors=True
+            ) as tmp:
+                sec, result = clock(run, tmp)
+            if canary is not None and result != canary:
+                raise AssertionError(f"{label} canary: got {result!r}, want {canary!r}")
+            return sec
+        except Exception as exc:
+            self.fail(label, exc)
+            return None
+
+    def timed_section(self, label, run, reps, warmup=0, canary=None) -> None:
+        """Attempt `warmup` + `reps` calls of run and record the min of
+        the timed reps; warm-up seconds land only in `<label>_warmup_sec`.
+        The first failure ends the section with no time recorded."""
+        samples = []
+        for rep in range(-warmup, reps):
+            sec = self.attempt(label, run, canary)
+            if sec is None:
+                return
+            if rep < 0:
+                self.variance.setdefault(f"{label}_warmup_sec", []).append(sec)
+            else:
+                samples.append(sec)
+        self.record(label, min(samples), samples)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -270,7 +354,8 @@ def main() -> None:
         except Exception as exc:  # warm-up must never fail the bench
             print(f"# warmup {name} failed: {exc}", file=sys.stderr)
 
-    errors: dict[str, str] = {}
+    rec = Recorder()
+    timings, variance, errors = rec.timings, rec.variance, rec.errors
 
     def timed_pass(run_label: str) -> dict[str, float]:
         pass_timings: dict[str, float] = {}
@@ -303,346 +388,196 @@ def main() -> None:
     # variance field for transparency.
     run1 = timed_pass("run1")
     run2 = timed_pass("run2")
-    timings: dict[str, float] = {}
     for name in HEADLINE:
         vals = [v for v in (run1.get(name), run2.get(name)) if v is not None]
         if vals:
             timings[name] = min(vals)
     t1, t2 = sum(run1.values()), sum(run2.values())
-    variance = {
-        "headline_total_run1_sec": round(t1, 3),
-        "headline_total_run2_sec": round(t2, 3),
-        "headline_total_min_sec": round(sum(timings.values()), 3),
-        "spread_pct": round(abs(t1 - t2) / max(min(t1, t2), 1e-9) * 100, 1),
-    }
+    variance.update(
+        headline_total_run1_sec=round(t1, 3),
+        headline_total_run2_sec=round(t2, 3),
+        headline_total_min_sec=round(sum(timings.values()), 3),
+        spread_pct=round(abs(t1 - t2) / max(min(t1, t2), 1e-9) * 100, 1),
+    )
 
     # Materialized medallion end-to-end (the reference's flagship shape):
     # generate bronze -> partitioned parquet -> silver enrich -> gold KPIs,
     # timed with writes included; BASELINE.md's envelope is GB/min.
-    import shutil
-    import tempfile
+    from pyspark.sql import functions as F
 
     from spark_lakehouse_medallion_pipeline_spark.medallion.pipeline import run_pipeline
+    from spark_lakehouse_medallion_pipeline_spark.operators.dedup import (
+        dedup_chunks_keep_first,
+        minhash_lsh_candidates,
+    )
+    from spark_lakehouse_medallion_pipeline_spark.operators.text import pack_sequences
 
-    warm_tmp = tempfile.mkdtemp(prefix="bench_medallion_warm_")
-    try:
-        run_pipeline(spark, warm_tmp, rows=2_000, payload_kb=1)
-    except Exception as exc:
-        print(f"# warmup medallion failed: {exc}", file=sys.stderr)
-    finally:
-        shutil.rmtree(warm_tmp, ignore_errors=True)
+    with tempfile.TemporaryDirectory(
+        prefix="bench_medallion_warm_", ignore_cleanup_errors=True
+    ) as warm_tmp:
+        try:
+            run_pipeline(spark, warm_tmp, rows=2_000, payload_kb=1)
+        except Exception as exc:
+            print(f"# warmup medallion failed: {exc}", file=sys.stderr)
 
-    # Each medallion section runs TWICE and records the MIN: these
+    # Each medallion e2e section records the MIN of its reps: these
     # write-heavy sections occasionally catch a 3-4x transient (page-cache
     # flush / old-gen GC after the 80-query headline passes — observed
     # 28.8s vs a stable ~7s for the identical workload), and a single
-    # sample would record the outlier as the round's number. Both samples
-    # land in the variance field.
-    section_stats = {}
-
-    def timed_e2e(
-        label: str, reps: int = 2, warmup: int = 0, **kwargs
-    ) -> None:
-        samples = []
-        for rep in range(-warmup, reps):
-            tmp = tempfile.mkdtemp(prefix=f"bench_{label}_")
-            try:
-                t0 = time.time()
-                st = run_pipeline(spark, tmp, **kwargs)
-                if rep < 0:
-                    # Warmup pass: measured for the variance record but
-                    # never a candidate for the headline number.
-                    variance.setdefault(f"{label}_warmup_sec", []).append(
-                        round(time.time() - t0, 3)
-                    )
-                    continue
-                samples.append(round(time.time() - t0, 3))
-                if rep == 0 and label == "medallion_e2e_100k":
-                    bronze_bytes = sum(
-                        f.stat().st_size
-                        for f in __import__("pathlib").Path(tmp, "bronze").rglob("*.parquet")
-                    )
-                    section_stats["bronze_mb_s"] = round(
-                        bronze_bytes / 1e6 / max(st["bronze_sec"], 1e-9), 2
-                    )
-            except Exception as exc:
-                errors[label] = str(exc).split("\n")[0][:200]
-                print(f"# {label}: FAILED ({errors[label]})", file=sys.stderr)
-                return
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
-        timings[label] = min(samples)
-        variance[f"{label}_runs_sec"] = samples
-        print(f"# {label}: {timings[label]:.2f}s (runs {samples})", file=sys.stderr)
-
+    # sample would record the outlier as the round's number. Every sample
+    # lands in the variance field.
+    #
     # min-of-3 (r15, VERDICT r14 Next #5): the r14 committed record
     # caught a transient on this write-heavy entry (10.46 s vs 6.56 s
     # same-session quiet on identical code) that min-of-2 let through;
     # a third rep makes the min robust enough for the tighter
     # contention band in contention_reasons.
-    timed_e2e("medallion_e2e_100k", reps=3, rows=100_000, payload_kb=1)
-    bronze_mb_s = section_stats.get("bronze_mb_s")
+    pipeline_stats: list[dict] = []
+    rec.timed_section(
+        "medallion_e2e_100k",
+        lambda tmp: pipeline_stats.append(
+            run_pipeline(spark, tmp, rows=100_000, payload_kb=1)
+        ),
+        reps=3,
+    )
+    bronze_mb_s = None
+    if pipeline_stats:
+        st = pipeline_stats[0]
+        bronze_mb_s = round(st["bronze_bytes"] / 1e6 / max(st["bronze_sec"], 1e-9), 2)
 
     # Scaled-up flagship: the same generate->silver->gold e2e at 1M rows
     # (10x the row count above) — evidence the pipeline's wall clock grows
     # sublinearly-to-linearly with rows, not with some fixed overhead.
-    # 2 warmup + 2 recorded (VERDICT r6 Next #5): this entry recorded
-    # wildly bimodal pairs across rounds with IDENTICAL code (r5:
-    # 30.3/13.7 s; r6: 63.2/46.6 s). Controlled experiment (fresh
-    # session, System.gc() between reps, fresh tmp dir each rep):
+    # 2 warmup reps before the recorded ones (VERDICT r6 Next #5): this
+    # entry recorded wildly bimodal pairs across rounds with IDENTICAL
+    # code (r5: 30.3/13.7 s; r6: 63.2/46.6 s). Controlled experiment
+    # (fresh session, System.gc() between reps, fresh tmp dir each rep):
     # 29.4/31.2/16.3/15.9 s — the first TWO passes pay JVM JIT/codegen
     # warm-up for the write-heavy 1M plan regardless of GC or page
-    # cache, then the workload is steady to within ~3%. Recording the
-    # post-warmup pair (and the warmup samples in the variance field,
+    # cache, then the workload is steady to within ~3%. Recording only
+    # the post-warmup reps (and the warmup samples in the variance field,
     # for transparency) makes the flagship number comparable
     # round-over-round.
-    timed_e2e(
-        "medallion_e2e_1m", reps=3, warmup=2, rows=1_000_000, payload_kb=1
+    rec.timed_section(
+        "medallion_e2e_1m",
+        lambda tmp: run_pipeline(spark, tmp, rows=1_000_000, payload_kb=1),
+        reps=3,
+        warmup=2,
     )
 
     # Payload-heavy regime (the reference's tuned path: 256 KB payloads,
     # vectorized reader OFF, batch 1024 — 43-silver-build.yaml:92-94). Run
-    # the medallion at the reference's true payload size both ways.
-    # INTERLEAVED off/on, 3 reps each, MEDIAN recorded: this pair exists
-    # to compare the two reader modes, and a 2-sample min is too noisy to
-    # support a comparison (round 3 recorded [6.33, 11.99] s for one side
-    # — a 90% spread — while claiming the modes were "within noise").
-    # Interleaving cancels slow drift (page cache, GC); the median ignores
-    # one transient per side.
-    prev = spark.conf.get("spark.sql.parquet.enableVectorizedReader", "true")
-    payload_modes = (
+    # the medallion at the reference's true payload size both ways, each
+    # mode on its own session so the bench session's conf is never
+    # touched. INTERLEAVED off/on, 3 reps each, MEDIAN recorded: this pair
+    # exists to compare the two reader modes, and a 2-sample min is too
+    # noisy to support a comparison (round 3 recorded [6.33, 11.99] s for
+    # one side — a 90% spread — while claiming the modes were "within
+    # noise"). Interleaving cancels slow drift (page cache, GC); the
+    # median ignores one transient per side.
+    payload_sessions = {}
+    for label, vectorized in (
         ("medallion_payload256k_vec_off", "false"),
         ("medallion_payload256k_vec_on", "true"),
-    )
-    payload_samples: dict[str, list[float]] = {label: [] for label, _ in payload_modes}
-    try:
-        for _rep in range(3):
-            for label, vectorized in payload_modes:
-                spark.conf.set("spark.sql.parquet.enableVectorizedReader", vectorized)
-                tmp = tempfile.mkdtemp(prefix=f"bench_{label}_")
-                try:
-                    t0 = time.time()
-                    run_pipeline(spark, tmp, rows=1_000, payload_kb=256)
-                    payload_samples[label].append(round(time.time() - t0, 3))
-                except Exception as exc:
-                    errors[label] = str(exc).split("\n")[0][:200]
-                    print(f"# {label}: FAILED ({errors[label]})", file=sys.stderr)
-                finally:
-                    shutil.rmtree(tmp, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.parquet.enableVectorizedReader", prev)
+    ):
+        payload_sessions[label] = spark.newSession()
+        payload_sessions[label].conf.set(
+            "spark.sql.parquet.enableVectorizedReader", vectorized
+        )
+    payload_samples: dict[str, list[float]] = {label: [] for label in payload_sessions}
+    for _rep in range(3):
+        for label, session in payload_sessions.items():
+            sec = rec.attempt(
+                label,
+                lambda tmp: run_pipeline(session, tmp, rows=1_000, payload_kb=256),
+            )
+            if sec is not None:
+                payload_samples[label].append(sec)
     for label, samples in payload_samples.items():
         if samples:
             # lower-middle median: with an even count (a rep failed) the
             # upper-middle pick would bias exactly the on/off comparison
             # this section exists to make noise-robust
-            timings[label] = sorted(samples)[(len(samples) - 1) // 2]
-            variance[f"{label}_runs_sec"] = samples
-            print(f"# {label}: {timings[label]:.2f}s (runs {samples})", file=sys.stderr)
+            rec.record(label, sorted(samples)[(len(samples) - 1) // 2], samples)
 
     # Scaled dedup: the driver corpus tops out at 5k documents (sf0.1),
     # too small to evidence the MinHash->LSH pipeline's throughput claim.
-    # Generate a deterministic 100k-doc corpus (30 words/doc, 10% planted
-    # near-duplicates) and time the full signature->banding->candidate
-    # pipeline; the pair count is a correctness canary (exactly the
-    # planted 10k pairs — zero false candidates at these parameters).
-    try:
-        from pyspark.sql import functions as Fd
-
-        from spark_lakehouse_medallion_pipeline_spark.operators.dedup import (
-            minhash_lsh_candidates,
+    # Time the full signature->banding->candidate pipeline on the
+    # synthetic corpus, min-of-2, at 100k and at 1M docs (a single sample
+    # recorded a 34 s transient against a steady ~18 s in round-7/8
+    # testing). The pair count is a correctness canary at both scales:
+    # exactly the planted 10% pairs — zero false candidates at these
+    # parameters, recall at scale, not just throughput. Each corpus frame
+    # is built before its section, so its driver-side build stays out of
+    # the timed reps.
+    for label, n in (("dedup_lsh_100k", 100_000), ("dedup_lsh_1m", 1_000_000)):
+        docs = _synthetic_docs(spark, n, near_dup=True)
+        rec.timed_section(
+            label,
+            lambda _tmp: minhash_lsh_candidates(
+                docs, num_hashes=64, bands=16, shingle_k=3
+            ).count(),
+            reps=2,
+            canary=n // 10,
         )
-
-        word_expr = (
-            "concat_ws(' ', transform(sequence(0, 29), "
-            "j -> concat('w', pmod(xxhash64(_seed, j), 5000))))"
+    # Scale ratio for the dedup family (VERDICT r7 Next #7): LSH cost
+    # is n*bands-linear (signature + banding shuffle) plus a fixed
+    # per-job constant, so 10x docs should land well under 10x wall —
+    # r7 raw numbers gave 5.1x (3.6 -> 18.1 s).
+    if "dedup_lsh_1m" in timings and timings.get("dedup_lsh_100k"):
+        variance["dedup_lsh_scale_ratio_10x_data"] = round(
+            timings["dedup_lsh_1m"] / timings["dedup_lsh_100k"], 2
         )
-        docs100k = (
-            spark.range(100_000)
-            .withColumn("_seed", Fd.expr("CASE WHEN id % 10 = 0 THEN id + 1 ELSE id END"))
-            .select(
-                Fd.col("id").alias("doc_id"),
-                Fd.expr(
-                    f"CASE WHEN id % 10 = 0 THEN concat('variant ', {word_expr}) "
-                    f"ELSE {word_expr} END"
-                ).alias("text"),
-            )
-        )
-        samples, n_pairs = [], -1
-        for _ in range(2):
-            t0 = time.time()
-            n_pairs = minhash_lsh_candidates(
-                docs100k, num_hashes=64, bands=16, shingle_k=3
-            ).count()
-            samples.append(round(time.time() - t0, 3))
-        timings["dedup_lsh_100k"] = min(samples)
-        variance["dedup_lsh_100k_runs_sec"] = samples
-        print(
-            f"# dedup_lsh_100k: {min(samples):.2f}s (runs {samples}, "
-            f"{n_pairs} candidate pairs)",
-            file=sys.stderr,
-        )
-    except Exception as exc:
-        errors["dedup_lsh_100k"] = str(exc).split("\n")[0][:200]
-        print(f"# dedup_lsh_100k: FAILED ({errors['dedup_lsh_100k']})", file=sys.stderr)
-
-    # Scale-linearity point: the same LSH pipeline at 1M docs, min-of-2
-    # (a single sample recorded a 34 s transient against a steady ~18 s
-    # in round-7/8 testing — the same first-pass contamination every
-    # other section guards against). Expected ~4-6x wall for 10x docs as
-    # fixed overhead amortizes; the pair count stays the exact planted
-    # 10% (100k pairs) — recall at scale, not just throughput.
-    try:
-        docs1m = (
-            spark.range(1_000_000)
-            .withColumn("_seed", Fd.expr("CASE WHEN id % 10 = 0 THEN id + 1 ELSE id END"))
-            .select(
-                Fd.col("id").alias("doc_id"),
-                Fd.expr(
-                    f"CASE WHEN id % 10 = 0 THEN concat('variant ', {word_expr}) "
-                    f"ELSE {word_expr} END"
-                ).alias("text"),
-            )
-        )
-        samples_1m = []
-        n_pairs_1m = -1
-        for _ in range(2):
-            t0 = time.time()
-            n_pairs_1m = minhash_lsh_candidates(
-                docs1m, num_hashes=64, bands=16, shingle_k=3
-            ).count()
-            samples_1m.append(round(time.time() - t0, 3))
-        timings["dedup_lsh_1m"] = min(samples_1m)
-        variance["dedup_lsh_1m_runs_sec"] = samples_1m
-        # Scale ratio for the dedup family (VERDICT r7 Next #7): LSH cost
-        # is n*bands-linear (signature + banding shuffle) plus a fixed
-        # per-job constant, so 10x docs should land well under 10x wall —
-        # r7 raw numbers gave 5.1x (3.6 -> 18.1 s).
-        if timings.get("dedup_lsh_100k"):
-            variance["dedup_lsh_scale_ratio_10x_data"] = round(
-                timings["dedup_lsh_1m"] / timings["dedup_lsh_100k"], 2
-            )
-        print(
-            f"# dedup_lsh_1m: {timings['dedup_lsh_1m']:.2f}s "
-            f"({n_pairs_1m} candidate pairs, "
-            f"{variance.get('dedup_lsh_scale_ratio_10x_data', 'n/a')}x for 10x docs)",
-            file=sys.stderr,
-        )
-    except Exception as exc:
-        errors["dedup_lsh_1m"] = str(exc).split("\n")[0][:200]
-        print(f"# dedup_lsh_1m: FAILED ({errors['dedup_lsh_1m']})", file=sys.stderr)
 
     # Chunk-level exact dedup at 100k docs (q179's operator): 10% of the
     # corpus are EXACT copies of their successor doc, so first-occurrence
     # chunk dedup must reassemble exactly 10k docs to '' (the higher id of
-    # each copy pair loses every chunk race) — ENFORCED, not just printed:
-    # a wrong keeper rule or a chunk-boundary bug flips the count.
-    try:
-        from spark_lakehouse_medallion_pipeline_spark.operators.dedup import (
-            dedup_chunks_keep_first,
-        )
+    # each copy pair loses every chunk race) — a wrong keeper rule or a
+    # chunk-boundary bug flips the canary.
+    exact_docs = _synthetic_docs(spark, 100_000, near_dup=False)
 
-        docs100k_exact = (
-            spark.range(100_000)
-            .withColumn(
-                "_seed", Fd.expr("CASE WHEN id % 10 = 0 THEN id + 1 ELSE id END")
+    def chunk_dedup(_tmp: str) -> tuple:
+        row = (
+            dedup_chunks_keep_first(exact_docs, chunk_tokens=10)
+            .agg(
+                F.count(F.lit(1)).alias("total"),
+                F.sum(F.when(F.col("n_kept") == 0, 1).otherwise(0)).alias("lost"),
             )
-            .select(Fd.col("id").alias("doc_id"), Fd.expr(word_expr).alias("text"))
+            .collect()[0]
         )
-        samples = []
-        for _ in range(2):
-            t0 = time.time()
-            row = (
-                dedup_chunks_keep_first(docs100k_exact, chunk_tokens=10)
-                .agg(
-                    Fd.count(Fd.lit(1)).alias("total"),
-                    Fd.sum(
-                        Fd.when(Fd.col("n_kept") == 0, 1).otherwise(0)
-                    ).alias("lost"),
-                )
-                .collect()[0]
-            )
-            samples.append(round(time.time() - t0, 3))
-        if (row["total"], row["lost"]) != (100_000, 10_000):
-            raise AssertionError(
-                f"chunk-dedup canary: total={row['total']} lost={row['lost']}"
-                " (want 100000/10000)"
-            )
-        timings["chunk_dedup_100k"] = min(samples)
-        variance["chunk_dedup_100k_runs_sec"] = samples
-        print(
-            f"# chunk_dedup_100k: {min(samples):.2f}s (runs {samples}, "
-            f"canary 10000/100000 exact)",
-            file=sys.stderr,
-        )
-    except Exception as exc:
-        errors["chunk_dedup_100k"] = str(exc).split("\n")[0][:200]
-        print(
-            f"# chunk_dedup_100k: FAILED ({errors['chunk_dedup_100k']})",
-            file=sys.stderr,
-        )
+        return tuple(row)
+
+    rec.timed_section(
+        "chunk_dedup_100k", chunk_dedup, reps=2, canary=(100_000, 10_000)
+    )
 
     # Corpus-curation e2e — the LLM-data counterpart of medallion_e2e:
-    # generate 100k docs (10% planted near-dups) -> token-budget filter ->
-    # LSH near-dup removal (drop the higher id of each candidate pair) ->
+    # 100k docs (10% planted near-dups) -> token-budget filter -> LSH
+    # near-dup removal (drop the higher id of each candidate pair) ->
     # sequence packing -> write survivors + pack assignments, timed with
-    # the writes. The row counts are correctness canaries: near-dup
-    # removal must drop exactly the 10k planted variants.
-    try:
-        from spark_lakehouse_medallion_pipeline_spark.operators.text import (
-            pack_sequences,
-        )
+    # the writes. The survivor count is the canary: near-dup removal must
+    # drop exactly the 10k planted variants.
+    curation_docs = _synthetic_docs(spark, 100_000, near_dup=True).select(
+        "doc_id", F.expr("concat('s', pmod(doc_id, 8))").alias("source"), "text"
+    )
 
-        docs_cur = (
-            spark.range(100_000)
-            .withColumn("_seed", Fd.expr("CASE WHEN id % 10 = 0 THEN id + 1 ELSE id END"))
-            .select(
-                Fd.col("id").alias("doc_id"),
-                Fd.expr("concat('s', pmod(id, 8))").alias("source"),
-                Fd.expr(
-                    f"CASE WHEN id % 10 = 0 THEN concat('variant ', {word_expr}) "
-                    f"ELSE {word_expr} END"
-                ).alias("text"),
-            )
+    def curate(tmp: str) -> int:
+        filtered = curation_docs.filter(
+            F.expr("size(split(text, '\\\\s+')) BETWEEN 8 AND 64")
         )
-        tmp = tempfile.mkdtemp(prefix="bench_corpus_")
-        try:
-            t0 = time.time()
-            filtered = docs_cur.filter(
-                Fd.expr("size(split(text, '\\\\s+')) BETWEEN 8 AND 64")
-            )
-            cands = minhash_lsh_candidates(
-                filtered, num_hashes=64, bands=16, shingle_k=3
-            )
-            survivors = filtered.join(
-                cands.select(Fd.col("id_b").alias("doc_id")).distinct(),
-                "doc_id",
-                "left_anti",
-            ).localCheckpoint(eager=True)
-            survivors.write.mode("overwrite").parquet(f"{tmp}/docs")
-            pack_sequences(survivors, ctx_len=512).write.mode("overwrite").parquet(
-                f"{tmp}/packs"
-            )
-            n_surv = spark.read.parquet(f"{tmp}/docs").count()
-            # Enforce the canary, don't just print it: LSH must drop
-            # exactly the 10k planted variants or the timing is
-            # meaningless (a parameter regression would otherwise
-            # record a green entry).
-            if n_surv != 90_000:
-                raise AssertionError(
-                    f"corpus_e2e_100k canary: {n_surv} survivors, expected 90000"
-                )
-            timings["corpus_e2e_100k"] = round(time.time() - t0, 3)
-            print(
-                f"# corpus_e2e_100k: {timings['corpus_e2e_100k']:.2f}s "
-                f"({n_surv} survivors of 100000)",
-                file=sys.stderr,
-            )
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-    except Exception as exc:
-        errors["corpus_e2e_100k"] = str(exc).split("\n")[0][:200]
-        print(f"# corpus_e2e_100k: FAILED ({errors['corpus_e2e_100k']})", file=sys.stderr)
+        cands = minhash_lsh_candidates(filtered, num_hashes=64, bands=16, shingle_k=3)
+        survivors = filtered.join(
+            cands.select(F.col("id_b").alias("doc_id")).distinct(),
+            "doc_id",
+            "left_anti",
+        ).localCheckpoint(eager=True)
+        survivors.write.mode("overwrite").parquet(f"{tmp}/docs")
+        pack_sequences(survivors, ctx_len=512).write.mode("overwrite").parquet(
+            f"{tmp}/packs"
+        )
+        return spark.read.parquet(f"{tmp}/docs").count()
+
+    rec.timed_section("corpus_e2e_100k", curate, reps=1, canary=90_000)
 
     # Scale-linearity spot checks (VERDICT r6 Next #7): time selected
     # families at sf0.01 (10x less data than the sf0.1 headline corpus)
@@ -656,6 +591,38 @@ def main() -> None:
     if os.path.isdir(small_dir) and os.path.realpath(small_dir) != os.path.realpath(
         sf_dir
     ):
+
+        def scale_point(name: str, big_dir: str | None = None) -> float | None:
+            """Record t(sf)/t(sf0.01) for one entry, min-of-2 at sf0.01
+            against its headline min, or against min-of-2 at big_dir."""
+
+            def rows_at(d: str) -> int:
+                return qs[name](spark, d).count()
+
+            try:
+                t_small = min(clock(rows_at, small_dir)[0] for _ in range(2))
+                t_big = (
+                    timings[name]
+                    if big_dir is None
+                    else min(clock(rows_at, big_dir)[0] for _ in range(2))
+                )
+            except Exception as exc:
+                print(f"# scale-linearity {name} failed: {exc}", file=sys.stderr)
+                return None
+            variance[f"{name}_sf001_sec"] = t_small
+            # "_10x_data", not "_10x_docs": q191/q193 scale with TPC-H
+            # orders/lineitem rows, not document count (ADVICE r7) —
+            # the neutral suffix covers both input families.
+            ratio = variance[f"{name}_scale_ratio_10x_data"] = round(
+                t_big / max(t_small, 1e-9), 2
+            )
+            print(
+                f"# scale-linearity {name}: sf0.01 {t_small:.2f}s -> "
+                f"{t_big:.2f}s at sf{sf} (ratio {ratio}x for 10x data)",
+                file=sys.stderr,
+            )
+            return t_big
+
         for name in (
             "q181_bpe_train_2merges",
             "q184_bpe_encode_tokens",
@@ -723,37 +690,14 @@ def main() -> None:
         ):
             if name not in qs:
                 continue
-            if name not in run1 and name not in run2:
+            if name not in timings:
                 print(
                     f"# scale-linearity {name} skipped: no recorded headline"
                     " timing (query failed both passes)",
                     file=sys.stderr,
                 )
                 continue
-            try:
-                small_samples = []
-                for _ in range(2):
-                    t0 = time.time()
-                    qs[name](spark, small_dir).count()
-                    small_samples.append(round(time.time() - t0, 3))
-                t_small = min(small_samples)
-                t_big = min(x for x in (run1.get(name), run2.get(name)) if x is not None)
-                variance[f"{name}_sf001_sec"] = t_small
-                # "_10x_data", not "_10x_docs": q191/q193 scale with TPC-H
-                # orders/lineitem rows, not document count (ADVICE r7) —
-                # the neutral suffix covers both input families.
-                variance[f"{name}_scale_ratio_10x_data"] = round(
-                    t_big / max(t_small, 1e-9), 2
-                )
-                print(
-                    f"# scale-linearity {name}: sf0.01 {t_small:.2f}s -> "
-                    f"{t_big:.2f}s at sf{sf} "
-                    f"(ratio {variance[f'{name}_scale_ratio_10x_data']}x "
-                    f"for 10x data)",
-                    file=sys.stderr,
-                )
-            except Exception as exc:
-                print(f"# scale-linearity {name} failed: {exc}", file=sys.stderr)
+            scale_point(name)
 
         # q159 exact jaccard prefix join: headline-excluded (output
         # materialization swamps the signal — see HEADLINE note), but its
@@ -761,41 +705,19 @@ def main() -> None:
         # #4), so time both SFs directly here. min-of-2 each side, same
         # discipline as the roster above.
         name = "q159_jaccard_prefix_join"
-        if name in qs:
-            try:
-                samples: dict[str, list[float]] = {"small": [], "big": []}
-                for d, key in ((small_dir, "small"), (sf_dir, "big")):
-                    for _ in range(2):
-                        t0 = time.time()
-                        qs[name](spark, d).count()
-                        samples[key].append(round(time.time() - t0, 3))
-                t_small, t_big = min(samples["small"]), min(samples["big"])
-                variance[f"{name}_sf001_sec"] = t_small
-                variance[f"{name}_sf01_sec"] = t_big
-                variance[f"{name}_scale_ratio_10x_data"] = round(
-                    t_big / max(t_small, 1e-9), 2
-                )
-                # Recording convention (VERDICT r12 What's-wrong #3):
-                # this min-of-2 point estimate of a 20-40s adversarial
-                # kernel has ranged 10-17x across r10-r13 on UNCHANGED
-                # code — window noise, not a code trend. The band rides
-                # the full record so a single round's point value is
-                # never read as a regression/improvement narrative.
-                variance[f"{name}_ratio_band_observed"] = (
-                    "10-17x across rounds on unchanged code (min-of-2 "
-                    "each side; window-noise dominated — compare against "
-                    "the band, not the point)"
-                )
-                print(
-                    f"# scale-linearity {name}: sf0.01 {t_small:.2f}s -> "
-                    f"{t_big:.2f}s at sf{sf} "
-                    f"(ratio {variance[f'{name}_scale_ratio_10x_data']}x "
-                    f"for 10x data; observed band 10-17x across rounds on "
-                    f"unchanged code; headline-excluded, timed here only)",
-                    file=sys.stderr,
-                )
-            except Exception as exc:
-                print(f"# scale-linearity {name} failed: {exc}", file=sys.stderr)
+        if name in qs and (t_big := scale_point(name, sf_dir)) is not None:
+            variance[f"{name}_sf01_sec"] = t_big
+            # Recording convention (VERDICT r12 What's-wrong #3):
+            # this min-of-2 point estimate of a 20-40s adversarial
+            # kernel has ranged 10-17x across r10-r13 on UNCHANGED
+            # code — window noise, not a code trend. The band rides
+            # the full record so a single round's point value is
+            # never read as a regression/improvement narrative.
+            variance[f"{name}_ratio_band_observed"] = (
+                "10-17x across rounds on unchanged code (min-of-2 "
+                "each side; window-noise dominated — compare against "
+                "the band, not the point)"
+            )
 
     total = round(sum(timings.values()), 3)
     out = {
@@ -849,10 +771,7 @@ def main() -> None:
     #      for the contended-vs-clean routing;
     #   2. the full JSON is still printed first (contract/logs);
     #   3. the FINAL stdout line is a compact (<2000-char) JSON that fits
-    #      the capture window whole: q-entries keyed by bare q-number
-    #      ("q01" = q01_pricing_summary — names in the full file),
-    #      non-q entries keep full names, values at 2 decimals, variance
-    #      reduced to totals + spread + scale ratios.
+    #      the capture window whole — see build_compact_line.
     persist_full_record(out, base_dir)
     print(json.dumps(out))
     print(build_compact_line(out))
@@ -925,10 +844,12 @@ def build_compact_line(out: dict) -> str:
     capture keeps whole (it records only the LAST ~2000 chars and
     parses the last line). Shared with the pytest length guard
     (test_bench_compact_line_fits_capture_window) so test and output
-    can never drift apart. Degrade order if over budget: drop the
-    scale ratios, then collapse per-error text to a count — a run with
-    failures must still fit, since those are exactly the runs where
-    the surviving signal matters most."""
+    can never drift apart. The first form keeps 2-decimal times under
+    short keys ("q01" = q01_pricing_summary — names in the full file).
+    Over budget, the adaptive encoder keeps every entry and buys what
+    precision still fits; a run with failures must still fit, since
+    those are exactly the runs where the surviving signal matters
+    most."""
     import re
 
     timings, variance = out["queries"], out["variance"]
@@ -938,9 +859,6 @@ def build_compact_line(out: dict) -> str:
             n = re.match(r"q(\d+)", k)
             return n.group(1) if bare else n.group(0)
         return "medallion" if k == "medallion_gold_kpis" else k
-
-    def queries_map(dp: int, bare: bool = False) -> dict:
-        return {short_key(k, bare): round(v, dp) for k, v in timings.items()}
 
     compact_variance: dict[str, object] = {
         "run1": variance["headline_total_run1_sec"],
@@ -962,7 +880,7 @@ def build_compact_line(out: dict) -> str:
         "metric": out["metric"],
         "value": out["value"],
         "unit": out["unit"],
-        "queries": queries_map(2),
+        "queries": {short_key(k, bare=False): round(v, 2) for k, v in timings.items()},
         "sf": out["sf"],
         "bronze_mb_s": out.get("bronze_write_mb_s"),
         "variance": compact_variance,
@@ -977,55 +895,29 @@ def build_compact_line(out: dict) -> str:
         compact["errors"] = {k: v[:60] for k, v in errors.items()}
     line = json.dumps(compact, separators=(",", ":"))
     if len(line) > 1900:
-        # first degrade: per-query timings at 1 decimal (2-decimal values
-        # live in the committed BENCH_FULL_LATEST.json) — this keeps the
-        # scale ratios, which are per-round evidence, in the artifact
-        compact["queries"] = queries_map(1)
-        compact["note"] = "min2(1dp);full=BENCH_FULL_LATEST.json"
-        line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > 1900:
-        # second degrade: bare-number query keys ("181" = q181), one
-        # char saved per entry — still before sacrificing the ratios
-        compact["queries"] = queries_map(1, bare=True)
-        compact["note"] = "min2(1dp,qN keys);full=BENCH_FULL_LATEST.json"
-        line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > 1900:
-        # third degrade: 1-decimal ratios + terse note — the last stop
-        # before the ratios leave the artifact entirely
-        if "10x" in compact_variance:
-            compact_variance["10x"] = {
-                k: round(v, 1) for k, v in compact_variance["10x"].items()
-            }
-            compact["variance"] = compact_variance
-        compact["note"] = "min2 1dp;f=BENCH_FULL_LATEST.json"
-        line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > 1900:
-        # step 4 (rewritten r15, VERDICT r14 Next #1 / What's-wrong #1):
-        # the old ladder's integer-second + omit-if-zero steps made
+        # Adaptive encoder. EVERY benched entry appears in the final
+        # line, always: the old integer-second + omit-if-zero steps made
         # queries that got FASTER vanish from the driver's parse (8
         # phantom "dropped" queries in PERF_r14) and pinned fast
-        # entries' 8-vs-32-core scaling ratios at 1.0. New contract:
-        # EVERY benched entry appears in the final line, always — a
-        # query that speeds up must never become invisible.
+        # entries' 8-vs-32-core scaling ratios at 1.0.
         #
-        # Budget reality at the r15 battery (206 entries): the queries
-        # map alone at 1 decimal is 2143 chars against the driver's
-        # hard 2000-char capture, so all-1dp is physically impossible.
-        # Budget is reclaimed from the envelope (terse variance keys;
-        # bronze_mb_s and the raw run totals live in
-        # BENCH_FULL_LATEST.json) and, only when still needed, the 10x
-        # scale ratios (also committed in the full record, where the
-        # judge reads them — the DRIVER's own 8-vs-32-core scaling is
-        # computed from the per-entry values, so per-entry precision
-        # outranks our in-line copy of the 10x ratios). Remaining
-        # budget buys precision adaptively: values in [low, 10) seconds
-        # keep 1 decimal, others are integer seconds, with `low` the
-        # smallest rung that fits. At the current 32-core battery size
-        # `low` lands at 1.5 with the ratios dropped; integral values
-        # are emitted as bare ints (same number, 2 fewer chars). An
-        # entry that ran never prints 0: a sub-0.5 s entry below the
-        # rung prints its integer ceiling, 1 (one decimal for every
-        # such entry would overrun the window).
+        # Budget reality at the current battery (206 entries): the
+        # queries map alone at 1 decimal is 2143 chars against the
+        # driver's hard 2000-char capture, so all-1dp is physically
+        # impossible. Budget is reclaimed from the envelope (terse
+        # variance keys; bronze_mb_s and the raw run totals live in
+        # BENCH_FULL_LATEST.json), then from the error text, and, only
+        # when still needed, the 10x scale ratios (also committed in the
+        # full record, where the judge reads them — the DRIVER's own
+        # 8-vs-32-core scaling is computed from the per-entry values, so
+        # per-entry precision outranks our in-line copy of the 10x
+        # ratios). Remaining budget buys precision adaptively: values in
+        # [low, 10) seconds keep 1 decimal, others are integer seconds,
+        # with `low` the smallest rung that fits. Integral values are
+        # emitted as bare ints (same number, 2 fewer chars). An entry
+        # that ran never prints 0: a sub-0.5 s entry below the rung
+        # prints its integer ceiling, 1 (one decimal for every such
+        # entry would overrun the window).
         compact.pop("bronze_mb_s", None)
         compact["value"] = round(out["value"], 1)
         # In-line variance shrinks to the contention-guard signal alone
@@ -1044,13 +936,9 @@ def build_compact_line(out: dict) -> str:
         if errors:
             err_forms += [sorted(errors), {"n_errors": len(errors)}]
         var_forms: list[dict] = []
-        if "10x" in compact_variance:
-            var_forms.append(
-                dict(
-                    lean_variance,
-                    **{"10x": {k: round(v, 1) for k, v in compact_variance["10x"].items()}},
-                )
-            )
+        if ratios:
+            ratios_1dp = {k: round(v, 1) for k, v in ratios.items()}
+            var_forms.append(dict(lean_variance, **{"10x": ratios_1dp}))
         var_forms.append(lean_variance)
         for err_form in err_forms:
             if err_form is not None:
@@ -1066,7 +954,6 @@ def build_compact_line(out: dict) -> str:
         # Past every rung (would take a ~280-entry battery): the line
         # stays all-int with every entry present — never omit.
     return line
-
 
 if __name__ == "__main__":
     main()

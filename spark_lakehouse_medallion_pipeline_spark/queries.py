@@ -19463,157 +19463,7 @@ def q299_exactly_once_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 # This block reorders the registry so the first 50 entries are one ORACLED
 # representative per operator family — 50/50 hash-comparable — while every
 # displaced query stays registered (slots 51+) and in the local oracle gate
-# (tools/oracle_check.py runs the full battery). Round 3 swapped eight
-# over-represented slots (second window/text/map reps) for the families
-# added this round: line-level dedup (q114), classifier curation (q119),
-# SQL scripting (q122), XML (q123), Python data source (q124), PageRank
-# (q126), quality contracts (q127), CDC/point-in-time (q128/q130); later
-# in round 3, four more near-duplicate slots made way for the newest
-# families: bigram-LM scoring (q136 for q10's second grouping rep),
-# bloom-prefilter dedup (q137 for q35's third dedup rep), the conversion
-# funnel (q134 for q77's second frame-window rep), and bitmap exact
-# distincts (q145 for q15 — semi-joins stay covered by q07/q56).
-# Round 4 rotated eight more redundant slots to families that had never
-# earned a driver row, all oracle-hashed: recursive-CTE spine (q108 for
-# q03's second top-k rep), VARIANT (q110 for q93 — dedup keeps
-# q28/q137/q114), mapInArrow (q117 for q122 — SQL surface keeps q49/q56),
-# salted join (q133 for q07 — anti/exists stays via q97/q56), bitmap
-# rollup re-merge (q146 for q52's second grouping-extension rep), as-of
-# tolerance (q150 for q24's plain as-of), d=2 fuzzy ER (q152 for q75's
-# fourth text rep), the ANN exact-re-rank stage (q153, value-oracling
-# the tail of the rows-only PQ/IVF-PQ paths, for q90's fifth text rep),
-# and the REAL-codec BMP decode pipeline (q157 for q39's stub-codec
-# multimodal rep — the family's driver row is now value-hashed through
-# an actual encode->decode->feature path).
-# Late round 4: the portable-md5 hash family made three previously
-# rows-only-by-nature sketches fully value-oracled, and they take the
-# three most over-represented remaining slots: q162 MinHash-LSH (for
-# q57's fourth semi-structured rep), q165 SimHash (for q114 — dedup
-# family is now exact/bloom/MinHash/SimHash: q28/q137/q162/q165), and
-# q164 key-preserving pseudonymization (for q136 — text keeps
-# q29/q119/q95/q152; q57/q114/q136 all recorded green in r03).
-# Round 5 rotated eight late-round-4 families that had never earned a
-# driver row, each displacing a slot recorded green in BOTH r03 and
-# r04: triangle counting (q161), WAV audio features (q158), real-PNG
-# codec features (q176), exact rolling median (q170), PMI collocations
-# (q163), Pareto/ABC concentration (q174), time-weighted average
-# (q168), and Hilbert layout (q166, replacing its own family's q92
-# z-order rep). Displaced: q04/q06/q09/q23/q25/q29/q40/q92 — every
-# family they represented keeps another in-snapshot rep (see inline
-# comments below).
-# Mid round 5: nine more never-recorded entries rotated in, each
-# displacing a slot already green in r04 (and earlier): RRF fusion
-# (q189 for q11 — ranking windows are q189's own core), Markov
-# transitions (q172 for q12's lag/lead), tokenizer fertility (q186 for
-# q134), trimmed mean (q190 for q146 — bitmaps keep q145), label
-# propagation (q188 for q165 — dedup keeps q28/q137/q162/q152),
-# ANN recall eval (q183 for q153, same exact_rerank inside), domain
-# affinity (q185 for q119), real-GIF LZW features (q177 for q157 —
-# multimodal keeps q176/q158), and largest-remainder apportionment
-# (q187 for q97 — EXISTS keeps q56).
-# Round 7: the round-5 marquee families that still had no driver row
-# after the empty round 6 (VERDICT r6 Next #1) displace six slots green
-# in multiple prior rounds: chunk dedup (q179 for q42), BPE train (q181
-# for q18), dup-ngram memorization (q182 for q108), BPE encode (q184
-# for q110), plus the two never-in-6-rounds entries: connected
-# components (q67 for q117) and SCD2 (q129 for q13).
-# Late round 7: the three brand-new families take slots whose families
-# keep other reps, so they earn driver rows in their birth round
-# instead of being next round's never-recorded flag: k-means (q191 for
-# q20), BFS (q192 for q161), ANALYZE column stats (q193 for q130 —
-# q194's histogram is the same family, represented by q193).
-# Also late round 7: per-item weighted sampling (q195 for q164 —
-# anonymization's q164 is green r04-r06 and text keeps 4 reps).
-# Round 8 (VERDICT r7 Next #1): the last five first-class families
-# without any driver row rotate in — q194 histogram, q196 distribution
-# windows, q197 bitwise aggregates (all born after the r7 rotation),
-# plus q125 cogroup-as-of and q135 retention cohorts (the only two
-# API-surface families never recorded in 7 rounds). Displacements are
-# the verdict's own candidates, each green >=3 rounds with family
-# cover: q21 (X15 keeps q168 + streaming pytest), q55 (set-ops stays
-# value-oracled in the full gate), q49 (SQL surface keeps q56), q28
-# (dedup keeps q137/q162/q152/q179), q95 (text keeps q163/q152/q185/
-# q186).
-# Late round 8: the two families value-oracled THIS round take
-# birth-round rows — q149 contrastive top-up loop (for q137, green
-# r04-r07; dedup keeps q152/q179) and q198 integer
-# power-iteration PCA (for q126 PageRank, green r01-r07; graph keeps
-# q192/q67/q188); and the round's third new value-oracled family,
-# the q200 baseline-JPEG codec, takes q162's slot (green r04-r07;
-# q149's oracle embeds the same portable-LSH candidate pipeline, so
-# the technique keeps driver coverage). Fourth: q201 integer-exact PQ
-# takes q36's slot (brute kNN green all 7 rounds; q183 recomputes the
-# same brute kNN as its recall baseline). Finally the five late-round
-# families (q202 BM25, q203 equi-depth, q204 containment, q205 skew
-# profile, q206 FD audit) take the slots of q163/q145/q152/q133/q127
-# (each green 3-5 rounds with family or pytest cover, annotated
-# inline), and q207 rolling-bitmap-distinct / q208 temperature quotas
-# take q168 / q187 (green r05-r07; q207 is the time-window family's
-# fresh rep, q208 embeds q187's exact machinery), q209 portable
-# incremental ingest takes q48 (interval join green r04-r07; X6 keeps
-# q150), and q210 centroid affinity takes q174 (Pareto ABC green
-# r05-r07; top-k stays via q205 + q03) — 18 rotated slots this round,
-# every family born in round 8 earning its driver row in round 8.
-
-# Round 9 (VERDICT r8 Next #1): the fourteen round-8-born families that
-# landed after r8's last rotation window take their driver rows. The
-# displacement pool is the verdict's own four (q176/q177/q189/q188,
-# each green r05-r08 with multimodal/eval/graph cover) plus ten slots
-# green >=2 consecutive rounds whose families keep in-head reps, each
-# annotated at its replacement below: q150 (X6 as-of keeps q125
-# cogroup-as-of), q124 (X16 keeps q125), q56 (green r03-r08; the SQL
-# surface keeps the q197/q123 batteries and q56 stays value-oracled in
-# the full gate), q179/q184/q191/q193/q182/q129/q192 (dedup, BPE, ML,
-# ANALYZE, text, temporal, and graph each keep 2+ reps, see inline).
-
-# Round 10 (VERDICT r9 Next #1): the ten round-9-born families that
-# landed after r9's snapshot edit take their driver rows — led by q242
-# percentile-rank and q245 CUSUM, the driver-visible proof of the
-# distributed_rank primitive. The displacement pool follows the r9
-# precedent (slots green >=2 consecutive rounds whose families keep
-# in-head reps, each annotated inline): q196/q224/q218/q135/q194/q197/
-# q149/q222/q219/q210, all r8-born and green r08+r09, all staying
-# value-oracled in the full gate.
-# Late round 10: four of the eight round-10-born families take
-# birth-round rows (the q236 precedent): q247 schema drift (for q216),
-# q248 Kaplan-Meier (for q211), q250 RFM (for q220), q252 partition
-# pruning (for q203); then q255 KS (for q214) — the driver-visible
-# proof of distributed_rank's new multi-prefix-sum form — makes 15
-# rotations total this round (the r9 precedent count); q249/q251/
-# q253/q254 and the late-round families q256-q263 are the r11
-# never-recorded backlog.
-#
-# Round 11 cleared that backlog in full AND left no new one: all 12
-# never-recorded round-10 families (q249/q251/q253/q254/q256-q263)
-# rotated in, plus birth-round rows for ALL ELEVEN round-11 families
-# (q264 vacuum, q265 systematic sample, q266 salted skew fix, q267
-# bucketed join, q268 heavy hitters, q269 IVM, q270 zone-map audit,
-# q271 gap-fill, q272 sequence motifs, q273 TVD drift, q274
-# consistent hashing) — 23 rotations, each displacing a slot green
-# >= 2 consecutive driver rounds whose family keeps an in-head rep
-# (the per-slot annotations below name both sides of every swap).
-# Every family born through round 11 now has a driver row or a head
-# slot pending its birth-round record.
-#
-# Round 12 continues the zero-backlog discipline: all TEN round-12
-# families take birth-round head slots (q275 SCD2 dimension history,
-# q276 keyless interval-overlap join, q277 top-k WITH TIES, q278
-# sorted-write zone map, q279 z-order audit, q280 watermark late-data
-# audit, q281 SCD2 incremental merge, q282 replica reconciliation,
-# q283 majority-vote repair, q284 sortedness audit), displacing
-# q250/q244/q212/q232/q252/q243/q239/q241/q240/q247 — each green
-# >= 2 consecutive driver rounds, each family keeping in-head reps,
-# annotated at the swap sites below.
-
-# Round 14 continues the zero-backlog discipline: all NINE round-14
-# families take birth-round head slots — q291 streaming crash recovery /
-# exactly-once, q292 append-mode window emission timing, q293 AQE
-# skew-join rescue, q294 AQE partition coalescing, q295 REBALANCE write
-# rescue, q296 state-store crash recovery, q297 AQE broadcast
-# conversion, q298 streaming dedup TTL replay, q299 exactly-once MERGE
-# sink — displacing q257/q270/q251/q249/q221/q264/q242/q267/q260, each
-# green >= 3 consecutive driver rounds, each family keeping in-head
-# reps, annotated at the swap sites below.
+# (tools/oracle_check.py runs the full battery).
 
 _DRIVER_SNAPSHOT_50 = [
     # reference surface: aggregates, scalars, datetime, medallion KPIs

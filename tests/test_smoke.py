@@ -473,6 +473,58 @@ def test_bench_contended_record_never_displaces_clean_prior(tmp_path):
     assert json.loads(clean_path.read_text()) == quiet
 
 
+def test_bench_timed_section_records_min_of_timed_reps(monkeypatch):
+    """bench.py's one timed-section helper, driven by fake sections on a
+    fake clock: warm-up reps stay out of the recorded samples, the
+    recorded time is the min of the timed reps, each rep gets its own
+    fresh directory, and a wrong canary or a raising section records an
+    error and no time."""
+    import os
+    import types
+
+    import bench
+
+    now = [0.0]
+    monkeypatch.setattr(bench, "time", types.SimpleNamespace(time=lambda: now[0]))
+
+    def section(durations, result=7):
+        durations, dirs = iter(durations), []
+
+        def run(tmp):
+            assert os.path.isdir(tmp) and not os.listdir(tmp)
+            open(os.path.join(tmp, "out"), "w").close()
+            dirs.append(tmp)
+            now[0] += next(durations)
+            return result
+
+        return run, dirs
+
+    rec = bench.Recorder()
+    run, dirs = section([1.0, 9.0, 4.0, 2.0, 3.0])
+    rec.timed_section("s", run, reps=3, warmup=2, canary=7)
+    assert rec.timings == {"s": 2.0}
+    assert rec.variance == {"s_warmup_sec": [1.0, 9.0], "s_runs_sec": [4.0, 2.0, 3.0]}
+    assert len(set(dirs)) == 5 and not any(os.path.exists(d) for d in dirs)
+
+    run, _ = section([5.0, 6.0])
+    rec.timed_section("unchecked", run, reps=2)
+    assert rec.timings["unchecked"] == 5.0
+
+    run, _ = section([1.0, 1.0], result=6)
+    rec.timed_section("bad_canary", run, reps=2, canary=7)
+
+    def boom(tmp):
+        raise RuntimeError("section broke\nsecond line")
+
+    rec.timed_section("boom", boom, reps=1)
+    assert set(rec.errors) == {"bad_canary", "boom"}
+    assert "want 7" in rec.errors["bad_canary"]
+    assert rec.errors["boom"] == "section broke"
+    for label in ("bad_canary", "boom"):
+        assert label not in rec.timings
+        assert f"{label}_runs_sec" not in rec.variance
+
+
 def test_csv_quarantine_contract_modes(spark, tmp_path):
     """q236's malformed-ingest contract, mode by mode, on a hand-built
     fixture (3 good rows + the 5 planted bad lines): PERMISSIVE
