@@ -82,22 +82,6 @@ def word_shingles(text: Column, k: int = 3) -> Column:
     )
 
 
-def minhash_signature(text: Column, num_hashes: int = 64, shingle_k: int = 3) -> Column:
-    """MinHash signature (array<bigint>, length num_hashes).
-
-    Cost model (the 100 TB concern): shingle strings are built ONCE and
-    hashed to 64-bit base hashes ONCE; the n-hash family then re-hashes
-    only the 8-byte base value (xxhash64(h, seed)). Each of the
-    num_hashes positions is its own flat ``array_min(transform(...))``
-    expression — a nested-lambda form (transform over a seeds array with
-    an inner transform) evaluates interpreted per element and measured
-    ~16x slower than this flat layout. Deterministic everywhere,
-    entirely JVM-side, scan-local (no shuffle).
-    """
-    base = base_shingle_hashes(text, shingle_k)
-    return minhash_from_base(base, num_hashes)
-
-
 def base_shingle_hashes(text: Column, shingle_k: int = 3) -> Column:
     """Each document's shingle set as 64-bit hashes (array<bigint>).
 
@@ -122,20 +106,6 @@ def base_shingle_hashes(text: Column, shingle_k: int = 3) -> Column:
         # mirroring word_shingles' "whatever remains" fallback shingle.
         acc = F.zip_with(acc, shifted, lambda a, b: F.xxhash64(a, b))
     return F.slice(acc, 1, F.greatest(F.size(th) - (shingle_k - 1), F.lit(1)))
-
-
-def minhash_from_base(base_hashes: Column, num_hashes: int = 64) -> Column:
-    """MinHash family over precomputed base hashes: position i is
-    min(xxhash64(h, i)) — integer-only, cheap per extra hash."""
-
-    def position(i: int) -> Column:
-        seed = F.lit(i)
-        # Single-parameter lambda on purpose: a two-parameter lambda
-        # would be called as (element, index) by transform(), silently
-        # replacing the seed with the array index.
-        return F.array_min(F.transform(base_hashes, lambda h: F.xxhash64(h, seed)))
-
-    return F.array(*[position(i) for i in range(num_hashes)])
 
 
 def minhash_signatures(

@@ -270,35 +270,6 @@ def wav_decode(blob: bytes):
     return rate, ch, a
 
 
-def extract_image_features_bmp(media: DataFrame) -> DataFrame:
-    """REAL image feature extraction over BMP blobs: Arrow-batched
-    mapInPandas, numpy decode per row, integer-exact mean luma
-    (milli-units of the Rec.601 weights computed in integer arithmetic,
-    so the output is deterministic and oracle-hashable)."""
-    import numpy as np
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "width": [], "height": [], "n_channels": [], "mean_luma": []}
-            for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-                a = bmp_decode(bytes(blob))
-                h, w, c = a.shape
-                # integer Rec.601: (299 R + 587 G + 114 B) / 1000, summed
-                # exactly then floor-divided — no float accumulation.
-                s = a.astype(np.int64)
-                luma_sum = int(
-                    299 * s[:, :, 0].sum() + 587 * s[:, :, 1].sum() + 114 * s[:, :, 2].sum()
-                )
-                out["media_id"].append(mid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_channels"].append(c)
-                out["mean_luma"].append(str(luma_sum // (h * w)))  # milli-luma
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(_extract, schema=IMAGE_FEATURES_SCHEMA)
-
-
 AUDIO_FEATURES_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -366,32 +337,6 @@ def resize_images_bmp(media: DataFrame, width: int = 8, height: int = 8) -> Data
             yield pd.DataFrame(out)
 
     return media.select("media_id", "blob").mapInPandas(fn, RESIZED_SCHEMA)
-
-
-def synthesize_bmp_blobs(df: DataFrame, id_col: str, size: int = 16) -> DataFrame:
-    """Deterministic BMP test-pattern generator (size x size gradient
-    keyed on the id) — lets the full encode->decode->extract pipeline run
-    on tables that carry no real media. Arrow-batched like the decoders."""
-    import numpy as np
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for mid in pdf[id_col]:
-                g = np.arange(size, dtype=np.uint32)
-                r = ((g[:, None] * 255) // max(size - 1, 1)).astype(np.uint8)
-                r = np.repeat(r[:, :, None], 1, axis=2)
-                img = np.zeros((size, size, 3), dtype=np.uint8)
-                img[:, :, 0] = r[:, :, 0]                        # R: row gradient
-                img[:, :, 1] = r[:, :, 0].T                      # G: col gradient
-                img[:, :, 2] = int(mid) % 256                    # B: id-keyed
-                ids.append(int(mid))
-                blobs.append(bmp_encode(img))
-            yield pd.DataFrame({"media_id": ids, "blob": blobs})
-
-    return df.select(id_col).mapInPandas(
-        fn, schema="media_id long, blob binary"
-    )
 
 
 def synthesize_wav_blobs(
@@ -525,54 +470,6 @@ def png_decode_rgb8(blob: bytes):
             raise ValueError(f"unknown PNG filter type {ftype}")
         out[y] = rec.astype(np.uint8)
     return out.reshape(h, w, 3).copy()
-
-
-def synthesize_png_blobs(df: DataFrame, id_col: str, size: int = 16) -> DataFrame:
-    """The q157 BMP test pattern, containered as REAL PNGs — same pixel
-    content, so the closed-form luma oracle carries over and the
-    deflate+unfilter codec path is what the hash check exercises."""
-    import numpy as np
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for mid in pdf[id_col]:
-                g = np.arange(size, dtype=np.uint32)
-                r = ((g[:, None] * 255) // max(size - 1, 1)).astype(np.uint8)
-                img = np.zeros((size, size, 3), dtype=np.uint8)
-                img[:, :, 0] = r[:, 0][:, None]
-                img[:, :, 1] = r[:, 0][None, :]
-                img[:, :, 2] = int(mid) % 256
-                ids.append(int(mid))
-                blobs.append(png_encode_rgb8(img))
-            yield pd.DataFrame({"media_id": ids, "blob": blobs})
-
-    return df.select(id_col).mapInPandas(fn, schema="media_id long, blob binary")
-
-
-def extract_image_features_png(media: DataFrame) -> DataFrame:
-    """REAL PNG feature extraction — identical integer Rec.601 milli-
-    luma reduction as the BMP path, through the deflate codec."""
-    import numpy as np
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "width": [], "height": [], "n_channels": [], "mean_luma": []}
-            for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-                a = png_decode_rgb8(bytes(blob))
-                h, w, c = a.shape
-                s = a.astype(np.int64)
-                luma_sum = int(
-                    299 * s[:, :, 0].sum() + 587 * s[:, :, 1].sum() + 114 * s[:, :, 2].sum()
-                )
-                out["media_id"].append(mid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_channels"].append(c)
-                out["mean_luma"].append(str(luma_sum // (h * w)))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(_extract, schema=IMAGE_FEATURES_SCHEMA)
 
 
 def gif_encode_rgb8(arr) -> bytes:
@@ -1215,21 +1112,6 @@ def _jpeg_block_pattern(mid: int, size: int = 16):
     return img
 
 
-def synthesize_jpeg_blobs(df: DataFrame, id_col: str, size: int = 16) -> DataFrame:
-    """Per-id block-constant grayscale patterns through the REAL
-    baseline JPEG encoder (q200's input stage)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for mid in pdf[id_col]:
-                ids.append(int(mid))
-                blobs.append(jpeg_encode_rgb8(_jpeg_block_pattern(int(mid), size)))
-            yield pd.DataFrame({"media_id": ids, "blob": blobs})
-
-    return df.select(id_col).mapInPandas(fn, schema="media_id long, blob binary")
-
-
 def _test_pattern(mid: int, size: int):
     """The shared closed-form 16x16 gradient pattern (R row-gradient /
     G col-gradient / B id-keyed) used by every real-codec query — its
@@ -1247,18 +1129,21 @@ def _test_pattern(mid: int, size: int):
 
 
 def synthesize_media_blobs(
-    df: DataFrame, id_col: str, encode_fn, size: int = 16
+    df: DataFrame, id_col: str, encode_fn, size: int = 16, pattern=_test_pattern
 ) -> DataFrame:
-    """Codec-agnostic test-pattern synthesizer: the shared gradient
-    pattern through any (h, w, 3)->bytes encoder (bmp_encode,
-    png_encode_rgb8, gif_encode_rgb8, ...)."""
+    """Codec-agnostic test-pattern synthesizer: the per-id image
+    ``pattern(id, size)`` (default: the shared gradient pattern; q200
+    passes ``_jpeg_block_pattern``) through any (h, w, 3)->bytes encoder
+    (bmp_encode, png_encode_rgb8, gif_encode_rgb8, jpeg_encode_rgb8).
+    Arrow-batched like the decoders, so the full encode->decode->extract
+    pipeline runs on tables that carry no real media."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, blobs = [], []
             for mid in pdf[id_col]:
                 ids.append(int(mid))
-                blobs.append(encode_fn(_test_pattern(int(mid), size)))
+                blobs.append(encode_fn(pattern(int(mid), size)))
             yield pd.DataFrame({"media_id": ids, "blob": blobs})
 
     return df.select(id_col).mapInPandas(fn, schema="media_id long, blob binary")
@@ -1268,8 +1153,8 @@ def extract_image_features_codec(media: DataFrame, decode_fn) -> DataFrame:
     """Codec-agnostic REAL feature extraction: Arrow-batched
     mapInPandas, any bytes->(h, w, 3) decoder, integer Rec.601
     milli-luma (exact sums then one floor division — deterministic and
-    oracle-hashable). The per-codec wrappers above keep their names for
-    API stability; new codecs use this directly."""
+    oracle-hashable). Every real image codec (BMP, PNG, GIF, JPEG) goes
+    through this one extractor with its own decoder."""
     import numpy as np
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -20,7 +20,8 @@ Dialect rules that keep the value-hash comparison bit-exact
   - DuckDB regexp_replace needs the 'g' flag to match Spark's
     replace-all default.
   - LIMIT queries carry a unique tie-breaker in ORDER BY.
-  - events.ts is parquet TIMESTAMP(NANOS): read via sources.io.read_events.
+  - events.ts is parquet TIMESTAMP(MICROS) in every corpus; read it via
+    sources.io.read_events, which also accepts TIMESTAMP(NANOS).
 """
 
 from __future__ import annotations
@@ -6597,8 +6598,10 @@ def q157_bmp_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_lakehouse_medallion_pipeline_spark.operators import multimodal
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    blobs = multimodal.synthesize_bmp_blobs(docs, "doc_id", size=16)
-    return multimodal.extract_image_features_bmp(blobs)
+    blobs = multimodal.synthesize_media_blobs(
+        docs, "doc_id", multimodal.bmp_encode, size=16
+    )
+    return multimodal.extract_image_features_codec(blobs, multimodal.bmp_decode)
 
 
 @_q(
@@ -7627,8 +7630,10 @@ def q176_png_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_lakehouse_medallion_pipeline_spark.operators import multimodal
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    blobs = multimodal.synthesize_png_blobs(docs, "doc_id", size=16)
-    return multimodal.extract_image_features_png(blobs)
+    blobs = multimodal.synthesize_media_blobs(
+        docs, "doc_id", multimodal.png_encode_rgb8, size=16
+    )
+    return multimodal.extract_image_features_codec(blobs, multimodal.png_decode_rgb8)
 
 
 @_q(
@@ -8975,7 +8980,13 @@ def q200_jpeg_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_lakehouse_medallion_pipeline_spark.operators import multimodal
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    blobs = multimodal.synthesize_jpeg_blobs(docs, "doc_id", size=16)
+    blobs = multimodal.synthesize_media_blobs(
+        docs,
+        "doc_id",
+        multimodal.jpeg_encode_rgb8,
+        size=16,
+        pattern=multimodal._jpeg_block_pattern,
+    )
     return multimodal.extract_image_features_codec(
         blobs, multimodal.jpeg_decode_rgb8
     )
@@ -9546,8 +9557,9 @@ def q207_rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchored on days that HAVE events (leading partial windows
     included, the dashboard convention). The oracle pins the whole
     pipeline against a plain range-join COUNT(DISTINCT). Events must
-    come through sources.io.read_events (TIMESTAMP_NANOS rebuild);
-    date extraction is UTC to_date both sides."""
+    come through sources.io.read_events (micros corpus cast to
+    TIMESTAMP; a nanos file is rebuilt by integer division); date
+    extraction is UTC to_date both sides."""
     from spark_lakehouse_medallion_pipeline_spark.sources.io import read_events
 
     ev = read_events(spark, sf_dir).select(
@@ -18184,6 +18196,95 @@ def q290_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
 _Q291_ROWS = 6000
 _Q291_BATCH = 500
 _Q291_CRASH_BID = 3
+_Q291_N_BATCHES = -(-_Q291_ROWS // _Q291_BATCH)
+
+
+def _q291_feed(session: SparkSession) -> DataFrame:
+    """The trio's offset-replay source: _Q291_ROWS synthetic_docs rows
+    over 4 shards, _Q291_BATCH rows per microbatch."""
+    return (
+        session.readStream.format("synthetic_docs")
+        .option("rows", str(_Q291_ROWS))
+        .option("batch", str(_Q291_BATCH))
+        .option("shards", "4")
+        .load()
+    )
+
+
+def _log_entries(root: str, sub: str) -> list[int]:
+    """Sorted numeric entry names of ``root/sub`` (a checkpoint's
+    offsets/commits log, or q299's ledger); [] when it does not exist."""
+    import os
+
+    d = os.path.join(root, sub)
+    if not os.path.isdir(d):
+        return []
+    return sorted(int(n) for n in os.listdir(d) if n.isdigit())
+
+
+def _inject_crash_once(bid: int, marker: str, tag: str) -> None:
+    """The crash-recovery trio's (q291/q296/q299) injected failure:
+    raise at batch _Q291_CRASH_BID on the first run only (``marker``
+    records that it fired), after the batch's work and before its
+    offset commits."""
+    import os
+
+    if bid == _Q291_CRASH_BID and not os.path.exists(marker):
+        with open(marker, "w"):
+            pass
+        raise RuntimeError(f"{tag}-injected-crash")
+
+
+def _crash_restart(
+    start: Callable[[], object],
+    ck: str,
+    tag: str,
+    calls: list[int],
+    after_crash: Callable[[], None] | None = None,
+) -> tuple[list[int], int]:
+    """Crash/restart harness of the trio: run the checkpointed stream
+    ``start()`` (checkpoint ``ck``) twice, capturing each run's failure
+    whether the drain raises it or the query records it. Run 1
+    must fail with ``<tag>-injected-crash`` having committed batches
+    0.._Q291_CRASH_BID-1; ``after_crash`` then checks the entry's own
+    between-run invariants. Run 2 must drain all _Q291_N_BATCHES
+    commits, and the batch-call ledger ``calls`` must show the crashed
+    batch exactly twice and no other batch replayed. Every check is a
+    ValueError (never a bare assert: the q254 -O discipline). Returns
+    run 1's commit log and the number of replayed batches."""
+
+    def drain() -> str | None:
+        q = start()
+        err: str | None = None
+        try:
+            q.processAllAvailable()
+        except Exception as e:  # noqa: BLE001 — failure IS the fixture
+            err = str(e)
+        finally:
+            ex = q.exception()
+            if ex is not None:
+                err = str(ex)
+            q.stop()
+        return err
+
+    e1 = drain()
+    if e1 is None or f"{tag}-injected-crash" not in e1:
+        raise ValueError(f"run 1 did not crash as injected: {e1!r:.300}")
+    commits_run1 = _log_entries(ck, "commits")
+    if commits_run1 != list(range(_Q291_CRASH_BID)):
+        raise ValueError(f"unexpected run-1 commits: {commits_run1}")
+    if after_crash is not None:
+        after_crash()
+    e2 = drain()
+    if e2 is not None:
+        raise ValueError(f"restarted run failed: {e2!r:.300}")
+    commits_total = _log_entries(ck, "commits")
+    if commits_total != list(range(_Q291_N_BATCHES)):
+        raise ValueError(f"incomplete drain after restart: {commits_total}")
+    n_replayed = sum(1 for b in set(calls) if calls.count(b) > 1)
+    if calls.count(_Q291_CRASH_BID) != 2 or n_replayed != 1:
+        raise ValueError(f"replay ledger wrong: {sorted(calls)}")
+    return commits_run1, n_replayed
 
 
 @_q(
@@ -18199,7 +18300,7 @@ _Q291_CRASH_BID = 3
            CAST(SUM(mixed % 4096) AS BIGINT) AS bucket_sum,
            CAST({_Q291_CRASH_BID} AS BIGINT) AS n_commits_run1,
            CAST({_Q291_CRASH_BID + 1} AS BIGINT) AS n_offsets_run1,
-           CAST({-(-_Q291_ROWS // _Q291_BATCH)} AS BIGINT) AS n_commits_total,
+           CAST({_Q291_N_BATCHES} AS BIGINT) AS n_commits_total,
            CAST(1 AS BIGINT) AS n_replayed_batches
     FROM src GROUP BY 1
     """,
@@ -18258,61 +18359,24 @@ def q291_stream_crash_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         # its offset never commits — the restart must overwrite it
         bdf.write.mode("overwrite").parquet(os.path.join(sink, f"bid={bid}"))
         calls.append(bid)
-        if bid == _Q291_CRASH_BID and not os.path.exists(marker):
-            with open(marker, "w"):
-                pass
-            raise RuntimeError("q291-injected-crash")
+        _inject_crash_once(bid, marker, "q291")
 
-    def _drain() -> str | None:
-        q = (
-            spark.readStream.format("synthetic_docs")
-            .option("rows", str(_Q291_ROWS))
-            .option("batch", str(_Q291_BATCH))
-            .option("shards", "4")
-            .load()
+    def _start():
+        return (
+            _q291_feed(spark)
             .writeStream.foreachBatch(_write_batch)
             .option("checkpointLocation", ck)
             .start()
         )
-        err: str | None = None
-        try:
-            q.processAllAvailable()
-        except Exception as e:  # noqa: BLE001 — failure IS the fixture
-            err = str(e)
-        finally:
-            ex = q.exception()
-            if ex is not None:
-                err = str(ex)
-            q.stop()
-        return err
 
-    def _log_entries(sub: str) -> list[int]:
-        d = os.path.join(ck, sub)
-        if not os.path.isdir(d):
-            return []
-        return sorted(int(n) for n in os.listdir(d) if n.isdigit())
+    offsets_run1: list[int] = []
 
-    e1 = _drain()
-    if e1 is None or "q291-injected-crash" not in e1:
-        raise ValueError(f"run 1 did not crash as injected: {e1!r:.300}")
-    offsets_run1 = _log_entries("offsets")
-    commits_run1 = _log_entries("commits")
-    if not offsets_run1:
-        raise ValueError("restart would consume an EMPTY offset log")
-    if commits_run1 != list(range(_Q291_CRASH_BID)):
-        raise ValueError(f"unexpected run-1 commits: {commits_run1}")
+    def _check_offsets() -> None:
+        offsets_run1.extend(_log_entries(ck, "offsets"))
+        if not offsets_run1:
+            raise ValueError("restart would consume an EMPTY offset log")
 
-    e2 = _drain()
-    if e2 is not None:
-        raise ValueError(f"restarted run failed: {e2!r:.300}")
-    commits_total = _log_entries("commits")
-    n_total = -(-_Q291_ROWS // _Q291_BATCH)
-    if commits_total != list(range(n_total)):
-        raise ValueError(f"incomplete drain after restart: {commits_total}")
-    n_replayed = sum(1 for b in set(calls) if calls.count(b) > 1)
-    if calls.count(_Q291_CRASH_BID) != 2 or n_replayed != 1:
-        raise ValueError(f"replay ledger wrong: {sorted(calls)}")
-
+    commits_run1, n_replayed = _crash_restart(_start, ck, "q291", calls, _check_offsets)
     out = spark.read.parquet(sink)
     n_rows, n_ids = out.count(), out.select("doc_id").distinct().count()
     if n_rows != _Q291_ROWS or n_ids != _Q291_ROWS:
@@ -18322,7 +18386,7 @@ def q291_stream_crash_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("bucket").cast("bigint").alias("bucket_sum"),
         F.lit(len(commits_run1)).cast("bigint").alias("n_commits_run1"),
         F.lit(len(offsets_run1)).cast("bigint").alias("n_offsets_run1"),
-        F.lit(len(commits_total)).cast("bigint").alias("n_commits_total"),
+        F.lit(_Q291_N_BATCHES).cast("bigint").alias("n_commits_total"),
         F.lit(n_replayed).cast("bigint").alias("n_replayed_batches"),
     )
 
@@ -18809,7 +18873,7 @@ def q295_rebalance_write_rescue(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(*) AS BIGINT) AS n_total,
            CAST(SUM(mixed % 4096) AS BIGINT) AS bucket_sum,
            CAST({_Q291_CRASH_BID} AS BIGINT) AS n_commits_run1,
-           CAST({-(-_Q291_ROWS // _Q291_BATCH)} AS BIGINT) AS n_commits_total,
+           CAST({_Q291_N_BATCHES} AS BIGINT) AS n_commits_total,
            CAST(1 AS BIGINT) AS n_replayed_batches
     FROM src GROUP BY 1
     """,
@@ -18870,63 +18934,25 @@ def q296_stateful_stream_state_recovery(spark: SparkSession, sf_dir: str) -> Dat
     def _write_batch(bdf: DataFrame, bid: int) -> None:
         bdf.write.mode("overwrite").parquet(os.path.join(sink, f"bid={bid}"))
         calls.append(bid)
-        if bid == _Q291_CRASH_BID and not os.path.exists(marker):
-            with open(marker, "w"):
-                pass
-            raise RuntimeError("q296-injected-crash")
+        _inject_crash_once(bid, marker, "q296")
 
-    def _drain() -> str | None:
+    def _start():
         agg = (
-            stream.readStream.format("synthetic_docs")
-            .option("rows", str(_Q291_ROWS))
-            .option("batch", str(_Q291_BATCH))
-            .option("shards", "4")
-            .load()
+            _q291_feed(stream)
             .groupBy("shard")
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_total"),
                 F.sum("bucket").cast("bigint").alias("bucket_sum"),
             )
         )
-        q = (
+        return (
             agg.writeStream.outputMode("update")
             .foreachBatch(_write_batch)
             .option("checkpointLocation", ck)
             .start()
         )
-        err: str | None = None
-        try:
-            q.processAllAvailable()
-        except Exception as e:  # noqa: BLE001 — failure IS the fixture
-            err = str(e)
-        finally:
-            ex = q.exception()
-            if ex is not None:
-                err = str(ex)
-            q.stop()
-        return err
 
-    def _commits() -> list[int]:
-        d = os.path.join(ck, "commits")
-        if not os.path.isdir(d):
-            return []
-        return sorted(int(n) for n in os.listdir(d) if n.isdigit())
-
-    e1 = _drain()
-    if e1 is None or "q296-injected-crash" not in e1:
-        raise ValueError(f"run 1 did not crash as injected: {e1!r:.300}")
-    commits_run1 = _commits()
-    if commits_run1 != list(range(_Q291_CRASH_BID)):
-        raise ValueError(f"unexpected run-1 commits: {commits_run1}")
-    e2 = _drain()
-    if e2 is not None:
-        raise ValueError(f"restarted run failed: {e2!r:.300}")
-    n_total = -(-_Q291_ROWS // _Q291_BATCH)
-    if _commits() != list(range(n_total)):
-        raise ValueError(f"incomplete drain after restart: {_commits()}")
-    n_replayed = sum(1 for b in set(calls) if calls.count(b) > 1)
-    if calls.count(_Q291_CRASH_BID) != 2 or n_replayed != 1:
-        raise ValueError(f"replay ledger wrong: {sorted(calls)}")
+    commits_run1, n_replayed = _crash_restart(_start, ck, "q296", calls)
     # cumulative-state proof: the REPLAYED batch's updated counts must
     # already include everything before the crash
     replay = spark.read.parquet(os.path.join(sink, f"bid={_Q291_CRASH_BID}"))
@@ -18946,7 +18972,7 @@ def q296_stateful_stream_state_recovery(spark: SparkSession, sf_dir: str) -> Dat
             "n_total",
             "bucket_sum",
             F.lit(len(commits_run1)).cast("bigint").alias("n_commits_run1"),
-            F.lit(n_total).cast("bigint").alias("n_commits_total"),
+            F.lit(_Q291_N_BATCHES).cast("bigint").alias("n_commits_total"),
             F.lit(n_replayed).cast("bigint").alias("n_replayed_batches"),
         )
     )
@@ -19300,8 +19326,8 @@ def q298_stream_dedup_ttl_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT 'shard' || CAST(mixed % 4 AS VARCHAR) AS shard,
            CAST(COUNT(*) AS BIGINT) AS n,
            CAST(SUM(mixed % 4096) AS BIGINT) AS bucket_sum,
-           CAST({-(-_Q291_ROWS // _Q291_BATCH)} AS BIGINT) AS n_versions,
-           CAST({-(-_Q291_ROWS // _Q291_BATCH)} AS BIGINT)
+           CAST({_Q291_N_BATCHES} AS BIGINT) AS n_versions,
+           CAST({_Q291_N_BATCHES} AS BIGINT)
              AS n_batches_applied,
            CAST(1 AS BIGINT) AS n_batches_skipped_replay,
            CAST({_Q291_CRASH_BID} AS BIGINT) AS n_commits_run1
@@ -19373,70 +19399,37 @@ def q299_exactly_once_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         with open(entry, "w"):
             pass
-        if bid == _Q291_CRASH_BID and not os.path.exists(marker):
-            with open(marker, "w"):
-                pass
-            raise RuntimeError("q299-injected-crash")
+        _inject_crash_once(bid, marker, "q299")
 
-    def _drain() -> str | None:
-        q = (
-            spark.readStream.format("synthetic_docs")
-            .option("rows", str(_Q291_ROWS))
-            .option("batch", str(_Q291_BATCH))
-            .option("shards", "4")
-            .load()
+    def _start():
+        return (
+            _q291_feed(spark)
             .writeStream.foreachBatch(_apply_batch)
             .option("checkpointLocation", ck)
             .start()
         )
-        err: str | None = None
-        try:
-            q.processAllAvailable()
-        except Exception as e:  # noqa: BLE001 — failure IS the fixture
-            err = str(e)
-        finally:
-            ex = q.exception()
-            if ex is not None:
-                err = str(ex)
-            q.stop()
-        return err
 
-    def _commits() -> list[int]:
-        d = os.path.join(ck, "commits")
-        if not os.path.isdir(d):
-            return []
-        return sorted(int(n) for n in os.listdir(d) if n.isdigit())
+    def _check_crash_spot() -> None:
+        versions_mid = snapshot_versions(tdir)
+        if len(versions_mid) != _Q291_CRASH_BID + 1:
+            raise ValueError(
+                f"crash spot wrong: {len(versions_mid)} versions committed, "
+                f"expected {_Q291_CRASH_BID + 1} (work done, offset not)"
+            )
 
-    e1 = _drain()
-    if e1 is None or "q299-injected-crash" not in e1:
-        raise ValueError(f"run 1 did not crash as injected: {e1!r:.300}")
-    commits_run1 = _commits()
-    if commits_run1 != list(range(_Q291_CRASH_BID)):
-        raise ValueError(f"unexpected run-1 commits: {commits_run1}")
-    versions_mid = snapshot_versions(tdir)
-    if len(versions_mid) != _Q291_CRASH_BID + 1:
-        raise ValueError(
-            f"crash spot wrong: {len(versions_mid)} versions committed, "
-            f"expected {_Q291_CRASH_BID + 1} (work done, offset not)"
-        )
-    e2 = _drain()
-    if e2 is not None:
-        raise ValueError(f"restarted run failed: {e2!r:.300}")
-    n_total = -(-_Q291_ROWS // _Q291_BATCH)
-    if _commits() != list(range(n_total)):
-        raise ValueError(f"incomplete drain after restart: {_commits()}")
+    commits_run1, _ = _crash_restart(_start, ck, "q299", calls, _check_crash_spot)
     versions = snapshot_versions(tdir)
-    if len(versions) != n_total:
+    if len(versions) != _Q291_N_BATCHES:
         raise ValueError(
-            f"phantom commit: {len(versions)} versions for {n_total} "
+            f"phantom commit: {len(versions)} versions for {_Q291_N_BATCHES} "
             f"batches — the replay guard failed"
         )
-    if skipped != [_Q291_CRASH_BID] or calls.count(_Q291_CRASH_BID) != 2:
+    if skipped != [_Q291_CRASH_BID]:  # the replay was skipped, not re-merged
         raise ValueError(
             f"replay ledger wrong: skipped={skipped}, calls={sorted(calls)}"
         )
-    applied = sorted(int(n) for n in os.listdir(ledger) if n.isdigit())
-    if applied != list(range(n_total)):
+    applied = _log_entries(base, "ledger")
+    if applied != list(range(_Q291_N_BATCHES)):
         raise ValueError(f"ledger incomplete: {applied}")
     out = read_snapshot(spark, tdir)
     n_rows, n_ids = out.count(), out.select("doc_id").distinct().count()

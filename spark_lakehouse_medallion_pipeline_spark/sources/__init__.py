@@ -1,5 +1,4 @@
 from spark_lakehouse_medallion_pipeline_spark.sources.io import (  # noqa: F401
-    load_tables,
     read_parquet,
     read_table,
     write_partitioned_parquet,

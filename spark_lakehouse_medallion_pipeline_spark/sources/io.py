@@ -19,23 +19,12 @@ columns so downstream reads get partition pruning for free.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_lakehouse_medallion_pipeline_spark.session import table_format
-
-TPCH_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -45,23 +34,22 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 
 
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Events table reader.
+    """Events table reader; accepts ``ts`` in either parquet unit.
 
-    The corpus stores ``ts`` as parquet TIMESTAMP(NANOS), which Spark's
-    vectorized reader rejects (PARQUET_TYPE_ILLEGAL). We read nanos as
-    long (legacy conf) and rebuild a microsecond timestamp with INTEGER
-    division — ``ts/1000`` in double would lose ~256 ns at 2024 epoch
-    magnitudes and could flip millisecond boundaries vs the DuckDB oracle.
+    Every committed corpus (testdata sf0.001-sf0.1, perfbench's
+    generator) stores ``ts`` as TIMESTAMP(MICROS, isAdjustedToUTC=false),
+    read as TIMESTAMP_NTZ and cast below. FIXTURES.md's ``timestamp[ns]``
+    spec gives TIMESTAMP(NANOS), which Spark's vectorized reader rejects
+    (PARQUET_TYPE_ILLEGAL): nanos are read as long (legacy conf) and
+    rebuilt as a microsecond timestamp with INTEGER division — ``ts/1000``
+    in double would lose ~256 ns at 2024 epoch magnitudes and could flip
+    millisecond boundaries vs the DuckDB oracle.
 
-    Precision caveat: Spark timestamps are microsecond; DuckDB keeps the
-    full nanoseconds. The driver corpus is verified microsecond-aligned
-    (epoch_ns % 1000 == 0 for every row at every sf), so the truncation
-    is lossless here — on nano-resolution data, order-sensitive oracled
-    queries (q12 lag pairs, q24 as-of matches) could legitimately
-    diverge at sub-microsecond ties.
+    Precision caveat for nanos files: Spark truncates to microseconds,
+    DuckDB keeps nanoseconds, so on nano-resolution data order-sensitive
+    oracled queries (q12 lag pairs, q24 as-of matches) could diverge at
+    sub-microsecond ties.
     """
-    from pyspark.sql import functions as F
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     ts_type = dict(raw.dtypes).get("ts")
@@ -75,25 +63,6 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         # naive-timestamp reading.
         raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
     return raw
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES
-) -> dict[str, DataFrame]:
-    """Load the driver corpus (TESTDATA.md) as a dict of DataFrames."""
-    return {
-        n: read_events(spark, sf_dir) if n == "events" else spark.read.parquet(f"{sf_dir}/{n}.parquet")
-        for n in names
-    }
-
-
-def register_temp_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES
-) -> None:
-    """Expose the corpus to ``spark.sql`` — our equivalent of the
-    reference's Trino interactive surface (scripts/run_pipeline.py:240-277)."""
-    for n, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(n)
 
 
 def read_parquet_merged(spark: SparkSession, path: str) -> DataFrame:
@@ -348,22 +317,23 @@ def zvalue2(x: Column, y: Column) -> Column:
     return spread_bits16(x).bitwiseOR(F.shiftleft(spread_bits16(y), 1))
 
 
-def write_zordered(
+def _write_curve_clustered(
     df: DataFrame,
     path: str,
     cols: tuple[str, str],
-    num_files: int = 16,
-    mode: str = "overwrite",
+    curve: Callable[[Column, Column], Column],
+    bits: int,
+    num_files: int,
+    mode: str,
 ) -> None:
-    """Write ``df`` clustered along a 2-D Z-curve over ``cols``.
+    """Write ``df`` clustered along a 2-D space-filling curve over ``cols``.
 
-    Bucketizes each column to 16 bits by min/max scaling (one tiny agg
-    job — at 100 TB these bounds come from table stats instead),
-    interleaves to a z-value, range-partitions on it and sorts within
-    partitions, so every output file covers a small (x, y) bounding box.
-    Point/box predicates on EITHER column then prune most files via
-    parquet min/max stats — vs a single-column sort which only prunes on
-    its leading column. The z column is dropped before writing."""
+    Bucketizes each column to ``bits`` bits by min/max scaling (one tiny
+    agg job — at 100 TB these bounds come from table stats instead),
+    maps the bucket pair to a curve index with ``curve(x, y)``,
+    range-partitions on it and sorts within partitions, so every output
+    file covers a small (x, y) bounding box. The index column is dropped
+    before writing."""
     cx, cy = cols
     bounds = df.agg(
         F.min(cx).alias("_xmin"),
@@ -375,19 +345,34 @@ def write_zordered(
 
     def bucket(c: str, lo: str, hi: str) -> Column:
         span = (F.col(hi) - F.col(lo) + 1).cast("double")
-        return F.floor((F.col(c) - F.col(lo)).cast("double") * 65536.0 / span).cast(
-            "long"
-        )
+        return F.floor(
+            (F.col(c) - F.col(lo)).cast("double") * float(1 << bits) / span
+        ).cast("long")
 
-    z = b.withColumn("_z", zvalue2(bucket(cx, "_xmin", "_xmax"), bucket(cy, "_ymin", "_ymax")))
+    idx = curve(bucket(cx, "_xmin", "_xmax"), bucket(cy, "_ymin", "_ymax"))
     (
-        z.drop("_xmin", "_xmax", "_ymin", "_ymax")
-        .repartitionByRange(num_files, F.col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")
+        b.withColumn("_curve", idx)
+        .drop("_xmin", "_xmax", "_ymin", "_ymax")
+        .repartitionByRange(num_files, F.col("_curve"))
+        .sortWithinPartitions("_curve")
+        .drop("_curve")
         .write.mode(mode)
         .parquet(path)
     )
+
+
+def write_zordered(
+    df: DataFrame,
+    path: str,
+    cols: tuple[str, str],
+    num_files: int = 16,
+    mode: str = "overwrite",
+) -> None:
+    """Write ``df`` clustered along a 2-D Z-curve over ``cols``
+    (16-bit buckets interleaved by ``zvalue2``). Point/box predicates on
+    EITHER column then prune most files via parquet min/max stats — vs a
+    single-column sort which only prunes on its leading column."""
+    _write_curve_clustered(df, path, cols, zvalue2, 16, num_files, mode)
 
 
 def hilbert_udf(order: int = 8):
@@ -477,39 +462,12 @@ def write_hilbert_clustered(
     mode: str = "overwrite",
 ) -> None:
     """Write ``df`` clustered along a 2-D Hilbert curve over ``cols`` —
-    same contract as ``write_zordered`` (bucketize by min/max bounds,
-    range-partition on the curve index, sort within partitions, drop the
-    helper column) but with Hilbert locality: every run of consecutive
-    indexes is a connected, Manhattan-adjacent cell path, so each output
-    file's (x, y) bounding box is tighter than the z-curve's power-of-
-    two jumps allow, and 2-D range predicates prune more files."""
-    cx, cy = cols
-    side = 1 << order
-    bounds = df.agg(
-        F.min(cx).alias("_xmin"),
-        F.max(cx).alias("_xmax"),
-        F.min(cy).alias("_ymin"),
-        F.max(cy).alias("_ymax"),
-    )
-    b = df.crossJoin(F.broadcast(bounds))
-
-    def bucket(c: str, lo: str, hi: str) -> Column:
-        span = (F.col(hi) - F.col(lo) + 1).cast("double")
-        return F.floor(
-            (F.col(c) - F.col(lo)).cast("double") * float(side) / span
-        ).cast("long")
-
-    h = b.withColumn(
-        "_h", hilbert_udf(order)(bucket(cx, "_xmin", "_xmax"), bucket(cy, "_ymin", "_ymax"))
-    )
-    (
-        h.drop("_xmin", "_xmax", "_ymin", "_ymax")
-        .repartitionByRange(num_files, F.col("_h"))
-        .sortWithinPartitions("_h")
-        .drop("_h")
-        .write.mode(mode)
-        .parquet(path)
-    )
+    same contract as ``write_zordered`` but with ``order``-bit buckets
+    and Hilbert locality: every run of consecutive indexes is a
+    connected, Manhattan-adjacent cell path, so each output file's
+    (x, y) bounding box is tighter than the z-curve's power-of-two jumps
+    allow, and 2-D range predicates prune more files."""
+    _write_curve_clustered(df, path, cols, hilbert_udf(order), order, num_files, mode)
 
 
 # --- Versioned snapshot tables (reader-safe commits without a catalog) -----
@@ -620,7 +578,7 @@ def vacuum_snapshots(table_dir: str, keep: int = 2) -> list[int]:
 
     versions = snapshot_versions(table_dir)
     current = _current_version(table_dir)
-    drop = [v for v in versions[:-keep] if v != current] if keep else versions
+    drop = [v for v in (versions[:-keep] if keep else versions) if v != current]
     for v in drop:
         shutil.rmtree(pathlib.Path(table_dir, f"v={v}"), ignore_errors=True)
     return drop

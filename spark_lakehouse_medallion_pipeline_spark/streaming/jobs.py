@@ -139,25 +139,13 @@ def _ts_from_us(us):
     return None if us is None else pd.Timestamp(us * 1000)
 
 
-def _running_totals_fn(key, pdf_iter, state):
-    """Per-user accumulator: state carries (count, value-sum, last-event
-    micros) across microbatches; emits one updated row per user per
-    batch. Timed-out state emits its final row and clears."""
+def _fold_totals(acc, pdf_iter) -> tuple:
+    """Fold a key's input batches into its (count, value-sum, last-event
+    micros) accumulator; the sum comes back rounded to 6 places, as it
+    is stored and emitted."""
     import pandas as pd
 
-    if state.hasTimedOut:
-        (n, total, last_us) = state.get
-        state.remove()
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [total],
-                "last_ts": [_ts_from_us(last_us)],
-            }
-        )
-        return
-    n, total, last_us = state.get if state.exists else (0, 0.0, None)
+    n, total, last_us = acc
     for pdf in pdf_iter:
         n += len(pdf)
         total += float(pdf["value"].sum())
@@ -166,15 +154,34 @@ def _running_totals_fn(key, pdf_iter, state):
             mx_us = mx.value // 1000
             if last_us is None or mx_us > last_us:
                 last_us = mx_us
-    state.update((n, round(total, 6), last_us))
-    yield pd.DataFrame(
+    return n, round(total, 6), last_us
+
+
+def _totals_row(user_id, n, total, last_us):
+    """One RUNNING_TOTALS_SCHEMA output row."""
+    import pandas as pd
+
+    return pd.DataFrame(
         {
-            "user_id": [key[0]],
+            "user_id": [user_id],
             "n_events": [n],
-            "total_value": [round(total, 6)],
+            "total_value": [total],
             "last_ts": [_ts_from_us(last_us)],
         }
     )
+
+
+def _running_totals_fn(key, pdf_iter, state):
+    """Per-user accumulator: state carries (count, value-sum, last-event
+    micros) across microbatches; emits one updated row per user per
+    batch. Timed-out state emits its final row and clears."""
+    if state.hasTimedOut:
+        acc = state.get
+        state.remove()
+    else:
+        acc = _fold_totals(state.get if state.exists else (0, 0.0, None), pdf_iter)
+        state.update(acc)
+    yield _totals_row(key[0], *acc)
 
 
 def stateful_running_totals_stream(events: DataFrame, expire_state: bool = False) -> DataFrame:
@@ -328,28 +335,10 @@ class _RunningTotalsProcessor(_SP):
         self._state = handle.getValueState("totals", _STATE_SCHEMA)
 
     def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        n, total, last_us = (
-            tuple(self._state.get()) if self._state.exists() else (0, 0.0, None)
-        )
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            mx = pdf["ts"].max()
-            if mx is not None and not pd.isna(mx):
-                mx_us = mx.value // 1000
-                if last_us is None or mx_us > last_us:
-                    last_us = mx_us
-        self._state.update((n, round(total, 6), last_us))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [round(total, 6)],
-                "last_ts": [_ts_from_us(last_us)],
-            }
-        )
+        acc = tuple(self._state.get()) if self._state.exists() else (0, 0.0, None)
+        acc = _fold_totals(acc, rows)
+        self._state.update(acc)
+        yield _totals_row(key[0], *acc)
 
     def close(self) -> None:
         pass

@@ -66,7 +66,15 @@ def test_hilbert_curve_property(spark):
     """The defining Hilbert property: consecutive indexes are Manhattan-
     adjacent cells (z-order jumps at every power-of-two boundary), and
     the map is a bijection onto [0, side^2)."""
+    import typing
+
+    from pyspark.sql import Column
+
+    from spark_lakehouse_medallion_pipeline_spark.sources import io as sio
     from spark_lakehouse_medallion_pipeline_spark.sources.io import hilbert_udf
+
+    # the curve helpers' Column annotations resolve
+    assert typing.get_type_hints(sio.spread_bits16) == {"c": Column, "return": Column}
 
     order, side = 4, 16
     grid = spark.createDataFrame(

@@ -119,8 +119,9 @@ def test_image_and_audio_features_closed_form(spark):
     from spark_lakehouse_medallion_pipeline_spark.operators import multimodal as mm
 
     ids = spark.range(5, 8).selectExpr("id AS doc_id")
-    img = mm.extract_image_features_bmp(
-        mm.synthesize_bmp_blobs(ids, "doc_id", size=16)
+    img = mm.extract_image_features_codec(
+        mm.synthesize_media_blobs(ids, "doc_id", mm.bmp_encode, size=16),
+        mm.bmp_decode,
     ).collect()
     for r in img:
         assert (r["width"], r["height"], r["n_channels"]) == (16, 16, 3)
@@ -199,11 +200,17 @@ def test_png_features_agree_with_bmp(spark):
     from spark_lakehouse_medallion_pipeline_spark.operators import multimodal
 
     ids = spark.range(1, 9).select(F.col("id").alias("doc_id"))
-    bmp = multimodal.extract_image_features_bmp(
-        multimodal.synthesize_bmp_blobs(ids, "doc_id", size=16)
+    bmp = multimodal.extract_image_features_codec(
+        multimodal.synthesize_media_blobs(
+            ids, "doc_id", multimodal.bmp_encode, size=16
+        ),
+        multimodal.bmp_decode,
     )
-    png = multimodal.extract_image_features_png(
-        multimodal.synthesize_png_blobs(ids, "doc_id", size=16)
+    png = multimodal.extract_image_features_codec(
+        multimodal.synthesize_media_blobs(
+            ids, "doc_id", multimodal.png_encode_rgb8, size=16
+        ),
+        multimodal.png_decode_rgb8,
     )
     assert sorted(map(tuple, bmp.collect())) == sorted(map(tuple, png.collect()))
 
@@ -237,8 +244,11 @@ def test_gif_features_agree_with_bmp(spark):
     from spark_lakehouse_medallion_pipeline_spark.operators import multimodal
 
     ids = spark.range(1, 9).select(F.col("id").alias("doc_id"))
-    bmp = multimodal.extract_image_features_bmp(
-        multimodal.synthesize_bmp_blobs(ids, "doc_id", size=16)
+    bmp = multimodal.extract_image_features_codec(
+        multimodal.synthesize_media_blobs(
+            ids, "doc_id", multimodal.bmp_encode, size=16
+        ),
+        multimodal.bmp_decode,
     )
     gif = multimodal.extract_image_features_codec(
         multimodal.synthesize_media_blobs(
@@ -452,14 +462,19 @@ def test_jpeg_features_query_agrees_with_bmp_pattern(spark):
     """q200's Spark path end-to-end at a tiny scale: synthesize -> real
     decode -> features, mean luma closed-form per media_id."""
     from spark_lakehouse_medallion_pipeline_spark.operators.multimodal import (
+        _jpeg_block_pattern,
         extract_image_features_codec,
         jpeg_decode_rgb8,
-        synthesize_jpeg_blobs,
+        jpeg_encode_rgb8,
+        synthesize_media_blobs,
     )
 
     df = spark.range(8).withColumnRenamed("id", "doc_id")
     out = extract_image_features_codec(
-        synthesize_jpeg_blobs(df, "doc_id", size=16), jpeg_decode_rgb8
+        synthesize_media_blobs(
+            df, "doc_id", jpeg_encode_rgb8, size=16, pattern=_jpeg_block_pattern
+        ),
+        jpeg_decode_rgb8,
     ).collect()
     assert len(out) == 8
     for r in out:

@@ -184,6 +184,41 @@ def test_snapshot_table_versioned_commits(spark, tmp_path):
     assert sio.snapshot_versions(tdir) == [2, 3]
     with pytest.raises(FileNotFoundError, match="vacuumed"):
         sio.read_snapshot(spark, tdir, version=1)
+    # keep=0 drops every older version but never the live one
+    assert sio.vacuum_snapshots(tdir, keep=0) == [2]
+    assert sio.snapshot_versions(tdir) == [3]
+    got = {r["k"]: r["v"] for r in sio.read_snapshot(spark, tdir).collect()}
+    assert got == {1: "a3", 3: "c"}
+
+
+def test_read_events_accepts_nanos_and_micros(spark, tmp_path):
+    """``events.ts`` may be stored as TIMESTAMP(NANOS) (FIXTURES.md's
+    ``timestamp[ns]`` spec) or TIMESTAMP(MICROS) (every committed
+    corpus); both read through ``_t`` as a TIMESTAMP column truncated to
+    the same micros."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+    from pyspark.sql import functions as F
+
+    from spark_lakehouse_medallion_pipeline_spark.queries import _t
+
+    ns = [1_704_067_200_123_456_789, 1_719_750_896_999_999_999]
+    want = [v // 1000 for v in ns]  # 2024-01-01 00:00:00.123456, ...
+    got = {}
+    for unit in ("ns", "us"):
+        ts = pa.array(ns, pa.timestamp("ns")).cast(pa.timestamp(unit), safe=False)
+        sf = tmp_path / unit
+        sf.mkdir()
+        papq.write_table(
+            pa.table({"event_id": pa.array([1, 2], pa.int64()), "ts": ts}),
+            str(sf / "events.parquet"),
+        )
+        assert papq.read_schema(str(sf / "events.parquet")).field("ts").type.unit == unit
+        ev = _t(spark, str(sf), "events")
+        assert dict(ev.dtypes)["ts"] == "timestamp"
+        micros = ev.orderBy("event_id").select(F.unix_micros("ts")).collect()
+        got[unit] = [r[0] for r in micros]
+    assert got["ns"] == got["us"] == want
 
 
 @pytest.mark.slow

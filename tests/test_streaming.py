@@ -11,8 +11,9 @@ from spark_lakehouse_medallion_pipeline_spark.streaming import jobs
 
 
 def _events_stream_dir(spark, events, tmp_path):
-    """Re-write the nanos-ts corpus as clean micros parquet for the stream
-    source (the schema the streaming reader declares)."""
+    """Re-write the events corpus (micros ``ts``, read through
+    ``read_events``, which also accepts nanos) as plain TIMESTAMP parquet
+    in the schema the streaming reader declares."""
     path = str(tmp_path / "events_stream")
     events.select("event_id", "ts", "user_id", "event_type", "value", "props").coalesce(
         2
