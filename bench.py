@@ -538,7 +538,7 @@ def main() -> None:
 
     def chunk_dedup(_tmp: str) -> tuple:
         row = (
-            dedup_chunks_keep_first(exact_docs, chunk_tokens=10)
+            dedup_chunks_keep_first(exact_docs)
             .agg(
                 F.count(F.lit(1)).alias("total"),
                 F.sum(F.when(F.col("n_kept") == 0, 1).otherwise(0)).alias("lost"),

@@ -55,9 +55,9 @@ def _pick(tag: str, choices: list[tuple[str, float]]) -> Column:
     return expr.otherwise(F.lit(choices[-1][0]))
 
 
-def _hexid(tag: str, width: int = 32) -> Column:
-    """Deterministic uuid() stand-in (CM:48-49): sha2 of (tag, id)."""
-    return F.substring(F.sha2(F.concat_ws(":", F.lit(tag), F.col("id")), 256), 1, width)
+def _hexid(tag: str) -> Column:
+    """Deterministic uuid() stand-in (CM:48-49): 32 hex chars of sha2(tag, id)."""
+    return F.substring(F.sha2(F.concat_ws(":", F.lit(tag), F.col("id")), 256), 1, 32)
 
 
 def _randint_str(tag: str, n: int) -> Column:

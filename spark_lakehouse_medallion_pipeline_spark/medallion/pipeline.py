@@ -212,6 +212,7 @@ def run_pipeline(
     return stats
 
 
-def gold_over_bronze(spark: SparkSession, rows: int, as_of: str = "2024-03-01 12:00:00") -> DataFrame:
-    """Generate -> enrich -> aggregate without materializing (for tests/bench)."""
-    return build_gold(build_silver(generate_bronze(spark, rows, as_of=as_of), as_of=as_of))
+def gold_over_bronze(spark: SparkSession, rows: int) -> DataFrame:
+    """Generate -> enrich -> aggregate without materializing (for tests/bench),
+    on the generator's and silver's shared default clock."""
+    return build_gold(build_silver(generate_bronze(spark, rows)))

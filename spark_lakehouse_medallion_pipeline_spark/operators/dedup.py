@@ -185,20 +185,16 @@ def _bucket_pairs(ids: Column) -> Column:
     )
 
 
-def _pairs_from_banded(
-    banded: DataFrame, key_cols: list[str], max_bucket: int | None = None
-) -> DataFrame:
+def _pairs_from_banded(banded: DataFrame, key_cols: list[str]) -> DataFrame:
     """Hash-agnostic bucket-to-pairs tail shared by the xxhash64 fast
     path and the portable-md5 path: groupBy the band bucket collecting
-    sorted ids, optionally cap degenerate buckets, generate in-bucket
-    (id_a < id_b) pairs, count shared bands. ONE shuffle."""
+    sorted ids, generate in-bucket (id_a < id_b) pairs, count shared
+    bands. ONE shuffle."""
     buckets = (
         banded.groupBy(*key_cols)
         .agg(F.array_sort(F.collect_list("_id")).alias("_ids"))
         .filter(F.size("_ids") >= 2)
     )
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("_ids") <= max_bucket)
     return (
         buckets.select(F.explode(_bucket_pairs(F.col("_ids"))).alias("p"))
         .groupBy("p.id_a", "p.id_b")
@@ -207,10 +203,7 @@ def _pairs_from_banded(
 
 
 def minhash_lsh_candidates_from_signatures(
-    sig_df: DataFrame,
-    num_hashes: int = 64,
-    bands: int = 16,
-    max_bucket: int | None = None,
+    sig_df: DataFrame, num_hashes: int = 64, bands: int = 16
 ) -> DataFrame:
     """Candidate pairs from a signature table.
 
@@ -218,13 +211,9 @@ def minhash_lsh_candidates_from_signatures(
     bucket's ids, then pairs are generated inside each bucket row. This
     replaces the banded self-join, which scanned + re-computed the
     signature projection twice and shuffled both copies.
-
-    ``max_bucket`` drops degenerate buckets (at web scale a bucket with
-    10^5 members is boilerplate/empty-page text; its O(n^2) pairs add no
-    information — capping is standard practice, None = exact).
     """
     banded = _banded(sig_df, num_hashes, bands)
-    return _pairs_from_banded(banded, ["band", "band_hash"], max_bucket)
+    return _pairs_from_banded(banded, ["band", "band_hash"])
 
 
 def minhash_lsh_candidates(
@@ -257,20 +246,12 @@ def minhash_jaccard_estimate(
     text_col: str = "text",
     num_hashes: int = 64,
     shingle_k: int = 3,
-    signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Verify candidates: estimated jaccard = fraction of matching minhash
-    positions. Joins signatures to both sides of the candidate pairs.
-
-    Pass ``signatures`` (a (_id, _sig) table, ideally persisted) to skip
-    re-shingling the corpus — the dominant cost; without it the corpus
-    is re-signed here via the explode fast path."""
-    sig = (
-        signatures.select(F.col("_id").alias("_sid"), "_sig")
-        if signatures is not None
-        else minhash_signatures(docs, id_col, text_col, num_hashes, shingle_k).select(
-            F.col("_id").alias("_sid"), "_sig"
-        )
+    positions. Joins signatures to both sides of the candidate pairs;
+    the corpus is re-signed here via the explode fast path."""
+    sig = minhash_signatures(docs, id_col, text_col, num_hashes, shingle_k).select(
+        F.col("_id").alias("_sid"), "_sig"
     )
     a = sig.select(F.col("_sid").alias("id_a"), F.col("_sig").alias("sig_a"))
     b = sig.select(F.col("_sid").alias("id_b"), F.col("_sig").alias("sig_b"))
@@ -292,14 +273,10 @@ def minhash_near_dup_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_k: int = 3,
     min_jaccard: float | None = None,
-    max_bucket: int | None = None,
 ) -> DataFrame:
-    """Full near-dup pipeline: signatures once -> LSH candidates ->
-    signature-match jaccard estimate.
+    """Full near-dup pipeline: 64-hash signatures over word 3-shingles
+    once -> 16-band LSH candidates -> signature-match jaccard estimate.
 
     The signature table is pinned with a lazy localCheckpoint, so
     shingling+hashing — the dominant cost — runs exactly once even though
@@ -311,10 +288,8 @@ def minhash_near_dup_pairs(
 
     Returns (id_a, id_b, n_shared_bands, jaccard_est), id_a < id_b.
     """
-    sig = minhash_signatures(
-        docs, id_col, text_col, num_hashes, shingle_k
-    ).localCheckpoint(eager=False)
-    cands = minhash_lsh_candidates_from_signatures(sig, num_hashes, bands, max_bucket)
+    sig = minhash_signatures(docs, id_col, text_col).localCheckpoint(eager=False)
+    cands = minhash_lsh_candidates_from_signatures(sig)
     a = sig.select(F.col("_id").alias("id_a"), F.col("_sig").alias("sig_a"))
     b = sig.select(F.col("_id").alias("id_b"), F.col("_sig").alias("sig_b"))
     matches = F.size(
@@ -330,7 +305,7 @@ def minhash_near_dup_pairs(
             "id_a",
             "id_b",
             "n_shared_bands",
-            (matches.cast("double") / F.lit(float(num_hashes))).alias("jaccard_est"),
+            (matches.cast("double") / F.lit(64.0)).alias("jaccard_est"),
         )
     )
     if min_jaccard is not None:
@@ -460,15 +435,14 @@ def minhash_signatures_pandas(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 64,
-    shingle_k: int = 3,
 ) -> DataFrame:
-    """(_id, _sig) signature table on the Arrow/numpy path.
+    """(_id, _sig) signature table on the Arrow/numpy path, 64 hashes
+    over word 3-shingles (minhash_signatures' defaults).
 
-    Shingling + base hashing stay JVM-side (string work); the n-hash
-    family is a vectorized splitmix64 finalizer over a (shingles x
-    num_hashes) uint64 grid per document — one numpy broadcast instead
-    of num_hashes codegen'd columns. Measured at sf0.1 this does NOT
+    Shingling + base hashing stay JVM-side (string work); the 64-hash
+    family is a vectorized splitmix64 finalizer over a (shingles x 64)
+    uint64 grid per document — one numpy broadcast instead of 64
+    codegen'd columns. Measured at sf0.1 this does NOT
     beat minhash_signatures (9s vs 5.6s cold): Arrow list transfer +
     the per-document Python loop costs more than the one-time codegen
     compile it avoids. Kept as the reference implementation for
@@ -481,7 +455,7 @@ def minhash_signatures_pandas(
 
     base = docs.select(
         F.col(id_col).alias("_id"),
-        base_shingle_hashes(F.col(text_col), shingle_k).alias("_h"),
+        base_shingle_hashes(F.col(text_col)).alias("_h"),
     )
     out_schema = StructType(
         [StructField("_id", LongType()), StructField("_sig", ArrayType(LongType()))]
@@ -493,7 +467,7 @@ def minhash_signatures_pandas(
 
         with np.errstate(over="ignore"):
             seeds = (
-                np.arange(1, num_hashes + 1, dtype=np.uint64)
+                np.arange(1, 65, dtype=np.uint64)
                 * np.uint64(0x9E3779B97F4A7C15)
             )
             for pdf in batches:
@@ -513,7 +487,6 @@ def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 50,
 ) -> DataFrame:
     """Connected components over a pair list -> (node, component), where
     component = min node id in the component. This is the clustering step
@@ -528,16 +501,17 @@ def connected_components(
     is localCheckpoint'ed — an iterative self-referential plan otherwise
     doubles its lineage every round and the ANALYZER (not the data) runs
     out of heap. On a real cluster use reliable checkpoint() so rounds
-    also survive executor loss. The loop stops at fixpoint (driver-side
-    loop is inherent to iterative graph algorithms on Spark — each ROUND is fully distributed).
+    also survive executor loss. The loop stops at fixpoint, or after 50
+    rounds (driver-side loop is inherent to iterative graph algorithms on
+    Spark — each ROUND is fully distributed). The symmetric edge table
+    every round re-reads is pinned with a lazy localCheckpoint owned by
+    the frame, so nothing enters the session's cache.
     """
-    from pyspark import StorageLevel
-
     e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     edges = (
         e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
     labels = (
         edges.select(F.col("src").alias("node"))
@@ -545,7 +519,7 @@ def connected_components(
         .withColumn("label", F.col("node"))
         .localCheckpoint()
     )
-    for _ in range(max_iter):
+    for _ in range(50):
         nmin = (
             edges.join(labels, edges.src == labels.node)
             .groupBy("dst")
@@ -573,7 +547,6 @@ def connected_components(
         labels = jumped
         if changed == 0:
             break
-    edges.unpersist()
     return labels.select("node", F.col("label").alias("component"))
 
 
@@ -628,8 +601,6 @@ def incremental_near_dup_filter(
     id_col: str = "doc_id",
     text_col: str = "text",
     num_hashes: int = 64,
-    bands: int = 16,
-    shingle_k: int = 3,
 ) -> DataFrame:
     """Shard-ingest dedup: keep only new documents that are NOT LSH
     near-duplicates of an already-ingested corpus.
@@ -638,8 +609,9 @@ def incremental_near_dup_filter(
     minhash_signatures — at 100 TB you maintain it as a managed table and
     each incoming shard probes it instead of re-signing the corpus. Plan:
     sign the (small) new shard, explode both sides to (band, band_hash)
-    buckets, and LEFT ANTI join new against existing buckets — one
-    hash-join on a well-spread key, no pair generation, no O(n^2).
+    buckets over 16 bands, and LEFT ANTI join new against existing
+    buckets — one hash-join on a well-spread key, no pair generation,
+    no O(n^2).
 
     Returns the surviving rows of ``new_docs`` (all original columns).
 
@@ -655,9 +627,9 @@ def incremental_near_dup_filter(
             f"probe uses num_hashes={num_hashes}; rebuild one side so the "
             "banding schemes match (a mismatch finds zero collisions)."
         )
-    new_sig = minhash_signatures(new_docs, id_col, text_col, num_hashes, shingle_k)
-    new_banded = _banded(new_sig, num_hashes, bands)
-    old_banded = _banded(existing_signatures, num_hashes, bands).select(
+    new_sig = minhash_signatures(new_docs, id_col, text_col, num_hashes)
+    new_banded = _banded(new_sig, num_hashes, 16)
+    old_banded = _banded(existing_signatures, num_hashes, 16).select(
         "band", "band_hash"
     )
     dup_ids = new_banded.join(old_banded, ["band", "band_hash"], "left_semi").select(
@@ -837,7 +809,6 @@ def bloom_prefilter_semi_join(
     reference: DataFrame,
     key_col: str,
     m_bits: int = 1 << 20,
-    n_hashes: int = 2,
     verify: bool = True,
 ) -> DataFrame:
     """Semi-join ``probe`` against ``reference`` on ``key_col`` with a
@@ -858,6 +829,7 @@ def bloom_prefilter_semi_join(
     (exact-verify skipped — acceptable when downstream tolerates the
     false-positive rate, e.g. routing to a verification queue).
     """
+    n_hashes = 2  # bit positions per key
     bloom = bitset_bloom_build(reference.select(key_col), key_col, m_bits, n_hashes)
     out = probe
     for i in range(n_hashes):
@@ -1291,7 +1263,6 @@ def minhash_lsh_candidates_portable(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_k: int = 3,
-    max_bucket: int | None = None,
     broadcast_distinct_shingles: bool = False,
 ) -> DataFrame:
     """MinHash-LSH candidates with a PORTABLE hash family — every stage
@@ -1316,11 +1287,10 @@ def minhash_lsh_candidates_portable(
     compute the n-hash family as n codegen'd columns, per-position mins
     in ONE map-side-combined hash aggregate, band keys as concat_ws
     strings, then the single groupBy-(band, key) bucket shuffle with
-    in-bucket pair generation (shared tail ``_pairs_from_banded``;
-    ``max_bucket`` caps degenerate buckets exactly like the fast path).
-    Docs shorter than ``shingle_k`` tokens
-    are dropped (documented contract — mirrors the oracle's empty
-    range). Returns (id_a, id_b, n_shared_bands), id_a < id_b.
+    in-bucket pair generation (shared tail ``_pairs_from_banded``).
+    Docs shorter than ``shingle_k`` tokens are dropped (documented
+    contract — mirrors the oracle's empty range). Returns
+    (id_a, id_b, n_shared_bands), id_a < id_b.
 
     ``broadcast_distinct_shingles=True`` hashes the DISTINCT shingle
     table once and broadcast-joins it back instead of hashing every
@@ -1344,7 +1314,7 @@ def minhash_lsh_candidates_portable(
         docs, id_col, text_col, num_hashes, bands, shingle_k,
         broadcast_distinct_shingles,
     )
-    return _pairs_from_banded(banded, ["band", "bkey"], max_bucket)
+    return _pairs_from_banded(banded, ["band", "bkey"])
 
 
 def minhash_banded_portable(
@@ -1440,11 +1410,10 @@ def simhash_portable(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_bits: int = 60,
 ) -> DataFrame:
-    """Per-document SimHash fingerprint with the PORTABLE md5 hash family
-    (companion to ``minhash_lsh_candidates_portable`` — the xxhash64
-    SimHash in ``simhash_fingerprints``/q34 is Spark-specific and can
+    """Per-document 60-bit SimHash fingerprint with the PORTABLE md5
+    hash family (companion to ``minhash_lsh_candidates_portable`` — the
+    xxhash64 SimHash in ``simhash_fingerprints``/q34 is Spark-specific and can
     only be recall-tested; this one value-oracles the full fingerprint:
     every bit of every doc hash-compares against an engine that has md5
     and integer bit ops).
@@ -1455,13 +1424,11 @@ def simhash_portable(
     -> 0, the conventional choice).
 
     Plan shape: explode tokens once, then ONE map-side-combined hash
-    aggregate computing all ``n_bits`` conditional sums as codegen'd
-    columns (no bit-dimension row explosion — the oracle's readable
-    cross-join-with-range form would shuffle n_bits rows per doc), and
-    the fingerprint assembles from the sums scan-locally. Returns
+    aggregate computing all 60 conditional sums as codegen'd columns
+    (no bit-dimension row explosion — the oracle's readable
+    cross-join-with-range form would shuffle 60 rows per doc), and the
+    fingerprint assembles from the sums scan-locally. Returns
     (id, simhash, n_tokens)."""
-    if not 1 <= n_bits <= 60:
-        raise ValueError(f"n_bits must be in [1, 60], got {n_bits}")
     toks = docs.select(
         F.col(id_col).alias("_id"),
         F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("_w"),
@@ -1479,11 +1446,11 @@ def simhash_portable(
                 F.when(F.shiftright(F.col("_h"), j).bitwiseAND(F.lit(1)) == 1, 1)
                 .otherwise(-1)
             ).alias(f"_s{j}")
-            for j in range(n_bits)
+            for j in range(60)
         ],
     )
     fingerprint = None
-    for j in range(n_bits):
+    for j in range(60):
         term = F.when(
             F.col(f"_s{j}") > 0, F.lit(1).cast("bigint") * (1 << j)
         ).otherwise(F.lit(0).cast("bigint"))
@@ -1499,22 +1466,21 @@ def dedup_chunks_keep_first(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    chunk_tokens: int = 10,
 ) -> DataFrame:
     """Cross-document chunk-level EXACT dedup with first-occurrence
     keeper and document reassembly — the paragraph-granularity
     exact-substring dedup of RefinedWeb/"Deduplicating Training Data"
     pipelines, adapted to whitespace corpora: split each document into
-    fixed ``chunk_tokens``-token chunks, keep only the GLOBALLY FIRST
-    occurrence of each chunk text (lowest (doc_id, chunk_pos) — exactly one
-    copy of every duplicated span survives corpus-wide, unlike
+    fixed 10-token chunks, keep only the GLOBALLY FIRST occurrence of
+    each chunk text (lowest (doc_id, chunk_pos) — exactly one copy of
+    every duplicated span survives corpus-wide, unlike
     text.remove_repeated_lines which drops boilerplate from EVERY doc),
     and rebuild each document from its surviving chunks in order.
 
     Returns (id, n_chunks, n_kept, text_clean) for every input doc
     (docs whose every chunk lost the race reassemble to '').
 
-    Scale shape: one explode (factor len/chunk_tokens), ONE shuffle on
+    Scale shape: one explode (factor len/10), ONE shuffle on
     chunk text for the min-(doc,pos) keeper (map-side combined), one
     broadcast-eligible join back, one shuffle on id for reassembly. The
     keeper aggregate is a MIN — no collect_list of doc ids, so a chunk
@@ -1522,15 +1488,13 @@ def dedup_chunks_keep_first(
     combiner. No driver collect, no all-pairs stage.
     """
     t = F.split(F.trim(F.col(text_col)), r"\s+")
-    n_chunks = F.ceil(F.size(t) / F.lit(chunk_tokens)).cast("bigint")
+    n_chunks = F.ceil(F.size(t) / F.lit(10)).cast("bigint")
     chunks = docs.select(
         F.col(id_col).alias("_id"),
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), n_chunks - 1),
-                lambda g: F.array_join(
-                    F.slice(t, g * chunk_tokens + 1, chunk_tokens), " "
-                ),
+                lambda g: F.array_join(F.slice(t, g * 10 + 1, 10), " "),
             )
         ).alias("_pos", "_chunk"),
     )

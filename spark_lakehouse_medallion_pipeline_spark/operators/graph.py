@@ -21,13 +21,13 @@ def pagerank_int(
     iterations: int = 3,
     src: str = "src",
     dst: str = "dst",
-    scale: int = PAGERANK_SCALE,
 ) -> DataFrame:
     """PageRank with 0.85 damping over a directed edge list, in pure
-    integer arithmetic: every node starts at ``scale``; one iteration is
+    integer arithmetic: every node starts at ``PAGERANK_SCALE``; one
+    iteration is
 
         contrib(v) = sum over edges (u, v) of  r(u) DIV outdeg(u)
-        r'(v)      = (15*scale + 85*contrib(v)) DIV 100
+        r'(v)      = (15*PAGERANK_SCALE + 85*contrib(v)) DIV 100
 
     (floor division at both steps — deterministic on every engine, no
     float summation order to diverge). Dangling mass is dropped, the
@@ -40,7 +40,7 @@ def pagerank_int(
     every iteration with localCheckpoint (the connected_components
     lesson — without it the plan doubles per round).
 
-    Returns (name, rank) with rank in parts-per-``scale``.
+    Returns (name, rank) with rank in parts-per-``PAGERANK_SCALE``.
     """
     # Materialize the (edge, outdeg) table and node list ONCE: every
     # iteration joins against them, and without truncation the upstream
@@ -58,8 +58,8 @@ def pagerank_int(
     )
     deg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("_outdeg"))
     e = edges.join(deg, src).localCheckpoint(eager=True)  # (src, dst, _outdeg)
-    ranks = nodes.withColumn("r", F.lit(scale).cast("long"))
-    base = 15 * scale
+    ranks = nodes.withColumn("r", F.lit(PAGERANK_SCALE).cast("long"))
+    base = 15 * PAGERANK_SCALE
     for _ in range(iterations):
         contrib = (
             e.join(ranks.withColumnRenamed("name", src), src)

@@ -236,9 +236,9 @@ def bmp_decode(blob: bytes):
     return px[:, :, ::-1].copy()  # BGR -> RGB
 
 
-def wav_encode(samples, sample_rate: int = 16000, n_channels: int = 1) -> bytes:
-    """Encode int16 PCM samples ((n,) mono or (n, ch)) as a WAV blob via
-    the stdlib `wave` module."""
+def wav_encode(samples, sample_rate: int = 16000) -> bytes:
+    """Encode mono int16 PCM samples (shape (n,)) as a WAV blob via the
+    stdlib `wave` module."""
     import io
     import wave
 
@@ -247,7 +247,7 @@ def wav_encode(samples, sample_rate: int = 16000, n_channels: int = 1) -> bytes:
     a = np.asarray(samples, dtype=np.int16)
     buf = io.BytesIO()
     with wave.open(buf, "wb") as wv:
-        wv.setnchannels(n_channels)
+        wv.setnchannels(1)
         wv.setsampwidth(2)
         wv.setframerate(sample_rate)
         wv.writeframes(a.tobytes())
@@ -339,13 +339,12 @@ def resize_images_bmp(media: DataFrame, width: int = 8, height: int = 8) -> Data
     return media.select("media_id", "blob").mapInPandas(fn, RESIZED_SCHEMA)
 
 
-def synthesize_wav_blobs(
-    df: DataFrame, id_col: str, n_frames: int = 1600, sample_rate: int = 16000
-) -> DataFrame:
-    """Deterministic PCM16 WAV generator: a square wave of amplitude
-    (id % 100) * 100 — chosen because a square wave's RMS equals its
-    amplitude EXACTLY, so the decoded features are closed-form in the id
-    and the real decode path can be value-oracled in SQL."""
+def synthesize_wav_blobs(df: DataFrame, id_col: str) -> DataFrame:
+    """Deterministic PCM16 WAV generator: 1600 mono frames at 16 kHz
+    (0.1 s) per id, a square wave of amplitude (id % 100) * 100 — chosen
+    because a square wave's RMS equals its amplitude EXACTLY, so the
+    decoded features are closed-form in the id and the real decode path
+    can be value-oracled in SQL."""
     import numpy as np
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -353,11 +352,11 @@ def synthesize_wav_blobs(
             ids, blobs = [], []
             for mid in pdf[id_col]:
                 amp = (int(mid) % 100) * 100
-                s = np.empty(n_frames, dtype=np.int16)
+                s = np.empty(1600, dtype=np.int16)
                 s[0::2] = amp
                 s[1::2] = -amp
                 ids.append(int(mid))
-                blobs.append(wav_encode(s, sample_rate=sample_rate, n_channels=1))
+                blobs.append(wav_encode(s))
             yield pd.DataFrame({"media_id": ids, "blob": blobs})
 
     return df.select(id_col).mapInPandas(fn, schema="media_id long, blob binary")

@@ -19,14 +19,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def completeness(col: str, min_ratio: float = 1.0) -> dict:
-    """Fraction of non-null values >= min_ratio."""
-    return {"rule": "completeness", "column": col, "threshold": min_ratio}
+def completeness(col: str) -> dict:
+    """Fraction of non-null values must be 1.0."""
+    return {"rule": "completeness", "column": col, "threshold": 1.0}
 
 
-def uniqueness(col: str, min_ratio: float = 1.0) -> dict:
-    """Distinct values / rows >= min_ratio (1.0 == primary key)."""
-    return {"rule": "uniqueness", "column": col, "threshold": min_ratio}
+def uniqueness(col: str) -> dict:
+    """Distinct values / rows must be 1.0 (a primary key)."""
+    return {"rule": "uniqueness", "column": col, "threshold": 1.0}
 
 
 def bounds(col: str, lo: float, hi: float) -> dict:

@@ -107,9 +107,8 @@ def salted_join(
     right: DataFrame,
     key: str,
     n_salts: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join with explicit key salting for extreme skew.
+    """Inner equi-join with explicit key salting for extreme skew.
 
     AQE's skew-join split (enabled in session.py) handles most skew by
     splitting oversized partitions, but it cannot split a SINGLE
@@ -118,22 +117,12 @@ def salted_join(
     n_salts times, and the join key becomes (key, salt) — one hot key's
     rows spread over n_salts tasks at the cost of replicating the right
     side n_salts x (so keep the smaller input on the right).
-
-    Only inner and left-preserving modes are supported: a right- or
-    full-outer join would emit every unmatched right row once per salt
-    replica (n_salts duplicates).
     """
-    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi", "left_anti", "leftanti"}
-    if how.replace("_", "").lower() not in {h.replace("_", "") for h in allowed}:
-        raise ValueError(
-            f"salted_join does not support how={how!r}: right-preserving joins "
-            "would duplicate unmatched right rows once per salt replica"
-        )
     salted_l = left.withColumn("_salt", (F.rand(seed=42) * n_salts).cast("int"))
     salted_r = right.withColumn(
         "_salt", F.explode(F.array(*[F.lit(s) for s in range(n_salts)]))
     )
-    return salted_l.join(salted_r, on=[key, "_salt"], how=how).drop("_salt")
+    return salted_l.join(salted_r, on=[key, "_salt"]).drop("_salt")
 
 
 def write_bucketed_table(
@@ -141,18 +130,15 @@ def write_bucketed_table(
     table: str,
     bucket_key: str,
     n_buckets: int = 8,
-    sort_cols: list[str] | None = None,
 ) -> None:
-    """Bucketed (and optionally sorted) managed table — the pre-shuffled
+    """Bucketed managed table — the pre-shuffled
     layout: two tables bucketed by the same key into the same bucket
     count join with NO exchange on either side (SortMergeJoin reads
     co-located buckets directly). The write pays the shuffle once;
     every subsequent join of the pair rides for free — the 100 TB
     pattern for fact-to-fact joins repeated across a pipeline."""
-    w = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, bucket_key)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)
+    w = df.write.mode("overwrite").format("parquet")
+    w.bucketBy(n_buckets, bucket_key).saveAsTable(table)
 
 
 def apply_cdc(

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+_E6 = 1_000_000  # integer scale of the e6-quantized, value-oracled operators
+
 
 def dot(a: Column, b: Column) -> Column:
     """Dot product of two array<numeric> columns in double precision."""
@@ -119,10 +121,11 @@ def _sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def rhp_signature(vec: str, dim: int, n_planes: int = 16, table: int = 0) -> Column:
+def rhp_signature(vec: str, dim: int, n_planes: int = 16) -> Column:
     """Random-hyperplane (SimHash for cosine) signature: bit i = sign of
     <vec, plane_i>, packed into a bigint. P[bits agree] = 1 - theta/pi.
-    ``table`` selects an independent plane family (for OR-construction).
+    Uses plane family 0, the same planes as ``rhp_signature_udf``'s
+    default table.
 
     Driver-cost note: built as ONE textual expr. The Column-combinator
     form issued ~250 py4j round trips per signature (each lambda
@@ -140,7 +143,7 @@ def rhp_signature(vec: str, dim: int, n_planes: int = 16, table: int = 0) -> Col
     vec_sql = _sql_ident(vec)
     terms = []
     for i in range(n_planes):
-        dot_sql = _dot_lit_sql(vec_sql, _hyperplane_comps(dim, i, table))
+        dot_sql = _dot_lit_sql(vec_sql, _hyperplane_comps(dim, i))
         terms.append(f"(CASE WHEN {dot_sql} >= 0.0D THEN {2**i}L ELSE 0L END)")
     return F.expr(" + ".join(terms))
 
@@ -186,7 +189,6 @@ def lsh_knn_join(
     dim: int,
     k: int = 5,
     n_planes: int = 12,
-    n_probes: int | None = None,
     n_tables: int = 1,
     q_id: str = "q_id",
     c_id: str = "vec_id",
@@ -207,8 +209,7 @@ def lsh_knn_join(
       - multi-probe: each query also probes the buckets at Hamming
         distance 1 from its signature (flip one plane bit) — the standard
         recall recovery for vectors near a hyperplane, exploding ONLY the
-        tiny query side. ``n_probes`` extra probes per table (default:
-        all n_planes single-bit flips).
+        tiny query side: all n_planes single-bit flips per table.
       - n_planes: fewer planes -> bigger buckets -> higher recall.
 
     Scale shape: corpus shuffle is by a (table, 2^n_planes) key (uniform
@@ -216,7 +217,6 @@ def lsh_knn_join(
     """
     from pyspark.sql import Window
 
-    probes = n_planes if n_probes is None else n_probes
     # Signatures land in their own projection (one pandas-UDF gemm per
     # table), so the explode/probe exprs below reference a computed
     # attribute instead of re-invoking the UDF per probe.
@@ -252,7 +252,7 @@ def lsh_knn_join(
     probe_structs = []
     for t in range(n_tables):
         sig = F.col(f"_s{t}")
-        for bucket in [sig] + [sig.bitwiseXOR(F.lit(2**i)) for i in range(probes)]:
+        for bucket in [sig] + [sig.bitwiseXOR(F.lit(2**i)) for i in range(n_planes)]:
             probe_structs.append(
                 F.struct(F.lit(t).alias("table"), bucket.alias("sig"))
             )
@@ -662,7 +662,6 @@ def l2_normalize_arrow(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """L2-normalize an embedding column on the Arrow-NATIVE path
     (``mapInArrow``): batches arrive as pyarrow RecordBatches, the math
@@ -708,7 +707,7 @@ def l2_normalize_arrow(
                 sq = m * m
                 norms = np.sqrt(np.cumsum(sq, axis=1)[:, -1])
                 safe = np.where(norms == 0.0, 1.0, norms)
-                ints = np.floor(m / safe[:, None] * scale + 0.5).astype(np.int64)
+                ints = np.floor(m / safe[:, None] * _E6 + 0.5).astype(np.int64)
                 packed = [",".join(map(str, row)) for row in ints]
             else:
                 norms, packed = [], []
@@ -719,11 +718,11 @@ def l2_normalize_arrow(
                     s = n if n != 0.0 else 1.0
                     packed.append(
                         ",".join(
-                            str(int(np.floor(x / s * scale + 0.5))) for x in v
+                            str(int(np.floor(x / s * _E6 + 0.5))) for x in v
                         )
                     )
                 norms = np.asarray(norms)
-            norm_e6 = np.floor(norms * scale + 0.5).astype(np.int64)
+            norm_e6 = np.floor(norms * _E6 + 0.5).astype(np.int64)
             yield pa.RecordBatch.from_arrays(
                 [
                     ids,
@@ -748,14 +747,13 @@ def pq_codebooks(
     n_codes: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    lloyd_iters: int = 2,
 ) -> list[list[list[float]]]:
     """Deterministic PQ training (Jegou et al., 'Product Quantization
     for Nearest Neighbor Search', TPAMI 2011): seed n_codes codes per
     subspace from the corpus vectors with lowest xxhash64(id) (a
-    reproducible uniform sample), then run ``lloyd_iters`` k-means
-    refinement passes PER SUBSPACE as distributed aggregates — assign
-    every corpus subvector to its nearest code (scan-local expression),
+    reproducible uniform sample), then run 2 k-means refinement passes
+    PER SUBSPACE as distributed aggregates — assign every corpus
+    subvector to its nearest code (scan-local expression),
     groupBy (subspace, code) and average each dimension (map-side
     combined; the shuffle is n_subspaces * n_codes groups). Each
     iteration collects only the n_subspaces * n_codes refined means —
@@ -781,7 +779,7 @@ def pq_codebooks(
         raise ValueError(f"dim ({dim}) not divisible by n_subspaces ({n_subspaces})")
     sub = dim // n_subspaces
     books = [[v[s * sub : (s + 1) * sub] for v in vecs] for s in range(n_subspaces)]
-    for _ in range(lloyd_iters):
+    for _ in range(2):
         assigned = corpus.select(
             F.col(vec_col).alias("_v"),
             F.posexplode(pq_encode_udf(books)(F.col(vec_col))).alias("_s", "_code"),
@@ -943,27 +941,25 @@ def pq_knn_join(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    n_subspaces: int = 4,
-    n_codes: int = 64,
-    refine: int = 8,
     q_id: str = "q_id",
     c_id: str = "vec_id",
     vec_col: str = "embedding",
     max_query_rows: int = 1024,
 ) -> DataFrame:
-    """PQ ANN k-NN join: asymmetric-distance (ADC) scan over CODES, then
-    exact cosine re-rank of the top refine*k candidates.
+    """PQ ANN k-NN join: asymmetric-distance (ADC) scan over CODES of a
+    4-subspace, 64-code codebook, then exact cosine re-rank of the top
+    8*k candidates.
 
     The scale story differs from LSH/IVF: PQ does not prune candidates —
-    it shrinks each vector to n_subspaces code bytes (64 floats -> 8
-    bytes here), so the 'full scan' reads ~3% of the bytes and each
-    ADC score is n_subspaces table lookups instead of a dim-length dot
-    product. Queries broadcast as per-subspace distance tables (the
-    model — max_query_rows guards the same posture as
-    knn_join_vectorized); candidates join BACK to the full-precision
-    corpus BY ID for the exact re-rank, so uncompressed vectors are
-    only touched for refine*k rows per query. Combine with IVF cells
-    for the classic IVF-PQ when candidate pruning is also needed.
+    it shrinks each vector to 4 code bytes (64 floats -> 4 bytes here),
+    so the 'full scan' reads ~2% of the bytes and each ADC score is 4
+    table lookups instead of a dim-length dot product. Queries broadcast
+    as per-subspace distance tables (the model — max_query_rows guards
+    the same posture as knn_join_vectorized); candidates join BACK to
+    the full-precision corpus BY ID for the exact re-rank, so
+    uncompressed vectors are only touched for 8*k rows per query.
+    Combine with IVF cells for the classic IVF-PQ when candidate pruning
+    is also needed.
     """
     from pyspark.sql import Window
 
@@ -974,7 +970,7 @@ def pq_knn_join(
             f">{max_query_rows} rows. Use lsh_knn_join/ivf_knn_join for "
             f"large query sets, or raise max_query_rows explicitly."
         )
-    books = pq_codebooks(corpus, n_subspaces, n_codes, c_id, vec_col)
+    books = pq_codebooks(corpus, 4, 64, c_id, vec_col)
     codes = corpus.select(
         F.col(c_id), pq_encode_udf(books)(F.col(vec_col)).alias("_codes")
     )
@@ -993,7 +989,7 @@ def pq_knn_join(
     w_c = Window.partitionBy(q_id).orderBy(F.asc("_adc"), F.col(c_id))
     cand = (
         adc.withColumn("_rn", F.row_number().over(w_c))
-        .filter(F.col("_rn") <= refine * k)
+        .filter(F.col("_rn") <= 8 * k)
         .select(q_id, c_id)
     )
     return exact_rerank(cand, queries, corpus, k, q_id, c_id, vec_col)
@@ -1005,9 +1001,6 @@ def ivfpq_knn_join(
     k: int = 5,
     n_centroids: int = 16,
     n_probes: int = 4,
-    n_subspaces: int = 4,
-    n_codes: int = 64,
-    refine: int = 8,
     q_id: str = "q_id",
     c_id: str = "vec_id",
     vec_col: str = "embedding",
@@ -1015,9 +1008,9 @@ def ivfpq_knn_join(
 ) -> DataFrame:
     """IVF-PQ composite ANN: IVF cells prune WHICH rows are scored
     (n_probes/n_centroids of the corpus), PQ codes shrink WHAT is read
-    per scored row (n_subspaces bytes instead of dim floats), exact
-    cosine re-ranks the refine*k survivors joined back by id — the
-    billion-scale index layout (Jegou et al. TPAMI 2011; global
+    per scored row (4 code bytes from a 64-code codebook instead of dim
+    floats), exact cosine re-ranks the 8*k survivors joined back by id —
+    the billion-scale index layout (Jegou et al. TPAMI 2011; global
     codebooks rather than per-cell residual codebooks — the IVFFlat-PQ
     variant — to keep the model deterministic and cell-independent).
 
@@ -1025,7 +1018,7 @@ def ivfpq_knn_join(
     expressions; query side explodes to its probed cells with its ADC
     tables; one hash join on cell id; two bounded windows. The shuffle
     carries codes (bytes/row), not vectors; uncompressed vectors move
-    only for refine*k rows per query.
+    only for 8*k rows per query.
     """
     from pyspark.sql import Window
 
@@ -1037,7 +1030,7 @@ def ivfpq_knn_join(
             f"query sets, or raise max_query_rows explicitly."
         )
     cents = ivf_centroids(corpus, n_centroids, c_id, vec_col)
-    books = pq_codebooks(corpus, n_subspaces, n_codes, c_id, vec_col)
+    books = pq_codebooks(corpus, 4, 64, c_id, vec_col)
     c_idx = corpus.select(
         F.col(c_id),
         F.array_max(_centroid_scores(vec_col, cents))["cid"].alias("_cell"),
@@ -1062,7 +1055,7 @@ def ivfpq_knn_join(
     w_c = Window.partitionBy(q_id).orderBy(F.asc("_adc"), F.col(c_id))
     cand = (
         adc.withColumn("_rn", F.row_number().over(w_c))
-        .filter(F.col("_rn") <= refine * k)
+        .filter(F.col("_rn") <= 8 * k)
         .select(q_id, c_id)
     )
     return exact_rerank(cand, queries, corpus, k, q_id, c_id, vec_col)
@@ -1197,7 +1190,6 @@ def power_iteration_top1_int(
     id_col: str,
     feature_cols: list[str],
     rounds: int = 3,
-    quant: int = 1_000_000,
 ) -> DataFrame:
     """Dominant principal direction of an INTEGER feature matrix by
     max-norm power iteration on the centered Gram — every step exact
@@ -1214,7 +1206,7 @@ def power_iteration_top1_int(
     caller's scaling contract — pre-scale features like q191 does with
     dollars-not-cents). Each iteration is a d x d mat-vec on the
     driver (d^2 multiplies on a bounded model), normalized by
-    v_j <- trunc(w_j * quant / max|w|) — max-norm, not L2, so the
+    v_j <- trunc(w_j * 10^6 / max|w|) — max-norm, not L2, so the
     normalizer needs no sqrt and stays in integers. Sign is fixed so
     the largest-|v_j| coordinate (smallest j on ties) is positive.
 
@@ -1254,11 +1246,11 @@ def power_iteration_top1_int(
             G[j][k] = G[k][j] = int(row[f"_g{j}_{k}"])
     n = int(n)
     Gc = [[n * G[j][k] - S[j] * S[k] for k in range(d)] for j in range(d)]
-    v = [quant] * d
+    v = [_E6] * d
     for _ in range(rounds):
         w = [sum(Gc[j][k] * v[k] for k in range(d)) for j in range(d)]
         m = max(abs(x) for x in w) or 1
-        v = [_trunc_div(x * quant, m) for x in w]
+        v = [_trunc_div(x * _E6, m) for x in w]
     jmax = min(range(d), key=lambda j: (-abs(v[j]), j))
     if v[jmax] < 0:
         v = [-x for x in v]
@@ -1277,7 +1269,6 @@ def pq_codes_int(
     sub_dim: int = 16,
     n_codes: int = 4,
     rounds: int = 2,
-    quant: int = 1_000_000,
 ) -> DataFrame:
     """Product-Quantization codes with an INTEGER-EXACT codebook — the
     value-oracle-able twin of ``pq_codebooks`` (whose float F.avg
@@ -1302,7 +1293,7 @@ def pq_codes_int(
     assignment shape. Returns (id_col, code_s0..code_s{n-1}) ints.
 
     Caller contract: quantized components must keep
-    sub_dim * (2*quant*max|x|)^2 inside int64 (true for unit-scale
+    sub_dim * (2*10^6*max|x|)^2 inside int64 (true for unit-scale
     embeddings at e6), and ids must be globally unique."""
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1 (got {rounds})")
@@ -1321,7 +1312,7 @@ def pq_codes_int(
         )
     qv = F.transform(
         F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * F.lit(float(quant)) + F.lit(0.5)).cast(
+        lambda x: F.floor(x.cast("double") * F.lit(float(_E6)) + F.lit(0.5)).cast(
             "long"
         ),
     )

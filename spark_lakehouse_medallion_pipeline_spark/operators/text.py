@@ -92,14 +92,13 @@ def fingerprint_md5(text: Column) -> Column:
     return F.md5(normalized_text(text))
 
 
-def fingerprint_rolling(text: Column, window: int = 8) -> Column:
+def fingerprint_rolling(text: Column) -> Column:
     """Deterministic rolling-hash-style fingerprint: min xxhash64 over
-    character shingles of length ``window`` (a 1-hash MinHash — the
-    winnowing primitive). Pure expressions: substring via transform over
-    an index sequence."""
+    8-character shingles (a 1-hash MinHash — the winnowing primitive).
+    Pure expressions: substring via transform over an index sequence."""
     norm = normalized_text(text)
-    idx = F.sequence(F.lit(1), F.greatest(F.length(norm) - window + 1, F.lit(1)))
-    shingles = F.transform(idx, lambda i: F.substr(norm, i, F.lit(window)))
+    idx = F.sequence(F.lit(1), F.greatest(F.length(norm) - 8 + 1, F.lit(1)))
+    shingles = F.transform(idx, lambda i: F.substr(norm, i, F.lit(8)))
     hashes = F.transform(shingles, lambda s: F.xxhash64(s))
     return F.array_min(hashes)
 
@@ -189,10 +188,9 @@ def adaptive_length_filter(
     docs: DataFrame,
     group_col: str = "lang",
     len_col: str = "n_chars",
-    frac_of_median: float = 0.5,
 ) -> DataFrame:
-    """Per-group adaptive quality gate: keep documents at least
-    ``frac_of_median`` of their GROUP's median length — an absolute
+    """Per-group adaptive quality gate: keep documents at least half
+    their GROUP's median length — an absolute
     length cutoff over-prunes terse languages and under-prunes verbose
     ones. One shuffle to compute per-group medians (tiny: one row per
     group), broadcast back onto the scan."""
@@ -201,7 +199,7 @@ def adaptive_length_filter(
     )
     return (
         docs.join(F.broadcast(med), group_col)
-        .filter(F.col(len_col) >= F.lit(frac_of_median) * F.col("_median_len"))
+        .filter(F.col(len_col) >= F.lit(0.5) * F.col("_median_len"))
         .drop("_median_len")
     )
 
@@ -210,12 +208,6 @@ def gopher_quality_flags(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_words: int = 5,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    min_alpha_word_ratio: float = 0.8,
-    min_stopword_hits: int = 2,
 ) -> DataFrame:
     """Gopher-style document quality rules (Rae et al. 2021, "Scaling
     Language Models", §A1.1 repetition/quality filters — public paper):
@@ -225,8 +217,10 @@ def gopher_quality_flags(
     so curation can audit WHICH rule dropped a document.
 
     All pure Column expressions — scan-speed at 100 TB, no shuffle at
-    all. Thresholds are the paper's defaults except min_words (5 here:
-    the test corpus is short-form)."""
+    all. Thresholds are the paper's — 100 000 words at most, mean word
+    length in [3, 10], >= 80% of words alphabetic, >= 2 stopwords —
+    except the 5-word minimum (the paper's is 50; the test corpus is
+    short-form)."""
     toks = whitespace_tokens(F.col(text_col))
     n_words = F.size(toks)
     # identical op chain to the oracle: strip ALL whitespace, divide
@@ -235,10 +229,10 @@ def gopher_quality_flags(
     n_alpha = F.size(F.filter(toks, lambda t: t.rlike("[a-zA-Z]")))
     alpha_ratio = n_alpha.cast("double") / n_words
     n_stop = F.size(F.filter(F.transform(toks, F.lower), lambda t: t.isin(*STOPWORDS)))
-    words_ok = (n_words >= min_words) & (n_words <= max_words)
-    wl_ok = (mean_wl >= min_mean_word_len) & (mean_wl <= max_mean_word_len)
-    alpha_ok = alpha_ratio >= min_alpha_word_ratio
-    stop_ok = n_stop >= min_stopword_hits
+    words_ok = (n_words >= 5) & (n_words <= 100_000)
+    wl_ok = (mean_wl >= 3.0) & (mean_wl <= 10.0)
+    alpha_ok = alpha_ratio >= 0.8
+    stop_ok = n_stop >= 2
     return docs.select(
         F.col(id_col),
         n_words.cast("long").alias("n_words"),
@@ -275,7 +269,6 @@ def mixture_uniform(id_col: Column) -> Column:
 def mixture_sample(
     docs: DataFrame,
     weights: dict[str, float],
-    default_weight: float = 1.0,
     group_col: str = "lang",
     id_col: str = "doc_id",
 ) -> DataFrame:
@@ -285,9 +278,10 @@ def mixture_sample(
     upsample by keeping 1.0 of rare ones). Deterministic: the keep
     decision is a pure function of (id, group), so reruns and
     repartitions produce the identical corpus — a property rand()-based
-    sampling cannot give. Pure scan-side predicate: no shuffle, pushes
-    down past column pruning."""
-    w = F.lit(float(default_weight))
+    sampling cannot give. Groups missing from ``weights`` are kept whole.
+    Pure scan-side predicate: no shuffle, pushes down past column
+    pruning."""
+    w = F.lit(1.0)
     for key, frac in sorted(weights.items()):
         w = F.when(F.col(group_col) == key, F.lit(float(frac))).otherwise(w)
     return docs.filter(mixture_uniform(F.col(id_col)) < w)
@@ -429,16 +423,13 @@ def chunk_documents(
 _CLF_BUCKETS = 4096
 _CLF_MIX = 2_654_435_761  # Knuth multiplicative constant
 _CLF_WMIX = 1_103_515_245  # glibc LCG multiplier
+_CLF_SEED = 7  # offset of the synthetic weight table
 
 
-def classifier_score(
-    text: Column,
-    n_buckets: int = _CLF_BUCKETS,
-    weight_seed: int = 7,
-) -> Column:
+def classifier_score(text: Column) -> Column:
     """fastText-style linear quality-classifier INFERENCE as pure Column
     math (the model-based filtering step of DCLM / FineWeb-Edu style
-    curation): hash each token into ``n_buckets``, look up the bucket's
+    curation): hash each token into ``_CLF_BUCKETS``, look up the bucket's
     weight, average over tokens, squash with a logistic. The dataflow
     (hash -> weight lookup -> mean -> sigmoid) is the production one and
     runs at scan speed — no shuffle, no UDF, no model server. The
@@ -458,8 +449,8 @@ def classifier_score(
             + F.ascii(p.substr(F.lit(3), F.lit(1))) * 17
             + F.length(t)
         ).cast("long")
-        b = F.pmod(m * F.lit(_CLF_MIX), F.lit(n_buckets))
-        return F.pmod(b * F.lit(_CLF_WMIX) + F.lit(weight_seed), F.lit(2001)) - 1000
+        b = F.pmod(m * F.lit(_CLF_MIX), F.lit(_CLF_BUCKETS))
+        return F.pmod(b * F.lit(_CLF_WMIX) + F.lit(_CLF_SEED), F.lit(2001)) - 1000
 
     sum_millis = F.aggregate(
         F.transform(toks, weight_millis),

@@ -11,7 +11,7 @@ Checks (all static, explain-text based — no data is scanned):
                  non-trivial build side: O(n*m) row pairing
   python-udf     BatchEvalPython: row-at-a-time Python in the hot path
                  (Arrow-batched ArrowEvalPython / mapInPandas are fine)
-  wide-scan      a parquet scan reading > max_scan_cols columns —
+  wide-scan      a parquet scan reading > _MAX_SCAN_COLS columns —
                  projection pruning probably failed
   exchange-count more shuffles than `max_exchanges` — lost broadcast or
                  missing partitioning reuse
@@ -25,12 +25,10 @@ from pyspark.sql import DataFrame
 
 from spark_lakehouse_medallion_pipeline_spark.plans import explain
 
+_MAX_SCAN_COLS = 24
 
-def lint_plan(
-    df: DataFrame,
-    max_exchanges: int = 6,
-    max_scan_cols: int = 24,
-) -> list[str]:
+
+def lint_plan(df: DataFrame, max_exchanges: int = 6) -> list[str]:
     """Audit a DataFrame's physical plan; returns human-readable
     findings (empty == clean). Thresholds are advisory knobs, not
     correctness bounds."""
@@ -49,9 +47,9 @@ def lint_plan(
         )
     for m in re.finditer(r"ReadSchema: struct<([^>]*)>", plan):
         cols = [c for c in m.group(1).split(",") if ":" in c]
-        if len(cols) > max_scan_cols:
+        if len(cols) > _MAX_SCAN_COLS:
             findings.append(
-                f"wide-scan: a scan reads {len(cols)} columns (> {max_scan_cols}) "
+                f"wide-scan: a scan reads {len(cols)} columns (> {_MAX_SCAN_COLS}) "
                 "— check that the projection prunes to what the query uses"
             )
             break

@@ -29,10 +29,13 @@ class SkewReport(NamedTuple):
     skew_ratio: float  # max_share / fair_share (1.0 == perfectly uniform)
 
 
-def skew_report(df: DataFrame, key_col: str, top_n: int = 10) -> SkewReport:
+_TARGET_RATIO = 4.0  # hottest key's per-task load suggest_salts aims for, x fair share
+
+
+def skew_report(df: DataFrame, key_col: str) -> SkewReport:
     """Profile key-frequency skew with ONE map-side-combined aggregate
-    (the groupBy shuffles at most n_keys rows) plus a bounded top-n
-    heap. Collects top_n + 2 scalars — the report, not the data.
+    (the groupBy shuffles at most n_keys rows) plus a bounded top-10
+    heap. Collects the top 10 plus 2 totals — the report, not the data.
 
     The key-count table is persisted across the two actions (totals,
     top-n) so the full-input scan + shuffle runs once; only the
@@ -43,7 +46,7 @@ def skew_report(df: DataFrame, key_col: str, top_n: int = 10) -> SkewReport:
             F.sum("_n").alias("_rows"), F.count(F.lit(1)).alias("_keys")
         ).collect()[0]
         n_rows, n_keys = int(totals["_rows"] or 0), int(totals["_keys"] or 0)
-        top = counts.orderBy(F.desc("_n"), key_col).limit(top_n).collect()
+        top = counts.orderBy(F.desc("_n"), key_col).limit(10).collect()
         top_keys = [(r[key_col], int(r["_n"])) for r in top]
     finally:
         counts.unpersist()
@@ -54,16 +57,14 @@ def skew_report(df: DataFrame, key_col: str, top_n: int = 10) -> SkewReport:
     return SkewReport(n_rows, n_keys, top_keys, max_share, fair, max_share / fair)
 
 
-def suggest_salts(
-    report: SkewReport, target_ratio: float = 4.0, max_salts: int = 256
-) -> int:
+def suggest_salts(report: SkewReport, max_salts: int = 256) -> int:
     """Salting factor that brings the hottest key's per-task load down
-    to ~target_ratio x the fair share: n_salts = ceil(skew_ratio /
-    target_ratio), clamped to [1, max_salts] (each salt replicates the
+    to ~_TARGET_RATIO x the fair share: n_salts = ceil(skew_ratio /
+    _TARGET_RATIO), clamped to [1, max_salts] (each salt replicates the
     small side of a salted join, so unbounded salting trades skew for
     broadcast volume). 1 means 'no salting needed'."""
     import math
 
-    if report.skew_ratio <= target_ratio:
+    if report.skew_ratio <= _TARGET_RATIO:
         return 1
-    return max(1, min(max_salts, math.ceil(report.skew_ratio / target_ratio)))
+    return max(1, min(max_salts, math.ceil(report.skew_ratio / _TARGET_RATIO)))

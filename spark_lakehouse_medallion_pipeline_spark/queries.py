@@ -960,9 +960,9 @@ def q33_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket join (never a cross join). Verified against exact jaccard in
     tests/test_dedup.py."""
     docs = _t(spark, sf_dir, "documents")
-    return dedup.minhash_near_dup_pairs(
-        docs, num_hashes=64, bands=16, shingle_k=3, min_jaccard=0.5
-    ).select("id_a", "id_b", "jaccard_est")
+    return dedup.minhash_near_dup_pairs(docs, min_jaccard=0.5).select(
+        "id_a", "id_b", "jaccard_est"
+    )
 
 
 @_q("q34_simhash_pairs")  # bit-twiddling fingerprint; rows-only + pytest
@@ -5097,8 +5097,8 @@ def q127_data_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return Q.check_constraints(
         ev,
         [
-            Q.completeness("user_id", 1.0),
-            Q.uniqueness("event_id", 1.0),
+            Q.completeness("user_id"),
+            Q.uniqueness("event_id"),
             Q.bounds("value", 0, 400),
             Q.membership("event_type", ["click", "view", "purchase", "signup"]),
         ],
@@ -5596,7 +5596,7 @@ def q137_bloom_prefilter_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ref = docs.filter(F.col("doc_id") % 7 == 0).select("fp")
     probe = docs.filter(F.col("doc_id") % 7 != 0)
-    dups = bloom_prefilter_semi_join(probe, ref, "fp", m_bits=1 << 20, n_hashes=2)
+    dups = bloom_prefilter_semi_join(probe, ref, "fp", m_bits=1 << 20)
     return (
         dups.groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_dup"))
@@ -7768,7 +7768,7 @@ def q179_chunk_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-for-byte (operators.dedup.dedup_chunks_keep_first — one
     min-struct keeper shuffle, no collect_list of doc ids)."""
     docs = _t(spark, sf_dir, "documents")
-    return dedup.dedup_chunks_keep_first(docs, chunk_tokens=10)
+    return dedup.dedup_chunks_keep_first(docs)
 
 
 @_q(
@@ -19463,65 +19463,65 @@ _DRIVER_SNAPSHOT_50 = [
     "q01_pricing_summary",
     "q19_daily_event_kpis",
     "q41_scalar_battery",
-    "q294_aqe_partition_coalescing",  # r14 birth-round: AQE partition coalescing — the tiny-task-tail rescue, coalesced-read plan-gated AND proven invisible in-query by a coalescing-off re-run (q249 Mann-Whitney green r11-r13; the nonparametric-test family keeps q255 KS in the head and q249 stays value-oracled in the full gate)
-    "q277_topk_with_ties",  # r12 birth-round: group-wise top-k WITH TIES — the DENSE_RANK semantics audit directly pairing q212's row-number top_k_ranked (q212 green r8-r11, the displaced slot's own family continues through this entry; similarity keeps q198 PCA + q201 PQ in the head and q212 stays value-oracled in the full gate)
+    "q294_aqe_partition_coalescing",
+    "q277_topk_with_ties",
     # joins
-    "q295_rebalance_write_rescue",  # r14 birth-round: REBALANCE-hint write rescue — output-file skew split at mapper granularity, footer-walk-audited (one file per key plain vs many bounded hot files rebalanced) and re-read hash-proven lossless (q221 funnel green r9-r13, the longest-tenured rotatable slot; X6 theta/interval keeps q276 overlap + q285 interval join in the head and q221 stays value-oracled in the full gate)
-    "q245_cusum_changepoint",  # r10: int64 cross-multiplied CUSUM changepoint with its prefix sum from distributed_rank, birth-round row (q224 rolling z-score green r08+r09; the anomaly family keeps this entry + q229 EWMA and X10 frames keep q207, with q224 value-oracled in the full gate)
-    "q266_salted_skew_aggregate",  # r11 birth-round: the skew FIX replacing its own diagnosis slot (q205 profile green r8-r10; q266 is q205's treatment half — salted two-stage decomposition with exact COUNT(DISTINCT), plan-pinned; q205 stays value-oracled in the full gate)
-    "q279_zorder_interleave_audit",  # r12 birth-round: Morton/Z-order 2-predicate clustering audit — the multi-dimensional completion of the q270/q278 layout story (q252 partition pruning green r10+r11; the layout family keeps q267 bucketed join + q270 + q278 in the head and q252 stays value-oracled in the full gate)
-    "q248_kaplan_meier",  # r10 late: Kaplan-Meier product-limit curve with genuine mid-study censoring, birth-round row (q211 weighted median green r08+r09; the robust-stats family keeps q240 MAD + q233 Tukey in the head and q211 stays value-oracled in the full gate)
-    "q269_incremental_view_maintenance",  # r11 late birth-round: IVM of a gold aggregate — delta-only merge == full recompute (q226 MoM growth green r9+r10; the temporal family now keeps q256/q258/q259/q261 in the head and q226 stays value-oracled in the full gate)
-    "q268_heavy_hitters_exact",  # r11 birth-round: two-pass Misra-Gries exact heavy hitters in shuffle-free mapInPandas (q209 incremental near-dup green r8-r10; dedup keeps q67/q238/q239 in the head and q209 stays value-oracled in the full gate)
+    "q295_rebalance_write_rescue",
+    "q245_cusum_changepoint",
+    "q266_salted_skew_aggregate",
+    "q279_zorder_interleave_audit",
+    "q248_kaplan_meier",
+    "q269_incremental_view_maintenance",
+    "q268_heavy_hitters_exact",
     # grouping extensions
-    "q273_distribution_drift_tvd",  # r11 late birth-round: exact-TVD distribution drift — the quality monitor between reference and ingest windows (q228 curation verdict green r9+r10; the quality family keeps q237/q247 quarantines + q253 zipf in the head and q228 stays value-oracled in the full gate)
-    "q275_scd2_dimension_history",  # r12 birth-round: SCD2 dimension history + point-in-time fact join, completing the q128 CDC / q269 IVM warehouse trio (q250 RFM green r10+r11; the distributed_rank composition family keeps q242 percentile-rank + q251 Spearman + q255 KS in the head and q250 stays value-oracled in the full gate)
+    "q273_distribution_drift_tvd",
+    "q275_scd2_dimension_history",
     # windows
-    "q293_aqe_skew_join_rescue",  # r14 birth-round: AQE skew-split rescue — the AUTOMATIC complement of q286's manual salt, same skewed join value-hash-proven against the plain unsalted oracle, skew=true plan marker pinned in pytest (q251 Spearman green r11-r13; the rank family keeps q242 percentile-rank + q255 KS + q260 skyline in the head and q251 stays value-oracled in the full gate)
-    "q280_watermark_late_data_audit",  # r12 birth-round: Structured Streaming's watermark drop rule replayed exactly in batch via the EXCLUSIVE prefix max (cummax_cols) — the X14/X15 semantics half (q243 U-shaped attribution green r10+r11; X9 analytic keeps q271 gap-fill in the head and q243 stays value-oracled in the full gate)
-    "q289_stream_outer_join_timing",  # r13 birth-round: stream-stream LEFT OUTER null-emission timing — matched / null-emitted / pending-at-end click accounting, the outer half of q285 with the pair count pinned equal cross-entry (q259 seasonal index green r11+r12; the temporal family keeps q256 Mann-Kendall + q258 Theil-Sen + q261 OLS in the head and q259 stays value-oracled in the full gate)
-    "q281_scd2_incremental_merge",  # r12 birth-round: SCD2 nightly MERGE — delta-only windowing + open-row close-out, hash-proven equal to the full rebuild (the q269 IVM discipline on q275's dimension) (q239 leakage-safe split green r10+r11; dedup/ER keeps q67 + q238 in the head and q239 stays value-oracled in the full gate)
+    "q293_aqe_skew_join_rescue",
+    "q280_watermark_late_data_audit",
+    "q289_stream_outer_join_timing",
+    "q281_scd2_incremental_merge",
     # sort/limit, set ops, sketches
-    "q290_dynamic_partition_pruning",  # r13 birth-round: DYNAMIC partition pruning — runtime join-driven partition skipping (dynamicpruningexpression plan-pinned, DPP-off invariance tested), the runtime half of q252's static pruning (q258 Theil-Sen green r11+r12; the temporal family keeps q256 Mann-Kendall + q261 OLS in the head and q258 stays value-oracled in the full gate)
-    "q297_aqe_broadcast_conversion",  # r14 birth-round: AQE SMJ->broadcast conversion — static plan pinned SMJ under a low threshold, runtime re-plan pinned BroadcastHashJoin, materialized rows hash-proven equal to the plain join oracle (q242 percentile-rank green r10-r13; the distributed_rank composition family keeps q255 KS + q260 skyline + q245 CUSUM in the head and q242 stays value-oracled in the full gate)
-    "q285_stream_stream_interval_join",  # r13 birth-round: stream-stream interval join replay — watermark drop + eviction accounting over two keyed streams, composing q280's cummax watermark with q276's range-join shape (q181 BPE green r7-r12, the longest-tenured rotatable slot; X20 text keeps q253 zipf + q263 inverted index in the head and q181 stays value-oracled in the full gate)
+    "q290_dynamic_partition_pruning",
+    "q297_aqe_broadcast_conversion",
+    "q285_stream_stream_interval_join",
     # time windows / sessionization
-    "q261_ols_trend_slope",  # r11: exact-int OLS normal equations, never driver-recorded (q230 chi-square green r9+r10; contingency tests keep q241 kappa in the head and q230 stays value-oracled in the full gate)
-    "q271_gap_fill_interpolate",  # r11 late birth-round: spine gap-fill with LOCF + exact integer interpolation (q125 cogroup-as-of green r8-r10; X6 theta/range keeps q221 funnel in the head, X16 keeps q200 JPEG + q268 mapInPandas, and q125 stays value-oracled in the full gate)
+    "q261_ols_trend_slope",
+    "q271_gap_fill_interpolate",
     # SQL surface: subqueries, lateral, UDTF, interactive SQL
-    "q282_replica_divergence_audit",  # r12 birth-round: Merkle-style bucket-checksum replica reconciliation — drill-down bounded by divergence, planted defects exactly recovered (q241 kappa green r10+r11; the agreement/audit-stats family keeps q249 Mann-Whitney + q251 Spearman in the head and q241 stays value-oracled in the full gate)
-    "q296_stateful_stream_state_recovery",  # r14 birth-round: state-store crash recovery — update-mode aggregation killed mid-stream, restart must resume CUMULATIVE counts from the checkpointed state (replayed-batch sum gated), q291's stateless twin (q264 vacuum green r11-r13; warehouse maintenance keeps q254 time travel + q281 merge + q287 compaction in the head and q264 stays value-oracled in the full gate)
-    "q67_dedup_clusters",  # r7: connected components never recorded in 6 rounds (q117 mapInArrow green r04-r06; UDF family keeps q65)
-    "q255_ks_two_sample",  # r10 late: Kolmogorov-Smirnov two-sample test — the driver-visible proof of distributed_rank's multi-prefix-sum (cumsum_cols) form, birth-round row (q214 correlation matrix green r08+r09; the multivariate-ANALYZE family keeps q213 profile + q240 MAD in the head and q214 stays value-oracled in the full gate)
+    "q282_replica_divergence_audit",
+    "q296_stateful_stream_state_recovery",
+    "q67_dedup_clusters",
+    "q255_ks_two_sample",
     # semi-structured: JSON, arrays, maps/structs
-    "q286_salted_skew_join",  # r13 birth-round: salted skewed JOIN — build-side x16 replication + deterministic probe salt, SMJ keyed (sk, _salt), hash-proven equal to the unsalted join; the JOIN half completing q205-diagnose/q266-aggregate (q207 rolling bitmap distinct green r8-r12; X10 frames keep q280 prefix-max + q255 KS in the head and q207 stays value-oracled in the full gate)
-    "q200_jpeg_image_features",  # r8: real baseline-JPEG codec, birth-round row (q162 portable LSH green r04-r07; its candidates CTE lives on inside q149's oracle, and dedup keeps q149/q152/q179)
-    "q274_consistent_hash_rebalance",  # r11 late birth-round: consistent-hashing ring rebalance with the moved-to-new-shard contract hash-checked (q123 XML battery green r4-r10, the longest-tenured rotatable slot; X22 keeps q232/q237 in the head and q123 stays value-oracled in the full gate)
+    "q286_salted_skew_join",
+    "q200_jpeg_image_features",
+    "q274_consistent_hash_rebalance",
     # dedup family
-    "q283_majority_vote_repair",  # r12 birth-round: three-replica majority-vote reconciliation — the repair step composing q282's digest prefilter with a per-key 3-way vote, planted minority defects named per replica (q240 MAD green r10+r11; robust stats keep q249 Mann-Whitney + q255 KS in the head and q240 stays value-oracled in the full gate)
-    "q238_blocking_quality",  # r10: LSH blocking-quality ER audit (reduction ratio + pair completeness vs planted-twin exact-Jaccard truth), birth-round row (q149 contrastive pairs green r08+r09; dedup keeps q67/q204/q209 + incoming q239 in the head and q149 stays value-oracled in the full gate)
-    "q272_sequence_motif_match",  # r11 late birth-round: MATCH_RECOGNIZE-lite sequence motifs over per-user event strings (q217 Benford green r9+r10; the audit-stats family keeps q241/q249/q256 in the head and q217 stays value-oracled in the full gate)
-    "q299_exactly_once_merge_sink",  # r14 birth-round: exactly-once transactional MERGE sink — crash lands AFTER the merge commit but BEFORE the offset commit, the idempotency ledger must skip the replay (version count == batch count is the proof), completing the recovery trio q291/q296 (q260 Pareto skyline green r11-r13; the cummax exclusive-prefix-max machinery now has four in-head riders q285/q289/q292/q298 plus q255 multi-prefix-sum, and q260 stays value-oracled in the full gate)
+    "q283_majority_vote_repair",
+    "q238_blocking_quality",
+    "q272_sequence_motif_match",
+    "q299_exactly_once_merge_sink",
     # similarity family
-    "q201_pq_codes_int",  # r8: integer-exact PQ train+encode, first-ever driver row for the PQ family (q36 brute kNN green r01-r07; q183's recall eval computes the same brute kNN internally)
-    "q287_compaction_execute",  # r13 birth-round: compaction EXECUTION — q257's binpack plan actually run (bin-keyed rewrite, one file per bin) with before/after re-read equality + an EXECUTOR-SIDE pyarrow footer walk, the predict->execute->measure loop applied to OPTIMIZE (q198 PCA green r8-r12; X19 similarity keeps q201 integer PQ in the head and q198 stays value-oracled in the full gate)
+    "q201_pq_codes_int",
+    "q287_compaction_execute",
     # text analysis family
-    "q288_bloom_zone_pruning",  # r13 birth-round: per-zone bloom-filter point-lookup pruning — the MEMBERSHIP half of data skipping, completing the q270/q278 min-max + q279 z-order triad; distributed bit_or bloom build, measured FP rate, no-false-negative pytest (q253 Zipf green r11+r12; lexical/text keeps q263 inverted index in the head — q181's slot also rotated this round — and q253 stays value-oracled in the full gate)
-    "q263_inverted_index",  # r11: champion-postings inverted index, never driver-recorded (q204 containment green r8-r10; dedup keeps q67/q238/q239 in the head and q204 stays value-oracled in the full gate)
-    "q298_stream_dedup_ttl_replay",  # r14 birth-round: dropDuplicatesWithinWatermark TTL replay — per-key sequential state chain (applyInPandas vs a RECURSIVE-CTE oracle, the battery's first), re-emission census conservation-pinned, completing the streaming-timing family q280/q285/q289/q292 (q267 bucketed join green r11-r13; the layout family keeps q278/q279/q287/q288/q295 in the head and q267 stays value-oracled in the full gate)
-    "q262_erasure_cascade_audit",  # r11: GDPR erasure blast-radius (now with the AQE-chosen, unforced cascade join), never driver-recorded (q227 FK conformance green r8-r10 — q262 exercises the same FK cascade; q227 stays value-oracled in the full gate)
-    "q276_interval_overlap_join",  # r12 birth-round: keyless interval-overlap join via bucketed blocking — the X6 non-equi scale pattern as a first-class audit, generalizing q221's funnel pairing (q244 hazard table green r10+r11; survival analysis keeps q248 Kaplan-Meier in the head and q244 stays value-oracled in the full gate)
-    "q246_hhi_concentration",  # r10: Herfindahl-Hirschman market concentration (quantize-then-square e6 shares), birth-round row (q219 basket lift green r08+r09; the commerce-analytics family keeps q223 brand-corr in the head and q219 stays value-oracled in the full gate)
+    "q288_bloom_zone_pruning",
+    "q263_inverted_index",
+    "q298_stream_dedup_ttl_replay",
+    "q262_erasure_cascade_audit",
+    "q276_interval_overlap_join",
+    "q246_hhi_concentration",
     # multimodal, pandas-UDF, layout, TPC-H decorrelated shapes
-    "q256_mann_kendall_trend",  # r11: Mann-Kendall monotone trend on the monthly revenue spine, never driver-recorded (q223 brand-discount correlation green r9+r10; commerce analytics keep q246 HHI in the head and q223/q219 stay value-oracled in the full gate)
-    "q237_jsonl_quarantine",  # r10: JSONL malformed-ingest contract (PERMISSIVE corrupt channel + type-fail taxonomy), completing the quarantine pair with q236, birth-round row (q210 centroid similarity green r08+r09; X19 keeps q201 PQ + q212 IR-eval + q198 PCA in the head and q210 stays value-oracled in the full gate)
-    "q291_stream_crash_recovery",  # r14 birth-round: streaming crash recovery / exactly-once — a checkpointed foreachBatch drain killed mid-stream and restarted, offset-log replay + idempotent sink proven value-for-value against the pure-function corpus oracle (q257 binpack plan green r11-r13; its execution twin q287 runs the same plan in the head and q257 stays value-oracled in the full gate)
-    "q265_weighted_systematic_sample",  # r11 birth-round: weighted systematic sampling on the exact prefix-weight line (q208 temperature quotas green r8-r10 — same mixture-sampling family; q195/q208 stay value-oracled in the full gate)
+    "q256_mann_kendall_trend",
+    "q237_jsonl_quarantine",
+    "q291_stream_crash_recovery",
+    "q265_weighted_systematic_sample",
     # round-3 families: connectors, warehouse maintenance, quality contracts
-    "q254_snapshot_time_travel",  # r11: snapshot commit/merge/time-travel, never driver-recorded (q231 CSV roundtrip green r9+r10; the I/O-format family keeps q232 JSONL roundtrip in the head and q231 stays value-oracled in the full gate)
-    "q278_sorted_write_zonemap",  # r12 birth-round: the q270 write-path twin — sort-on-write, one file per zone, audit from REAL parquet footer stats (q232 JSONL roundtrip green r9-r11; the I/O-format family keeps q237 quarantine + q247 schema drift + q254/q264 snapshots in the head and q232 stays value-oracled in the full gate)
-    "q284_sortedness_audit",  # r12 birth-round: distributed order verification — adjacent-inversion counts via rank + consecutive-rank equi join, never a global window; the q278 writer's post-write certificate (q247 schema drift green r10+r11; the ingest-contract family keeps q237 JSONL quarantine in the head and q247 stays value-oracled in the full gate)
-    "q292_stream_window_emission_timing",  # r14 birth-round: append-mode window EMISSION timing — emitted vs still-open tumbling windows per delay, completing the q280/q285/q289 timing trilogy for aggregates, q20-cross-pinned (q270 zonemap audit green r11-r13; the layout family keeps its write-twin q278 + q279 z-order + q288 bloom + q287 compaction in the head and q270 stays value-oracled in the full gate)
+    "q254_snapshot_time_travel",
+    "q278_sorted_write_zonemap",
+    "q284_sortedness_audit",
+    "q292_stream_window_emission_timing",
 ]
 
 

@@ -27,7 +27,6 @@ def _delta_available() -> bool:
 def get_spark(
     app_name: str = "spark_lakehouse_medallion_pipeline_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
@@ -45,10 +44,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Local default; on a cluster, AQE coalesces from this ceiling.
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions if shuffle_partitions else max(int(cpus), 8)),
-        )
+        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
         # Arrow for every pandas_udf / mapInPandas exchange.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # The default 100-entry codegen class cache thrashes under a

@@ -11,10 +11,8 @@ Spark-first mapping: DataFrameReader/Writer; managed tables go through
 ``saveAsTable`` with ``overwriteSchema`` (the Delta analogue of Iceberg's
 createOrReplace — parquet fallback in this container, see session.table_format).
 
-Scale notes: writers accept ``max_records_per_file`` (the reference's
-output-file shaping, CM:130-132) so a 1000-executor run emits ~128-512 MB
-files instead of tiny shards; partitioned writes use identity partition
-columns so downstream reads get partition pruning for free.
+Scale notes: partitioned writes use identity partition columns so
+downstream reads get partition pruning for free.
 """
 
 from __future__ import annotations
@@ -75,25 +73,15 @@ def read_parquet_merged(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.option("mergeSchema", "true").parquet(path)
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    compression: str = "snappy",
-    max_records_per_file: int | None = None,
-) -> None:
-    """Parquet write with file-size shaping (CM:127-133 analogue)."""
-    w = df.write.mode(mode).option("compression", compression)
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", str(max_records_per_file))
-    w.parquet(path)
+def write_parquet(df: DataFrame, path: str) -> None:
+    """Snappy parquet overwrite (CM:127-133 analogue)."""
+    df.write.mode("overwrite").option("compression", "snappy").parquet(path)
 
 
 def write_partitioned_parquet(
     df: DataFrame,
     path: str,
     partition_cols: list[str],
-    mode: str = "overwrite",
     cluster: bool = True,
 ) -> None:
     """Hive-style directory partitioning (CM:334-340 fallback analogue).
@@ -108,7 +96,7 @@ def write_partitioned_parquet(
     handling covers the shuffle itself."""
     if cluster:
         df = df.repartition(*[F.col(c) for c in partition_cols])
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def create_namespace(spark: SparkSession, name: str) -> None:
@@ -117,10 +105,7 @@ def create_namespace(spark: SparkSession, name: str) -> None:
 
 
 def write_table(
-    df: DataFrame,
-    table: str,
-    partition_cols: list[str] | None = None,
-    mode: str = "overwrite",
+    df: DataFrame, table: str, partition_cols: list[str] | None = None
 ) -> None:
     """Create-or-replace a managed partitioned table.
 
@@ -128,7 +113,8 @@ def write_table(
     "channel").createOrReplace() (CM:327-329); gold single-key CM:409-411.
     Delta when available; parquet-backed managed table otherwise.
     """
-    w = df.write.format(table_format()).mode(mode).option("overwriteSchema", "true")
+    w = df.write.format(table_format()).mode("overwrite")
+    w = w.option("overwriteSchema", "true")
     if partition_cols:
         w = w.partitionBy(*partition_cols)
     w.saveAsTable(table)
@@ -139,10 +125,10 @@ def read_table(spark: SparkSession, table: str) -> DataFrame:
     return spark.table(table)
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite", header: bool = True) -> None:
-    """CSV export (interchange format — not a scale format; no type
-    fidelity for arrays/structs/binary)."""
-    df.write.mode(mode).option("header", str(header).lower()).csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    """CSV export with a header row (interchange format — not a scale
+    format; no type fidelity for arrays/structs/binary)."""
+    df.write.mode("overwrite").option("header", "true").csv(path)
 
 
 def read_csv(spark: SparkSession, path: str, schema=None) -> DataFrame:
@@ -156,9 +142,9 @@ def read_csv(spark: SparkSession, path: str, schema=None) -> DataFrame:
     return r.csv(path)
 
 
-def write_json_lines(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_json_lines(df: DataFrame, path: str) -> None:
     """JSON-lines export (one object per line — the splittable layout)."""
-    df.write.mode(mode).json(path)
+    df.write.mode("overwrite").json(path)
 
 
 def read_json_lines(spark: SparkSession, path: str, schema=None) -> DataFrame:
@@ -168,30 +154,25 @@ def read_json_lines(spark: SparkSession, path: str, schema=None) -> DataFrame:
     return r.json(path)
 
 
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_orc(df: DataFrame, path: str) -> None:
     """ORC write — the other columnar format; same pushdown/pruning story
     as parquet under Spark's vectorized ORC reader."""
-    df.write.mode(mode).orc(path)
+    df.write.mode("overwrite").orc(path)
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_mb: int = 128,
-    partition_cols: list[str] | None = None,
-) -> int:
+def compact_parquet(spark: SparkSession, path: str, target_file_mb: int = 128) -> int:
     """Small-files maintenance (the OPTIMIZE analogue for plain parquet
-    layouts): rewrite a directory into ~target_file_mb files, preserving
-    Hive partitioning when given. Returns the new file count.
+    layouts): rewrite an unpartitioned directory into ~target_file_mb
+    files. Returns the new file count.
 
     Sizing comes from the actual on-disk byte size, not a row guess —
     the write is repartitioned to ceil(bytes/target), so compaction of a
     5000-file directory yields a handful of full-size files. Production
-    note: run per-partition (WHERE on partition cols) to bound each
+    note: on a partitioned table, run per-partition to bound each
     rewrite and keep the swap atomic per partition.
 
     CONCURRENCY CONTRACT (no-catalog fallback): single writer, NO
@@ -210,11 +191,7 @@ def compact_parquet(
     n_files = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
     df = spark.read.parquet(path)
     tmp = path.rstrip("/") + "._compact_tmp"
-    if partition_cols:
-        per = df.repartition(n_files, *[F.col(c) for c in partition_cols])
-        per.write.mode("overwrite").partitionBy(*partition_cols).parquet(tmp)
-    else:
-        df.repartition(n_files).write.mode("overwrite").parquet(tmp)
+    df.repartition(n_files).write.mode("overwrite").parquet(tmp)
     import shutil
 
     shutil.rmtree(path)
@@ -324,7 +301,6 @@ def _write_curve_clustered(
     curve: Callable[[Column, Column], Column],
     bits: int,
     num_files: int,
-    mode: str,
 ) -> None:
     """Write ``df`` clustered along a 2-D space-filling curve over ``cols``.
 
@@ -356,7 +332,7 @@ def _write_curve_clustered(
         .repartitionByRange(num_files, F.col("_curve"))
         .sortWithinPartitions("_curve")
         .drop("_curve")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
@@ -366,13 +342,12 @@ def write_zordered(
     path: str,
     cols: tuple[str, str],
     num_files: int = 16,
-    mode: str = "overwrite",
 ) -> None:
     """Write ``df`` clustered along a 2-D Z-curve over ``cols``
     (16-bit buckets interleaved by ``zvalue2``). Point/box predicates on
     EITHER column then prune most files via parquet min/max stats — vs a
     single-column sort which only prunes on its leading column."""
-    _write_curve_clustered(df, path, cols, zvalue2, 16, num_files, mode)
+    _write_curve_clustered(df, path, cols, zvalue2, 16, num_files)
 
 
 def hilbert_udf(order: int = 8):
@@ -458,16 +433,14 @@ def write_hilbert_clustered(
     path: str,
     cols: tuple[str, str],
     num_files: int = 16,
-    order: int = 8,
-    mode: str = "overwrite",
 ) -> None:
     """Write ``df`` clustered along a 2-D Hilbert curve over ``cols`` —
-    same contract as ``write_zordered`` but with ``order``-bit buckets
+    same contract as ``write_zordered`` but with 8-bit buckets
     and Hilbert locality: every run of consecutive indexes is a
     connected, Manhattan-adjacent cell path, so each output file's
     (x, y) bounding box is tighter than the z-curve's power-of-two jumps
     allow, and 2-D range predicates prune more files."""
-    _write_curve_clustered(df, path, cols, hilbert_udf(order), order, num_files, mode)
+    _write_curve_clustered(df, path, cols, hilbert_udf(8), 8, num_files)
 
 
 # --- Versioned snapshot tables (reader-safe commits without a catalog) -----
@@ -506,12 +479,7 @@ def _current_version(table_dir: str) -> int | None:
     return int(manifest.read_text().strip())
 
 
-def write_snapshot(
-    spark: SparkSession,
-    df: DataFrame,
-    table_dir: str,
-    partition_cols: list[str] | None = None,
-) -> int:
+def write_snapshot(spark: SparkSession, df: DataFrame, table_dir: str) -> int:
     """Commit ``df`` as the next version of a snapshot table and return
     the new version number. Readers concurrent with this call keep
     seeing the previous version until the atomic manifest flip."""
@@ -522,10 +490,7 @@ def write_snapshot(
     prev = _current_version(table_dir)
     version = (prev or 0) + 1
     vdir = os.path.join(table_dir, f"v={version}")
-    writer = df.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(vdir)
+    df.write.mode("overwrite").parquet(vdir)
     # atomic pointer flip: full write + rename, never truncate-in-place
     tmp = pathlib.Path(table_dir, "_CURRENT.tmp")
     tmp.write_text(str(version))
@@ -584,11 +549,9 @@ def vacuum_snapshots(table_dir: str, keep: int = 2) -> list[int]:
     return drop
 
 
-def parquet_footer_stats(
-    spark: SparkSession, path_glob: str, glob_filter: str = "*.parquet"
-) -> DataFrame:
+def parquet_footer_stats(spark: SparkSession, path_glob: str) -> DataFrame:
     """EXECUTOR-SIDE parquet footer walk: metadata (row counts, row-group
-    counts) for every file matching the glob, read with pyarrow INSIDE
+    counts) for every ``*.parquet`` file matching the glob, read with pyarrow INSIDE
     mapInPandas so the driver never touches a footer — the
     data-size-independent form of the per-file audit q278 does driver-
     side (VERDICT r12 hardening note #4's alternative). The file list
@@ -607,7 +570,7 @@ def parquet_footer_stats(
 
     files = (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob_filter)
+        .option("pathGlobFilter", "*.parquet")
         .load(path_glob)
         .select("path")
     )

@@ -126,8 +126,8 @@ _STATE_SCHEMA = StructType(
         StructField("n", LongType()),
         StructField("total", DoubleType()),
         # epoch micros of the latest event seen across ALL batches — kept
-        # in state so a timeout emission still reports the user's last
-        # activity time (a batch-local max would be lost at expiry).
+        # in state so each emitted row reports the user's last activity
+        # time, not the batch-local max.
         StructField("last_us", LongType()),
     ]
 )
@@ -174,17 +174,13 @@ def _totals_row(user_id, n, total, last_us):
 def _running_totals_fn(key, pdf_iter, state):
     """Per-user accumulator: state carries (count, value-sum, last-event
     micros) across microbatches; emits one updated row per user per
-    batch. Timed-out state emits its final row and clears."""
-    if state.hasTimedOut:
-        acc = state.get
-        state.remove()
-    else:
-        acc = _fold_totals(state.get if state.exists else (0, 0.0, None), pdf_iter)
-        state.update(acc)
+    batch."""
+    acc = _fold_totals(state.get if state.exists else (0, 0.0, None), pdf_iter)
+    state.update(acc)
     yield _totals_row(key[0], *acc)
 
 
-def stateful_running_totals_stream(events: DataFrame, expire_state: bool = False) -> DataFrame:
+def stateful_running_totals_stream(events: DataFrame) -> DataFrame:
     """Custom stateful operator (X15) via applyInPandasWithState: exact
     running (count, sum) per user — the shape Spark's built-in windowed
     aggs can't express (unbounded per-key accumulation with a custom
@@ -193,10 +189,9 @@ def stateful_running_totals_stream(events: DataFrame, expire_state: bool = False
     State is partitioned by user_id — the same shuffle key as the
     groupBy, so each executor holds only its keys' state; at 100 TB the
     state store scales horizontally with executors (RocksDB state store
-    in production). ``expire_state`` arms a processing-time timeout for
-    long-running production streams; leave off for availableNow drains —
-    an armed timeout schedules empty timeout-check batches forever, so
-    the drain never terminates."""
+    in production). State never times out: an armed processing-time
+    timeout schedules empty timeout-check batches forever, so an
+    availableNow drain would never terminate."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return events.groupBy("user_id").applyInPandasWithState(
@@ -204,11 +199,7 @@ def stateful_running_totals_stream(events: DataFrame, expire_state: bool = False
         outputStructType=RUNNING_TOTALS_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if expire_state
-            else GroupStateTimeout.NoTimeout
-        ),
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -225,17 +216,15 @@ def run_update_to_memory(stream_df: DataFrame, query_name: str, checkpoint_dir: 
     q.awaitTermination()
 
 
-def dedup_stream(
-    events: DataFrame, watermark: str = "1 hour", keys: list[str] | None = None
-) -> DataFrame:
+def dedup_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Streaming exact-dedup (the streaming face of operators.dedup X17):
-    dropDuplicatesWithinWatermark keeps one row per key among duplicates
+    dropDuplicatesWithinWatermark keeps one row per event_id among duplicates
     whose event times fall within the watermark horizon, so state is
     bounded — the unbounded-state dropDuplicates() footgun doesn't apply.
     At 100 TB/day this is the ingest-time guard that keeps exact dupes
     out of bronze before the heavier batch MinHash pass runs."""
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        keys or ["event_id"]
+        ["event_id"]
     )
 
 
@@ -414,8 +403,6 @@ def streaming_near_dup_ingest(
     out_dir: str,
     sig_store: str,
     checkpoint_dir: str,
-    num_hashes: int = 64,
-    bands: int = 16,
 ) -> None:
     """Streaming corpus ingest with cross-batch near-dup filtering — the
     X15 x X18 integration a continuously-fed training corpus needs:
@@ -441,7 +428,9 @@ def streaming_near_dup_ingest(
     permanent data loss). Pinned by
     tests/test_streaming.py::test_streaming_near_dup_ingest_retry_idempotent.
 
-    Scale: the store carries (_id, _sig) only (num_hashes longs per
+    LSH uses operators.dedup's 64-hash, 16-band defaults throughout.
+
+    Scale: the store carries (_id, _sig) only (64 longs per
     accepted doc); the probe is one hash join on well-spread band
     buckets; nothing in the loop is O(corpus). First batch against an
     empty store skips the probe (parquet dir does not exist yet).
@@ -456,9 +445,7 @@ def streaming_near_dup_ingest(
         if batch_df.isEmpty():
             return
         # (1) within-batch: drop the higher id of every candidate pair
-        pairs = _dd.minhash_lsh_candidates(
-            batch_df, num_hashes=num_hashes, bands=bands
-        )
+        pairs = _dd.minhash_lsh_candidates(batch_df)
         survivors = batch_df.join(
             pairs.select(F.col("id_b").alias("doc_id")).distinct(),
             "doc_id",
@@ -486,18 +473,16 @@ def streaming_near_dup_ingest(
             # has the batch partition column, so a resolution failure
             # here should fail the batch, not read as "no store"
             existing = existing.filter(F.col("batch") != batch_id)
-            survivors = _dd.incremental_near_dup_filter(
-                survivors, existing, num_hashes=num_hashes, bands=bands
-            )
+            survivors = _dd.incremental_near_dup_filter(survivors, existing)
         # (3) accept: docs to the corpus, signatures to the store —
         # overwrite of a batch_id-scoped subdir, so a retried batch is
         # a no-op rewrite rather than a duplicate append. Readers see
         # the subdirs as a `batch` partition column.
         survivors = survivors.localCheckpoint(eager=True)
         survivors.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        _dd.minhash_signatures(survivors, num_hashes=num_hashes).write.mode(
-            "overwrite"
-        ).parquet(f"{sig_store}/batch={batch_id}")
+        _dd.minhash_signatures(survivors).write.mode("overwrite").parquet(
+            f"{sig_store}/batch={batch_id}"
+        )
 
     (
         docs_stream.writeStream.foreachBatch(ingest)

@@ -2425,6 +2425,7 @@ def test_entries_on_threads_match_serial(spark):
     names = [
         "q250_rfm_scores",
         "q33_minhash_candidates",
+        "q67_dedup_clusters",
         "q294_aqe_partition_coalescing",
         "q297_aqe_broadcast_conversion",
     ]
