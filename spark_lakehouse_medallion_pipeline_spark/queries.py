@@ -21,7 +21,7 @@ Dialect rules that keep the value-hash comparison bit-exact
     replace-all default.
   - LIMIT queries carry a unique tie-breaker in ORDER BY.
   - events.ts is parquet TIMESTAMP(MICROS) in every corpus; read it via
-    sources.io.read_events, which also accepts TIMESTAMP(NANOS).
+    _t, which also accepts TIMESTAMP(NANOS) (sources.catalog).
 """
 
 from __future__ import annotations
@@ -39,6 +39,9 @@ from spark_lakehouse_medallion_pipeline_spark.operators import (
     text,
     timeseries,
 )
+# The one entry point for corpus tables: a scan with the schema the session
+# catalog inferred once.
+from spark_lakehouse_medallion_pipeline_spark.sources.catalog import table as _t
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -54,14 +57,6 @@ def _q(name: str, oracle: str | None = None):
         return fn
 
     return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        from spark_lakehouse_medallion_pipeline_spark.sources.io import read_events
-
-        return read_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _scratch_dir(spark: SparkSession, stem: str, sf_dir: str) -> str:
@@ -5796,7 +5791,7 @@ def q142_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     view (no filename function through a view), so it pins the
     per-file counts against the known single-file layout; the Spark
     side genuinely derives the name from _metadata.file_path."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = _t(spark, sf_dir, "orders")
     return (
         o.select(
             F.regexp_extract(F.col("_metadata.file_path"), r"([^/]+)$", 1).alias(
@@ -9557,12 +9552,10 @@ def q207_rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchored on days that HAVE events (leading partial windows
     included, the dashboard convention). The oracle pins the whole
     pipeline against a plain range-join COUNT(DISTINCT). Events must
-    come through sources.io.read_events (micros corpus cast to
-    TIMESTAMP; a nanos file is rebuilt by integer division); date
-    extraction is UTC to_date both sides."""
-    from spark_lakehouse_medallion_pipeline_spark.sources.io import read_events
-
-    ev = read_events(spark, sf_dir).select(
+    come through _t (micros corpus cast to TIMESTAMP; a nanos file is
+    rebuilt by integer division); date extraction is UTC to_date both
+    sides."""
+    ev = _t(spark, sf_dir, "events").select(
         F.to_date("ts").alias("day"), "user_id"
     )
     per_day = ev.groupBy(

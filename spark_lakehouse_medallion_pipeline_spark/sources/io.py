@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_lakehouse_medallion_pipeline_spark.session import table_format
+from spark_lakehouse_medallion_pipeline_spark.sources import catalog
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -32,35 +33,9 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 
 
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Events table reader; accepts ``ts`` in either parquet unit.
-
-    Every committed corpus (testdata sf0.001-sf0.1, perfbench's
-    generator) stores ``ts`` as TIMESTAMP(MICROS, isAdjustedToUTC=false),
-    read as TIMESTAMP_NTZ and cast below. FIXTURES.md's ``timestamp[ns]``
-    spec gives TIMESTAMP(NANOS), which Spark's vectorized reader rejects
-    (PARQUET_TYPE_ILLEGAL): nanos are read as long (legacy conf) and
-    rebuilt as a microsecond timestamp with INTEGER division — ``ts/1000``
-    in double would lose ~256 ns at 2024 epoch magnitudes and could flip
-    millisecond boundaries vs the DuckDB oracle.
-
-    Precision caveat for nanos files: Spark truncates to microseconds,
-    DuckDB keeps nanoseconds, so on nano-resolution data order-sensitive
-    oracled queries (q12 lag pairs, q24 as-of matches) could diverge at
-    sub-microsecond ties.
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ts_type = dict(raw.dtypes).get("ts")
-    if ts_type == "bigint":
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        # Parquet timestamps with isAdjustedToUTC=false arrive as
-        # TIMESTAMP_NTZ in Spark 4; downstream code (unix_millis, window(),
-        # range frames) expects TIMESTAMP. Under the UTC session timezone
-        # (session.py) this cast is value-identical to the DuckDB oracle's
-        # naive-timestamp reading.
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    """Events table, ``ts`` as TIMESTAMP whichever parquet unit stores it;
+    read through the session table catalog (``sources.catalog``)."""
+    return catalog.table(spark, sf_dir, "events")
 
 
 def read_parquet_merged(spark: SparkSession, path: str) -> DataFrame:
