@@ -266,6 +266,50 @@ def test_readme_counts_match_code():
     assert f"make {len(ORACLE)}/{n_q} battery entries" in readme
 
 
+_REGISTRY_HEAD_50 = [
+    "q01_pricing_summary", "q19_daily_event_kpis", "q41_scalar_battery",
+    "q294_aqe_partition_coalescing", "q277_topk_with_ties",
+    "q295_rebalance_write_rescue", "q245_cusum_changepoint",
+    "q266_salted_skew_aggregate", "q279_zorder_interleave_audit",
+    "q248_kaplan_meier", "q269_incremental_view_maintenance",
+    "q268_heavy_hitters_exact", "q273_distribution_drift_tvd",
+    "q275_scd2_dimension_history", "q293_aqe_skew_join_rescue",
+    "q280_watermark_late_data_audit", "q289_stream_outer_join_timing",
+    "q281_scd2_incremental_merge", "q290_dynamic_partition_pruning",
+    "q297_aqe_broadcast_conversion", "q285_stream_stream_interval_join",
+    "q261_ols_trend_slope", "q271_gap_fill_interpolate",
+    "q282_replica_divergence_audit", "q296_stateful_stream_state_recovery",
+    "q67_dedup_clusters", "q255_ks_two_sample", "q286_salted_skew_join",
+    "q200_jpeg_image_features", "q274_consistent_hash_rebalance",
+    "q283_majority_vote_repair", "q238_blocking_quality",
+    "q272_sequence_motif_match", "q299_exactly_once_merge_sink",
+    "q201_pq_codes_int", "q287_compaction_execute", "q288_bloom_zone_pruning",
+    "q263_inverted_index", "q298_stream_dedup_ttl_replay",
+    "q262_erasure_cascade_audit", "q276_interval_overlap_join",
+    "q246_hhi_concentration", "q256_mann_kendall_trend",
+    "q237_jsonl_quarantine", "q291_stream_crash_recovery",
+    "q265_weighted_systematic_sample", "q254_snapshot_time_travel",
+    "q278_sorted_write_zonemap", "q284_sortedness_audit",
+    "q292_stream_window_emission_timing",
+]
+
+
+def test_registry_pinned():
+    """The registry's entry set, the driver's 50-entry head and every
+    oracle SQL string, pinned by a digest: moving or sharing code between
+    entries must leave all three byte-identical."""
+    import hashlib
+
+    from spark_lakehouse_medallion_pipeline_spark.queries import ORACLE, QUERIES
+
+    assert (len(QUERIES), len(ORACLE)) == (301, 289)
+    assert list(QUERIES)[:50] == _REGISTRY_HEAD_50
+    text = "\n".join(f"{n}\t{ORACLE.get(n, '')}" for n in sorted(QUERIES))
+    assert hashlib.sha256(text.encode()).hexdigest() == (
+        "339237c9b49ee6dcdea063283bc617c4a39a2456e899ab516a868c9f467c77c7"
+    )
+
+
 def test_sketch_stats_rel_error_vs_exact(spark):
     """q199's sketches must track q193's exact answers (the q30
     discipline): NDV within 5% (HLL++ default rsd), quartiles within
