@@ -9,11 +9,11 @@ import math
 
 import pytest
 
-from spark_lakehouse_medallion_pipeline_spark.queries import (
+from spark_lakehouse_medallion_pipeline_spark.queries import QUERIES
+from spark_lakehouse_medallion_pipeline_spark.queries._common import _scratch_root
+from spark_lakehouse_medallion_pipeline_spark.queries.text import (
     _NDCG_DISC,
     _NDCG_IDEAL,
-    QUERIES,
-    _scratch_root,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -285,7 +285,7 @@ def test_q229_ewma_weights_exact():
     """The scaled 8-term EWMA weights must be the alpha=1/4 geometric
     series with the tail folded into the oldest term, summing to
     exactly 4^8 so the divide loses nothing systematic."""
-    from spark_lakehouse_medallion_pipeline_spark.queries import (
+    from spark_lakehouse_medallion_pipeline_spark.queries.windows import (
         _EWMA_DEN,
         _EWMA_W,
     )
@@ -305,7 +305,7 @@ def test_q229_ewma_recomputes(spark):
     cents = (o["o_totalprice"] * 100).round().astype("int64")
     daily = (cents.groupby(day).sum() // 100).sort_index()
     xs, days = daily.to_numpy(), daily.index.to_numpy()
-    from spark_lakehouse_medallion_pipeline_spark.queries import (
+    from spark_lakehouse_medallion_pipeline_spark.queries.windows import (
         _EWMA_DEN,
         _EWMA_W,
     )
@@ -1114,7 +1114,7 @@ def test_q266_salted_equals_unsalted(spark):
     other witness) — including the exact distinct-user counts."""
     from pyspark.sql import functions as F
 
-    from spark_lakehouse_medallion_pipeline_spark.queries import cents
+    from spark_lakehouse_medallion_pipeline_spark.queries._common import cents
     from spark_lakehouse_medallion_pipeline_spark.sources.io import read_events
 
     ev = read_events(spark, SF)
@@ -1151,7 +1151,7 @@ def test_q267_bucketed_join_equals_plain(spark):
     join computes: equality against the plain parquet join in Spark."""
     from pyspark.sql import functions as F
 
-    from spark_lakehouse_medallion_pipeline_spark.queries import cents
+    from spark_lakehouse_medallion_pipeline_spark.queries._common import cents
 
     o = spark.read.parquet(f"{SF}/orders.parquet")
     c = spark.read.parquet(f"{SF}/customer.parquet")
@@ -1201,7 +1201,7 @@ def test_q269_ivm_equals_full_recompute(spark):
     sides non-trivially populated."""
     from pyspark.sql import functions as F
 
-    from spark_lakehouse_medallion_pipeline_spark.queries import cents
+    from spark_lakehouse_medallion_pipeline_spark.queries._common import cents
     from spark_lakehouse_medallion_pipeline_spark.sources.io import read_events
 
     ev = read_events(spark, SF)
@@ -1237,7 +1237,7 @@ def test_q270_zonemap_replay(spark):
     many zones and reads at most as many rows as the natural one."""
     import pandas as pd
 
-    from spark_lakehouse_medallion_pipeline_spark.queries import (
+    from spark_lakehouse_medallion_pipeline_spark.queries.layout import (
         _Q270_CUTOFF,
         _Q270_ZONE_ROWS,
     )
@@ -1378,7 +1378,9 @@ def test_q272_motif_replay(spark):
     parity)."""
     import re
 
-    from spark_lakehouse_medallion_pipeline_spark.queries import _Q272_MAX_EVENTS
+    from spark_lakehouse_medallion_pipeline_spark.queries.product import (
+        _Q272_MAX_EVENTS,
+    )
     from spark_lakehouse_medallion_pipeline_spark.sources.io import read_events
 
     pdf = read_events(spark, SF).select(
@@ -1413,8 +1415,8 @@ def test_q272_whale_cap(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from spark_lakehouse_medallion_pipeline_spark.queries import (
-        QUERIES,
+    from spark_lakehouse_medallion_pipeline_spark.queries import QUERIES
+    from spark_lakehouse_medallion_pipeline_spark.queries.product import (
         _Q272_MAX_EVENTS,
     )
 
@@ -1741,10 +1743,8 @@ def test_q279_morton_bit_math(spark):
     cover the table."""
     from pyspark.sql import functions as F
 
-    from spark_lakehouse_medallion_pipeline_spark.queries import (
-        QUERIES,
-        _q279_morton_sql,
-    )
+    from spark_lakehouse_medallion_pipeline_spark.queries import QUERIES
+    from spark_lakehouse_medallion_pipeline_spark.queries.layout import _q279_morton_sql
 
     def ref_morton(d1: int, d2: int) -> int:
         m = 0
@@ -1780,8 +1780,8 @@ def test_q280_watermark_replay(spark):
     """Pandas replay of the exact watermark rule (exclusive running max
     of event time over arrival order, minus delay) for all three
     delays — the streaming-semantics witness besides the oracle."""
-    from spark_lakehouse_medallion_pipeline_spark.queries import (
-        QUERIES,
+    from spark_lakehouse_medallion_pipeline_spark.queries import QUERIES
+    from spark_lakehouse_medallion_pipeline_spark.queries.streaming import (
         _Q280_DELAYS_S,
     )
     from spark_lakehouse_medallion_pipeline_spark.sources.io import read_events
@@ -1945,7 +1945,7 @@ def test_q285_streaming_simulation_replay(spark):
     docstring claims (inner-join eviction never loses an on-time pair)
     holds on this data by construction, and (b) the conservation
     identity emitted + lost_late == total."""
-    from spark_lakehouse_medallion_pipeline_spark.queries import (
+    from spark_lakehouse_medallion_pipeline_spark.queries.streaming import (
         _Q280_DELAYS_S,
         _Q285_JOIN_WINDOW_S,
     )
@@ -2064,7 +2064,7 @@ def test_q287_compaction_execute_replay(spark):
     import os
     import tempfile
 
-    from spark_lakehouse_medallion_pipeline_spark.queries import _Q287_BIN_BYTES
+    from spark_lakehouse_medallion_pipeline_spark.queries.layout import _Q287_BIN_BYTES
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").toPandas()
     docs["m"] = docs.doc_id // 16
@@ -2155,7 +2155,7 @@ def test_q288_bloom_replay_and_no_false_negatives(spark):
     and n_false_positive_zones is never negative."""
     import hashlib
 
-    from spark_lakehouse_medallion_pipeline_spark.queries import (
+    from spark_lakehouse_medallion_pipeline_spark.queries.layout import (
         _Q270_ZONE_ROWS,
         _Q288_BITS,
         _Q288_PROBES,
@@ -2246,7 +2246,7 @@ def test_q292_emission_simulation_and_q20_crosspin(spark):
     the cross-entry pin: at the 600 s delay nothing in this corpus is
     late (max disorder is 6 min), so q292's totals must equal q20's
     batch rollup — same window count, same kept-event count."""
-    from spark_lakehouse_medallion_pipeline_spark.queries import (
+    from spark_lakehouse_medallion_pipeline_spark.queries.streaming import (
         _Q280_DELAYS_S,
         _Q292_WIN_US,
     )
@@ -2315,7 +2315,7 @@ def test_q293_skew_split_pinned_and_invisible(spark):
     (split count > 0 — VERDICT r13 Next #3's pin), and the rescued
     values must equal q286's salted result key-for-key — three routes
     (manual salt, AQE split, plain oracle) into one answer."""
-    from spark_lakehouse_medallion_pipeline_spark.queries import (
+    from spark_lakehouse_medallion_pipeline_spark.queries.adaptive import (
         _Q293_CONFS,
         _q293_frame,
     )
@@ -2452,7 +2452,9 @@ def test_q297_conversion_markers(spark):
     conversion observed, not assumed. (The entry itself ValueError-
     gates the same pair; this pins it against regressions in how the
     plans are captured.)"""
-    from spark_lakehouse_medallion_pipeline_spark.queries import _Q297_THRESHOLD
+    from spark_lakehouse_medallion_pipeline_spark.queries.adaptive import (
+        _Q297_THRESHOLD,
+    )
 
     import pyspark.sql.functions as F
 
@@ -2503,7 +2505,9 @@ def test_q298_dedup_ttl_streaming_simulation(spark):
     emit iff the key is absent, re-insert on emit. Every q298 column
     must match per delay — so the batch/recursive replay and the
     operational state-store semantics agree row for row."""
-    from spark_lakehouse_medallion_pipeline_spark.queries import _Q280_DELAYS_S
+    from spark_lakehouse_medallion_pipeline_spark.queries.streaming import (
+        _Q280_DELAYS_S,
+    )
     from spark_lakehouse_medallion_pipeline_spark.sources.io import read_events
 
     US = 1_000_000

@@ -11,7 +11,7 @@ import pyarrow as pa
 import pyarrow.parquet as papq
 from pyspark.sql import functions as F
 
-from spark_lakehouse_medallion_pipeline_spark.queries import _t
+from spark_lakehouse_medallion_pipeline_spark.queries._common import _t
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"

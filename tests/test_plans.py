@@ -14,7 +14,8 @@ import re
 import pytest
 
 from spark_lakehouse_medallion_pipeline_spark.plans import explain
-from spark_lakehouse_medallion_pipeline_spark.queries import QUERIES, _scratch_root
+from spark_lakehouse_medallion_pipeline_spark.queries import QUERIES
+from spark_lakehouse_medallion_pipeline_spark.queries._common import _scratch_root
 
 SF = "/root/testdata/sf0.001"
 
@@ -1119,7 +1120,7 @@ def test_q278_zone_size_caps_file_count(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from spark_lakehouse_medallion_pipeline_spark.queries import (
+    from spark_lakehouse_medallion_pipeline_spark.queries.layout import (
         _Q278_TARGET_FILES,
     )
 

@@ -200,7 +200,7 @@ def test_read_events_accepts_nanos_and_micros(spark, tmp_path):
     import pyarrow.parquet as papq
     from pyspark.sql import functions as F
 
-    from spark_lakehouse_medallion_pipeline_spark.queries import _t
+    from spark_lakehouse_medallion_pipeline_spark.queries._common import _t
 
     ns = [1_704_067_200_123_456_789, 1_719_750_896_999_999_999]
     want = [v // 1000 for v in ns]  # 2024-01-01 00:00:00.123456, ...
@@ -613,7 +613,7 @@ def test_csv_quarantine_contract_modes(spark, tmp_path):
     behavior."""
     import pytest as _pytest
 
-    from spark_lakehouse_medallion_pipeline_spark.queries import _Q236_BAD_LINES
+    from spark_lakehouse_medallion_pipeline_spark.queries.ingest import _Q236_BAD_LINES
 
     schema = "doc_id bigint, text string, lang string, source string, n_chars bigint"
     good = ["1,alpha,en,web,5", "2,beta,de,book,4", "3,gamma,en,web,5"]
