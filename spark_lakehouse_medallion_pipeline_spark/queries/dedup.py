@@ -51,19 +51,24 @@ def q34_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash_near_dup_pairs(_t(spark, sf_dir, "documents"), max_hamming=3)
 
 
-@_q(
-    "q35_ngram_jaccard_adjacent",
-    f"""
-    WITH t AS (
+# Each document's distinct normalized tokens (t), and the jaccard of two
+# such sets over a self-join whose ON condition the caller appends.
+_TOKSET_CTE = f"""t AS (
       SELECT doc_id,
              list_distinct(string_split_regex({_NORM_SQL}, '\\s+')) AS toks
       FROM documents
-    )
+    )"""
+_TOKSET_JACCARD_SQL = f"""
+    WITH {_TOKSET_CTE}
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
              / len(list_distinct(list_concat(a.toks, b.toks))) AS jaccard
-    FROM t a JOIN t b ON b.doc_id = a.doc_id + 1
-    """,
+    FROM t a JOIN t b ON """
+
+
+@_q(
+    "q35_ngram_jaccard_adjacent",
+    _TOKSET_JACCARD_SQL + "b.doc_id = a.doc_id + 1\n    ",
 )
 def q35_ngram_jaccard_adjacent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-set jaccard (X18 verify stage) on adjacent doc pairs — keeps
@@ -81,11 +86,7 @@ def q35_ngram_jaccard_adjacent(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q67_dedup_clusters",
     f"""
     WITH RECURSIVE
-    t AS (
-      SELECT doc_id,
-             list_distinct(string_split_regex({_NORM_SQL}, '\\s+')) AS toks
-      FROM documents
-    ),
+    {_TOKSET_CTE},
     prs AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b
       FROM t a JOIN t b ON b.doc_id = a.doc_id + 1
@@ -245,6 +246,25 @@ def q137_bloom_prefilter_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Portable MinHash over a shingle CTE sh(doc_id, s): 16 md5-seeded minima
+# per document (h) and their 4-row band keys (b), the DuckDB spelling of
+# dedup._pmd5's hash family. Each user builds its own sh (shingle width,
+# DISTINCT) ahead of it.
+_MINHASH_BANDS_SQL = """h AS (
+      SELECT doc_id, seed,
+             MIN(('0x' || substr(md5(s || ':' || (seed // 2)),
+                                 CASE WHEN seed % 2 = 0 THEN 2 ELSE 18 END,
+                                 15))::BIGINT) AS m
+      FROM sh CROSS JOIN (SELECT unnest(range(16)) AS seed)
+      GROUP BY doc_id, seed
+    ),
+    b AS (
+      SELECT doc_id, seed // 4 AS band,
+             string_agg(m, ',' ORDER BY seed) AS bkey
+      FROM h GROUP BY doc_id, seed // 4
+    )"""
+
+
 def _cp_h(expr: str, seed: int) -> str:
     """DuckDB side of dedup._pmd5: low 60 bits of md5(expr || '#seed')."""
     return f"('0x' || substr(md5({expr} || '#{seed}'), 2, 15))::BIGINT"
@@ -271,7 +291,7 @@ def _cp_pairing_ctes(seed: int) -> str:
 _CP_SELHASH = _cp_h("CAST(id_a AS VARCHAR) || ':' || CAST(id_b AS VARCHAR)", 9)
 
 _CONTRASTIVE_PORTABLE_SQL = (
-    r"""
+    rf"""
     WITH toks AS (
       SELECT doc_id, string_split_regex(lower(text), '\s+') AS l FROM documents
     ),
@@ -280,19 +300,7 @@ _CONTRASTIVE_PORTABLE_SQL = (
       FROM (SELECT doc_id, l, unnest(range(1, len(l))) AS i
             FROM toks WHERE len(l) >= 2)
     ),
-    h AS (
-      SELECT doc_id, seed,
-             MIN(('0x' || substr(md5(s || ':' || (seed // 2)),
-                                 CASE WHEN seed % 2 = 0 THEN 2 ELSE 18 END,
-                                 15))::BIGINT) AS m
-      FROM sh CROSS JOIN (SELECT unnest(range(16)) AS seed)
-      GROUP BY doc_id, seed
-    ),
-    b AS (
-      SELECT doc_id, seed // 4 AS band,
-             string_agg(m, ',' ORDER BY seed) AS bkey
-      FROM h GROUP BY doc_id, seed // 4
-    ),
+    {_MINHASH_BANDS_SQL},
     pos AS (
       SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
       FROM b x JOIN b y
@@ -473,16 +481,8 @@ def q152_fuzzy_name_pairs_d2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "q159_jaccard_prefix_join",
-    f"""
-    WITH t AS (
-      SELECT doc_id,
-             list_distinct(string_split_regex({_NORM_SQL}, '\\s+')) AS toks
-      FROM documents
-    )
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-             / len(list_distinct(list_concat(a.toks, b.toks))) AS jaccard
-    FROM t a JOIN t b ON a.doc_id < b.doc_id
+    _TOKSET_JACCARD_SQL
+    + """a.doc_id < b.doc_id
     WHERE len(list_intersect(a.toks, b.toks)) * 10
             >= 9 * len(list_distinct(list_concat(a.toks, b.toks)))
     """,
@@ -547,7 +547,7 @@ def q160_unicode_nfc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "q162_minhash_portable",
-    r"""
+    rf"""
     WITH toks AS (
       SELECT doc_id, string_split_regex(lower(text), '\s+') AS l FROM documents
     ),
@@ -556,19 +556,7 @@ def q160_unicode_nfc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM (SELECT doc_id, l, unnest(range(1, len(l) - 1)) AS i
             FROM toks WHERE len(l) >= 3)
     ),
-    h AS (
-      SELECT doc_id, seed,
-             MIN(('0x' || substr(md5(s || ':' || (seed // 2)),
-                                 CASE WHEN seed % 2 = 0 THEN 2 ELSE 18 END,
-                                 15))::BIGINT) AS m
-      FROM sh CROSS JOIN (SELECT unnest(range(16)) AS seed)
-      GROUP BY doc_id, seed
-    ),
-    b AS (
-      SELECT doc_id, seed // 4 AS band,
-             string_agg(m, ',' ORDER BY seed) AS bkey
-      FROM h GROUP BY doc_id, seed // 4
-    ),
+    {_MINHASH_BANDS_SQL},
     p AS (
       SELECT x.doc_id AS id_a, y.doc_id AS id_b
       FROM b x JOIN b y
@@ -817,7 +805,7 @@ def q204_containment_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "q209_incremental_near_dup_portable",
-    r"""
+    rf"""
     WITH toks AS (
       SELECT doc_id, string_split_regex(lower(text), '\s+') AS l FROM documents
     ),
@@ -826,19 +814,7 @@ def q204_containment_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM (SELECT doc_id, l, unnest(range(1, len(l) - 1)) AS i
             FROM toks WHERE len(l) >= 3)
     ),
-    h AS (
-      SELECT doc_id, seed,
-             MIN(('0x' || substr(md5(s || ':' || (seed // 2)),
-                                 CASE WHEN seed % 2 = 0 THEN 2 ELSE 18 END,
-                                 15))::BIGINT) AS m
-      FROM sh CROSS JOIN (SELECT unnest(range(16)) AS seed)
-      GROUP BY doc_id, seed
-    ),
-    b AS (
-      SELECT doc_id, seed // 4 AS band,
-             string_agg(m, ',' ORDER BY seed) AS bkey
-      FROM h GROUP BY doc_id, seed // 4
-    ),
+    {_MINHASH_BANDS_SQL},
     dup AS (
       SELECT DISTINCT nb.doc_id
       FROM b nb JOIN b ob
@@ -944,7 +920,7 @@ def q222_dup_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "q238_blocking_quality",
-    r"""
+    rf"""
     WITH corpus AS (
       SELECT doc_id, text FROM documents WHERE doc_id % 7 = 0
       UNION ALL
@@ -961,19 +937,7 @@ def q222_dup_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM toks WHERE len(l) >= 3)
     ),
     sz AS (SELECT doc_id, COUNT(*) AS sa FROM sh GROUP BY doc_id),
-    h AS (
-      SELECT doc_id, seed,
-             MIN(('0x' || substr(md5(s || ':' || (seed // 2)),
-                                 CASE WHEN seed % 2 = 0 THEN 2 ELSE 18 END,
-                                 15))::BIGINT) AS m
-      FROM sh CROSS JOIN (SELECT unnest(range(16)) AS seed)
-      GROUP BY doc_id, seed
-    ),
-    b AS (
-      SELECT doc_id, seed // 4 AS band,
-             string_agg(m, ',' ORDER BY seed) AS bkey
-      FROM h GROUP BY doc_id, seed // 4
-    ),
+    {_MINHASH_BANDS_SQL},
     cand AS (
       SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
       FROM b x JOIN b y

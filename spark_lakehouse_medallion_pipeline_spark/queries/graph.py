@@ -105,17 +105,23 @@ def _cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
-    "q161_triangle_count",
-    """
-    WITH os AS (
+# The oracle twin of _cosupply_edges: order-supplier incidences (os) and
+# the deduplicated edges a < b between suppliers of one order (e).
+_COSUPPLY_OS_CTE = """os AS (
       SELECT DISTINCT l_orderkey AS o, l_suppkey AS s
       FROM lineitem WHERE l_suppkey % 4 = 0
-    ),
-    e AS (
+    )"""
+_COSUPPLY_E_CTE = """e AS (
       SELECT DISTINCT x.s AS a, y.s AS b
       FROM os x JOIN os y ON x.o = y.o AND x.s < y.s
-    ),
+    )"""
+
+
+@_q(
+    "q161_triangle_count",
+    f"""
+    WITH {_COSUPPLY_OS_CTE},
+    {_COSUPPLY_E_CTE},
     w AS (SELECT e1.a, e1.b, e2.b AS c FROM e e1 JOIN e e2 ON e1.b = e2.a)
     SELECT COUNT(*) AS n_triangles
     FROM w WHERE EXISTS (SELECT 1 FROM e WHERE e.a = w.a AND e.b = w.c)
@@ -138,15 +144,9 @@ def q161_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "q167_local_clustering",
-    """
-    WITH os AS (
-      SELECT DISTINCT l_orderkey AS o, l_suppkey AS s
-      FROM lineitem WHERE l_suppkey % 4 = 0
-    ),
-    e AS (
-      SELECT DISTINCT x.s AS a, y.s AS b
-      FROM os x JOIN os y ON x.o = y.o AND x.s < y.s
-    ),
+    f"""
+    WITH {_COSUPPLY_OS_CTE},
+    {_COSUPPLY_E_CTE},
     w AS (SELECT e1.a, e1.b, e2.b AS c FROM e e1 JOIN e e2 ON e1.b = e2.a),
     t AS (SELECT a, b, c FROM w
           WHERE EXISTS (SELECT 1 FROM e WHERE e.a = w.a AND e.b = w.c)),
@@ -181,14 +181,8 @@ def q167_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "q188_label_propagation",
-    """
-    WITH os AS (
-      SELECT DISTINCT l_orderkey AS o, l_suppkey AS s
-      FROM lineitem WHERE l_suppkey % 4 = 0
-    ), e AS (
-      SELECT DISTINCT x.s AS a, y.s AS b
-      FROM os x JOIN os y ON x.o = y.o AND x.s < y.s
-    ), adj AS (
+    f"""
+    WITH {_COSUPPLY_OS_CTE}, {_COSUPPLY_E_CTE}, adj AS (
       SELECT a AS v, b AS n FROM e UNION ALL SELECT b AS v, a AS n FROM e
     ), l0 AS (
       SELECT DISTINCT v, v AS lbl FROM adj
@@ -237,14 +231,8 @@ def q188_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "q192_bfs_supplier_hops",
-    """
-    WITH os AS (
-      SELECT DISTINCT l_orderkey AS o, l_suppkey AS s
-      FROM lineitem WHERE l_suppkey % 4 = 0
-    ), e AS (
-      SELECT DISTINCT x.s AS a, y.s AS b
-      FROM os x JOIN os y ON x.o = y.o AND x.s < y.s
-    ), adj AS (
+    f"""
+    WITH {_COSUPPLY_OS_CTE}, {_COSUPPLY_E_CTE}, adj AS (
       SELECT a AS v, b AS n FROM e UNION ALL SELECT b AS v, a AS n FROM e
     ), d0 AS (
       SELECT s_suppkey AS v, CAST(0 AS BIGINT) AS d

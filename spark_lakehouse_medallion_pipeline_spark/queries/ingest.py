@@ -75,6 +75,31 @@ def q232_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.schema(_DOCS_SCHEMA).json(path)
 
 
+def _quarantine_report(raw: DataFrame) -> DataFrame:
+    """q236/q237's contract over a PERMISSIVE read with a `_corrupt`
+    column: a row is quarantined when the parser flagged it or a required
+    field is null; one row of good/quarantined counts and good-row sums."""
+    # Spark caveat: a query over ONLY the corrupt column is disallowed
+    # (internal raw-record pushdown) — aggregate over the full
+    # projection instead, which is what the audit needs anyway.
+    bad = (
+        F.col("_corrupt").isNotNull()
+        | F.col("doc_id").isNull()
+        | F.col("n_chars").isNull()
+    )
+    return raw.agg(
+        F.count(F.when(~bad, 1)).cast("bigint").alias("n_good"),
+        F.count(F.when(bad, 1)).cast("bigint").alias("n_quarantined"),
+        F.count(F.lit(1)).cast("bigint").alias("n_total"),
+        F.sum(F.when(~bad, F.col("doc_id")))
+        .cast("bigint")
+        .alias("sum_good_doc_id"),
+        F.sum(F.when(~bad, F.col("n_chars")))
+        .cast("bigint")
+        .alias("sum_good_n_chars"),
+    )
+
+
 # Deterministic malformed CSV lines planted next to the clean export for
 # q236. Spark's PERMISSIVE parser only routes TYPE failures to the
 # corrupt-record column — short rows are null-PADDED and long rows have
@@ -146,25 +171,7 @@ def q236_csv_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("columnNameOfCorruptRecord", "_corrupt")
         .csv(path)
     )
-    # Spark caveat: a query over ONLY the corrupt column is disallowed
-    # (internal raw-record pushdown) — aggregate over the full
-    # projection instead, which is what the audit needs anyway.
-    bad = (
-        F.col("_corrupt").isNotNull()
-        | F.col("doc_id").isNull()
-        | F.col("n_chars").isNull()
-    )
-    return raw.agg(
-        F.count(F.when(~bad, 1)).cast("bigint").alias("n_good"),
-        F.count(F.when(bad, 1)).cast("bigint").alias("n_quarantined"),
-        F.count(F.lit(1)).cast("bigint").alias("n_total"),
-        F.sum(F.when(~bad, F.col("doc_id")))
-        .cast("bigint")
-        .alias("sum_good_doc_id"),
-        F.sum(F.when(~bad, F.col("n_chars")))
-        .cast("bigint")
-        .alias("sum_good_n_chars"),
-    )
+    return _quarantine_report(raw)
 
 
 # q237's planted bad JSON lines: syntax failure (whole record null +
@@ -220,22 +227,7 @@ def q237_jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("columnNameOfCorruptRecord", "_corrupt")
         .json(path)
     )
-    bad = (
-        F.col("_corrupt").isNotNull()
-        | F.col("doc_id").isNull()
-        | F.col("n_chars").isNull()
-    )
-    return raw.agg(
-        F.count(F.when(~bad, 1)).cast("bigint").alias("n_good"),
-        F.count(F.when(bad, 1)).cast("bigint").alias("n_quarantined"),
-        F.count(F.lit(1)).cast("bigint").alias("n_total"),
-        F.sum(F.when(~bad, F.col("doc_id")))
-        .cast("bigint")
-        .alias("sum_good_doc_id"),
-        F.sum(F.when(~bad, F.col("n_chars")))
-        .cast("bigint")
-        .alias("sum_good_n_chars"),
-    )
+    return _quarantine_report(raw)
 
 
 @_q(

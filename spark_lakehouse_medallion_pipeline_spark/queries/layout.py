@@ -318,6 +318,23 @@ _Q270_CUTOFF = "2001-01-01"
 _Q278_TARGET_FILES = 128
 
 
+# Per-zone stats of q270/q278's two layouts of the same rows (zoned:
+# sd, z_nat, z_srt): each zone's max shipdate, rows, and rows matching the
+# _Q270_CUTOFF predicate.
+_ZONE_STATS_CTES = f"""layouts AS (
+      SELECT 'natural' AS layout, z_nat AS z, sd FROM zoned
+      UNION ALL
+      SELECT 'sorted', z_srt, sd FROM zoned
+    ),
+    zstats AS (
+      SELECT layout, z, MAX(sd) AS zmax,
+             CAST(COUNT(*) AS BIGINT) AS n_rows,
+             CAST(SUM(CASE WHEN sd >= DATE '{_Q270_CUTOFF}'
+                           THEN 1 ELSE 0 END) AS BIGINT) AS n_match
+      FROM layouts GROUP BY layout, z
+    )"""
+
+
 @_q(
     "q270_zonemap_skipping_audit",
     f"""
@@ -333,18 +350,7 @@ _Q278_TARGET_FILES = 128
                // {_Q270_ZONE_ROWS} AS z_srt
       FROM li
     ),
-    layouts AS (
-      SELECT 'natural' AS layout, z_nat AS z, sd FROM zoned
-      UNION ALL
-      SELECT 'sorted', z_srt, sd FROM zoned
-    ),
-    zstats AS (
-      SELECT layout, z, MAX(sd) AS zmax,
-             CAST(COUNT(*) AS BIGINT) AS n_rows,
-             CAST(SUM(CASE WHEN sd >= DATE '{_Q270_CUTOFF}'
-                           THEN 1 ELSE 0 END) AS BIGINT) AS n_match
-      FROM layouts GROUP BY layout, z
-    )
+    {_ZONE_STATS_CTES}
     SELECT layout,
            CAST(COUNT(*) AS BIGINT) AS n_zones,
            CAST(SUM(CASE WHEN zmax < DATE '{_Q270_CUTOFF}'
@@ -460,18 +466,7 @@ def q270_zonemap_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                // (SELECT zrows FROM params) AS z_srt
       FROM li
     ),
-    layouts AS (
-      SELECT 'natural' AS layout, z_nat AS z, sd FROM zoned
-      UNION ALL
-      SELECT 'sorted', z_srt, sd FROM zoned
-    ),
-    zstats AS (
-      SELECT layout, z, MAX(sd) AS zmax,
-             CAST(COUNT(*) AS BIGINT) AS n_rows,
-             CAST(SUM(CASE WHEN sd >= DATE '{_Q270_CUTOFF}'
-                           THEN 1 ELSE 0 END) AS BIGINT) AS n_match
-      FROM layouts GROUP BY layout, z
-    )
+    {_ZONE_STATS_CTES}
     SELECT layout,
            CAST(COUNT(*) AS BIGINT) AS n_files,
            CAST(SUM(CASE WHEN zmax < DATE '{_Q270_CUTOFF}'

@@ -44,16 +44,18 @@ def q39_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.extract_image_features(media)
 
 
-@_q(
-    "q157_bmp_image_features",
-    """
+# Closed-form features of the 16x16 test pattern every image codec entry
+# decodes: its mean Rec.601 milli-luma depends only on doc_id.
+_TEST_PATTERN_LUMA_SQL = """
     SELECT doc_id AS media_id,
            16 AS width, 16 AS height, 3 AS n_channels,
            CAST((886 * 32640 + 29184 * (doc_id % 256)) // 256 AS VARCHAR)
              AS mean_luma
     FROM documents
-    """,
-)
+    """
+
+
+@_q("q157_bmp_image_features", _TEST_PATTERN_LUMA_SQL)
 def q157_bmp_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode, value-oracled (X21 upgraded from stub): BMP
     test patterns are synthesized per doc_id (16x16, R row-gradient /
@@ -94,16 +96,7 @@ def q158_wav_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.extract_audio_features(blobs)
 
 
-@_q(
-    "q176_png_image_features",
-    """
-    SELECT doc_id AS media_id,
-           16 AS width, 16 AS height, 3 AS n_channels,
-           CAST((886 * 32640 + 29184 * (doc_id % 256)) // 256 AS VARCHAR)
-             AS mean_luma
-    FROM documents
-    """,
-)
+@_q("q176_png_image_features", _TEST_PATTERN_LUMA_SQL)
 def q176_png_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL PNG decode, value-oracled — closes the PNG half of X21's
     stub note: the q157 test pattern is containered as actual PNGs
@@ -121,16 +114,7 @@ def q176_png_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.extract_image_features_codec(blobs, multimodal.png_decode_rgb8)
 
 
-@_q(
-    "q177_gif_image_features",
-    """
-    SELECT doc_id AS media_id,
-           16 AS width, 16 AS height, 3 AS n_channels,
-           CAST((886 * 32640 + 29184 * (doc_id % 256)) // 256 AS VARCHAR)
-             AS mean_luma
-    FROM documents
-    """,
-)
+@_q("q177_gif_image_features", _TEST_PATTERN_LUMA_SQL)
 def q177_gif_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL GIF decode, value-oracled — the third real image codec
     (after BMP q157 and PNG q176), built on a hand-rolled LZW: growing

@@ -143,10 +143,11 @@ def q280_watermark_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFram
 _Q285_JOIN_WINDOW_S = 21_600  # purchases within 6h after a click
 
 
-@_q(
-    "q285_stream_stream_interval_join",
-    f"""
-    WITH e AS (
+# q285/q289's clicks and purchases in arrival order (arr_us, event_id),
+# each row with the two streams' exclusive event-time maxima (wma, wmb),
+# the global watermark basis gwm_base = least of the two, the end-of-stream
+# basis gend (mx) and the candidate delays (d).
+_STREAM_JOIN_WATERMARK_CTES = f"""e AS (
       SELECT event_id, event_type, user_id,
              epoch_us(ts) AS ts_us,
              epoch_us(ts) + (event_id % 7) * 60000000 AS arr_us,
@@ -177,7 +178,55 @@ _Q285_JOIN_WINDOW_S = 21_600  # purchases within 6h after a click
       FROM e
     ),
     d AS (SELECT unnest([{", ".join(str(s) for s in _Q280_DELAYS_S)}])
-          AS delay_s),
+          AS delay_s)"""
+
+
+def _stream_join_watermarks(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The DataFrame twin of _STREAM_JOIN_WATERMARK_CTES' b and mx."""
+    ev = _t(spark, sf_dir, "events").filter(
+        F.col("event_type").isin("click", "purchase")
+    )
+    e = ev.select(
+        "event_id",
+        "event_type",
+        "user_id",
+        F.unix_micros("ts").alias("ts_us"),
+        (F.unix_micros("ts") + (F.col("event_id") % 7) * 60_000_000).alias(
+            "arr_us"
+        ),
+        cents(F.col("value")).alias("val_c"),
+        F.when(F.col("event_type") == "click", F.unix_micros("ts")).alias(
+            "ts_c"
+        ),
+        F.when(F.col("event_type") == "purchase", F.unix_micros("ts")).alias(
+            "ts_p"
+        ),
+    )
+    b = relational.distributed_rank(
+        e,
+        [F.col("arr_us").asc(), F.col("event_id").asc()],
+        rank_col="_r",
+        cummax_cols={"ts_c": "wma", "ts_p": "wmb"},
+    ).withColumn(
+        "gwm_base",
+        F.when(
+            F.col("wma").isNull() | F.col("wmb").isNull(), F.lit(None)
+        ).otherwise(F.least("wma", "wmb")),
+    )
+    # end-of-stream watermark basis: 1-row aggregate, broadcast combine
+    # (the q279-sanctioned bounded crossJoin form)
+    mx = e.agg(
+        F.least(F.max("ts_c"), F.max("ts_p")).cast("bigint").alias("gend")
+    )
+    return b, mx
+
+
+@_q(
+    "q285_stream_stream_interval_join",
+    f"""
+    WITH {_STREAM_JOIN_WATERMARK_CTES},
     s AS (
       SELECT d.delay_s, b.*,
              CASE WHEN b.gwm_base IS NOT NULL
@@ -272,43 +321,9 @@ def q285_stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFr
     (spill-safe SMJ shape, q275's discipline), the 3x delay explode
     happens on bounded streams, and both aggregates are map-combined
     to 3 rows."""
-    ev = _t(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("click", "purchase")
-    )
     us = 1_000_000
     w_us = _Q285_JOIN_WINDOW_S * us
-    e = ev.select(
-        "event_id",
-        "event_type",
-        "user_id",
-        F.unix_micros("ts").alias("ts_us"),
-        (F.unix_micros("ts") + (F.col("event_id") % 7) * 60_000_000).alias(
-            "arr_us"
-        ),
-        cents(F.col("value")).alias("val_c"),
-        F.when(F.col("event_type") == "click", F.unix_micros("ts")).alias(
-            "ts_c"
-        ),
-        F.when(F.col("event_type") == "purchase", F.unix_micros("ts")).alias(
-            "ts_p"
-        ),
-    )
-    b = relational.distributed_rank(
-        e,
-        [F.col("arr_us").asc(), F.col("event_id").asc()],
-        rank_col="_r",
-        cummax_cols={"ts_c": "wma", "ts_p": "wmb"},
-    ).withColumn(
-        "gwm_base",
-        F.when(
-            F.col("wma").isNull() | F.col("wmb").isNull(), F.lit(None)
-        ).otherwise(F.least("wma", "wmb")),
-    )
-    # end-of-stream watermark basis: 1-row aggregate, broadcast combine
-    # (the q279-sanctioned bounded crossJoin form)
-    mx = e.agg(
-        F.least(F.max("ts_c"), F.max("ts_p")).cast("bigint").alias("gend")
-    )
+    b, mx = _stream_join_watermarks(spark, sf_dir)
     delays = F.explode(F.array(*[F.lit(s) for s in _Q280_DELAYS_S]))
     s = (
         b.withColumn("delay_s", delays)
@@ -420,38 +435,7 @@ def q285_stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFr
 @_q(
     "q289_stream_outer_join_timing",
     f"""
-    WITH e AS (
-      SELECT event_id, event_type, user_id,
-             epoch_us(ts) AS ts_us,
-             epoch_us(ts) + (event_id % 7) * 60000000 AS arr_us,
-             CAST(ROUND(value*100) AS BIGINT) AS val_c
-      FROM events WHERE event_type IN ('click', 'purchase')
-    ),
-    w AS (
-      SELECT *,
-             max(CASE WHEN event_type = 'click' THEN ts_us END)
-               OVER (ORDER BY arr_us, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-               AS wma,
-             max(CASE WHEN event_type = 'purchase' THEN ts_us END)
-               OVER (ORDER BY arr_us, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-               AS wmb
-      FROM e
-    ),
-    b AS (
-      SELECT *, CASE WHEN wma IS NULL OR wmb IS NULL THEN NULL
-                     ELSE LEAST(wma, wmb) END AS gwm_base
-      FROM w
-    ),
-    mx AS (
-      SELECT LEAST(max(CASE WHEN event_type = 'click' THEN ts_us END),
-                   max(CASE WHEN event_type = 'purchase' THEN ts_us END))
-             AS gend
-      FROM e
-    ),
-    d AS (SELECT unnest([{", ".join(str(s) for s in _Q280_DELAYS_S)}])
-          AS delay_s),
+    WITH {_STREAM_JOIN_WATERMARK_CTES},
     c AS (SELECT event_id, user_id, ts_us, gwm_base, val_c
           FROM b WHERE event_type = 'click'),
     p AS (SELECT user_id, ts_us AS p_ts, gwm_base AS p_gwm
@@ -523,41 +507,9 @@ def q289_stream_outer_join_timing(spark: SparkSession, sf_dir: str) -> DataFrame
     watermark); the click-side classification is a LEFT join from the
     exploded click set onto the per-click pair aggregate — bounded,
     spill-safe, map-combined to 3 rows."""
-    ev = _t(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("click", "purchase")
-    )
     us = 1_000_000
     w_us = _Q285_JOIN_WINDOW_S * us
-    e = ev.select(
-        "event_id",
-        "event_type",
-        "user_id",
-        F.unix_micros("ts").alias("ts_us"),
-        (F.unix_micros("ts") + (F.col("event_id") % 7) * 60_000_000).alias(
-            "arr_us"
-        ),
-        cents(F.col("value")).alias("val_c"),
-        F.when(F.col("event_type") == "click", F.unix_micros("ts")).alias(
-            "ts_c"
-        ),
-        F.when(F.col("event_type") == "purchase", F.unix_micros("ts")).alias(
-            "ts_p"
-        ),
-    )
-    b = relational.distributed_rank(
-        e,
-        [F.col("arr_us").asc(), F.col("event_id").asc()],
-        rank_col="_r",
-        cummax_cols={"ts_c": "wma", "ts_p": "wmb"},
-    ).withColumn(
-        "gwm_base",
-        F.when(
-            F.col("wma").isNull() | F.col("wmb").isNull(), F.lit(None)
-        ).otherwise(F.least("wma", "wmb")),
-    )
-    mx = e.agg(
-        F.least(F.max("ts_c"), F.max("ts_p")).cast("bigint").alias("gend")
-    )
+    b, mx = _stream_join_watermarks(spark, sf_dir)
     delays = F.explode(F.array(*[F.lit(s) for s in _Q280_DELAYS_S]))
     is_click = F.col("event_type") == "click"
     c = b.filter(is_click).select(

@@ -1098,17 +1098,40 @@ def q245_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
-    "q256_mann_kendall_trend",
-    f"""
-    WITH m AS (
-      SELECT n.n_name AS nation,
+# Monthly revenue per customer nation: month key mk = 12 * year + month,
+# revenue rev_c in exact cents. Callers append their own filter and the
+# GROUP BY 1, 2.
+_NATION_MONTH_REVENUE_SQL = f"""SELECT n.n_name AS nation,
              EXTRACT(year FROM CAST(o.o_orderdate AS DATE)) * 12
                + EXTRACT(month FROM CAST(o.o_orderdate AS DATE)) AS mk,
              CAST(SUM({SC("o.o_totalprice")}) AS BIGINT) AS rev_c
       FROM orders o
       JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN nation n ON c.c_nationkey = n.n_nationkey
+      JOIN nation n ON c.c_nationkey = n.n_nationkey"""
+
+
+def _nation_month_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The DataFrame twin of _NATION_MONTH_REVENUE_SQL grouped by (nation, mk)."""
+    o = _t(spark, sf_dir, "orders")
+    cu = _t(spark, sf_dir, "customer")
+    na = _t(spark, sf_dir, "nation")
+    od = F.col("o_orderdate").cast("date")
+    return (
+        o.join(cu, o["o_custkey"] == cu["c_custkey"])
+        .join(F.broadcast(na), cu["c_nationkey"] == na["n_nationkey"])
+        .groupBy(
+            F.col("n_name").alias("nation"),
+            (F.year(od) * 12 + F.month(od)).cast("bigint").alias("mk"),
+        )
+        .agg(sum_cents(F.col("o_totalprice")).cast("bigint").alias("rev_c"))
+    )
+
+
+@_q(
+    "q256_mann_kendall_trend",
+    f"""
+    WITH m AS (
+      {_NATION_MONTH_REVENUE_SQL}
       GROUP BY 1, 2
     ),
     s AS (SELECT nation, CAST(COUNT(*) AS BIGINT) AS n_months
@@ -1145,19 +1168,7 @@ def q256_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic lives on a dimension-sized frame while the 100 TB fact
     scan collapses at the first groupBy. Nations with a single month
     drop out (no pairs) on both engines alike."""
-    o = _t(spark, sf_dir, "orders")
-    cu = _t(spark, sf_dir, "customer")
-    na = _t(spark, sf_dir, "nation")
-    od = F.col("o_orderdate").cast("date")
-    m = (
-        o.join(cu, o["o_custkey"] == cu["c_custkey"])
-        .join(F.broadcast(na), cu["c_nationkey"] == na["n_nationkey"])
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            (F.year(od) * 12 + F.month(od)).cast("bigint").alias("mk"),
-        )
-        .agg(sum_cents(F.col("o_totalprice")).cast("bigint").alias("rev_c"))
-    )
+    m = _nation_month_revenue(spark, sf_dir)
     s = m.groupBy("nation").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_months")
     )
@@ -1202,13 +1213,7 @@ def q256_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q258_theil_sen_slope",
     f"""
     WITH m AS (
-      SELECT n.n_name AS nation,
-             EXTRACT(year FROM CAST(o.o_orderdate AS DATE)) * 12
-               + EXTRACT(month FROM CAST(o.o_orderdate AS DATE)) AS mk,
-             CAST(SUM({SC("o.o_totalprice")}) AS BIGINT) AS rev_c
-      FROM orders o
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN nation n ON c.c_nationkey = n.n_nationkey
+      {_NATION_MONTH_REVENUE_SQL}
       GROUP BY 1, 2
     ),
     p AS (
@@ -1246,19 +1251,7 @@ def q258_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs on pair frames bounded by the calendar (~84 months -> <=3.5k
     pairs per nation at ANY fact-table scale); the 100 TB scan
     collapses at the monthly groupBy."""
-    o = _t(spark, sf_dir, "orders")
-    cu = _t(spark, sf_dir, "customer")
-    na = _t(spark, sf_dir, "nation")
-    od = F.col("o_orderdate").cast("date")
-    m = (
-        o.join(cu, o["o_custkey"] == cu["c_custkey"])
-        .join(F.broadcast(na), cu["c_nationkey"] == na["n_nationkey"])
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            (F.year(od) * 12 + F.month(od)).cast("bigint").alias("mk"),
-        )
-        .agg(sum_cents(F.col("o_totalprice")).cast("bigint").alias("rev_c"))
-    )
+    m = _nation_month_revenue(spark, sf_dir)
     a = m.select(
         F.col("nation").alias("_na"),
         F.col("mk").alias("_ka"),
@@ -1370,13 +1363,7 @@ def q259_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q261_ols_trend_slope",
     f"""
     WITH m AS (
-      SELECT n.n_name AS nation,
-             EXTRACT(year FROM CAST(o.o_orderdate AS DATE)) * 12
-               + EXTRACT(month FROM CAST(o.o_orderdate AS DATE)) AS mk,
-             CAST(SUM({SC("o.o_totalprice")}) AS BIGINT) AS rev_c
-      FROM orders o
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN nation n ON c.c_nationkey = n.n_nationkey
+      {_NATION_MONTH_REVENUE_SQL}
       GROUP BY 1, 2
     ),
     g AS (SELECT CAST(MIN(mk) AS BIGINT) AS mk0 FROM m),
@@ -1413,19 +1400,7 @@ def q261_ols_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     auditable as a ratio of exact integers. Plan: monthly aggregate ->
     one nation-keyed 5-sum aggregate -> pure Column arithmetic; the
     pair-quadratic never appears (contrast q258)."""
-    o = _t(spark, sf_dir, "orders")
-    cu = _t(spark, sf_dir, "customer")
-    na = _t(spark, sf_dir, "nation")
-    od = F.col("o_orderdate").cast("date")
-    m = (
-        o.join(cu, o["o_custkey"] == cu["c_custkey"])
-        .join(F.broadcast(na), cu["c_nationkey"] == na["n_nationkey"])
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            (F.year(od) * 12 + F.month(od)).cast("bigint").alias("mk"),
-        )
-        .agg(sum_cents(F.col("o_totalprice")).cast("bigint").alias("rev_c"))
-    )
+    m = _nation_month_revenue(spark, sf_dir)
     g = m.agg(F.min("mk").cast("bigint").alias("mk0"))
     x = m.crossJoin(F.broadcast(g)).select(
         "nation",
@@ -1461,13 +1436,7 @@ def q261_ols_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q271_gap_fill_interpolate",
     f"""
     WITH m AS (
-      SELECT n.n_name AS nation,
-             EXTRACT(year FROM CAST(o.o_orderdate AS DATE)) * 12
-               + EXTRACT(month FROM CAST(o.o_orderdate AS DATE)) AS mk,
-             CAST(SUM({SC("o.o_totalprice")}) AS BIGINT) AS rev_c
-      FROM orders o
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN nation n ON c.c_nationkey = n.n_nationkey
+      {_NATION_MONTH_REVENUE_SQL}
       WHERE o.o_orderpriority = '1-URGENT'
       GROUP BY 1, 2
     ),
