@@ -236,12 +236,12 @@ def q48_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q62_SQL = """
     SELECT s.s_name, COUNT(*) AS numwait
-    FROM supplier s
-    JOIN lineitem l1 ON l1.l_suppkey = s.s_suppkey
-    WHERE EXISTS (SELECT 1 FROM lineitem l2
+    FROM {supplier} s
+    JOIN {lineitem} l1 ON l1.l_suppkey = s.s_suppkey
+    WHERE EXISTS (SELECT 1 FROM {lineitem} l2
                   WHERE l2.l_orderkey = l1.l_orderkey
                     AND l2.l_suppkey <> l1.l_suppkey)
-      AND NOT EXISTS (SELECT 1 FROM lineitem l3
+      AND NOT EXISTS (SELECT 1 FROM {lineitem} l3
                       WHERE l3.l_orderkey = l1.l_orderkey
                         AND l3.l_suppkey <> l1.l_suppkey
                         AND l3.l_shipdate >= l1.l_shipdate)
@@ -251,16 +251,21 @@ _Q62_SQL = """
 """
 
 
-@_q("q62_last_shipper_per_order", _Q62_SQL)
+@_q(
+    "q62_last_shipper_per_order",
+    _Q62_SQL.format(supplier="supplier", lineitem="lineitem"),
+)
 def q62_last_shipper_per_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape: correlated EXISTS + NOT EXISTS against the same
     fact table — suppliers who strictly ship last on multi-supplier
     orders. Catalyst decorrelates to left-semi + left-anti joins on
     l_orderkey (broadcast-able at the order-group level); identical SQL
     runs on DuckDB."""
-    _t(spark, sf_dir, "supplier").createOrReplaceTempView("supplier")
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_Q62_SQL)
+    return spark.sql(
+        _Q62_SQL,
+        supplier=_t(spark, sf_dir, "supplier"),
+        lineitem=_t(spark, sf_dir, "lineitem"),
+    )
 
 
 @_q(

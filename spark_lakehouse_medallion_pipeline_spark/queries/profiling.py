@@ -164,6 +164,25 @@ def q164_pseudonymize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STATS_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 
 
+def _stacked_stats_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """lineitem's _STATS_COLS stacked into (col, v = exact cents) rows:
+    the input of q193's exact and q199's sketch statistics."""
+    return (
+        _t(spark, sf_dir, "lineitem")
+        .select(
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(F.lit(c).alias("col"), cents(F.col(c)).alias("v"))
+                        for c in _STATS_COLS
+                    ]
+                )
+            ).alias("s")
+        )
+        .select("s.col", "s.v")
+    )
+
+
 @_q("q199_column_stats_sketch")  # HLL/KLL sketches differ per engine; rows-only + pytest rel-error pin vs q193
 def q199_column_stats_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION form of q193's ANALYZE stats — the sketch-based
@@ -182,19 +201,7 @@ def q199_column_stats_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (test_sketch_stats_rel_error_vs_exact: NDV within 5% and
     quartiles within 1% of q193's exact answers, the q30 discipline).
     """
-    li = _t(spark, sf_dir, "lineitem")
-    stacked = li.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("col"), cents(F.col(c)).alias("v")
-                    )
-                    for c in _STATS_COLS
-                ]
-            )
-        ).alias("s")
-    ).select("s.col", "s.v")
+    stacked = _stacked_stats_cols(spark, sf_dir)
     return (
         stacked.groupBy("col")
         .agg(
@@ -776,19 +783,7 @@ def q193_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile_approx, ONE exchange) is REGISTERED as q199 — rel-error
     vs this exact form pinned in test_sketch_stats_rel_error_vs_exact.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    stacked = li.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("col"), cents(F.col(c)).alias("v")
-                    )
-                    for c in _STATS_COLS
-                ]
-            )
-        ).alias("s")
-    ).select("s.col", "s.v")
+    stacked = _stacked_stats_cols(spark, sf_dir)
     return (
         stacked.groupBy("col")
         .agg(

@@ -4,6 +4,8 @@ evaluation."""
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -29,14 +31,14 @@ from spark_lakehouse_medallion_pipeline_spark.queries._common import (
 def q26_grouping_sets_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS through the SQL surface (X7 + S11 — our spark.sql is
     the reference's Trino interactive layer)."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus,
                CAST(SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT)) AS DOUBLE) / 100.0 AS total_price
-        FROM lineitem
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
+        """,
+        lineitem=_t(spark, sf_dir, "lineitem"),
     )
 
 
@@ -165,46 +167,48 @@ def q42_datetime_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q49_sql_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The interactive-SQL entry point (S11 — the reference exposes this
-    surface via Trino, scripts/run_pipeline.py:240-277): temp views +
-    spark.sql, one string, same engine/oracle guarantees as the
+    surface via Trino, scripts/run_pipeline.py:240-277): frames bound
+    into spark.sql, one string, same engine/oracle guarantees as the
     DataFrame battery."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("v_customer")
     return spark.sql(
         """
         SELECT c.c_mktsegment, o.o_orderpriority,
                COUNT(*) AS n_orders,
                CAST(SUM(CAST(ROUND(o.o_totalprice*100) AS BIGINT)) AS DOUBLE) / 100.0
                  AS segment_revenue
-        FROM v_orders o JOIN v_customer c ON o.o_custkey = c.c_custkey
+        FROM {orders} o JOIN {customer} c ON o.o_custkey = c.c_custkey
         GROUP BY c.c_mktsegment, o.o_orderpriority
-        """
+        """,
+        orders=_t(spark, sf_dir, "orders"),
+        customer=_t(spark, sf_dir, "customer"),
     )
 
 
 _Q56_SQL = """
     SELECT c.c_custkey, c.c_name, c.c_nationkey
-    FROM customer c
+    FROM {customer} c
     WHERE CAST(ROUND(c.c_acctbal*100) AS BIGINT) = (
             SELECT MAX(CAST(ROUND(c2.c_acctbal*100) AS BIGINT))
-            FROM customer c2 WHERE c2.c_nationkey = c.c_nationkey)
-      AND EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-      AND NOT EXISTS (SELECT 1 FROM orders o2
+            FROM {customer} c2 WHERE c2.c_nationkey = c.c_nationkey)
+      AND EXISTS (SELECT 1 FROM {orders} o WHERE o.o_custkey = c.c_custkey)
+      AND NOT EXISTS (SELECT 1 FROM {orders} o2
                       WHERE o2.o_custkey = c.c_custkey
                         AND o2.o_orderpriority = '1-URGENT'
                         AND CAST(ROUND(o2.o_totalprice*100) AS BIGINT) > 40000000)
 """
 
 
-@_q("q56_correlated_subqueries", _Q56_SQL)
+@_q("q56_correlated_subqueries", _Q56_SQL.format(customer="customer", orders="orders"))
 def q56_correlated_subqueries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery + EXISTS + NOT EXISTS through the SQL
     surface (S11). Catalyst decorrelates all three into aggregate+join /
     left-semi / left-anti — no per-row re-execution (TPC-H Q2/Q21/Q22
-    shapes). Identical SQL text runs on the DuckDB oracle."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_Q56_SQL)
+    shapes). The same SQL text runs on the DuckDB oracle."""
+    return spark.sql(
+        _Q56_SQL,
+        customer=_t(spark, sf_dir, "customer"),
+        orders=_t(spark, sf_dir, "orders"),
+    )
 
 
 _MILLI = "CAST(FLOOR(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT)"
@@ -283,10 +287,10 @@ def q60_map_struct_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q64_SQL = """
     SELECT n.n_name, t.c_custkey, t.bal_c
-    FROM nation n,
+    FROM {nation} n,
     LATERAL (
       SELECT c_custkey, CAST(ROUND(c_acctbal*100) AS BIGINT) AS bal_c
-      FROM customer c
+      FROM {customer} c
       WHERE c.c_nationkey = n.n_nationkey
       ORDER BY bal_c DESC, c_custkey
       LIMIT 3
@@ -294,15 +298,20 @@ _Q64_SQL = """
 """
 
 
-@_q("q64_lateral_topk_per_nation", _Q64_SQL)
+@_q(
+    "q64_lateral_topk_per_nation",
+    _Q64_SQL.format(nation="nation", customer="customer"),
+)
 def q64_lateral_topk_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LATERAL correlated subquery with per-group LIMIT (the SQL face of
     q11's row_number top-N). Catalyst decorrelates the lateral into a
     join + per-group windowed limit — never a per-outer-row re-scan;
     identical SQL runs on the DuckDB oracle."""
-    _t(spark, sf_dir, "nation").createOrReplaceTempView("nation")
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    return spark.sql(_Q64_SQL)
+    return spark.sql(
+        _Q64_SQL,
+        nation=_t(spark, sf_dir, "nation"),
+        customer=_t(spark, sf_dir, "customer"),
+    )
 
 
 @_q(
@@ -347,7 +356,6 @@ def q108_monthly_order_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("month", F.min("o_orderdate")).cast("date").alias("lo"),
         F.date_trunc("month", F.max("o_orderdate")).cast("date").alias("hi"),
     ).head()
-    orders.createOrReplaceTempView("v_orders_spine")
     return spark.sql(
         f"""
         WITH RECURSIVE months(m) AS (
@@ -358,10 +366,11 @@ def q108_monthly_order_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT m AS month_start, COUNT(o_orderkey) AS n_orders,
                CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS DOUBLE)/100.0
                  AS revenue
-        FROM months LEFT JOIN v_orders_spine
+        FROM months LEFT JOIN {{orders}}
           ON CAST(date_trunc('month', o_orderdate) AS DATE) = m
         GROUP BY m ORDER BY m
-        """
+        """,
+        orders=orders,
     )
 
 
@@ -639,11 +648,10 @@ def q131_sql_sugar(spark: SparkSession, sf_dir: str) -> DataFrame:
     (group on every non-aggregate output) and ORDER BY ALL, all in one
     statement. The oracle is the fully-expanded classic form, so the
     sugar must desugar to exactly the same grouping and ordering."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("q131_orders")
     return spark.sql(
         """
         WITH slim AS (
-          SELECT * EXCEPT (o_orderkey, o_custkey, o_orderdate) FROM q131_orders
+          SELECT * EXCEPT (o_orderkey, o_custkey, o_orderdate) FROM {orders}
         )
         SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
                CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS BIGINT)
@@ -651,7 +659,8 @@ def q131_sql_sugar(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM slim
         GROUP BY ALL
         ORDER BY ALL
-        """
+        """,
+        orders=_t(spark, sf_dir, "orders"),
     )
 
 
@@ -672,19 +681,24 @@ def q132_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     :status — injection-safe templating, no string interpolation of
     values) and the table name binds through IDENTIFIER(:tbl), the safe
     form of dynamic object references. The oracle is the same query
-    with literals inlined."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("q132_orders")
-    return spark.sql(
-        """
-        SELECT o_orderpriority, COUNT(*) AS n,
-               CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS BIGINT)
-                 AS total_cents
-        FROM IDENTIFIER(:tbl)
-        WHERE o_totalprice > :threshold AND o_orderstatus = :status
-        GROUP BY o_orderpriority
-        """,
-        args={"tbl": "q132_orders", "threshold": 150000.0, "status": "F"},
-    )
+    with literals inlined. The view is named per call and dropped once
+    spark.sql has analyzed the statement."""
+    tbl = f"q132_orders_{uuid.uuid4().hex}"
+    _t(spark, sf_dir, "orders").createOrReplaceTempView(tbl)
+    try:
+        return spark.sql(
+            """
+            SELECT o_orderpriority, COUNT(*) AS n,
+                   CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS BIGINT)
+                     AS total_cents
+            FROM IDENTIFIER(:tbl)
+            WHERE o_totalprice > :threshold AND o_orderstatus = :status
+            GROUP BY o_orderpriority
+            """,
+            args={"tbl": tbl, "threshold": 150000.0, "status": "F"},
+        )
+    finally:
+        spark.catalog.dropTempView(tbl)
 
 
 @_q(
@@ -716,16 +730,16 @@ def q138_sql_udf_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
         RETURN CAST(ROUND(p*100) AS BIGINT) * (100 - CAST(ROUND(d*100) AS BIGINT))
         """
     )
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("q138_lineitem")
     return spark.sql(
         """
         SELECT l_returnflag,
                SUM(disc_price_e4(l_extendedprice, l_discount)) AS revenue_e4,
                listagg(DISTINCT l_linestatus, ',')
                  WITHIN GROUP (ORDER BY l_linestatus) AS statuses
-        FROM q138_lineitem
+        FROM {lineitem}
         GROUP BY l_returnflag ORDER BY l_returnflag
-        """
+        """,
+        lineitem=_t(spark, sf_dir, "lineitem"),
     )
 
 
@@ -853,14 +867,13 @@ def q147_collation_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics with explicit lower(), pinning that the collation path is
     equivalent where both are defined. Mixed-case data is planted via
     orderkey parity so both branches are exercised."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("q147_orders")
     return spark.sql(
         """
         WITH v AS (
           SELECT o_orderstatus,
                  CASE WHEN o_orderkey % 2 = 0 THEN lower(o_orderpriority)
                       ELSE o_orderpriority END AS pri
-          FROM q147_orders
+          FROM {orders}
         )
         SELECT o_orderstatus,
                COUNT(DISTINCT pri) AS n_case_sensitive,
@@ -868,7 +881,8 @@ def q147_collation_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
                COUNT(CASE WHEN pri COLLATE UTF8_LCASE = '1-URGENT' THEN 1 END)
                  AS n_urgent_ci
         FROM v GROUP BY o_orderstatus ORDER BY o_orderstatus
-        """
+        """,
+        orders=_t(spark, sf_dir, "orders"),
     )
 
 

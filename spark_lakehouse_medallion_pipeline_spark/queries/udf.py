@@ -73,9 +73,9 @@ def q65_udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.udtf.register("udtf_tokenize", Tokenize)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
-    docs.createOrReplaceTempView("docs_slice")
     return spark.sql(
-        "SELECT doc_id, t.idx, t.word FROM docs_slice, LATERAL udtf_tokenize(text) t"
+        "SELECT doc_id, t.idx, t.word FROM {docs}, LATERAL udtf_tokenize(text) t",
+        docs=docs,
     )
 
 

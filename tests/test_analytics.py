@@ -2414,6 +2414,40 @@ def test_q293_q297_conf_restoration(spark):
         assert _cached_entries(spark) == cached, name
 
 
+_SQL_TEXT_ENTRIES = (
+    "q26_grouping_sets_sql",
+    "q49_sql_surface",
+    "q56_correlated_subqueries",
+    "q62_last_shipper_per_order",
+    "q64_lateral_topk_per_nation",
+    "q65_udtf_tokenize",
+    "q108_monthly_order_spine",
+    "q131_sql_sugar",
+    "q132_parameterized_sql",
+    "q138_sql_udf_listagg",
+    "q147_collation_battery",
+)
+
+
+def test_sql_entries_leave_no_temp_views(spark):
+    """The entries that run SQL text through spark.sql bind their tables
+    as frames: no temp view outlives the call, and a caller's view that
+    shares a table's name is neither read nor replaced."""
+
+    def temp_views() -> list[str]:
+        return sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
+
+    spark.range(1).createOrReplaceTempView("orders")
+    try:
+        before = temp_views()
+        for name in _SQL_TEXT_ENTRIES:
+            QUERIES[name](spark, SF).collect()
+            assert temp_views() == before, name
+        assert spark.table("orders").columns == ["id"]
+    finally:
+        spark.catalog.dropTempView("orders")
+
+
 def test_entries_on_threads_match_serial(spark):
     """Two or more queries running at once in one SparkContext must give
     their serial answers: rank pins are per-frame (no shared registry
