@@ -16,7 +16,12 @@ import sys
 
 def main() -> None:
     repo, sf_dir, out_dir, suffix, *names = sys.argv[1:]
+    repo = os.path.abspath(repo)
     sys.path.insert(0, repo)
+    # Python workers (UDFs, the Python data source) import the package too.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        [repo, *filter(None, [os.environ.get("PYTHONPATH")])]
+    )
     os.makedirs(out_dir, exist_ok=True)
 
     from spark_lakehouse_medallion_pipeline_spark.queries import QUERIES

@@ -16,12 +16,15 @@ full-battery big-SF run can be committed as per-round evidence
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# The checkout this file lives in, for the driver and for Python workers.
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -133,6 +136,9 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from spark_lakehouse_medallion_pipeline_spark.session import get_spark
 
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        [ROOT, *filter(None, [os.environ.get("PYTHONPATH")])]
+    )
     spark = get_spark("oracle-check", extra_conf={"spark.ui.showConsoleProgress": "false"})
     con = duckdb.connect()
     for t in TABLES:
@@ -169,10 +175,9 @@ def main() -> None:
             continue
 
         try:
-            res = con.execute(oracles[name])
-            d_cols = [d[0] for d in res.description]
-            d_rows = res.fetchall()
-            d_schema = con.execute(oracles[name]).fetch_arrow_table().schema
+            d_tbl = con.execute(oracles[name]).fetch_arrow_table()
+            d_cols, d_schema = d_tbl.column_names, d_tbl.schema
+            d_rows = list(zip(*(c.to_pylist() for c in d_tbl.columns)))
         except Exception as e:  # noqa: BLE001
             failures.append((name, f"DUCKDB ERROR: {e}"))
             record[name] = {"status": "fail", "problems": f"DUCKDB ERROR: {str(e)[:300]}"}
