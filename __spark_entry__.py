@@ -2,7 +2,7 @@
 
 entry(spark)  — flagship medallion-gold-shape query at sf0.001.
 queries()     — every implemented operator from SURVEY.md §2
-                (see spark_lakehouse_medallion_pipeline_spark/queries.py).
+                (see spark_lakehouse_medallion_pipeline_spark/queries/).
 oracle_sql()  — matching DuckDB ANSI SQL per query (omitted only for
                 genuinely non-SQL-expressible ops: LSH banding, HLL
                 sketches, native session windows, mapInPandas codecs,

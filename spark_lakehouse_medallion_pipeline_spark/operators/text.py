@@ -83,7 +83,7 @@ def quality_score_raw(text: Column) -> Column:
 def quality_score(text: Column) -> Column:
     """quality_score_raw rounded to 4dp for display surfaces. Do NOT use
     in oracled queries — Spark round() and DuckDB round() can disagree
-    on the same double (see queries.py dialect rules)."""
+    on the same double (see the dialect rules in queries/_common.py)."""
     return F.round(quality_score_raw(text), 4)
 
 

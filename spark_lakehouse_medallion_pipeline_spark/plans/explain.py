@@ -7,7 +7,7 @@ for interactive iteration on shuffle/broadcast shapes.
 CLASSIC-ONLY: these helpers reach into JVM internals
 (``df._sc._jvm.PythonSQLUtils``) that do not exist under Spark Connect.
 That is acceptable for a test/tuning module — nothing under
-``operators/`` or ``queries.py`` imports it at runtime — but do not call
+``operators/`` or ``queries/`` imports it at runtime — but do not call
 it from production paths on a Connect cluster.
 """
 
