@@ -44,7 +44,7 @@ from spark_lakehouse_medallion_pipeline_spark.queries._common import (
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: scan -> pushed filter -> hash aggregate (A3-A5).
     Single shuffle on the 6-value group key; partials combine map-side.
-    All money aggregates run over exact integer cents (see module doc)."""
+    All money aggregates run over exact integer cents (see _common)."""
     li = _t(spark, sf_dir, "lineitem")
     n = F.count(F.lit(1))
     return (

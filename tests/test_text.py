@@ -333,7 +333,7 @@ def test_bigram_queries_survive_one_token_docs(spark, tmp_path):
     """A 1-token (or empty) doc makes F.sequence(1, size-1) descend to
     [1, 0] and element_at(l, 0) raise — q79/q136 must instead emit no
     bigrams for such docs, matching the DuckDB oracle's empty range."""
-    from spark_lakehouse_medallion_pipeline_spark import queries as q
+    from spark_lakehouse_medallion_pipeline_spark.queries import text as q
 
     rows = [
         (1, "single", "en", "web", 6),
