@@ -3,10 +3,9 @@ dynamic partition pruning and the AQE rescues."""
 
 from __future__ import annotations
 
-import os as _os
-import re as _re
+import os
+import re
 import shutil
-import shutil as _shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -262,12 +261,12 @@ def q267_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey", cents(F.col("o_totalprice")).alias("total_c")
     )
     customer = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    sfx = _re.sub(r"[^a-z0-9]", "_", _os.path.basename(sf_dir.rstrip("/")).lower())
+    sfx = re.sub(r"[^a-z0-9]", "_", os.path.basename(sf_dir.rstrip("/")).lower())
     t_o, t_c = f"q267_orders_{sfx}", f"q267_customer_{sfx}"
     warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     for tbl in (t_o, t_c):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        _shutil.rmtree(f"{warehouse}/{tbl}", ignore_errors=True)
+        shutil.rmtree(f"{warehouse}/{tbl}", ignore_errors=True)
     write_bucketed_table(orders, t_o, "o_custkey", 16)
     write_bucketed_table(
         customer.withColumnRenamed("c_custkey", "o_custkey"), t_c, "o_custkey", 16

@@ -7,7 +7,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_lakehouse_medallion_pipeline_spark.operators import dedup, relational, text
-from spark_lakehouse_medallion_pipeline_spark.operators import text as text_ops
 from spark_lakehouse_medallion_pipeline_spark.operators.dedup import normalized_text
 from spark_lakehouse_medallion_pipeline_spark.operators.relational import (
     distributed_rank,
@@ -284,7 +283,7 @@ def q95_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concat-then-chunk sequence packing (LLM pretraining layout): each
     doc's starting (pack, offset) in its source's 512-token stream, plus
     span count. One per-source cumsum window — never a global ordering."""
-    return text_ops.pack_sequences(_t(spark, sf_dir, "documents"), ctx_len=512)
+    return text.pack_sequences(_t(spark, sf_dir, "documents"), ctx_len=512)
 
 
 @_q(

@@ -6,7 +6,6 @@ from __future__ import annotations
 import math as _math
 
 from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from spark_lakehouse_medallion_pipeline_spark.operators import text
@@ -487,7 +486,7 @@ def q120_vocab_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = (
         wc.withColumn(
             "tid",
-            F.row_number().over(W.orderBy(F.desc("cnt"), "w")).cast("long"),
+            F.row_number().over(Window.orderBy(F.desc("cnt"), "w")).cast("long"),
         )
         .filter(F.col("tid") <= 25)
         .select("w", "tid")
