@@ -35,9 +35,9 @@ from spark_lakehouse_medallion_pipeline_spark.queries import (  # noqa: F401
 )
 from spark_lakehouse_medallion_pipeline_spark.queries._common import ORACLE, QUERIES
 
-# The driver records correctness rows for the FIRST 50 entries of
-# queries(), so the registry starts with one ORACLED representative per
-# operator family — 50/50 hash-comparable — and each slot names its module.
+# Correctness snapshots record only the FIRST 50 entries of queries(), so
+# the registry starts with one ORACLED representative per operator family —
+# 50/50 hash-comparable — and each slot names its module.
 # Every other entry follows in ascending q-number, the medallion pair last,
 # whatever order the family modules register in; all of them stay in the
 # local oracle gate (tools/oracle_check.py runs the full battery).
