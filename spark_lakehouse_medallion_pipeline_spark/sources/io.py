@@ -21,6 +21,7 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from spark_lakehouse_medallion_pipeline_spark.session import table_format
 from spark_lakehouse_medallion_pipeline_spark.sources import catalog
@@ -190,15 +191,18 @@ def read_binary_files(
 
 
 def merge_upsert_parquet(
-    spark: SparkSession, updates: DataFrame, path: str, keys: list[str]
+    spark: SparkSession, updates: DataFrame, path: str, key: str, values: list
 ) -> None:
-    """MERGE-style upsert onto a parquet-backed snapshot: rows in
-    ``updates`` replace current rows with the same key, unmatched current
-    rows survive, new keys append. The merge itself is one left-anti
-    join (distributed); the commit is write-staging-then-swap — the same
-    shape a Delta/Iceberg commit gives transactionally, which is what
-    you'd use at 100 TB (this operator is the no-catalog fallback, like
-    the reference's parquet fallback path, CM:331-340).
+    """MERGE-style upsert onto a parquet-backed snapshot, by key value:
+    every current row whose ``key`` is in ``values`` is replaced by
+    ``updates``, every other row survives. Contract: each ``key`` value of
+    ``updates`` is in ``values``; a None in ``values`` stands for the null
+    key. The current snapshot is read with ``updates.schema`` (no
+    inference job) and filtered on ``NOT key IN values``, so ``updates`` is
+    evaluated once, by the write; the commit is write-staging-then-swap —
+    the same shape a Delta/Iceberg commit gives transactionally, which is
+    what you'd use at 100 TB (this operator is the no-catalog fallback,
+    like the reference's parquet fallback path, CM:331-340).
 
     CONCURRENCY CONTRACT: single writer, NO concurrent readers — between
     the two os.rename calls the table path does not exist, so a reader
@@ -211,9 +215,8 @@ def merge_upsert_parquet(
     import shutil
 
     if _dir_has_parquet(path):
-        current = spark.read.parquet(path)
-        keep = current.join(updates.select(*keys).distinct(), keys, "left_anti")
-        merged = updates.unionByName(keep)
+        current = read_parquet_as(spark, path, updates.schema)
+        merged = updates.unionByName(current.filter(~key_in(F.col(key), values)))
     else:
         merged = updates
     staging = path.rstrip("/") + "__staging"
@@ -223,6 +226,32 @@ def merge_upsert_parquet(
         os.rename(path, old)
     os.rename(staging, path)
     shutil.rmtree(old, ignore_errors=True)
+
+
+def key_in(col: Column, values: list) -> Column:
+    """Null-safe ``col IN values``: never null, and a None in ``values``
+    matches a null ``col`` (plain ``isin`` gives null for a null ``col``,
+    which a filter drops and its negation drops too). Built from IsNull
+    and In only, so a parquet scan can still push it down."""
+    hit = col.isin([v for v in values if v is not None])
+    return col.isNull() | hit if None in values else col.isNotNull() & hit
+
+
+def read_parquet_as(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
+    """Scan a local parquet directory with ``schema`` given, so no
+    inference job runs. A given schema fills a missing column with nulls
+    and drops an extra one, so the footer of one data file must name
+    exactly the schema's columns; pyarrow reads it on the driver."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    have = sorted(pq.read_schema(min(glob.glob(os.path.join(path, "*.parquet")))).names)
+    want = sorted(schema.fieldNames())
+    if have != want:
+        raise ValueError(f"{path} has columns {have}, expected {want}")
+    return spark.read.schema(schema).parquet(path)
 
 
 def _require_local_path(path: str, op: str) -> None:
@@ -494,10 +523,11 @@ def read_snapshot(
 def merge_upsert_snapshot(
     spark: SparkSession, updates: DataFrame, table_dir: str, keys: list[str]
 ) -> int:
-    """MERGE-style upsert as a snapshot commit: same merge dataflow as
-    merge_upsert_parquet (one distributed left-anti join), but the
-    result lands as a NEW version with an atomic pointer flip — so
-    unlike the rename-pair fallback, concurrent readers are safe.
+    """MERGE-style upsert as a snapshot commit: the current version
+    left-anti joined against the distinct keys of ``updates`` (one
+    distributed join), unioned with ``updates``; the result lands as a
+    NEW version with an atomic pointer flip — so unlike the rename-pair
+    fallback, concurrent readers are safe.
     Returns the committed version."""
     if _current_version(table_dir) is not None:
         current = read_snapshot(spark, table_dir)

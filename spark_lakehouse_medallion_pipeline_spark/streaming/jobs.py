@@ -366,6 +366,16 @@ def incremental_gold_refresh(
     partitions recompute from their full silver slice — bounded by the
     dates a batch touches, not the corpus.
 
+    A null interaction_date is one more key, as in batch build_gold's
+    null group: date membership is null-safe (sources.io.key_in).
+
+    Six Spark jobs per non-empty batch: the append (1), the distinct-dates
+    collect (2) and the gold write (3). Neither the store nor gold is
+    schema-inferred — both are read with the batch's and gold's known
+    schemas (sources.io.read_parquet_as) — and gold rows are replaced by
+    date, not by a join that would evaluate build_gold twice. Pinned by
+    tests/test_streaming.py::test_incremental_gold_refresh_jobs_per_batch.
+
     At 100 TB: silver_store/gold become Delta tables (transactional
     append + MERGE), the per-date recompute is partition-pruned to the
     affected identity partitions, and the affected-date collect stays
@@ -373,7 +383,9 @@ def incremental_gold_refresh(
     parquet fallbacks (single writer — see merge_upsert_parquet)."""
     from spark_lakehouse_medallion_pipeline_spark.medallion.gold import build_gold
     from spark_lakehouse_medallion_pipeline_spark.sources.io import (
+        key_in,
         merge_upsert_parquet,
+        read_parquet_as,
     )
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
@@ -382,12 +394,10 @@ def incremental_gold_refresh(
         dates = [r[0] for r in batch_df.select("interaction_date").distinct().collect()]
         if not dates:
             return
-        affected = spark.read.parquet(silver_store).filter(
-            F.col("interaction_date").isin(dates)
+        affected = read_parquet_as(spark, silver_store, batch_df.schema).filter(
+            key_in(F.col("interaction_date"), dates)
         )
-        merge_upsert_parquet(
-            spark, build_gold(affected), gold_path, ["interaction_date"]
-        )
+        merge_upsert_parquet(spark, build_gold(affected), gold_path, "interaction_date", dates)
 
     q = (
         silver_stream.writeStream.foreachBatch(refresh)

@@ -82,15 +82,33 @@ def test_merge_upsert_parquet(spark, tmp_path):
     base = spark.createDataFrame(
         [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], "k long, s string, v double"
     )
-    merge_upsert_parquet(spark, base, path, ["k"])
+    merge_upsert_parquet(spark, base, path, "k", [1, 2, 3])
     assert spark.read.parquet(path).count() == 3
 
     updates = spark.createDataFrame(
         [(2, "B", 99.0), (4, "d", 40.0)], "k long, s string, v double"
     )
-    merge_upsert_parquet(spark, updates, path, ["k"])
+    merge_upsert_parquet(spark, updates, path, "k", [2, 4])
     got = {r["k"]: (r["s"], r["v"]) for r in spark.read.parquet(path).collect()}
     assert got == {1: ("a", 10.0), 2: ("B", 99.0), 3: ("c", 30.0), 4: ("d", 40.0)}
+
+
+def test_merge_upsert_parquet_refuses_column_mismatch(spark, tmp_path):
+    """The current snapshot is read with the updates' schema, which would
+    drop an extra column and null-fill a missing one; the footer check
+    refuses both, and the snapshot stays as it was."""
+    import pytest
+
+    from spark_lakehouse_medallion_pipeline_spark.sources.io import merge_upsert_parquet
+
+    updates = spark.createDataFrame([(2, "B")], "k long, s string")
+    for n, schema in enumerate(("k long, s string, extra double", "k long")):
+        path = str(tmp_path / f"gold{n}")
+        cols = [c.split()[0] for c in schema.split(", ")]
+        spark.createDataFrame([(1,) + (None,) * (len(cols) - 1)], schema).write.parquet(path)
+        with pytest.raises(ValueError, match="has columns"):
+            merge_upsert_parquet(spark, updates, path, "k", [2])
+        assert spark.read.parquet(path).columns == cols
 
 
 def test_schema_evolution_merged_read(spark, tmp_path):
@@ -140,7 +158,7 @@ def test_maintenance_ops_refuse_object_store_paths(spark):
     with _pytest.raises(NotImplementedError, match="LOCAL-filesystem"):
         sio.compact_parquet(spark, "s3a://bucket/table")
     with _pytest.raises(NotImplementedError, match="LOCAL-filesystem"):
-        sio.merge_upsert_parquet(spark, df, "abfs://c@a.dfs.core.windows.net/t", ["id"])
+        sio.merge_upsert_parquet(spark, df, "abfs://c@a.dfs.core.windows.net/t", "id", [0])
 
 
 def test_snapshot_table_versioned_commits(spark, tmp_path):

@@ -275,20 +275,18 @@ def test_transform_with_state_matches_apply_in_pandas(spark, events, tmp_path):
     assert not mismatches, dict(list(mismatches.items())[:5])
 
 
-def test_incremental_gold_refresh_matches_batch(spark, tmp_path):
-    """Partition-level incremental gold maintenance: streaming the silver
-    corpus in multiple microbatches and upserting affected dates must
-    reproduce the batch gold EXACTLY (countDistinct KPIs included)."""
+def _silver(spark, n_rows):
     from spark_lakehouse_medallion_pipeline_spark.medallion.generate import (
         generate_bronze,
     )
-    from spark_lakehouse_medallion_pipeline_spark.medallion.gold import build_gold
     from spark_lakehouse_medallion_pipeline_spark.medallion.silver import build_silver
 
-    silver = build_silver(generate_bronze(spark, 3_000))
-    src = str(tmp_path / "silver_src")
-    silver.repartition(4).write.mode("overwrite").parquet(src)
+    return build_silver(generate_bronze(spark, n_rows))
 
+
+def _refresh_from(spark, src, tmp_path):
+    """Drain the parquet files under ``src`` one per micro-batch through
+    incremental_gold_refresh; returns the gold it wrote."""
     stream = (
         spark.readStream.schema(spark.read.parquet(src).schema)
         .option("maxFilesPerTrigger", 1)
@@ -301,13 +299,18 @@ def test_incremental_gold_refresh_matches_batch(spark, tmp_path):
         gold_path=gold_path,
         checkpoint_dir=str(tmp_path / "ckpt_gold"),
     )
+    return spark.read.parquet(gold_path)
 
-    got = spark.read.parquet(gold_path)
-    want = build_gold(spark.read.parquet(src))
+
+def _assert_same_gold(got, want):
     cols = sorted(got.columns)
     assert cols == sorted(want.columns)
-    g = sorted(map(tuple, got.select(*cols).collect()))
-    w = sorted(map(tuple, want.select(*cols).collect()))
+
+    def rows(df):  # one gold row per date; str() orders a null date too
+        got = df.select(*cols).collect()
+        return [tuple(r) for r in sorted(got, key=lambda r: str(r["interaction_date"]))]
+
+    g, w = rows(got), rows(want)
     assert len(g) == len(w)
     for rg, rw in zip(g, w):
         for vg, vw in zip(rg, rw):
@@ -315,6 +318,103 @@ def test_incremental_gold_refresh_matches_batch(spark, tmp_path):
                 assert abs(vg - vw) < 1e-6
             else:
                 assert vg == vw
+
+
+def test_incremental_gold_refresh_matches_batch(spark, tmp_path):
+    """Partition-level incremental gold maintenance: streaming the silver
+    corpus in multiple microbatches and upserting affected dates must
+    reproduce the batch gold EXACTLY (countDistinct KPIs included)."""
+    from spark_lakehouse_medallion_pipeline_spark.medallion.gold import build_gold
+
+    src = str(tmp_path / "silver_src")
+    _silver(spark, 3_000).repartition(4).write.mode("overwrite").parquet(src)
+    _assert_same_gold(_refresh_from(spark, src, tmp_path), build_gold(spark.read.parquet(src)))
+
+
+def test_incremental_gold_refresh_null_dates_match_batch(spark, tmp_path):
+    """A null interaction_date is one more gold key, as in batch
+    build_gold. Three files drain in order: the first, with null dates,
+    onto an empty gold; the second brings null dates again, so the null
+    group re-aggregates over both batches; the third has no null date and
+    rewrites only dates earlier batches wrote, so the null-date gold row
+    must survive the last replacement."""
+    from pyspark.sql import Window
+
+    from spark_lakehouse_medallion_pipeline_spark.medallion.gold import build_gold
+
+    i = F.row_number().over(Window.orderBy("event_id"))
+    silver = (
+        _silver(spark, 2_000)
+        .withColumn("_i", i)
+        .withColumn(
+            "interaction_date",
+            F.when(F.col("_i") % 7 == 0, None).otherwise(F.col("interaction_date")),
+        )
+        .withColumn(
+            "_file",
+            F.when((F.col("_i") % 3 == 2) & F.col("interaction_date").isNull(), 0).otherwise(
+                F.col("_i") % 3
+            ),
+        )
+        .localCheckpoint()
+    )
+    dates = [
+        {r[0] for r in silver.filter(F.col("_file") == f).select("interaction_date").collect()}
+        for f in range(3)
+    ]
+    assert None in dates[0] and None in dates[1] and None not in dates[2]
+    assert dates[2] <= dates[0] | dates[1]
+
+    src = str(tmp_path / "silver_src")
+    for f in range(3):  # one file each, in this order of modification time
+        silver.filter(F.col("_file") == f).drop("_i", "_file").coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    got = _refresh_from(spark, src, tmp_path)
+    want = build_gold(spark.read.parquet(src))
+    assert got.filter(F.col("interaction_date").isNull()).count() == 1
+    _assert_same_gold(got, want)
+
+
+def test_incremental_gold_refresh_jobs_per_batch(spark, tmp_path):
+    """Each non-empty micro-batch runs at most 6 Spark jobs: the append,
+    the distinct-dates collect (2) and the gold write (3); neither the
+    store nor gold is schema-inferred and build_gold is evaluated once.
+    Stream execution runs every foreachBatch job in the job group named
+    by the query's runId."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Batches(StreamingQueryListener):
+        def __init__(self):
+            self.run_ids, self.rows = [], []
+
+        def onQueryStarted(self, event):
+            self.run_ids.append(str(event.runId))
+
+        def onQueryProgress(self, event):
+            self.rows.append(event.progress.numInputRows)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    src = str(tmp_path / "silver_src")
+    _silver(spark, 2_000).repartition(4).write.mode("overwrite").parquet(src)
+    sc = spark.sparkContext
+    listener = Batches()
+    spark.streams.addListener(listener)
+    try:
+        _refresh_from(spark, src, tmp_path)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    (run_id,) = listener.run_ids
+    batches = sum(1 for n in listener.rows if n > 0)
+    assert batches == 4
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(run_id))
+    assert n_jobs <= 6 * batches, f"{n_jobs} jobs for {batches} micro-batches"
 
 
 def test_python_streaming_source_equals_batch(spark, tmp_path):

@@ -160,7 +160,7 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001
             failures.append((name, f"SPARK ERROR: {e}"))
             record[name] = {"status": "fail", "problems": f"SPARK ERROR: {str(e)[:300]}"}
-            print(f"FAIL {name}: spark error: {str(e)[:300]}")
+            print(f"FAIL {name}: spark error: {str(e)[:300]}  [spark {time.time() - t0:.1f}s]")
             continue
         spark_sec = time.time() - t0
 
@@ -171,9 +171,10 @@ def main() -> None:
                 "rows": len(s_rows),
                 "sec": round(spark_sec, 2),
             }
-            print(f"rows-only {name}: {len(s_rows)} rows  [{spark_sec:.1f}s]")
+            print(f"rows-only {name}: {len(s_rows)} rows  [spark {spark_sec:.1f}s]")
             continue
 
+        t0 = time.time()
         try:
             d_tbl = con.execute(oracles[name]).fetch_arrow_table()
             d_cols, d_schema = d_tbl.column_names, d_tbl.schema
@@ -181,8 +182,12 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001
             failures.append((name, f"DUCKDB ERROR: {e}"))
             record[name] = {"status": "fail", "problems": f"DUCKDB ERROR: {str(e)[:300]}"}
-            print(f"FAIL {name}: duckdb error: {str(e)[:300]}")
+            print(
+                f"FAIL {name}: duckdb error: {str(e)[:300]}  "
+                f"[spark {spark_sec:.1f}s, duckdb {time.time() - t0:.1f}s]"
+            )
             continue
+        secs = f"[spark {spark_sec:.1f}s, duckdb {time.time() - t0:.1f}s]"
 
         problems = []
         if sorted(s_cols) != sorted(d_cols):
@@ -199,7 +204,7 @@ def main() -> None:
         if problems:
             failures.append((name, "; ".join(problems)))
             record[name] = {"status": "fail", "problems": "; ".join(problems)[:500]}
-            print(f"FAIL {name}: {'; '.join(problems)[:500]}")
+            print(f"FAIL {name}: {'; '.join(problems)[:500]}  {secs}")
         else:
             passes.append(name)
             record[name] = {
@@ -207,7 +212,7 @@ def main() -> None:
                 "rows": len(s_rows),
                 "sec": round(spark_sec, 2),
             }
-            print(f"PASS {name}: {len(s_rows)} rows  [{spark_sec:.1f}s]")
+            print(f"PASS {name}: {len(s_rows)} rows  {secs}")
 
     print(
         f"\n=== {len(passes)} pass, {len(failures)} fail, {len(rows_only)} rows-only "
