@@ -40,18 +40,6 @@ def exact_dedup_groups(
     )
 
 
-def drop_exact_duplicates(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Keep exactly the keeper row per distinct normalized text. Implemented
-    as min-id-per-content semi-join rather than dropDuplicates so the kept
-    row is deterministic under any partitioning."""
-    keepers = exact_dedup_groups(docs, id_col, text_col).select(
-        F.col("keeper_id").alias(id_col)
-    )
-    return docs.join(keepers, on=id_col, how="left_semi")
-
-
 def _fast_tokens(text: Column) -> Column:
     """``whitespace_tokens(normalized_text(text))`` minus the redundant
     collapse pass (optimization round, guide §1.2 per-task work): the
@@ -239,6 +227,30 @@ def minhash_lsh_candidates(
     return minhash_lsh_candidates_from_signatures(sig, num_hashes, bands)
 
 
+def _signature_jaccard(
+    sig: DataFrame, candidates: DataFrame, cols: tuple[str, ...], num_hashes: int
+) -> DataFrame:
+    """Join (_id, _sig) signatures to both sides of the candidate pairs and
+    estimate jaccard as the fraction of matching minhash positions; keeps
+    the candidate columns ``cols`` and appends ``jaccard_est``."""
+    a = sig.select(F.col("_id").alias("id_a"), F.col("_sig").alias("sig_a"))
+    b = sig.select(F.col("_id").alias("id_b"), F.col("_sig").alias("sig_b"))
+    matches = F.size(
+        F.filter(
+            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
+            lambda m: m,
+        )
+    )
+    return (
+        candidates.join(a, "id_a")
+        .join(b, "id_b")
+        .select(
+            *cols,
+            (matches.cast("double") / F.lit(float(num_hashes))).alias("jaccard_est"),
+        )
+    )
+
+
 def minhash_jaccard_estimate(
     docs: DataFrame,
     candidates: DataFrame,
@@ -248,25 +260,9 @@ def minhash_jaccard_estimate(
     shingle_k: int = 3,
 ) -> DataFrame:
     """Verify candidates: estimated jaccard = fraction of matching minhash
-    positions. Joins signatures to both sides of the candidate pairs;
-    the corpus is re-signed here via the explode fast path."""
-    sig = minhash_signatures(docs, id_col, text_col, num_hashes, shingle_k).select(
-        F.col("_id").alias("_sid"), "_sig"
-    )
-    a = sig.select(F.col("_sid").alias("id_a"), F.col("_sig").alias("sig_a"))
-    b = sig.select(F.col("_sid").alias("id_b"), F.col("_sig").alias("sig_b"))
-    paired = candidates.join(a, "id_a").join(b, "id_b")
-    matches = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-            lambda m: m,
-        )
-    )
-    return paired.select(
-        "id_a",
-        "id_b",
-        (matches.cast("double") / F.lit(float(num_hashes))).alias("jaccard_est"),
-    )
+    positions. The corpus is re-signed here via the explode fast path."""
+    sig = minhash_signatures(docs, id_col, text_col, num_hashes, shingle_k)
+    return _signature_jaccard(sig, candidates, ("id_a", "id_b"), num_hashes)
 
 
 def minhash_near_dup_pairs(
@@ -290,24 +286,7 @@ def minhash_near_dup_pairs(
     """
     sig = minhash_signatures(docs, id_col, text_col).localCheckpoint(eager=False)
     cands = minhash_lsh_candidates_from_signatures(sig)
-    a = sig.select(F.col("_id").alias("id_a"), F.col("_sig").alias("sig_a"))
-    b = sig.select(F.col("_id").alias("id_b"), F.col("_sig").alias("sig_b"))
-    matches = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-            lambda m: m,
-        )
-    )
-    est = (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            "n_shared_bands",
-            (matches.cast("double") / F.lit(64.0)).alias("jaccard_est"),
-        )
-    )
+    est = _signature_jaccard(sig, cands, ("id_a", "id_b", "n_shared_bands"), 64)
     if min_jaccard is not None:
         est = est.filter(F.col("jaccard_est") >= min_jaccard)
     return est

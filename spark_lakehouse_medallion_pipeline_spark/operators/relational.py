@@ -1,69 +1,25 @@
-"""Relational operator layer (SURVEY.md §2b X1-X13).
+"""Relational operator layer (SURVEY.md §2b X1-X15).
 
 The reference's interactive surface is Trino SQL over the medallion tables
 (scripts/run_pipeline.py:240-277); our equivalent is Spark SQL / DataFrame.
-These helpers exist to pin down the *scale-aware* form of each operator —
-broadcast hints for dimension joins, partial-aggregable conditional counts,
-tie-broken top-k — so every query built on them would survive a 100× scale-up.
+A one-call Spark form — a broadcast() hint on a bounded dimension table,
+orderBy(...).limit(k) (TakeOrderedAndProject: each partition keeps k rows,
+no global sort), a ROWS-framed window, approx_count_distinct — is written
+inline where a query needs it. This module holds the operators that take
+more than one step to stay *scale-aware* at 100x:
 
-Scale notes per operator family:
-  - equi-joins: AQE picks broadcast vs sort-merge at runtime; we add an
-    explicit broadcast() hint for bounded dimension tables (region, nation,
-    part, supplier — the classic star-schema small sides).
-  - top-k: orderBy(...).limit(k) compiles to TakeOrderedAndProject — no
-    global sort materialization, each partition keeps k rows.
-  - windows: partitionBy keys chosen to match the natural key distribution;
-    running aggregates use explicit ROWS frames (RANGE frames degrade on
-    ties and buy nothing here).
-  - approx aggregates: HLL / quantile-sketch variants for the 100 TB path
-    where exact distinct would shuffle the full key set.
+  - sessionize: gap sessions from one (user, ts) window shuffle;
+  - salted_join / write_bucketed_table: skewed-key and co-located joins;
+  - apply_cdc: change-data-capture compaction onto a snapshot;
+  - stratified_exact_sample: exact per-stratum quotas, portable hash rank;
+  - distributed_rank / top_k_ranked: global row_number, prefix sums and
+    NTILE without a single-partition window.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-from spark_lakehouse_medallion_pipeline_spark.functions.scalars import count_if  # noqa: F401  (re-export)
-
-
-def broadcast_dim(dim: DataFrame) -> DataFrame:
-    """Mark a bounded dimension table for broadcast join (X2)."""
-    return F.broadcast(dim)
-
-
-def top_k(df: DataFrame, order_cols: list[Column], k: int) -> DataFrame:
-    """Deterministic top-k (X11): caller must include a unique tie-breaker
-    in order_cols. Compiles to TakeOrderedAndProject (per-partition heap,
-    no full sort)."""
-    return df.orderBy(*order_cols).limit(k)
-
-
-def running_agg(
-    df: DataFrame,
-    partition_by: list[str],
-    order_by: list[str],
-    agg_col: str,
-    out_name: str,
-) -> DataFrame:
-    """Running sum with an explicit ROWS frame (X10)."""
-    w = (
-        Window.partitionBy(*partition_by)
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.withColumn(out_name, F.sum(agg_col).over(w))
-
-
-def ranked_in_group(
-    df: DataFrame,
-    partition_by: list[str],
-    order_by: list[Column],
-    rank_name: str = "rn",
-) -> DataFrame:
-    """row_number per group (X8); order_by must be deterministic."""
-    w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    return df.withColumn(rank_name, F.row_number().over(w))
 
 
 def sessionize(
@@ -92,14 +48,6 @@ def sessionize(
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         ),
     ).drop("_new_sess")
-
-
-def approx_distinct(df: DataFrame, group_cols: list[str], target: str, rsd: float = 0.05) -> DataFrame:
-    """HLL++ distinct count (X13) — the 100 TB substitute for countDistinct:
-    fixed-size sketch per group instead of shuffling every distinct key."""
-    return df.groupBy(*group_cols).agg(
-        F.approx_count_distinct(target, rsd).alias(f"approx_distinct_{target}")
-    )
 
 
 def salted_join(
@@ -227,8 +175,6 @@ def distributed_rank(
     order_cols: list[Column],
     *,
     rank_col: str = "rank",
-    value_col: str | None = None,
-    cumsum_col: str | None = None,
     cumsum_cols: dict[str, str] | None = None,
     cummax_cols: dict[str, str] | None = None,
     ntile_col: str | None = None,
@@ -265,16 +211,14 @@ def distributed_rank(
 
     Scale shape: two data passes (one range exchange + one hash
     exchange on the bucket id for the window — each balanced by the
-    range sampler), zero single-partition stages. value_col, when
-    given, must be int64-safe under global summation (cents
-    convention).
+    range sampler), zero single-partition stages.
 
-    cumsum_cols maps ADDITIONAL value columns to their output prefix-sum
-    names ({value col -> cumsum col}); all of them share the same two
-    passes and the same one-row-per-partition stats collect, so a
-    multi-ECDF statistic (Kolmogorov-Smirnov needs both samples'
-    cumulative counts at every value) costs no more than a single
-    prefix sum. Same int64-safety contract per column.
+    cumsum_cols maps value columns to their output prefix-sum names
+    ({value col -> cumsum col}); all of them share the same two passes
+    and the same one-row-per-partition stats collect, so a multi-ECDF
+    statistic (Kolmogorov-Smirnov needs both samples' cumulative counts
+    at every value) costs no more than a single prefix sum. Each value
+    column must be int64-safe under global summation (cents convention).
 
     cummax_cols maps value columns to EXCLUSIVE prefix-max outputs —
     ANSI `MAX(x) OVER (ORDER BY ... ROWS BETWEEN UNBOUNDED PRECEDING
@@ -300,18 +244,10 @@ def distributed_rank(
         .withColumn(pid, F.spark_partition_id())
         .localCheckpoint(eager=False)
     )
-    # Normalize the one-pair sugar (value_col/cumsum_col) and the
-    # multi-pair form (cumsum_cols: {value col -> output col}) into one
-    # list of (value col, output col); every pair rides the SAME two
-    # passes — a k-statistic rank (e.g. the KS test's two ECDFs) costs
-    # exactly what a 1-statistic rank costs.
-    if cumsum_col is not None and value_col is None:
-        raise ValueError("cumsum_col requires value_col")
-    pairs: list[tuple[str, str]] = []
-    if cumsum_col is not None:
-        pairs.append((value_col, cumsum_col))
-    if cumsum_cols:
-        pairs.extend(cumsum_cols.items())
+    # Every (value col, output col) pair rides the SAME two passes — a
+    # k-statistic rank (e.g. the KS test's two ECDFs) costs exactly what
+    # a 1-statistic rank costs.
+    pairs: list[tuple[str, str]] = list(cumsum_cols.items()) if cumsum_cols else []
     mpairs: list[tuple[str, str]] = list(cummax_cols.items()) if cummax_cols else []
     aggs = [F.count(F.lit(1)).alias("_cnt")]
     for i, (vc, _) in enumerate(pairs):

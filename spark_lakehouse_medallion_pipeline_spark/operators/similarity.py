@@ -272,23 +272,6 @@ def lsh_knn_join(
     return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
 
 
-def embedding_stats(
-    corpus: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """Typed-array column ops (X21): dimension, L2 norm, component slices."""
-    v = F.col(vec_col)
-    return corpus.select(
-        F.col(id_col),
-        F.size(v).alias("dim"),
-        F.round(l2_norm(v), 6).alias("l2_norm"),
-        F.round(F.element_at(v, 1).cast("double"), 6).alias("first_component"),
-        F.round(
-            F.aggregate(F.slice(v, 1, 8), F.lit(0.0), lambda a, x: a + x.cast("double")),
-            6,
-        ).alias("head8_sum"),
-    )
-
-
 def cosine_near_dup_pairs(
     corpus: DataFrame,
     dim: int,

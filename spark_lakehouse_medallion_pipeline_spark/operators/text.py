@@ -67,9 +67,9 @@ def punct_ratio(text: Column) -> Column:
 
 def quality_score_raw(text: Column) -> Column:
     """Composite document-quality heuristic in [0,1], UN-rounded — the
-    single definition the oracled queries (q29, q51) and the rounded
-    convenience form below all share; per-document values come from the
-    exact set {k/30} so aggregates can ride the exact-integer idiom.
+    single definition the oracled queries (q29, q51) share; per-document
+    values come from the exact set {k/30} so aggregates can ride the
+    exact-integer idiom.
     Rewards prose-like token length (3-12 chars), some stopwords, low
     punctuation noise — the standard cheap pre-filter before expensive
     dedup/embedding stages."""
@@ -78,13 +78,6 @@ def quality_score_raw(text: Column) -> Column:
     stop_ok = F.when(stopword_ratio(text) > 0.05, 1.0).otherwise(0.6)
     punct_ok = F.when(punct_ratio(text) < 0.1, 1.0).otherwise(0.7)
     return (length_ok + stop_ok + punct_ok) / F.lit(3.0)
-
-
-def quality_score(text: Column) -> Column:
-    """quality_score_raw rounded to 4dp for display surfaces. Do NOT use
-    in oracled queries — Spark round() and DuckDB round() can disagree
-    on the same double (see the dialect rules in queries/_common.py)."""
-    return F.round(quality_score_raw(text), 4)
 
 
 def fingerprint_md5(text: Column) -> Column:
@@ -114,21 +107,6 @@ def lang_id(text: Column) -> Column:
         .when(t.like("% el %") | t.like("% y %") | t.like("% es %"), "es")
         .when(t.like("% der %") | t.like("% und %") | t.like("% ist %"), "de")
         .otherwise("unknown")
-    )
-
-
-def text_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Per-document stat block — the standard text-analysis projection."""
-    t = F.col(text_col)
-    return docs.select(
-        F.col(id_col),
-        F.length(t).alias("n_chars"),
-        token_count(t).alias("n_tokens"),
-        bpe_ish_token_count(t).alias("n_subword_tokens"),
-        F.round(avg_token_length(t), 4).alias("avg_token_len"),
-        F.round(stopword_ratio(t), 4).alias("stopword_ratio"),
-        quality_score(t).alias("quality_score"),
-        fingerprint_md5(t).alias("fingerprint"),
     )
 
 

@@ -1,8 +1,10 @@
 """Time-windowed operators over event streams (SURVEY.md §2b X14-X15).
 
-Batch forms here (oracle-checkable); streaming forms in
-spark_lakehouse_medallion_pipeline_spark.streaming.jobs reuse the same aggregation bodies over
-readStream with watermarks.
+Batch forms here (oracle-checkable). The watermarked streaming forms in
+spark_lakehouse_medallion_pipeline_spark.streaming.jobs (windowed_counts_stream,
+session_stream) define their own aggregation bodies and do not share these:
+they, like tumbling_window_agg, round sum(value) with F.round, where q20 and
+session_window_agg (q22) sum exact cents.
 """
 
 from __future__ import annotations

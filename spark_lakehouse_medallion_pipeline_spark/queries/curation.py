@@ -1214,8 +1214,7 @@ def q265_weighted_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFra
         d,
         [F.col("h").asc(), F.col("doc_id").asc()],
         rank_col="_r",
-        value_col="w",
-        cumsum_col="cum",
+        cumsum_cols={"w": "cum"},
     )
     g = d.agg(F.sum("w").cast("bigint").alias("tw"))
     return (

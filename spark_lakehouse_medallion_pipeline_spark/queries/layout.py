@@ -1035,8 +1035,7 @@ def q287_compaction_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
             f_inv,
             [F.col("m").asc()],
             rank_col="_r",
-            value_col="bytes",
-            cumsum_col="cum",
+            cumsum_cols={"bytes": "cum"},
         )
         .withColumn("pre", (F.col("cum") - F.col("bytes")).cast("bigint"))
         .withColumn("bin_id", F.expr(f"pre div {_Q287_BIN_BYTES}"))

@@ -251,8 +251,7 @@ def q174_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
         spend,
         [F.desc("cents"), F.asc("custkey")],
         rank_col="_rnk",
-        value_col="cents",
-        cumsum_col="cum_cents",
+        cumsum_cols={"cents": "cum_cents"},
         ntile_col="decile",
         n_tiles=10,
     ).select("custkey", "cents", "decile", "cum_cents")
@@ -1104,8 +1103,7 @@ def q234_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             rev,
             [F.col("r").desc(), F.col("p").asc()],
             rank_col="_rnk",
-            value_col="r",
-            cumsum_col="cum",
+            cumsum_cols={"r": "cum"},
         )
         .select("p", "r", "cum")
         .crossJoin(F.broadcast(t))
@@ -1409,8 +1407,7 @@ def q249_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         t,
         [F.col("val").asc()],
         rank_col="_vr",
-        value_col="cnt",
-        cumsum_col="_cum",
+        cumsum_cols={"cnt": "_cum"},
     ).select(
         "val", "cnt", "cnt_a", (F.col("_cum") - F.col("cnt")).alias("cnt_lt")
     )
@@ -1498,8 +1495,7 @@ def q251_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
             t,
             [F.col(var).asc()],
             rank_col="_r",
-            value_col="cnt",
-            cumsum_col="_cum",
+            cumsum_cols={"cnt": "_cum"},
         )
         return rk.select(
             var,
@@ -1608,9 +1604,7 @@ def q255_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         t,
         [F.col("val").asc()],
         rank_col="_vr",
-        value_col="cnt",
-        cumsum_col="cum",
-        cumsum_cols={"cnt_a": "cum_a"},
+        cumsum_cols={"cnt": "cum", "cnt_a": "cum_a"},
     )
     g = t.agg(
         F.sum("cnt_a").cast("bigint").alias("n_a"),

@@ -1073,7 +1073,7 @@ def q245_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(sum_cents(F.col("o_totalprice")).cast("bigint").alias("x"))
     ranked = distributed_rank(
         daily, [F.col("day").asc()], rank_col="t",
-        value_col="x", cumsum_col="pre",
+        cumsum_cols={"x": "pre"},
     )
     g = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

@@ -2,14 +2,22 @@
 
 Reference surface (SURVEY.md §2a S1-S8):
   - parquet batch read/write with file-size shaping (CM:127-133, CM:172)
-  - catalog table read (CM:370) and create-or-replace partitioned table
-    write (CM:327-329 writeTo().partitionedBy().createOrReplace())
+  - create-or-replace partitioned table write (CM:327-329
+    writeTo().partitionedBy().createOrReplace())
   - partitioned-parquet fallback (CM:331-340)
   - namespace DDL (CM:181, CM:362)
 
 Spark-first mapping: DataFrameReader/Writer; managed tables go through
 ``saveAsTable`` with ``overwriteSchema`` (the Delta analogue of Iceberg's
 createOrReplace — parquet fallback in this container, see session.table_format).
+A one-call read or write (``spark.table``, CSV, JSON lines, ``mergeSchema``,
+``binaryFile``) is made inline where it is needed: q231/q232 round-trip CSV
+and JSON, q247 reads with ``mergeSchema``, ``parquet_footer_stats`` lists
+files through ``binaryFile``.
+
+Beyond plain reads and writes: local-filesystem maintenance (compaction and
+merge-upsert through one staging swap), Z-order / Hilbert clustered writes,
+versioned snapshot tables, and an executor-side parquet footer walk.
 
 Scale notes: partitioned writes use identity partition columns so
 downstream reads get partition pruning for free.
@@ -18,6 +26,7 @@ downstream reads get partition pruning for free.
 from __future__ import annotations
 
 from collections.abc import Callable
+from urllib.parse import urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,16 +46,6 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events table, ``ts`` as TIMESTAMP whichever parquet unit stores it;
     read through the session table catalog (``sources.catalog``)."""
     return catalog.table(spark, sf_dir, "events")
-
-
-def read_parquet_merged(spark: SparkSession, path: str) -> DataFrame:
-    """Scan a parquet directory whose files have EVOLVED schemas
-    (columns added over time), reconciling to the union schema —
-    the no-catalog analogue of Iceberg/Delta schema evolution
-    (CM:327-329 createOrReplace). Off by default in plain reads because
-    footer reconciliation costs one extra pass over file metadata; at
-    100 TB you pay it only on tables known to evolve."""
-    return spark.read.option("mergeSchema", "true").parquet(path)
 
 
 def write_parquet(df: DataFrame, path: str) -> None:
@@ -96,50 +95,6 @@ def write_table(
     w.saveAsTable(table)
 
 
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    """Catalog table scan (CM:370 analogue)."""
-    return spark.table(table)
-
-
-def write_csv(df: DataFrame, path: str) -> None:
-    """CSV export with a header row (interchange format — not a scale
-    format; no type fidelity for arrays/structs/binary)."""
-    df.write.mode("overwrite").option("header", "true").csv(path)
-
-
-def read_csv(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """CSV scan. Always pass a schema in pipelines — inference reads the
-    data twice and guesses; at 100 TB both are unacceptable."""
-    r = spark.read.option("header", "true")
-    if schema is not None:
-        r = r.schema(schema)
-    else:
-        r = r.option("inferSchema", "true")
-    return r.csv(path)
-
-
-def write_json_lines(df: DataFrame, path: str) -> None:
-    """JSON-lines export (one object per line — the splittable layout)."""
-    df.write.mode("overwrite").json(path)
-
-
-def read_json_lines(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-    return r.json(path)
-
-
-def write_orc(df: DataFrame, path: str) -> None:
-    """ORC write — the other columnar format; same pushdown/pruning story
-    as parquet under Spark's vectorized ORC reader."""
-    df.write.mode("overwrite").orc(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)
-
-
 def compact_parquet(spark: SparkSession, path: str, target_file_mb: int = 128) -> int:
     """Small-files maintenance (the OPTIMIZE analogue for plain parquet
     layouts): rewrite an unpartitioned directory into ~target_file_mb
@@ -152,42 +107,21 @@ def compact_parquet(spark: SparkSession, path: str, target_file_mb: int = 128) -
     rewrite and keep the swap atomic per partition.
 
     CONCURRENCY CONTRACT (no-catalog fallback): single writer, NO
-    concurrent readers — the rmtree+move swap uses local-filesystem
-    rename semantics and leaves a window where the directory is absent.
-    It also does not work against object stores (s3a/abfs), where
-    "rename" is copy+delete. The transactional answer at scale is a
-    table format (Delta OPTIMIZE / Iceberg rewrite_data_files); this
-    operator exists for the same local-parquet fallback regime as the
-    reference's CM:331-340."""
-    _require_local_path(path, "compact_parquet")
+    concurrent readers — the staging swap (``_write_swap``) uses
+    local-filesystem rename semantics and leaves a window where the
+    directory is absent. It also does not work against object stores
+    (s3a/abfs), where "rename" is copy+delete. The transactional answer
+    at scale is a table format (Delta OPTIMIZE / Iceberg
+    rewrite_data_files); this operator exists for the same local-parquet
+    fallback regime as the reference's CM:331-340."""
+    path = _require_local_path(path, "compact_parquet")
     import math
     import pathlib
 
     total = sum(f.stat().st_size for f in pathlib.Path(path).rglob("*.parquet"))
     n_files = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "._compact_tmp"
-    df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    import shutil
-
-    shutil.rmtree(path)
-    shutil.move(tmp, path)
+    _write_swap(spark.read.parquet(path).repartition(n_files), path)
     return sum(1 for _ in pathlib.Path(path).rglob("*.parquet"))
-
-
-def read_binary_files(
-    spark: SparkSession, path: str, glob: str | None = None
-) -> DataFrame:
-    """binaryFile source: one row per file with (path, modificationTime,
-    length, content binary) — the ingestion path for raw image/audio/
-    video objects feeding operators.multimodal. At 100 TB the same scan
-    fans out one file per task; pair with
-    spark.sql.files.maxPartitionBytes for many-small-file corpora (or
-    compact first via compact_parquet's analogue for blobs)."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
 
 
 def merge_upsert_parquet(
@@ -204,24 +138,33 @@ def merge_upsert_parquet(
     what you'd use at 100 TB (this operator is the no-catalog fallback,
     like the reference's parquet fallback path, CM:331-340).
 
-    CONCURRENCY CONTRACT: single writer, NO concurrent readers — between
-    the two os.rename calls the table path does not exist, so a reader
-    racing the swap sees an empty/missing table rather than either
-    snapshot. POSIX rename is atomic per call, not across the pair.
-    Local filesystems only (object-store rename is not atomic at all).
-    Use Delta/Iceberg MERGE when concurrent readers exist."""
-    _require_local_path(path, "merge_upsert_parquet")
-    import os
-    import shutil
-
+    CONCURRENCY CONTRACT: single writer, NO concurrent readers — see
+    ``_write_swap``. Use Delta/Iceberg MERGE when concurrent readers
+    exist."""
+    path = _require_local_path(path, "merge_upsert_parquet")
     if _dir_has_parquet(path):
         current = read_parquet_as(spark, path, updates.schema)
         merged = updates.unionByName(current.filter(~key_in(F.col(key), values)))
     else:
         merged = updates
-    staging = path.rstrip("/") + "__staging"
-    merged.write.mode("overwrite").parquet(staging)
-    old = path.rstrip("/") + "__old"
+    _write_swap(merged, path)
+
+
+def _write_swap(df: DataFrame, path: str) -> None:
+    """Write ``df`` to ``<path>__staging``, rename the live directory (if
+    any) to ``<path>__old``, rename staging into place, then remove
+    ``__old``. The live table is never deleted before its replacement is
+    fully written, and ``df`` may read ``path`` itself. Between the two
+    renames the table path does not exist, so a reader racing the swap
+    sees a missing table rather than either version: POSIX rename is
+    atomic per call, not across the pair, and object-store rename is not
+    atomic at all. Local filesystems only, single writer."""
+    import os
+    import shutil
+
+    path = path.rstrip("/")
+    staging, old = path + "__staging", path + "__old"
+    df.write.mode("overwrite").parquet(staging)
     if os.path.isdir(path):
         os.rename(path, old)
     os.rename(staging, path)
@@ -254,17 +197,21 @@ def read_parquet_as(spark: SparkSession, path: str, schema: StructType) -> DataF
     return spark.read.schema(schema).parquet(path)
 
 
-def _require_local_path(path: str, op: str) -> None:
-    """Refuse remote URIs for the rename-based maintenance fallbacks:
-    their swap step relies on local-FS rename semantics (see the
-    CONCURRENCY CONTRACT docstrings); on s3a/abfs/gs/hdfs the right tool
-    is a table format's transactional rewrite."""
-    if "://" in path and not path.startswith("file://"):
+def _require_local_path(path: str, op: str) -> str:
+    """The local OS path of ``path`` (a plain path, or a ``file:`` URI) for
+    the rename-based maintenance fallbacks; refuse any other URI: their
+    swap step relies on local-FS rename semantics (see the CONCURRENCY
+    CONTRACT docstrings); on s3a/abfs/gs/hdfs the right tool is a table
+    format's transactional rewrite."""
+    if path.startswith("file:"):
+        return urlparse(path).path
+    if "://" in path:
         raise NotImplementedError(
             f"{op} is a LOCAL-filesystem fallback (single writer, no "
             f"concurrent readers); got {path!r}. Use Delta/Iceberg "
             "OPTIMIZE/MERGE for object-store tables."
         )
+    return path
 
 
 def _dir_has_parquet(path: str) -> bool:
@@ -487,7 +434,7 @@ def write_snapshot(spark: SparkSession, df: DataFrame, table_dir: str) -> int:
     """Commit ``df`` as the next version of a snapshot table and return
     the new version number. Readers concurrent with this call keep
     seeing the previous version until the atomic manifest flip."""
-    _require_local_path(table_dir, "write_snapshot")
+    table_dir = _require_local_path(table_dir, "write_snapshot")
     import os
     import pathlib
 
@@ -529,6 +476,7 @@ def merge_upsert_snapshot(
     NEW version with an atomic pointer flip — so unlike the rename-pair
     fallback, concurrent readers are safe.
     Returns the committed version."""
+    table_dir = _require_local_path(table_dir, "merge_upsert_snapshot")
     if _current_version(table_dir) is not None:
         current = read_snapshot(spark, table_dir)
         keep = current.join(updates.select(*keys).distinct(), keys, "left_anti")

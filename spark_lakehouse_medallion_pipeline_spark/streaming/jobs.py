@@ -3,9 +3,11 @@
 The reference provisions an ``mdp-checkpoints`` bucket it never uses
 (k8s/s3/03-s3-buckets.yaml:33-39) — the unrealized streaming intention.
 Realized here: file-source streams over the events schema, watermarked
-tumbling/session window aggregates, checkpointed sinks. The aggregation
-bodies are shared with operators.timeseries so batch results (oracle-
-checked) and streaming results coincide on bounded input.
+tumbling/session window aggregates, checkpointed sinks.
+windowed_counts_stream and session_stream define their own aggregation
+bodies: they round sum(value) with F.round, where the oracle-checked
+batch forms (q20, and q22 through operators.timeseries.session_window_agg)
+sum exact cents, so the two need not agree bit for bit.
 
 Tests drive these with trigger(availableNow=True) against the parquet
 corpus; production swaps source/sink URIs — the plan is identical.

@@ -1544,8 +1544,7 @@ def test_q265_kernel_heavy_item_multiplicity(spark):
         d,
         [F.col("h").asc(), F.col("doc_id").asc()],
         rank_col="_r",
-        value_col="w",
-        cumsum_col="cum",
+        cumsum_cols={"w": "cum"},
     )
     g = d.agg(F.sum("w").cast("bigint").alias("tw"))
     out = {

@@ -29,8 +29,8 @@ def test_exact_dedup_groups(toy_docs):
 
 
 def test_drop_exact_duplicates(toy_docs):
-    kept = dedup.drop_exact_duplicates(toy_docs)
-    ids = sorted(r["doc_id"] for r in kept.collect())
+    kept = dedup.exact_dedup_groups(toy_docs)
+    ids = sorted(r["keeper_id"] for r in kept.collect())
     assert ids == [1, 3, 4, 5, 6]
 
 

@@ -56,13 +56,11 @@ def test_resize_images_shapes(spark, documents):
 
 def test_binary_file_source_feeds_media_pipeline(spark, tmp_path):
     """binaryFile ingestion -> typed media schema -> mapInPandas features."""
-    from spark_lakehouse_medallion_pipeline_spark.sources.io import read_binary_files
-
     blobs = {"a.bin": b"\x89fakeimg" + b"x" * 100, "b.bin": b"\x89fakeimg" + b"y" * 7}
     for name, payload in blobs.items():
         (tmp_path / name).write_bytes(payload)
 
-    files = read_binary_files(spark, str(tmp_path), glob="*.bin")
+    files = spark.read.format("binaryFile").option("pathGlobFilter", "*.bin").load(str(tmp_path))
     assert set(files.columns) == {"path", "modificationTime", "length", "content"}
     rows = {r["path"].rsplit("/", 1)[-1]: r for r in files.collect()}
     assert rows["a.bin"]["length"] == len(blobs["a.bin"])

