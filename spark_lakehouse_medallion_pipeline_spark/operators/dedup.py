@@ -269,10 +269,10 @@ def minhash_near_dup_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_jaccard: float | None = None,
 ) -> DataFrame:
     """Full near-dup pipeline: 64-hash signatures over word 3-shingles
-    once -> 16-band LSH candidates -> signature-match jaccard estimate.
+    once -> 16-band LSH candidates -> signature-match jaccard estimate,
+    keeping the pairs whose estimate is at least 0.5.
 
     The signature table is pinned with a lazy localCheckpoint, so
     shingling+hashing — the dominant cost — runs exactly once even though
@@ -287,9 +287,7 @@ def minhash_near_dup_pairs(
     sig = minhash_signatures(docs, id_col, text_col).localCheckpoint(eager=False)
     cands = minhash_lsh_candidates_from_signatures(sig)
     est = _signature_jaccard(sig, cands, ("id_a", "id_b", "n_shared_bands"), 64)
-    if min_jaccard is not None:
-        est = est.filter(F.col("jaccard_est") >= min_jaccard)
-    return est
+    return est.filter(F.col("jaccard_est") >= 0.5)
 
 
 # One-pass SimHash fold, SQL-lambda form. The PySpark shiftright() wrapper
@@ -846,7 +844,6 @@ def contrastive_pairs(
     bands: int = 16,
     shingle_k: int = 3,
     neg_per_pos: int = 1,
-    portable: bool = False,
     broadcast_distinct_shingles: bool = False,
 ) -> DataFrame:
     """Mine (anchor, other, label) training pairs for embedding /
@@ -871,15 +868,13 @@ def contrastive_pairs(
 
     Returns (id_a, id_b, label) with id_a < id_b.
 
-    ``portable=True`` swaps every hash in the construction — the LSH
-    positives (via ``minhash_lsh_candidates_portable``), the pairing
-    buckets/ranks, and the top-up selection order — from xxhash64 to
-    the 60-bit md5 family, and adds (id_a, id_b) tie-breakers to the
-    selection sort, so the ENTIRE mined set (including how each of the
-    up-to-3 top-up passes fills its deficit) is reproducible
-    digit-for-digit in any engine with md5: the iterative top-up loop
-    value-oracles as unrolled SQL CTEs (q149). Same plan shapes; md5
-    costs ~2x xxhash64 per call, which the fast path (default) avoids.
+    Every hash in the construction — the LSH positives (via
+    ``minhash_lsh_candidates_portable``), the pairing buckets/ranks, and
+    the top-up selection order — is the 60-bit md5 family, and the
+    selection sort breaks ties on (id_a, id_b), so the ENTIRE mined set
+    (including how each of the up-to-3 top-up passes fills its deficit)
+    is reproducible digit-for-digit in any engine with md5: the
+    iterative top-up loop value-oracles as unrolled SQL CTEs (q149).
 
     ``broadcast_distinct_shingles`` passes through to the portable LSH
     stage (see ``minhash_lsh_candidates_portable``): hash the DISTINCT
@@ -888,13 +883,9 @@ def contrastive_pairs(
     candidates — a caller assertion that distinct shingles fit in
     executor memory (bounded vocabulary or heavy duplication).
     """
-    pos = (
-        minhash_lsh_candidates_portable(
-            docs, id_col, text_col, num_hashes, bands, shingle_k,
-            broadcast_distinct_shingles=broadcast_distinct_shingles,
-        )
-        if portable
-        else minhash_lsh_candidates(docs, id_col, text_col, num_hashes, bands, shingle_k)
+    pos = minhash_lsh_candidates_portable(
+        docs, id_col, text_col, num_hashes, bands, shingle_k,
+        broadcast_distinct_shingles=broadcast_distinct_shingles,
     )
     # Materialize both reused inputs once: pos_pairs feeds the count,
     # every per-seed anti-join, and the final union; ids feeds one
@@ -915,28 +906,23 @@ def contrastive_pairs(
     n_ids = ids.count()
     n_buckets = max(1, min(64, n_ids // 16))
     target = n_pos * neg_per_pos
-    if portable:
-        # Total selection order (hash, id_a, id_b): the tie-breakers cost
-        # nothing (hash collisions are ~2^-60) but make the selected SET
-        # provably identical across engines, which the oracle needs.
-        sel_order = [
-            _pmd5(
-                F.concat(
-                    F.col("id_a").cast("string"),
-                    F.lit(":"),
-                    F.col("id_b").cast("string"),
-                ),
-                9,
+    # Total selection order (hash, id_a, id_b): the tie-breakers cost
+    # nothing (hash collisions are ~2^-60) but make the selected SET
+    # provably identical across engines, which the oracle needs.
+    sel_order = [
+        _pmd5(
+            F.concat(
+                F.col("id_a").cast("string"),
+                F.lit(":"),
+                F.col("id_b").cast("string"),
             ),
-            F.col("id_a"),
-            F.col("id_b"),
-        ]
-    else:
-        sel_order = [
-            F.xxhash64(F.col("id_a").cast("string"), F.col("id_b").cast("string"))
-        ]
+            9,
+        ),
+        F.col("id_a"),
+        F.col("id_b"),
+    ]
     neg = (
-        _hash_paired(ids, seed=1, n_buckets=n_buckets, portable=portable)
+        _hash_paired(ids, seed=1, n_buckets=n_buckets)
         .join(pos_pairs.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti")
         .orderBy(*sel_order)
         .limit(target)
@@ -947,7 +933,7 @@ def contrastive_pairs(
         if deficit <= 0:
             break
         topup = (
-            _hash_paired(ids, seed=seed, n_buckets=n_buckets, portable=portable)
+            _hash_paired(ids, seed=seed, n_buckets=n_buckets)
             .join(pos_pairs.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti")
             .join(neg, ["id_a", "id_b"], "left_anti")
             .orderBy(*sel_order)
@@ -967,26 +953,19 @@ def _pmd5(col, seed: int):
     ).cast("bigint")
 
 
-def _hash_paired(
-    ids: DataFrame, seed: int, n_buckets: int = 64, portable: bool = False
-) -> DataFrame:
+def _hash_paired(ids: DataFrame, seed: int, n_buckets: int) -> DataFrame:
     """Deterministic pseudo-random disjoint pairing of ``ids['_id']``:
     hash into buckets, rank by a seeded hash inside each bucket, pair
     rank 2k-1 with rank 2k. No global sort, no cross join; different
-    seeds yield (near-)independent pairings for top-up passes.
-    ``portable=True`` uses the md5 hash family (engine-reproducible)
-    instead of xxhash64."""
+    seeds yield (near-)independent pairings for top-up passes. Both
+    hashes are the engine-reproducible md5 family (``_pmd5``)."""
     from pyspark.sql import Window
 
     # Seed participates in the BUCKET hash too — with only the ordering
     # seeded, a 2-id bucket would re-produce the identical pair on every
     # seed and the top-up pass could never find fresh candidates.
-    if portable:
-        bkt_hash = _pmd5(F.col("_id").cast("string"), seed * 1000)
-        rank_hash = _pmd5(F.col("_id").cast("string"), seed)
-    else:
-        bkt_hash = F.xxhash64(F.col("_id").cast("string"), F.lit(seed * 1000))
-        rank_hash = F.xxhash64(F.col("_id").cast("string"), F.lit(seed))
+    bkt_hash = _pmd5(F.col("_id").cast("string"), seed * 1000)
+    rank_hash = _pmd5(F.col("_id").cast("string"), seed)
     bucketed = ids.select(
         "_id",
         F.pmod(bkt_hash, F.lit(n_buckets)).alias("_bkt"),

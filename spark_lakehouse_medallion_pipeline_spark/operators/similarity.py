@@ -193,13 +193,11 @@ def lsh_knn_join(
     q_id: str = "q_id",
     c_id: str = "vec_id",
     vec_col: str = "embedding",
-    floor6: bool = False,
 ) -> DataFrame:
     """ANN k-NN join: bucket both sides by RHP signature, hash-join on the
-    bucket, exact cosine + top-k inside buckets. ``floor6`` switches the
-    similarity to the cross-engine-stable FLOOR(x*1e6+0.5)/1e6 idiom so
-    a SQL oracle can replay scores bit-exactly (see
-    cosine_near_dup_pairs).
+    bucket, exact cosine + top-k inside buckets. The similarity is rounded
+    with the cross-engine-stable FLOOR(x*1e6+0.5)/1e6 idiom so a SQL
+    oracle can replay scores bit-exactly (see cosine_near_dup_pairs).
 
     Recall knobs (standard LSH design space):
       - ``n_tables`` independent plane families (OR-construction): a true
@@ -261,8 +259,7 @@ def lsh_knn_join(
         "_qvec",
         F.explode(F.array_distinct(F.array(*probe_structs))).alias("_b"),
     ).select(q_id, "_qvec", F.col("_b.table").alias("_table"), F.col("_b.sig").alias("_bucket"))
-    raw = cosine(F.col("_cvec"), F.col("_qvec"))
-    sim = _floor_round6(raw) if floor6 else F.round(raw, 6)
+    sim = _floor_round6(cosine(F.col("_cvec"), F.col("_qvec")))
     scored = c_sig.join(q_probed, on=["_table", "_bucket"]).select(
         F.col(q_id), F.col(c_id), sim.alias("cosine_sim")
     )
@@ -280,7 +277,6 @@ def cosine_near_dup_pairs(
     n_tables: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    floor6: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (the dedup-family variant of
     X19): LSH-block the corpus, generate pairs only inside buckets, keep
@@ -293,8 +289,8 @@ def cosine_near_dup_pairs(
 
     Returns (id_a, id_b, cosine_sim), id_a < id_b, exact cosine.
 
-    ``floor6=True`` switches the similarity from round-HALF_UP to the
-    cross-engine-stable FLOOR(x*1e6 + 0.5)/1e6 idiom (Spark round() is
+    The similarity is rounded with the cross-engine-stable
+    FLOOR(x*1e6 + 0.5)/1e6 idiom, not round() (Spark round() is
     BigDecimal HALF_UP on the shortest decimal repr, other engines'
     round() is C-style on the binary value — they can disagree on the
     SAME double), which is what lets a SQL oracle reproduce the output
@@ -331,8 +327,7 @@ def cosine_near_dup_pairs(
         )
         sides.append(sig)
     a, b = sides
-    raw = cosine(F.col("_vec_a"), F.col("_vec_b"))
-    sim = _floor_round6(raw) if floor6 else F.round(raw, 6)
+    sim = _floor_round6(cosine(F.col("_vec_a"), F.col("_vec_b")))
     return (
         a.join(b, on=["_table", "_bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -379,13 +374,12 @@ def cosine_pairs_exact(
     )
     a = e.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"))
     b = e.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"))
-    floor6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return (
         a.join(b, a.id_a < b.id_b)
         .select(
             "id_a",
             "id_b",
-            floor6(dot(F.col("_va"), F.col("_vb"))).alias("cosine_sim"),
+            _floor_round6(dot(F.col("_va"), F.col("_vb"))).alias("cosine_sim"),
         )
         .filter(F.col("cosine_sim") >= threshold)
     )
@@ -464,12 +458,11 @@ def ivf_knn_join(
     q_id: str = "q_id",
     c_id: str = "vec_id",
     vec_col: str = "embedding",
-    portable: bool = False,
-    floor6: bool = False,
 ) -> DataFrame:
     """IVF (inverted-file) ANN k-NN join — the cell-probe alternative to
-    lsh_knn_join. ``portable``/``floor6`` make the index and the scores
-    SQL-replayable (see ivf_centroids / cosine_near_dup_pairs).
+    lsh_knn_join. The index is the portable centroid table and the scores
+    are FLOOR-rounded at 6dp, so both are SQL-replayable (see
+    ivf_centroids / cosine_near_dup_pairs).
 
     Index: every corpus vector is assigned to its nearest centroid's cell
     (scan-local argmax over n_centroids dot products). Search: each query
@@ -480,7 +473,7 @@ def ivf_knn_join(
     """
     from pyspark.sql import Window
 
-    cents = ivf_centroids(corpus, n_centroids, c_id, vec_col, portable=portable)
+    cents = ivf_centroids(corpus, n_centroids, c_id, vec_col, portable=True)
     c_cell = corpus.select(
         F.col(c_id),
         F.col(vec_col).alias("_cvec"),
@@ -495,8 +488,7 @@ def ivf_knn_join(
         F.col(vec_col).alias("_qvec"),
         F.explode(probed).alias("_probe"),
     ).select(q_id, "_qvec", F.col("_probe.cid").alias("_cell"))
-    raw = cosine(F.col("_cvec"), F.col("_qvec"))
-    sim = _floor_round6(raw) if floor6 else F.round(raw, 6)
+    sim = _floor_round6(cosine(F.col("_cvec"), F.col("_qvec")))
     scored = c_cell.join(q_cell, on="_cell").select(
         F.col(q_id), F.col(c_id), sim.alias("cosine_sim")
     )
@@ -592,7 +584,6 @@ def semantic_dedup(
     n_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    portable: bool = False,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): cluster
     embeddings, compare pairs only WITHIN a cluster, and drop every
@@ -606,9 +597,14 @@ def semantic_dedup(
     centroid count; at 100 TB raise n_centroids so cells stay ~1/k of
     the corpus, or re-cluster hot cells recursively.
 
+    The centroids are the portable (SQL-replayable) ivf_centroids model,
+    and the pair dot is e6-floored before the threshold compare, so a SQL
+    oracle's summation-order ulps cannot flip a drop decision at the
+    boundary (the q37/q44/q45 absorber).
+
     Returns surviving rows of ``corpus`` (all original columns).
     """
-    cents = ivf_centroids(corpus, n_centroids, id_col, vec_col, portable=portable)
+    cents = ivf_centroids(corpus, n_centroids, id_col, vec_col, portable=True)
     assigned = corpus.withColumn(
         "_cell", F.array_max(_centroid_scores(vec_col, cents))["cid"]
     )
@@ -622,13 +618,7 @@ def semantic_dedup(
     )
     a = e.select(F.col("_id").alias("id_a"), F.col("_cell"), F.col("_v").alias("_va"))
     b = e.select(F.col("_id").alias("id_b"), F.col("_cell"), F.col("_v").alias("_vb"))
-    pair_dot = dot(F.col("_va"), F.col("_vb"))
-    if portable:
-        # e6-floor the pair dot before the threshold compare so a SQL
-        # oracle's summation-order ulps can't flip a drop decision at
-        # the boundary (the q37/q44/q45 absorber; raw-double compare
-        # was this family's only unabsorbed threshold).
-        pair_dot = _floor_round6(pair_dot)
+    pair_dot = _floor_round6(dot(F.col("_va"), F.col("_vb")))
     dropped = (
         a.join(b, on="_cell")
         .filter(F.col("id_a") < F.col("id_b"))

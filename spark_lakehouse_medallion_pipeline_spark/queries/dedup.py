@@ -37,12 +37,10 @@ def q28_exact_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q("q33_minhash_candidates")  # LSH banding not ANSI-SQL-expressible; rows-only + pytest
 def q33_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup candidates (X18): shingle -> minhash -> band ->
-    bucket join (never a cross join). Verified against exact jaccard in
-    tests/test_dedup.py."""
+    bucket join (never a cross join) -> pairs whose estimated jaccard is
+    at least 0.5. Verified against exact jaccard in tests/test_dedup.py."""
     docs = _t(spark, sf_dir, "documents")
-    return dedup.minhash_near_dup_pairs(docs, min_jaccard=0.5).select(
-        "id_a", "id_b", "jaccard_est"
-    )
+    return dedup.minhash_near_dup_pairs(docs).select("id_a", "id_b", "jaccard_est")
 
 
 @_q("q34_simhash_pairs")  # bit-twiddling fingerprint; rows-only + pytest
@@ -164,18 +162,17 @@ def q96_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop within-cell near-identical vectors (keep lowest id). Pair
     generation never crosses cells — the paper's k-means-then-
     intra-cluster design. Planted-duplicate recall in pytest.
-    Value-oracled since round 7 via the portable IVF model
+    Value-oracled since round 7 via the operator's portable IVF model
     (_ivf_oracle_cells): the oracle rebuilds the cells and replays the
     within-cell pair drop (per-row L2 normalization is the identical
-    sqrt + sequential-sum chain on both engines; the pair dot is
-    e6-floored before the threshold compare so summation-order ulps
+    sqrt + sequential-sum chain on both engines; the operator e6-floors
+    the pair dot before the threshold compare so summation-order ulps
     can't flip a drop at the boundary)."""
     emb = _t(spark, sf_dir, "embeddings")
     return similarity.semantic_dedup(
         emb.select("vec_id", "embedding"),
         threshold=0.98,
         n_centroids=8,
-        portable=True,
     ).select("vec_id")
 
 
@@ -271,8 +268,8 @@ def _cp_h(expr: str, seed: int) -> str:
 
 
 def _cp_pairing_ctes(seed: int) -> str:
-    """One deterministic disjoint-pairing pass (dedup._hash_paired,
-    portable mode): bucket by seeded md5, rank by a second seeded md5
+    """One deterministic disjoint-pairing pass (dedup._hash_paired):
+    bucket by seeded md5, rank by a second seeded md5
     inside the bucket, pair rank 2k-1 with rank 2k."""
     return f"""
     rk{seed} AS (
@@ -398,10 +395,10 @@ def q149_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-label pair counts and mean token-set jaccard (positives must
     separate from negatives — also pinned in pytest).
 
-    Value-oracled since round 8 (was rows-only for 7 rounds): the query
-    runs ``portable=True`` — md5 hashes everywhere (LSH positives =
-    the q162 family; pairing buckets/ranks and top-up selection order =
-    seeded 60-bit md5 with (id_a, id_b) tie-breaks) — and the oracle
+    Value-oracled since round 8 (was rows-only for 7 rounds): the
+    operator hashes with md5 everywhere (LSH positives = the q162
+    family; pairing buckets/ranks and top-up selection order = seeded
+    60-bit md5 with (id_a, id_b) tie-breaks) — and the oracle
     UNROLLS THE ITERATIVE TOP-UP LOOP as CTEs (the q188/q191/q192
     fixed-iteration discipline): pairing passes pr1..pr4, each top-up
     ranked by the selection hash and capped at the running deficit
@@ -409,9 +406,8 @@ def q149_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the engine's early break). Audit metrics are exact integers: per
     pair j6 = 1e6*|inter| // |union|, per label mean = SUM(j6) //
     COUNT — truncating integer divides both engines share (trunc ==
-    floor here, all non-negative). The xxhash64 fast path stays the
-    production default (2x cheaper hashing) with determinism + label
-    separation pytest-pinned."""
+    floor here, all non-negative). Determinism + label separation are
+    pytest-pinned."""
     docs = _t(spark, sf_dir, "documents")
     # broadcast_distinct_shingles: this corpus's 2-shingle vocabulary is
     # bounded (same caller assertion q162/q222 already make on the same
@@ -420,7 +416,7 @@ def q149_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # occurrence. Identical hash values => identical mined pairs; the
     # unrolled-CTE oracle re-proves it. 2.7x on the LSH stage (r15).
     pairs = contrastive_pairs(
-        docs, num_hashes=16, bands=4, shingle_k=2, portable=True,
+        docs, num_hashes=16, bands=4, shingle_k=2,
         broadcast_distinct_shingles=True,
     )
     toks = docs.select(

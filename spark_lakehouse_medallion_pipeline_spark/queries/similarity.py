@@ -107,16 +107,14 @@ def _q37_oracle() -> str:
 def q37_lsh_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN k-NN join via random-hyperplane LSH (X19 scale path): bucket
     join instead of cross join; recall vs brute force asserted in tests.
-    Value-oracled since round 7 (the q44 literal-planes move + floor6
-    similarity): bucketing, Hamming-1 multi-probe, and top-5 scores all
-    hash-compare against the SQL replay."""
+    Value-oracled since round 7 (the q44 literal-planes move + the
+    operator's floor6 similarity): bucketing, Hamming-1 multi-probe, and
+    top-5 scores all hash-compare against the SQL replay."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    return similarity.lsh_knn_join(
-        queries, emb, dim=64, k=5, n_planes=8, floor6=True
-    )
+    return similarity.lsh_knn_join(queries, emb, dim=64, k=5, n_planes=8)
 
 
 @_q(
@@ -191,13 +189,13 @@ def q44_cosine_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus has no true dups, so the demo threshold is low; recall on
     planted near-dups is asserted in tests/test_similarity.py.
     Value-oracled since round 7: the hyperplanes are deterministic
-    literals the oracle replays (_rhp_bucket_sql) and the similarity
-    uses the cross-engine floor6 idiom instead of Spark HALF_UP
-    rounding (floor6=True), so bucketing AND scores hash-compare
+    literals the oracle replays (_rhp_bucket_sql) and the operator
+    rounds the similarity with the cross-engine floor6 idiom instead of
+    Spark HALF_UP rounding, so bucketing AND scores hash-compare
     exactly — the q189 cosine discipline applied to the LSH path."""
     emb = _t(spark, sf_dir, "embeddings")
     return similarity.cosine_near_dup_pairs(
-        emb, dim=64, threshold=0.3, n_planes=6, n_tables=2, floor6=True
+        emb, dim=64, threshold=0.3, n_planes=6, n_tables=2
     )
 
 
@@ -261,17 +259,17 @@ def _ivf_oracle_cells(n_centroids: int) -> str:
 def q45_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN k-NN join (X19 scale path #2): nearest-centroid cells,
     n_probes cell probes per query, exact cosine inside probed cells.
-    Value-oracled since round 7: portable centroid selection (md5
-    sample order) + e6-quantized centroid components let the oracle
-    rebuild the exact index from the data and replay cell assignment,
-    the 4-cell probe, and the floor6 top-5 (_ivf_oracle_cells)."""
+    Value-oracled since round 7: the operator's portable centroid
+    selection (md5 sample order) + e6-quantized centroid components
+    let the oracle rebuild the exact index from the data and replay cell
+    assignment, the 4-cell probe, and the floor6 top-5
+    (_ivf_oracle_cells)."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
     return similarity.ivf_knn_join(
-        queries, emb, dim=64, k=5, n_centroids=16, n_probes=4,
-        portable=True, floor6=True,
+        queries, emb, dim=64, k=5, n_centroids=16, n_probes=4
     )
 
 

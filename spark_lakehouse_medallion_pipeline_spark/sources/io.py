@@ -4,7 +4,8 @@ Reference surface (SURVEY.md §2a S1-S8):
   - parquet batch read/write with file-size shaping (CM:127-133, CM:172)
   - create-or-replace partitioned table write (CM:327-329
     writeTo().partitionedBy().createOrReplace())
-  - partitioned-parquet fallback (CM:331-340)
+  - partitioned-parquet fallback (CM:331-340): written inline by
+    ``medallion/pipeline.py`` (``run_silver``, ``run_gold``)
   - namespace DDL (CM:181, CM:362)
 
 Spark-first mapping: DataFrameReader/Writer; managed tables go through
@@ -51,27 +52,6 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def write_parquet(df: DataFrame, path: str) -> None:
     """Snappy parquet overwrite (CM:127-133 analogue)."""
     df.write.mode("overwrite").option("compression", "snappy").parquet(path)
-
-
-def write_partitioned_parquet(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    cluster: bool = True,
-) -> None:
-    """Hive-style directory partitioning (CM:334-340 fallback analogue).
-    Identity partition columns => partition pruning on read.
-
-    ``cluster`` repartitions on the partition keys first, so each Hive
-    partition is written by one task (one file) instead of every task
-    writing a sliver of every partition — without it a 32-task write of
-    120 date x channel combos produced ~5000 files (measured 4x slower
-    end-to-end, and the small files poison every downstream scan). At
-    larger scale add a file-count salt inside hot partitions; AQE skew
-    handling covers the shuffle itself."""
-    if cluster:
-        df = df.repartition(*[F.col(c) for c in partition_cols])
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def create_namespace(spark: SparkSession, name: str) -> None:
@@ -413,6 +393,7 @@ def snapshot_versions(table_dir: str) -> list[int]:
     """All on-disk versions of a snapshot table, ascending."""
     import pathlib
 
+    table_dir = _require_local_path(table_dir, "snapshot_versions")
     root = pathlib.Path(table_dir)
     if not root.is_dir():
         return []
@@ -455,6 +436,7 @@ def read_snapshot(
     """Read the current snapshot, or time-travel to ``version``."""
     import os
 
+    table_dir = _require_local_path(table_dir, "read_snapshot")
     v = version if version is not None else _current_version(table_dir)
     if v is None:
         raise FileNotFoundError(f"no _CURRENT manifest in {table_dir!r}")
@@ -494,6 +476,7 @@ def vacuum_snapshots(table_dir: str, keep: int = 2) -> list[int]:
     import pathlib
     import shutil
 
+    table_dir = _require_local_path(table_dir, "vacuum_snapshots")
     versions = snapshot_versions(table_dir)
     current = _current_version(table_dir)
     drop = [v for v in (versions[:-keep] if keep else versions) if v != current]

@@ -443,7 +443,7 @@ def test_contrastive_pairs_topup_restores_balance(spark):
 
 
 def test_contrastive_pairs_portable_topup_balance(spark):
-    """portable=True (the q149 value-oracle path) must keep the top-up
+    """The md5 hash family (the q149 value-oracle path) must keep the top-up
     contract with the md5 hash family: exact neg_per_pos balance,
     disjoint label sets, determinism across runs. Docs 1/2 are exact
     duplicates so LSH positivity is certain (every band key equal),
@@ -452,7 +452,7 @@ def test_contrastive_pairs_portable_topup_balance(spark):
     fillers = [(i, f"w{i}a w{i}b w{i}c w{i}d") for i in range(10, 30)]
     df = spark.createDataFrame(near + fillers, "doc_id long, text string")
     mine = lambda: dedup.contrastive_pairs(  # noqa: E731
-        df, num_hashes=16, bands=4, shingle_k=2, neg_per_pos=3, portable=True
+        df, num_hashes=16, bands=4, shingle_k=2, neg_per_pos=3
     ).collect()
     pairs = mine()
     pos_set = {(r["id_a"], r["id_b"]) for r in pairs if r["label"] == 1}

@@ -10,8 +10,13 @@ from pyspark.sql import functions as F
 from spark_lakehouse_medallion_pipeline_spark.medallion.generate import generate_bronze
 from spark_lakehouse_medallion_pipeline_spark.medallion.gold import build_gold
 from spark_lakehouse_medallion_pipeline_spark.medallion.pipeline import (
+    BRONZE_REL,
+    GOLD_REL,
+    SILVER_REL,
     EmptyStageError,
+    run_gold,
     run_pipeline,
+    run_silver,
 )
 from spark_lakehouse_medallion_pipeline_spark.medallion.silver import build_silver
 
@@ -113,23 +118,36 @@ def test_gold_deterministic(spark):
 def test_full_pipeline_roundtrip(spark, tmp_path):
     stats = run_pipeline(spark, str(tmp_path), rows=2000)
     assert stats["gold_rows"] >= 28
+    # Hive layout: data files sit only in the partition leaves, and each
+    # leaf holds one file (silver is clustered on its partition keys
+    # before the write, gold is written by a single task).
+    for rel, keys in (
+        (SILVER_REL, ["interaction_date", "channel"]),
+        (GOLD_REL, ["interaction_date"]),
+    ):
+        root = tmp_path.joinpath(*rel.split("/"))
+        files = [
+            f for f in root.rglob("*")
+            if f.is_file() and not f.name.startswith(("_", "."))
+        ]
+        leaves = [f.parent.relative_to(root).parts for f in files]
+        assert files
+        for parts in leaves:
+            assert [p.split("=", 1)[0] for p in parts] == keys, parts
+        assert len(set(leaves)) == len(leaves)
 
 
 def test_empty_stage_guard(spark, tmp_path):
-    """CM:176-178 analogue: silver aborts on empty bronze."""
-    import os
-
-    bronze_path = f"{tmp_path}/bronze/customer/interactions"
-    os.makedirs(bronze_path, exist_ok=True)
+    """CM:176-178 / CM:375-377 analogue: silver aborts on empty bronze,
+    gold aborts on empty silver."""
+    base = str(tmp_path)
     empty = generate_bronze(spark, 10).filter(F.lit(False))
-    empty.write.mode("overwrite").parquet(bronze_path)
-    with pytest.raises(EmptyStageError):
-        # re-run silver+gold over the empty bronze
-        from spark_lakehouse_medallion_pipeline_spark.sources.io import read_parquet
-
-        df = read_parquet(spark, bronze_path)
-        if df.isEmpty():
-            raise EmptyStageError("Bronze dataset is empty")
+    empty.write.mode("overwrite").parquet(f"{base}/{BRONZE_REL}")
+    with pytest.raises(EmptyStageError, match="Bronze dataset is empty"):
+        run_silver(spark, base)
+    build_silver(empty).write.mode("overwrite").parquet(f"{base}/{SILVER_REL}")
+    with pytest.raises(EmptyStageError, match="Silver table is empty"):
+        run_gold(spark, base)
 
 
 @pytest.mark.slow

@@ -328,9 +328,7 @@ def test_portable_ivf_model_matches_default_semantics(spark, embeddings):
     corpus = embeddings.select("vec_id", "embedding").union(planted)
     kept = {
         r["vec_id"]
-        for r in similarity.semantic_dedup(
-            corpus, threshold=0.999, portable=True
-        ).collect()
+        for r in similarity.semantic_dedup(corpus, threshold=0.999).collect()
     }
     assert 200001 not in kept and 7 in kept
 
@@ -340,8 +338,7 @@ def test_portable_ivf_model_matches_default_semantics(spark, embeddings):
     got = {
         (r["q_id"], r["vec_id"])
         for r in similarity.ivf_knn_join(
-            qs, embeddings, dim=64, k=5, n_centroids=8, n_probes=4,
-            portable=True, floor6=True,
+            qs, embeddings, dim=64, k=5, n_centroids=8, n_probes=4
         ).collect()
     }
     assert all((q, q) in got for q in range(10))

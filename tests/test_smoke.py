@@ -162,7 +162,9 @@ def test_maintenance_ops_refuse_object_store_paths(spark):
 def test_local_maintenance_ops_accept_file_uris(spark, tmp_path):
     """A ``file:`` URI names the same local table as its plain path: each
     rename-based maintenance op gives the same rows through either form
-    and leaves no staging, old or temp directory behind."""
+    and leaves no staging, old or temp directory behind, and the snapshot
+    readers (current and time-travel reads, version listing, vacuum) see
+    the same table through either form."""
     from spark_lakehouse_medallion_pipeline_spark.sources import io as sio
 
     base = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k long, s string")
@@ -172,6 +174,7 @@ def test_local_maintenance_ops_accept_file_uris(spark, tmp_path):
         return sorted(map(tuple, df.collect()))
 
     got = {}
+    snap = {}
     for form in ("plain", "uri"):
         root = tmp_path / form
         root.mkdir()
@@ -193,7 +196,22 @@ def test_local_maintenance_ops_accept_file_uris(spark, tmp_path):
         )
         assert sorted(p.name for p in root.iterdir()) == ["frag", "gold", "snap"]
         assert sorted(p.name for p in (root / "snap").iterdir()) == ["_CURRENT", "v=1", "v=2"]
+        snap[form] = (
+            rows(sio.read_snapshot(spark, at("snap"))),
+            rows(sio.read_snapshot(spark, at("snap"), version=1)),
+            sio.snapshot_versions(at("snap")),
+            sio.vacuum_snapshots(at("snap"), keep=1),
+            sio.snapshot_versions(at("snap")),
+        )
+        assert sorted(p.name for p in (root / "snap").iterdir()) == ["_CURRENT", "v=2"]
     assert got["uri"] == got["plain"]
+    assert snap["uri"] == snap["plain"] == (
+        [(1, "a"), (2, "B"), (3, "c"), (4, "d")],
+        [(1, "a"), (2, "b"), (3, "c")],
+        [1, 2],
+        [1],
+        [2],
+    )
     assert got["plain"][1:] == (
         [(1, "a"), (2, "b"), (3, "c")],
         [(1, "a"), (2, "B"), (3, "c"), (4, "d")],
