@@ -15,6 +15,17 @@ from __future__ import annotations
 import argparse
 import sys
 import time
+from datetime import datetime
+
+from spark_lakehouse_medallion_pipeline_spark.medallion.generate import DEFAULT_AS_OF
+
+
+def instant(text: str) -> str:
+    """argparse type of --as-of: an ISO-8601 instant, passed on as given. An
+    empty or unparseable value is a usage error (exit 2) before any Spark
+    session starts."""
+    datetime.fromisoformat(text)
+    return text
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -27,7 +38,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--base-dir", required=True, help="pipeline root directory")
     p.add_argument("--rows", type=int, default=10_000, help="bronze rows to generate")
     p.add_argument("--payload-kb", type=int, default=1, help="payload size per row (reference default: 256)")
-    p.add_argument("--as-of", default="2024-03-01 12:00:00", help="deterministic clock; empty = now")
+    p.add_argument("--as-of", type=instant, default=DEFAULT_AS_OF, help="deterministic clock (ISO instant)")
     p.add_argument("--use-tables", action="store_true", help="write managed tables instead of parquet dirs")
     p.add_argument("--partitions", type=int, default=None, help="bronze generator parallelism")
     args = p.parse_args(argv)
@@ -36,7 +47,6 @@ def main(argv: list[str] | None = None) -> int:
     from spark_lakehouse_medallion_pipeline_spark.session import get_spark
 
     spark = get_spark("mdp-pipeline")
-    as_of = args.as_of or None
 
     if args.stage == "smoke":
         n = pipeline.smoke(spark, args.base_dir)
@@ -44,7 +54,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
     if args.stage == "bronze":
         s = pipeline.run_bronze(
-            spark, args.base_dir, args.rows, args.payload_kb, as_of, args.partitions
+            spark, args.base_dir, args.rows, args.payload_kb, args.as_of, args.partitions
         )
         gb = s["bronze_bytes"] / 1024**3
         print(
@@ -53,7 +63,7 @@ def main(argv: list[str] | None = None) -> int:
         )
         return 0
     if args.stage == "silver":
-        s = pipeline.run_silver(spark, args.base_dir, as_of, args.use_tables)
+        s = pipeline.run_silver(spark, args.base_dir, args.as_of, args.use_tables)
         print(f"SILVER_OK {s['silver_rows']} rows in {s['silver_sec']:.1f}s")
         return 0
     if args.stage == "gold":
@@ -73,7 +83,7 @@ def main(argv: list[str] | None = None) -> int:
         args.base_dir,
         rows=args.rows,
         payload_kb=args.payload_kb,
-        as_of=as_of,
+        as_of=args.as_of,
         use_tables=args.use_tables,
         partitions=args.partitions,
     )

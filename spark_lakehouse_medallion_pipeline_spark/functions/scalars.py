@@ -2,8 +2,13 @@
 
 Almost everything the reference uses is a built-in pyspark.sql.functions
 call; the helpers here exist where the reference's *intended* semantics
-differ from what it literally wrote (SURVEY.md §1.4 Q1-Q3), or where a
-cleaning rule is reused across the medallion and the LLM-data operators.
+differ from what it literally wrote (SURVEY.md §1.4 Q1-Q3), where a
+cleaning rule is reused across the medallion and the LLM-data operators, or
+where a value must hash bit-identically across engines: the exact-arithmetic
+helpers (``cents`` .. ``floor_round``) are the Column half of the dialect
+rules atop queries/_common.py, which holds their SQL twins. Operators and
+queries both aggregate money through them, so a batch entry and the operator
+its stream form shares sum the same integers.
 
 All helpers are pure Column expressions — JVM-side, whole-stage-codegen
 friendly, no Python UDFs.
@@ -69,3 +74,34 @@ def standardize_city(city_raw: Column) -> Column:
     return F.when(F.upper(city_raw).isin("NEW YORK", "NYC"), "New York").otherwise(
         city_raw
     )
+
+
+# --- exact arithmetic (dialect rules: queries/_common.py) -------------------
+
+
+def cents(col: Column) -> Column:
+    """2-decimal double -> exact integer hundredths."""
+    return F.round(col * 100).cast("long")
+
+
+def sum_cents(col: Column) -> Column:
+    return F.sum(cents(col))
+
+
+def money(sum_cents_col: Column) -> Column:
+    """Exact cent-sum -> double dollars (single division, bit-stable)."""
+    return sum_cents_col.cast("double") / F.lit(100.0)
+
+
+def mean_cents(col: Column) -> Column:
+    """Exact-cents average: (sum_cents / n) / 100 — identical op chain in
+    the oracle."""
+    return sum_cents(col).cast("double") / F.count(F.lit(1)) / F.lit(100.0)
+
+
+def floor_round(col: Column, k: int) -> Column:
+    """FLOOR(x*10^k + 0.5)/10^k — the cross-engine-stable round (plain
+    round() is HALF_UP on the decimal repr in Spark and C-style on the
+    binary value in DuckDB, so the two disagree on some midpoints)."""
+    s = float(10**k)
+    return F.floor(col * s + F.lit(0.5)) / F.lit(s)

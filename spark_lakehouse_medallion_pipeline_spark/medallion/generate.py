@@ -33,6 +33,8 @@ from pyspark.sql import functions as F
 
 from spark_lakehouse_medallion_pipeline_spark.functions.scalars import uniform
 
+# The pipeline's one clock: bronze event times, silver recency and the CLI's
+# --as-of default all anchor here.
 DEFAULT_AS_OF = "2024-03-01 12:00:00"
 
 

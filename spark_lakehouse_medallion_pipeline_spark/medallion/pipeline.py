@@ -17,7 +17,10 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-from spark_lakehouse_medallion_pipeline_spark.medallion.generate import generate_bronze
+from spark_lakehouse_medallion_pipeline_spark.medallion.generate import (
+    DEFAULT_AS_OF,
+    generate_bronze,
+)
 from spark_lakehouse_medallion_pipeline_spark.medallion.gold import build_gold
 from spark_lakehouse_medallion_pipeline_spark.medallion.silver import build_silver
 from spark_lakehouse_medallion_pipeline_spark.sources.io import (
@@ -58,7 +61,7 @@ def run_bronze(
     base_dir: str,
     rows: int = 10_000,
     payload_kb: int = 1,
-    as_of: str | None = "2024-03-01 12:00:00",
+    as_of: str = DEFAULT_AS_OF,
     partitions: int | None = None,
 ) -> dict[str, float | int]:
     """Bronze: generate -> parquet (CM:127-133). Returns timing + bytes."""
@@ -66,9 +69,7 @@ def run_bronze(
 
     t0 = time.time()
     write_parquet(
-        generate_bronze(
-            spark, rows, partitions=partitions, payload_kb=payload_kb, as_of=as_of or None
-        ),
+        generate_bronze(spark, rows, partitions=partitions, payload_kb=payload_kb, as_of=as_of),
         f"{base_dir}/{BRONZE_REL}",
     )
     sec = time.time() - t0
@@ -82,7 +83,7 @@ def run_bronze(
 def run_silver(
     spark: SparkSession,
     base_dir: str,
-    as_of: str | None = "2024-03-01 12:00:00",
+    as_of: str = DEFAULT_AS_OF,
     use_tables: bool = False,
 ) -> dict[str, float | int]:
     """Silver: read bronze, guard, enrich, partitioned write (CM:172-340).
@@ -164,7 +165,8 @@ def validate(
     """Post-run validation (run_pipeline.py:220-283 analogue): count each
     layer through the interactive surface — our spark.sql stands in for
     the reference's Trino session. Missing layers count as -1 (the
-    reference logs a warning and continues)."""
+    reference logs a warning and continues). Each layer is bound to the
+    query as a frame, so no temp view is left in the caller's session."""
     counts: dict[str, int] = {}
     for name, rel, table in (
         ("bronze", BRONZE_REL, None),
@@ -177,9 +179,8 @@ def validate(
                 if (use_tables and table)
                 else read_parquet(spark, f"{base_dir}/{rel}")
             )
-            df.createOrReplaceTempView(f"_validate_{name}")
             counts[f"{name}_rows"] = spark.sql(
-                f"SELECT COUNT(*) AS n FROM _validate_{name}"
+                "SELECT COUNT(*) AS n FROM {t}", t=df
             ).head()["n"]
         except Exception:
             counts[f"{name}_rows"] = -1
@@ -191,7 +192,7 @@ def run_pipeline(
     base_dir: str,
     rows: int = 10_000,
     payload_kb: int = 1,
-    as_of: str | None = "2024-03-01 12:00:00",
+    as_of: str = DEFAULT_AS_OF,
     use_tables: bool = False,
     partitions: int | None = None,
 ) -> dict[str, float | int]:

@@ -6,9 +6,10 @@ CollapseProject folds them into a single projection over the scan, and the
 quality-flag filter is pushed into the parquet scan (verify with .explain:
 PushedFilters).
 
-Determinism: ``as_of`` injects the clock used by recency / processing
+Determinism: ``as_of`` is the instant used by recency / processing
 metadata (the reference calls current_date()/current_timestamp(),
-CM:259,309,313 — un-oracle-able); pass None to keep wall-clock semantics.
+CM:259,309,313 — un-oracle-able); it defaults to the generator's
+DEFAULT_AS_OF, so bronze and silver share one clock.
 
 Q1 fix applies upstream (generate.py): event_timestamp is a true timestamp,
 so hour-derived columns are meaningful here.
@@ -25,14 +26,13 @@ from spark_lakehouse_medallion_pipeline_spark.functions.scalars import (
     standardize_city,
     standardize_state,
 )
+from spark_lakehouse_medallion_pipeline_spark.medallion.generate import DEFAULT_AS_OF
 
-DEFAULT_AS_OF = "2024-03-01 12:00:00"
 
-
-def build_silver(bronze: DataFrame, as_of: str | None = DEFAULT_AS_OF) -> DataFrame:
+def build_silver(bronze: DataFrame, as_of: str = DEFAULT_AS_OF) -> DataFrame:
     """Bronze -> Silver enrichment (keeps ~95% of rows; CM:189-190)."""
-    cur_date = F.lit(as_of).cast("date") if as_of else F.current_date()
-    cur_ts = F.lit(as_of).cast("timestamp") if as_of else F.current_timestamp()
+    cur_date = F.lit(as_of).cast("date")
+    cur_ts = F.lit(as_of).cast("timestamp")
 
     # Layer 1 — derived directly from bronze columns.
     layer1 = {

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from spark_lakehouse_medallion_pipeline_spark.functions.scalars import floor_round
+
 _E6 = 1_000_000  # integer scale of the e6-quantized, value-oracled operators
 
 
@@ -259,7 +261,7 @@ def lsh_knn_join(
         "_qvec",
         F.explode(F.array_distinct(F.array(*probe_structs))).alias("_b"),
     ).select(q_id, "_qvec", F.col("_b.table").alias("_table"), F.col("_b.sig").alias("_bucket"))
-    sim = _floor_round6(cosine(F.col("_cvec"), F.col("_qvec")))
+    sim = floor_round(cosine(F.col("_cvec"), F.col("_qvec")), 6)
     scored = c_sig.join(q_probed, on=["_table", "_bucket"]).select(
         F.col(q_id), F.col(c_id), sim.alias("cosine_sim")
     )
@@ -327,7 +329,7 @@ def cosine_near_dup_pairs(
         )
         sides.append(sig)
     a, b = sides
-    sim = _floor_round6(cosine(F.col("_vec_a"), F.col("_vec_b")))
+    sim = floor_round(cosine(F.col("_vec_a"), F.col("_vec_b")), 6)
     return (
         a.join(b, on=["_table", "_bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -379,7 +381,7 @@ def cosine_pairs_exact(
         .select(
             "id_a",
             "id_b",
-            _floor_round6(dot(F.col("_va"), F.col("_vb"))).alias("cosine_sim"),
+            floor_round(dot(F.col("_va"), F.col("_vb")), 6).alias("cosine_sim"),
         )
         .filter(F.col("cosine_sim") >= threshold)
     )
@@ -488,7 +490,7 @@ def ivf_knn_join(
         F.col(vec_col).alias("_qvec"),
         F.explode(probed).alias("_probe"),
     ).select(q_id, "_qvec", F.col("_probe.cid").alias("_cell"))
-    sim = _floor_round6(cosine(F.col("_cvec"), F.col("_qvec")))
+    sim = floor_round(cosine(F.col("_cvec"), F.col("_qvec")), 6)
     scored = c_cell.join(q_cell, on="_cell").select(
         F.col(q_id), F.col(c_id), sim.alias("cosine_sim")
     )
@@ -618,7 +620,7 @@ def semantic_dedup(
     )
     a = e.select(F.col("_id").alias("id_a"), F.col("_cell"), F.col("_v").alias("_va"))
     b = e.select(F.col("_id").alias("id_b"), F.col("_cell"), F.col("_v").alias("_vb"))
-    pair_dot = _floor_round6(dot(F.col("_va"), F.col("_vb")))
+    pair_dot = floor_round(dot(F.col("_va"), F.col("_vb")), 6)
     dropped = (
         a.join(b, on="_cell")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -778,14 +780,6 @@ def pq_codebooks(
     return books
 
 
-def _floor_round6(col: Column) -> Column:
-    """FLOOR(x*1e6 + 0.5)/1e6 — the cross-engine-stable round used by the
-    oracle gate (matches queries.floor_round / S_FLOOR op-for-op, so a
-    DuckDB oracle reproduces the value bit-identically; plain round()
-    disagrees with SQL engines on negative midpoints)."""
-    return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-
-
 def exact_rerank(
     cand_ids: DataFrame,
     queries: DataFrame,
@@ -821,7 +815,7 @@ def exact_rerank(
         .select(
             q_id,
             c_id,
-            _floor_round6(cosine(F.col("_cvec"), F.col("_qvec"))).alias("cosine_sim"),
+            floor_round(cosine(F.col("_cvec"), F.col("_qvec")), 6).alias("cosine_sim"),
         )
     )
     w_k = Window.partitionBy(q_id).orderBy(F.desc("cosine_sim"), F.col(c_id))

@@ -1,16 +1,21 @@
 """Time-windowed operators over event streams (SURVEY.md §2b X14-X15).
 
-Batch forms here (oracle-checkable). The watermarked streaming forms in
-spark_lakehouse_medallion_pipeline_spark.streaming.jobs (windowed_counts_stream,
-session_stream) define their own aggregation bodies and do not share these:
-they, like tumbling_window_agg, round sum(value) with F.round, where q20 and
-session_window_agg (q22) sum exact cents.
+One body per window kind, shared by batch and stream: q20, q47 and q22 call
+tumbling_window_agg, sliding_window_agg and session_window_agg, and the
+watermarked stream forms are the same calls over
+``events.withWatermark("ts", ...)`` (a tumbling stream window is
+sliding_window_agg with slide == size, since a streaming aggregate cannot
+count distinct users). Every window total sums exact cents
+(functions.scalars.money/sum_cents), so a drained stream equals its batch
+entry bit for bit.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from spark_lakehouse_medallion_pipeline_spark.functions.scalars import money, sum_cents
 
 
 def tumbling_window_agg(
@@ -22,7 +27,7 @@ def tumbling_window_agg(
         events.groupBy(F.window(F.col(ts_col), size).alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
+            money(sum_cents(F.col("value"))).alias("total_value"),
             F.countDistinct("user_id").alias("n_users"),
         )
         .select(F.col("w.start").alias("window_start"), "n_events", "total_value", "n_users")
@@ -35,7 +40,10 @@ def sliding_window_agg(
     """Sliding window rollup (each event lands in size/slide windows)."""
     return (
         events.groupBy(F.window(F.col(ts_col), size, slide).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            money(sum_cents(F.col("value"))).alias("total_value"),
+        )
         .select(F.col("w.start").alias("window_start"), "n_events", "total_value")
     )
 
@@ -46,14 +54,11 @@ def session_window_agg(
     """Native session windows (F.session_window, X15). Spark-specific
     operator — the SQL-expressible lag+cumsum equivalent lives in
     operators.relational.sessionize and is what the oracle checks."""
-    # Exact-cents aggregation (not round(sum(double))): bit-identical to
-    # any engine summing the same cents, independent of add order.
-    value_cents = F.round(F.col("value") * 100).cast("long")
     return (
         events.groupBy(F.col(key_col), F.session_window(F.col(ts_col), gap).alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            (F.sum(value_cents).cast("double") / F.lit(100.0)).alias("session_value"),
+            money(sum_cents(F.col("value"))).alias("session_value"),
         )
         .select(
             key_col,

@@ -1,6 +1,9 @@
 """Shared by every query family: the registry (`QUERIES`/`ORACLE`, filled
 by `_q`), the corpus-table reader `_t`, per-application scratch sinks and
-the exact-arithmetic helpers.
+the SQL half of the exact-arithmetic helpers (`SC`, `S_MONEY`, `S_MEAN`,
+`S_FLOOR`). Their Column half (`cents`, `sum_cents`, `money`, `mean_cents`,
+`floor_round`) lives in functions/scalars.py, so operators share it without
+importing the registry; it is imported here for the query families.
 
 Dialect rules that keep the value-hash comparison bit-exact
 (SURVEY.md §7.3 risk register — learned the hard way):
@@ -34,6 +37,14 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from spark_lakehouse_medallion_pipeline_spark.functions.scalars import (  # noqa: F401
+    cents,
+    floor_round,
+    mean_cents,
+    money,
+    sum_cents,
+)
 
 # The one entry point for corpus tables: a scan with the schema the session
 # catalog inferred once.
@@ -132,36 +143,8 @@ def _scratch_root() -> str:
     return tempfile.gettempdir()
 
 
-# --- exact-arithmetic helpers (see dialect rules above) ---------------------
-
-
-def cents(col: Column) -> Column:
-    """2-decimal double -> exact integer hundredths."""
-    return F.round(col * 100).cast("long")
-
-
-def sum_cents(col: Column) -> Column:
-    return F.sum(cents(col))
-
-
-def money(sum_cents_col: Column) -> Column:
-    """Exact cent-sum -> double dollars (single division, bit-stable)."""
-    return sum_cents_col.cast("double") / F.lit(100.0)
-
-
-def mean_cents(col: Column) -> Column:
-    """Exact-cents average: (sum_cents / n) / 100 — identical op chain in
-    the oracle."""
-    return sum_cents(col).cast("double") / F.count(F.lit(1)) / F.lit(100.0)
-
-
-def floor_round(col: Column, k: int) -> Column:
-    """FLOOR(x*10^k + 0.5)/10^k — the cross-engine-stable round."""
-    s = float(10**k)
-    return F.floor(col * s + F.lit(0.5)) / F.lit(s)
-
-
-# SQL-side macros (textual, spelled to match the Column helpers op-for-op)
+# SQL-side macros (textual, spelled to match functions.scalars' Column
+# helpers op-for-op)
 def SC(col: str) -> str:  # noqa: N802
     return f"CAST(ROUND(({col})*100) AS BIGINT)"
 

@@ -105,17 +105,9 @@ def q13_running_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q20_hourly_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling window via F.window (X14) — batch form of the streaming job."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            money(sum_cents(F.col("value"))).alias("total_value"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
-        .select(F.col("w.start").alias("window_start"), "n_events", "total_value", "n_users")
-    )
+    """Tumbling window via F.window (X14) — the body the streaming job
+    shares (operators.timeseries)."""
+    return timeseries.tumbling_window_agg(_t(spark, sf_dir, "events"))
 
 
 @_q(
@@ -190,7 +182,7 @@ def q22_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirror starts a new session at gap >= 30 min (q21's lag+cumsum form
     uses > by convention; both are valid sessionizations, the oracle
     must just match the engine's boundary rule exactly)."""
-    return timeseries.session_window_agg(_t(spark, sf_dir, "events"), "user_id", "ts", "30 minutes")
+    return timeseries.session_window_agg(_t(spark, sf_dir, "events"))
 
 
 @_q(
@@ -233,15 +225,7 @@ def q47_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     in exactly two windows (the oracle replays that with a range(0,2)
     lateral). Spark's F.window expansion is scan-local; the shuffle is
     the windowed aggregate only."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            money(sum_cents(F.col("value"))).alias("total_value"),
-        )
-        .select(F.col("w.start").alias("window_start"), "n_events", "total_value")
-    )
+    return timeseries.sliding_window_agg(_t(spark, sf_dir, "events"))
 
 
 @_q(

@@ -2,21 +2,27 @@
 
 The reference provisions an ``mdp-checkpoints`` bucket it never uses
 (k8s/s3/03-s3-buckets.yaml:33-39) — the unrealized streaming intention.
-Realized here: file-source streams over the events schema, watermarked
-tumbling/session window aggregates, checkpointed sinks.
-windowed_counts_stream and session_stream define their own aggregation
-bodies: they round sum(value) with F.round, where the oracle-checked
-batch forms (q20, and q22 through operators.timeseries.session_window_agg)
-sum exact cents, so the two need not agree bit for bit.
+Realized here: file-source streams over the events schema, checkpointed
+sinks, stateful and dedup/join operators and incremental gold refresh.
 
-Tests drive these with trigger(availableNow=True) against the parquet
-corpus; production swaps source/sink URIs — the plan is identical.
+Window aggregates have no stream-only body: a watermarked stream window is
+the batch operator over a watermarked stream, so it drains to exactly what
+the registered entry (q20, q22) returns on the same rows —
+
+    sliding_window_agg(events.withWatermark("ts", wm), size=s, slide=s)
+    session_window_agg(events.withWatermark("ts", wm))
+
+(operators.timeseries; F.window(ts, s, s) assigns the same windows as
+F.window(ts, s)). Every sink drains through ``_drain`` with
+trigger(availableNow=True); production swaps source/sink URIs — the plan is
+identical.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -48,54 +54,26 @@ def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def windowed_counts_stream(
-    events: DataFrame, watermark: str = "1 hour", size: str = "1 hour"
-) -> DataFrame:
-    """Watermarked tumbling-window aggregate: late rows beyond the
-    watermark are dropped; state is bounded by watermark horizon."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", size).alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(F.col("w.start").alias("window_start"), "n_events", "total_value")
-    )
+def _drain(writer: DataStreamWriter, checkpoint_dir: str) -> None:
+    """Start ``writer`` on ``checkpoint_dir`` and block until it has drained
+    all input available at start (trigger availableNow)."""
+    writer.option("checkpointLocation", checkpoint_dir).trigger(
+        availableNow=True
+    ).start().awaitTermination()
 
 
-def session_stream(
-    events: DataFrame, watermark: str = "1 hour", gap: str = "30 minutes"
-) -> DataFrame:
-    """Watermarked session-window aggregate (F.session_window) — the
-    streaming realization of operators.relational.sessionize."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", gap).alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("session_value"),
-        )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            "n_events",
-            "session_value",
-        )
-    )
-
-
-def run_to_memory(stream_df: DataFrame, query_name: str, checkpoint_dir: str) -> None:
-    """Drain all available input into an in-memory table (tests/demo)."""
-    q = (
+def run_to_memory(
+    stream_df: DataFrame, query_name: str, checkpoint_dir: str, output_mode: str
+) -> None:
+    """Drain all available input into the in-memory table ``query_name``
+    (tests/demo): ``complete`` for window aggregates, ``update`` for the
+    stateful operators."""
+    _drain(
         stream_df.writeStream.format("memory")
         .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode(output_mode),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def run_append_to_parquet(
@@ -103,15 +81,12 @@ def run_append_to_parquet(
 ) -> None:
     """Watermark-append sink to parquet — the production shape (replaces
     the reference's never-used checkpoint bucket intent)."""
-    q = (
+    _drain(
         stream_df.writeStream.format("parquet")
         .outputMode("append")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("path", out_path),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 RUNNING_TOTALS_SCHEMA = StructType(
@@ -135,19 +110,13 @@ _STATE_SCHEMA = StructType(
 )
 
 
-def _ts_from_us(us):
+def _running_totals_fn(key, pdf_iter, state):
+    """Per-user accumulator: state carries (count, value-sum, last-event
+    micros) across microbatches; emits one updated row per user per
+    batch, its sum rounded to 6 places as it is stored."""
     import pandas as pd
 
-    return None if us is None else pd.Timestamp(us * 1000)
-
-
-def _fold_totals(acc, pdf_iter) -> tuple:
-    """Fold a key's input batches into its (count, value-sum, last-event
-    micros) accumulator; the sum comes back rounded to 6 places, as it
-    is stored and emitted."""
-    import pandas as pd
-
-    n, total, last_us = acc
+    n, total, last_us = state.get if state.exists else (0, 0.0, None)
     for pdf in pdf_iter:
         n += len(pdf)
         total += float(pdf["value"].sum())
@@ -156,30 +125,16 @@ def _fold_totals(acc, pdf_iter) -> tuple:
             mx_us = mx.value // 1000
             if last_us is None or mx_us > last_us:
                 last_us = mx_us
-    return n, round(total, 6), last_us
-
-
-def _totals_row(user_id, n, total, last_us):
-    """One RUNNING_TOTALS_SCHEMA output row."""
-    import pandas as pd
-
-    return pd.DataFrame(
+    total = round(total, 6)
+    state.update((n, total, last_us))
+    yield pd.DataFrame(
         {
-            "user_id": [user_id],
+            "user_id": [key[0]],
             "n_events": [n],
             "total_value": [total],
-            "last_ts": [_ts_from_us(last_us)],
+            "last_ts": [None if last_us is None else pd.Timestamp(last_us * 1000)],
         }
     )
-
-
-def _running_totals_fn(key, pdf_iter, state):
-    """Per-user accumulator: state carries (count, value-sum, last-event
-    micros) across microbatches; emits one updated row per user per
-    batch."""
-    acc = _fold_totals(state.get if state.exists else (0, 0.0, None), pdf_iter)
-    state.update(acc)
-    yield _totals_row(key[0], *acc)
 
 
 def stateful_running_totals_stream(events: DataFrame) -> DataFrame:
@@ -203,19 +158,6 @@ def stateful_running_totals_stream(events: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def run_update_to_memory(stream_df: DataFrame, query_name: str, checkpoint_dir: str) -> None:
-    """Drain all available input in update mode (for stateful operators)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def dedup_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -283,13 +225,7 @@ def run_foreach_batch_to_parquet(
         batch_ids.append(batch_id)
         batch_df.write.mode("append").parquet(out_dir)
 
-    (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(stream_df.writeStream.foreachBatch(write_batch), checkpoint_dir)
     return batch_ids
 
 
@@ -306,50 +242,6 @@ def use_rocksdb_state_store(spark) -> None:
     RocksDB spills state to local disk with incremental checkpointing;
     set BEFORE the streaming query starts (provider is fixed at start)."""
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-
-
-try:
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor as _SP
-except ImportError:  # pragma: no cover - Spark < 4.0
-    _SP = object
-
-
-class _RunningTotalsProcessor(_SP):
-    """StatefulProcessor for transformWithStateInPandas — the Spark 4
-    successor to applyInPandasWithState (typed state handles, per-state
-    TTL, timers). Same semantics as _running_totals_fn: per-user running
-    (count, value-sum, last-ts), one updated row per user per batch.
-    Module-level class on purpose: the processor is pickled to the
-    stateful worker, and dynamically-built classes don't survive that."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("totals", _STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        acc = tuple(self._state.get()) if self._state.exists() else (0, 0.0, None)
-        acc = _fold_totals(acc, rows)
-        self._state.update(acc)
-        yield _totals_row(key[0], *acc)
-
-    def close(self) -> None:
-        pass
-
-
-def running_totals_tws_stream(events: DataFrame) -> DataFrame:
-    """stateful_running_totals_stream re-expressed on the Spark 4
-    transformWithStateInPandas API (X15): identical output contract,
-    but state lives in named typed handles (getValueState) with optional
-    TTL — the API Spark is standardizing stateful Python streaming on.
-    Same scale shape: state is sharded by the groupBy key across
-    executors' state stores."""
-    if _SP is object:  # pragma: no cover - Spark < 4.0
-        raise NotImplementedError("transformWithStateInPandas requires Spark >= 4.0")
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_RunningTotalsProcessor(),
-        outputStructType=RUNNING_TOTALS_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
 
 
 def incremental_gold_refresh(
@@ -401,13 +293,7 @@ def incremental_gold_refresh(
         )
         merge_upsert_parquet(spark, build_gold(affected), gold_path, "interaction_date", dates)
 
-    q = (
-        silver_stream.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(silver_stream.writeStream.foreachBatch(refresh), checkpoint_dir)
 
 
 def streaming_near_dup_ingest(
@@ -496,10 +382,4 @@ def streaming_near_dup_ingest(
             f"{sig_store}/batch={batch_id}"
         )
 
-    (
-        docs_stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(docs_stream.writeStream.foreachBatch(ingest), checkpoint_dir)

@@ -17,6 +17,7 @@ from spark_lakehouse_medallion_pipeline_spark.medallion.pipeline import (
     run_gold,
     run_pipeline,
     run_silver,
+    validate,
 )
 from spark_lakehouse_medallion_pipeline_spark.medallion.silver import build_silver
 
@@ -115,9 +116,22 @@ def test_gold_deterministic(spark):
 
 
 @pytest.mark.slow
+def _temp_views(spark):
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
 def test_full_pipeline_roundtrip(spark, tmp_path):
     stats = run_pipeline(spark, str(tmp_path), rows=2000)
     assert stats["gold_rows"] >= 28
+    # validate counts every layer and leaves no temp view behind
+    views = _temp_views(spark)
+    counts = validate(spark, str(tmp_path))
+    assert counts == {
+        "bronze_rows": 2000,
+        "silver_rows": stats["silver_rows"],
+        "gold_rows": stats["gold_rows"],
+    }
+    assert _temp_views(spark) == views
     # Hive layout: data files sit only in the partition leaves, and each
     # leaf holds one file (silver is clustered on its partition keys
     # before the write, gold is written by a single task).
@@ -169,11 +183,26 @@ def test_cli_stage_contract(spark, tmp_path, capsys):
     assert "VALIDATE gold_rows=" in out
 
 
+def test_cli_rejects_empty_as_of(tmp_path, monkeypatch, capsys):
+    """--as-of is always an instant: an empty or unparseable value is an
+    argparse usage error (exit 2) raised before any Spark session starts."""
+    from spark_lakehouse_medallion_pipeline_spark import session
+    from spark_lakehouse_medallion_pipeline_spark.__main__ import main
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("a Spark session was requested")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    for bad in ("", "now", "2024-13-01"):
+        with pytest.raises(SystemExit) as exit_info:
+            main(["--stage", "smoke", "--base-dir", str(tmp_path), "--as-of", bad])
+        assert exit_info.value.code == 2
+        assert "--as-of" in capsys.readouterr().err
+
+
 def test_validate_missing_layers(spark, tmp_path):
     """validate degrades to -1 per missing layer instead of raising
     (reference logs warnings and continues, run_pipeline.py:246-276)."""
-    from spark_lakehouse_medallion_pipeline_spark.medallion.pipeline import validate
-
     counts = validate(spark, str(tmp_path / "nonexistent"))
     assert counts == {"bronze_rows": -1, "silver_rows": -1, "gold_rows": -1}
 

@@ -386,6 +386,35 @@ def test_registry_pinned():
     )
 
 
+def test_no_bare_round_on_aggregated_double():
+    """Dialect rule (queries/_common.py): never a bare F.round over an
+    aggregated double. Engines sum doubles in different orders, so
+    round(sum(x)) can land on either side of a rounding boundary; money
+    aggregates exact cents (functions.scalars.money/sum_cents) and any
+    other unavoidable round is floor_round. Fails on any F.round whose
+    first argument contains an F.sum/F.avg/F.mean call."""
+    import ast
+    from pathlib import Path
+
+    def called(node):
+        return isinstance(node, ast.Call) and (
+            getattr(node.func, "attr", None) or getattr(node.func, "id", None)
+        )
+
+    pkg = Path(__file__).resolve().parent.parent / "spark_lakehouse_medallion_pipeline_spark"
+    offenders = [
+        f"{p.relative_to(pkg.parent)}:{n.lineno} {ast.unparse(n)}"
+        for p in sorted(pkg.rglob("*.py"))
+        for n in ast.walk(ast.parse(p.read_text()))
+        if called(n) == "round"
+        and getattr(n.func, "value", None) is not None
+        and getattr(n.func.value, "id", None) == "F"
+        and n.args
+        and any(called(m) in {"sum", "avg", "mean"} for m in ast.walk(n.args[0]))
+    ]
+    assert not offenders, offenders
+
+
 def test_sketch_stats_rel_error_vs_exact(spark):
     """q199's sketches must track q193's exact answers (the q30
     discipline): NDV within 5% (HLL++ default rsd), quartiles within

@@ -21,12 +21,21 @@ def _events_stream_dir(spark, events, tmp_path):
     return path
 
 
+def _tumbling_stream(events, watermark):
+    """The watermarked stream form of a 1-hour tumbling window: the batch
+    sliding-window body with slide == size (a streaming aggregate cannot
+    count distinct users, so tumbling_window_agg's n_users is left out)."""
+    return timeseries.sliding_window_agg(
+        events.withWatermark("ts", watermark), size="1 hour", slide="1 hour"
+    )
+
+
 def test_windowed_stream_matches_batch(spark, events, tmp_path):
     path = _events_stream_dir(spark, events, tmp_path)
     stream = jobs.read_events_stream(spark, path)
     assert stream.isStreaming
-    out = jobs.windowed_counts_stream(stream, watermark="100 days", size="1 hour")
-    jobs.run_to_memory(out, "win_counts", str(tmp_path / "ckpt1"))
+    out = _tumbling_stream(stream, "100 days")
+    jobs.run_to_memory(out, "win_counts", str(tmp_path / "ckpt1"), "complete")
     got = sorted(
         map(tuple, spark.table("win_counts").collect())
     )
@@ -44,8 +53,8 @@ def test_windowed_stream_matches_batch(spark, events, tmp_path):
 def test_session_stream_matches_batch(spark, events, tmp_path):
     path = _events_stream_dir(spark, events, tmp_path)
     stream = jobs.read_events_stream(spark, path)
-    out = jobs.session_stream(stream, watermark="100 days", gap="30 minutes")
-    jobs.run_to_memory(out, "sess_counts", str(tmp_path / "ckpt2"))
+    out = timeseries.session_window_agg(stream.withWatermark("ts", "100 days"))
+    jobs.run_to_memory(out, "sess_counts", str(tmp_path / "ckpt2"), "complete")
     got = spark.table("sess_counts")
     want = timeseries.session_window_agg(events, "user_id", "ts", "30 minutes")
     assert sorted(map(tuple, got.collect())) == sorted(
@@ -58,7 +67,7 @@ def test_append_sink_writes_closed_windows(spark, events, tmp_path):
     watermark all-but-the-last should flush on the second drain."""
     path = _events_stream_dir(spark, events, tmp_path)
     stream = jobs.read_events_stream(spark, path)
-    out = jobs.windowed_counts_stream(stream, watermark="1 minute", size="1 hour")
+    out = _tumbling_stream(stream, "1 minute")
     sink = str(tmp_path / "sink")
     jobs.run_append_to_parquet(out, sink, str(tmp_path / "ckpt3"))
     written = spark.read.parquet(sink)
@@ -72,7 +81,7 @@ def test_stateful_running_totals(spark, events, tmp_path):
     path = _events_stream_dir(spark, events, tmp_path)
     stream = jobs.read_events_stream(spark, path)
     out = jobs.stateful_running_totals_stream(stream)
-    jobs.run_update_to_memory(out, "running_totals", str(tmp_path / "ckpt_state"))
+    jobs.run_to_memory(out, "running_totals", str(tmp_path / "ckpt_state"), "update")
     # update mode emits one row per user per microbatch; keep the last.
     got = {
         r["user_id"]: (r["n_events"], r["total_value"])
@@ -161,7 +170,7 @@ def test_stateful_query_on_rocksdb_state_store(spark, events, tmp_path):
         events.limit(500).write.parquet(str(tmp_path / "in"))
         stream = jobs.read_events_stream(spark, str(tmp_path / "in"))
         totals = jobs.stateful_running_totals_stream(stream)
-        jobs.run_update_to_memory(totals, "rocksdb_totals", str(tmp_path / "ckpt"))
+        jobs.run_to_memory(totals, "rocksdb_totals", str(tmp_path / "ckpt"), "update")
         got = {
             r["user_id"]: (r["n_events"], round(r["total_value"], 2))
             for r in spark.sql("SELECT * FROM rocksdb_totals").collect()
@@ -185,13 +194,13 @@ def test_stateful_query_on_rocksdb_state_store(spark, events, tmp_path):
 def test_windowed_stream_matches_registered_q20(spark, events, sf_dir, tmp_path):
     """Pin the streaming tumbling job to the REGISTERED q20 battery entry
     (not just the shared timeseries body): same windows, same counts,
-    values equal to the oracle-exact cents aggregation within 1 ulp."""
+    the same exact-cents totals bit for bit."""
     from spark_lakehouse_medallion_pipeline_spark.queries import QUERIES
 
     path = _events_stream_dir(spark, events, tmp_path)
     stream = jobs.read_events_stream(spark, path)
-    out = jobs.windowed_counts_stream(stream, watermark="100 days", size="1 hour")
-    jobs.run_to_memory(out, "win_vs_q20", str(tmp_path / "ck_q20"))
+    out = _tumbling_stream(stream, "100 days")
+    jobs.run_to_memory(out, "win_vs_q20", str(tmp_path / "ck_q20"), "complete")
     got = {
         r["window_start"]: (r["n_events"], r["total_value"])
         for r in spark.table("win_vs_q20").collect()
@@ -200,10 +209,7 @@ def test_windowed_stream_matches_registered_q20(spark, events, sf_dir, tmp_path)
         r["window_start"]: (r["n_events"], r["total_value"])
         for r in QUERIES["q20_hourly_tumbling"](spark, sf_dir).collect()
     }
-    assert set(got) == set(want)
-    for k, (n, v) in want.items():
-        assert got[k][0] == n
-        assert abs(got[k][1] - v) < 1e-6
+    assert got == want
 
 
 def test_session_stream_matches_registered_q22(spark, events, sf_dir, tmp_path):
@@ -214,8 +220,8 @@ def test_session_stream_matches_registered_q22(spark, events, sf_dir, tmp_path):
 
     path = _events_stream_dir(spark, events, tmp_path)
     stream = jobs.read_events_stream(spark, path)
-    out = jobs.session_stream(stream, watermark="100 days", gap="30 minutes")
-    jobs.run_to_memory(out, "sess_vs_q22", str(tmp_path / "ck_q22"))
+    out = timeseries.session_window_agg(stream.withWatermark("ts", "100 days"))
+    jobs.run_to_memory(out, "sess_vs_q22", str(tmp_path / "ck_q22"), "complete")
     got = {
         (r["user_id"], r["session_start"]): (r["n_events"], r["session_value"])
         for r in spark.table("sess_vs_q22").collect()
@@ -224,55 +230,75 @@ def test_session_stream_matches_registered_q22(spark, events, sf_dir, tmp_path):
         (r["user_id"], r["session_start"]): (r["n_events"], r["session_value"])
         for r in QUERIES["q22_session_window_native"](spark, sf_dir).collect()
     }
-    assert set(got) == set(want)
-    for k, (n, v) in want.items():
-        assert got[k][0] == n
-        assert abs(got[k][1] - v) < 1e-6
+    assert got == want
 
 
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
+# Two files drained in order. The second holds late rows, older than the
+# first file's newest event but inside the 3-hour watermark; one of them
+# (user 2 at 12:25) bridges two sessions the first batch left apart.
+_ADVERSARIAL_FILES = [
+    [
+        (1, "2024-03-01 10:00:00", 1, 0.1),
+        (2, "2024-03-01 10:00:00", 1, 0.2),  # duplicate timestamp, same user
+        (3, "2024-03-01 10:00:00", 3, 2.675),  # same timestamp, other user
+        (4, "2024-03-01 10:59:59.999999", 1, 0.7),  # last micro of a window
+        (5, "2024-03-01 11:00:00", 1, 1000000.01),  # exactly on a boundary
+        (6, "2024-03-01 11:00:00", 3, None),  # null value
+        (7, "2024-03-01 12:00:00", 2, -0.05),
+        (8, "2024-03-01 12:50:00", 2, 0.15),
+        (9, "2024-03-01 13:00:00", 3, 0.3),
+    ],
+    [
+        (10, "2024-03-01 10:15:00", 1, 0.1),  # late, inside user 1's session
+        (11, "2024-03-01 11:00:00", 1, 0.01),  # late, on the boundary again
+        (12, "2024-03-01 12:25:00", 2, 0.35),  # late, bridges 12:00 and 12:50
+        (13, "2024-03-01 12:00:00", 3, None),  # late null value
+        # off the cent grid: 1.005*100 is 100.49999999999999, so exact cents
+        # give 1.0 where round(sum(value), 2) gives 1.01
+        (14, "2024-03-01 14:00:00", 4, 1.005),
+    ],
+]
 
-        return True
-    except ImportError:
-        return False
 
+def test_stream_forms_equal_batch_bodies_on_adversarial_input(spark, tmp_path):
+    """Both stream forms drain to exactly the batch bodies' rows (==, no
+    tolerance) on input built to split them: duplicate timestamps, events
+    on and one microsecond before a window boundary, null values, values
+    whose double sum drifts or that sit off the cent grid, and late rows
+    inside the watermark."""
+    import os
 
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas' state-server protocol needs "
-    "google.protobuf, absent in this container (no installs allowed — "
-    "same constraint as delta-spark, README §Table-format)",
-)
-def test_transform_with_state_matches_apply_in_pandas(spark, events, tmp_path):
-    """The Spark 4 transformWithStateInPandas job must produce the same
-    final per-user totals as the applyInPandasWithState job and the
-    batch groupBy — three implementations, one contract."""
-    path = _events_stream_dir(spark, events, tmp_path)
-    stream = jobs.read_events_stream(spark, path)
-    out = jobs.running_totals_tws_stream(stream)
-    jobs.run_update_to_memory(out, "running_totals_tws", str(tmp_path / "ckpt_tws"))
-    got = {
-        r["user_id"]: (r["n_events"], r["total_value"])
-        for r in spark.table("running_totals_tws")
-        .withColumn("_rn", F.monotonically_increasing_id())
-        .orderBy("_rn")
-        .collect()
-    }
-    want = {
-        r["user_id"]: (r["n"], round(r["total"], 6))
-        for r in events.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-    assert set(got) == set(want)
-    mismatches = {
-        u: (got[u], want[u])
-        for u in want
-        if got[u][0] != want[u][0] or abs(got[u][1] - want[u][1]) > 1e-4
-    }
-    assert not mismatches, dict(list(mismatches.items())[:5])
+    path = tmp_path / "adversarial"
+    path.mkdir()
+    for i, rows in enumerate(_ADVERSARIAL_FILES):
+        stage = str(tmp_path / f"stage{i}")
+        spark.createDataFrame(
+            [(e, ts, u, "click", v, "{}") for e, ts, u, v in rows],
+            "event_id long, ts string, user_id long, event_type string, value double, props string",
+        ).withColumn("ts", F.col("ts").cast("timestamp")).coalesce(1).write.parquet(stage)
+        (f,) = (tmp_path / f"stage{i}").glob("*.parquet")
+        dst = path / f"f{i}.parquet"
+        f.rename(dst)
+        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+    batch = spark.read.schema(jobs.EVENTS_SCHEMA).parquet(str(path))
+
+    def drained(agg, name):
+        stream = jobs.read_events_stream(spark, str(path)).withWatermark("ts", "3 hours")
+        jobs.run_to_memory(agg(stream), name, str(tmp_path / f"ck_{name}"), "complete")
+        return sorted(map(tuple, spark.table(name).collect()))
+
+    def tumbling(df):
+        return timeseries.sliding_window_agg(df, size="1 hour", slide="1 hour")
+
+    want = sorted(
+        map(tuple, timeseries.tumbling_window_agg(batch).drop("n_users").collect())
+    )
+    assert drained(tumbling, "adv_windows") == want
+    assert len(want) == 5 and want[1][1:] == (3, 1000000.02) and want[4][1:] == (1, 1.0)
+
+    want = sorted(map(tuple, timeseries.session_window_agg(batch).collect()))
+    assert drained(timeseries.session_window_agg, "adv_sessions") == want
+    assert [r[2] for r in want if r[0] == 2] == [3]
 
 
 def _silver(spark, n_rows):
